@@ -1,9 +1,29 @@
 """Similarity search over embedding columns (SURVEY §2.6 X3).
 
-Embeddings are `array<float>` columns. The exact path computes cosine with
-built-in higher-order functions (zip_with + aggregate — JVM-side, no UDF);
-the scale path buckets by random-hyperplane LSH so only same-bucket pairs
-are scored.
+Embeddings are `array<float>` columns. Cosine is computed with built-in
+higher-order functions (zip_with + aggregate — JVM-side, no UDF); the
+scale paths (LSH buckets, IVF cells) score only same-bucket / same-cell
+pairs.
+
+Two ways to score a pair, by how many partners a vector meets:
+
+- Norm column (`_norm` as a column, then `cosine_normed`; top-k searches
+  go through `topk_by_cosine`): when a vector is scored against many
+  partners (top-k search, all-pairs, bucket and cell joins), compute each
+  side's norm ONCE as a column before the join, so each scored pair
+  costs a single dot product. Every search and pair operator in this
+  module uses this form.
+- Per-pair `cosine(a, b)`: when every vector meets O(1) partners (a
+  bounded pair list joined back to the embeddings table), computing the
+  norms inside the pair expression touches only the paired vectors,
+  while a norm column added before the join would cover the whole table.
+
+Both spellings give bit-identical values: the same float32 products, the
+same double fold order, one division, then rounding. A pair with a zero
+vector scores NULL rather than raising DIVIDE_BY_ZERO under ANSI mode —
+the division is `try_divide`, matching the DuckDB oracle's NULL for
+`x / 0.0` — as does a pair with a NULL embedding or of two different
+lengths; NULL ranks last (`cos DESC NULLS LAST`).
 
 Determinism: cosine values are rounded before any ranking so that top-k
 order (rounded score desc, id asc) is stable across engines and runs.
@@ -13,7 +33,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from diepy_spark.operators.dedup import _ident
@@ -32,16 +52,54 @@ def _dot(a: str, b: str):
 
 
 def _norm(a: str):
-    return F.sqrt(
-        F.expr(
-            f"aggregate(zip_with({_ident(a)}, {_ident(a)}, (x, y) -> x * y), "
-            f"0.0D, (acc, v) -> acc + v)"
-        )
-    )
+    return F.sqrt(_dot(a, a))
 
 
-def cosine(a: str, b: str):
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def cosine(a: str, b: str) -> Column:
+    """Cosine of two vector columns, computing both norms for this pair.
+
+    Use it only where each vector meets O(1) partners; in a join where a
+    vector meets many partners, give each side a `_norm` column first and
+    score with `cosine_normed`. A zero vector scores NULL (`try_divide`),
+    never a DIVIDE_BY_ZERO error."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+
+
+def cosine_normed(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of vector columns `a`, `b` whose norms are already the
+    columns `na`, `nb`: one dot product per pair. Same value as
+    cosine(a, b), bit for bit; a zero norm scores NULL."""
+    return F.try_divide(_dot(a, b), F.col(na) * F.col(nb))
+
+
+def topk_by_cosine(
+    stream: DataFrame,
+    small: DataFrame,
+    *,
+    vecs: tuple[str, str],
+    per: str,
+    tie: str,
+    k: int,
+    on: str | Column | None = None,
+) -> DataFrame:
+    """Join `stream` with broadcast `small`, score each pair by rounded
+    cosine `cos` and keep the top `k` rows per `per` as rank `rk` (order:
+    cos desc with NULLs last, then `tie` asc — rank ties impossible).
+
+    `vecs` names the vector column of (`stream`, `small`). Each side gets
+    its norm as a column before the join, so each pair costs one dot
+    product. `on` is the join key or condition (None: every pair). The
+    result holds every joined column (norms `_ns`, `_nb` included) plus
+    `cos` and `rk`, for the caller to select from; the `rk <= k` filter
+    over row_number lets Spark plan a partial top-k (WindowGroupLimit)
+    before the window shuffle."""
+    sv, bv = vecs
+    s = stream.withColumn("_ns", _norm(sv))
+    b = F.broadcast(small.withColumn("_nb", _norm(bv)))
+    pairs = s.join(b) if on is None else s.join(b, on)
+    scored = pairs.withColumn("cos", F.round(cosine_normed(bv, sv, "_nb", "_ns"), 4))
+    w = Window.partitionBy(per).orderBy(F.col("cos").desc(), F.col(tie))
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
 def cosine_pairs(
@@ -83,7 +141,7 @@ def cosine_pairs(
     )
     return (
         a.join(b, F.col("va") < F.col("vb"))
-        .withColumn("cos", F.round(_dot("ea", "eb") / (F.col("na") * F.col("nb")), 4))
+        .withColumn("cos", F.round(cosine_normed("ea", "eb", "na", "nb"), 4))
         .where(F.col("cos") >= threshold)
         .select("va", "vb", "cos")
     )
@@ -93,24 +151,24 @@ def cosine_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 3,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k neighbors per query vector, brute force.
+    """Exact top-k neighbors per query vector, brute force: (qid, cid,
+    cos, rk).
 
     The query side is broadcast (queries are few; the corpus is the big
     side), so the corpus is scanned once with no shuffle; the per-query
     top-k is a window over (rounded cos desc, id) — rank ties impossible.
-    The corpus is hash-repartitioned so the per-(query, doc) dot products
-    use every core even when the source is one small file."""
-    q = F.broadcast(queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")))
+    Each vector's norm is computed once, before the join, so each
+    (query, doc) pair costs one dot product (`topk_by_cosine`); a zero
+    vector scores NULL and ranks last. The corpus is hash-repartitioned so
+    the dot products use every core even when the source is one small
+    file."""
+    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
     c = corpus.repartition(
         corpus.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-    scored = c.join(q).withColumn("cos", F.round(cosine("qv", "cv"), 4))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "cid", "cos", "rk")
-    )
+    return topk_by_cosine(
+        c, q, vecs=("cv", "qv"), per="qid", tie="cid", k=k
+    ).select("qid", "cid", "cos", "rk")
 
 
 def lsh_near_dup_pairs(
@@ -147,7 +205,7 @@ def lsh_near_dup_pairs(
     return (
         x.join(y.hint("shuffle_hash"), "bucket")
         .where(F.col("va") < F.col("vb"))
-        .withColumn("cos", F.round(_dot("ea", "eb") / (F.col("na") * F.col("nb")), 4))
+        .withColumn("cos", F.round(cosine_normed("ea", "eb", "na", "nb"), 4))
         .where(F.col("cos") >= threshold)
         .select("va", "vb", "cos")
     )
@@ -167,18 +225,13 @@ def ivf_assign(
 
     IVF coarse quantization: centroids are few (100-65k at scale) and ride
     in as a broadcast; assignment is one narrow pass over the corpus (K dot
-    products per row), then a per-vector top-n via window row_number."""
+    products per row, norms computed once per vector and centroid), then a
+    per-vector top-n via window row_number."""
     v = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vv"))
-    c = F.broadcast(centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv")))
-    scored = v.join(c).select(
-        "vid", "cell", F.round(cosine("vv", "cv"), 4).alias("ccos")
-    )
-    w = Window.partitionBy("vid").orderBy(F.col("ccos").desc(), F.col("cell"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= n)
-        .select(F.col("vid"), "cell")
-    )
+    c = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv"))
+    return topk_by_cosine(
+        v, c, vecs=("vv", "cv"), per="vid", tie="cell", k=n
+    ).select("vid", "cell")
 
 
 def ivf_topk(
@@ -211,13 +264,9 @@ def ivf_topk(
         queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
         .join(qa.withColumnRenamed("vid", "qid"), "qid")
     )
-    scored = c.join(F.broadcast(q), "cell").withColumn("cos", F.round(cosine("qv", "cv"), 4))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "cid", "cos", "rk")
-    )
+    return topk_by_cosine(
+        c, q, vecs=("cv", "qv"), on="cell", per="qid", tie="cid", k=k
+    ).select("qid", "cid", "cos", "rk")
 
 
 def label_centroids(
@@ -357,15 +406,9 @@ def ann_topk_lsh(
         F.col(vec_col).alias("cv"),
         bucket_expr(vec_col, dim, num_planes).alias("bucket"),
     )
-    scored = c.join(F.broadcast(q), "bucket").withColumn(
-        "cos", F.round(cosine("qv", "cv"), 4)
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "cid", "cos", "rk")
-    )
+    return topk_by_cosine(
+        c, q, vecs=("cv", "qv"), on="bucket", per="qid", tie="cid", k=k
+    ).select("qid", "cid", "cos", "rk")
 
 
 def quantize_int8(

@@ -726,29 +726,23 @@ def x3_filtered_ann(spark, sf_dir):
     fewer than k when the filter is selective. Plan: queries broadcast
     with their labels, predicate evaluated in the join condition so the
     corpus scan stays single-pass and shuffle-free; ranking is the same
-    per-query window as x3_cosine_topk."""
+    per-query window and norm columns as x3_cosine_topk."""
     v = _vecs(spark, sf_dir)
-    q = F.broadcast(
-        v.where(F.col("vec_id") < TOPK_QUERY_MAX).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            F.col("label").alias("ql"),
-        )
+    q = v.where(F.col("vec_id") < TOPK_QUERY_MAX).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qv"),
+        F.col("label").alias("ql"),
     )
     c = v.where(F.col("vec_id") >= TOPK_QUERY_MAX).select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("cv"),
         F.col("label").alias("cl"),
     )
-    from pyspark.sql import Window
-
-    scored = c.join(q, F.col("ql") != F.col("cl")).withColumn(
-        "cos", F.round(S.cosine("qv", "cv"), 4)
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOPK_K)
+        S.topk_by_cosine(
+            c, q, vecs=("cv", "qv"), on=F.col("ql") != F.col("cl"),
+            per="qid", tie="cid", k=TOPK_K,
+        )
         .select("qid", "ql", "cid", "cl", "cos", "rk")
         .orderBy("qid", "rk")
     )
@@ -17790,17 +17784,10 @@ def x3_hybrid_rank(spark, sf_dir):
     c = v.repartition(
         spark.sparkContext.defaultParallelism, F.col("vec_id")
     ).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    scored = (
-        c.join(F.broadcast(qv))
-        .where(F.col("cid") != F.col("q"))
-        .withColumn("cos", F.round(S.cosine("qe", "ce"), 4))
-    )
-    wd = Window.partitionBy("q").orderBy(F.col("cos").desc(), F.col("cid"))
-    dense = (
-        scored.withColumn("rk", F.row_number().over(wd))
-        .where(F.col("rk") <= BM_K)
-        .select("q", F.col("cid").alias("d"), "rk")
-    )
+    dense = S.topk_by_cosine(
+        c, qv, vecs=("ce", "qe"), on=F.col("cid") != F.col("q"),
+        per="q", tie="cid", k=BM_K,
+    ).select("q", F.col("cid").alias("d"), "rk")
     u = lex.selectExpr(
         "query_id AS q", "doc_id AS d", "rk", "'lex' AS src"
     ).unionByName(dense.selectExpr("q", "d", "rk", "'dense' AS src"))
@@ -18252,7 +18239,10 @@ def x3_hard_negatives(spark, sf_dir):
     so the cosine pass is arithmetic on a bounded frame — the probe
     and candidate vectors are fetched by broadcast-joining the
     BOUNDED pair list against the embeddings table (two hash probes
-    of the corpus, no corpus-side shuffle, no all-pairs term)."""
+    of the corpus, no corpus-side shuffle, no all-pairs term). Each
+    vector meets O(1) partners here, so the per-pair S.cosine is the
+    right scorer: norm columns would add a norm pass over the whole
+    embeddings table."""
     lex = _bm25_topk_cached(spark, sf_dir)
     v = _vecs(spark, sf_dir)
     qe = v.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))

@@ -1259,3 +1259,111 @@ def test_bfs_distances_multi_source_min(spark):
     one = {r["node"]: r["d"] for r in bfs_distances(
         sym, seeds.where(F.col("node") == 1), iterations=1).collect()}
     assert one == {1: 0, 2: 1}
+
+
+def _cosine_fixture(spark):
+    """~500 seeded 16-d vectors: ids 0-9 are queries, each near corpus
+    vector 100+i, whose exact double 600+i (x2 scales every product and
+    norm exactly) scores the same rounded cos, so only cid breaks the
+    tie. Ids 900-902 are a zero vector, a NULL embedding and a 3-d
+    vector; they are both queries and corpus rows."""
+    import random
+
+    rng = random.Random(23)
+    dim = 16
+    base = {i: [rng.gauss(0.0, 1.0) for _ in range(dim)] for i in range(100, 580)}
+    rows = list(base.items())
+    rows += [(600 + i, [2.0 * x for x in base[100 + i]]) for i in range(10)]
+    rows += [(i, [x + rng.gauss(0.0, 0.05) for x in base[100 + i]]) for i in range(10)]
+    rows += [(900, [0.0] * dim), (901, None), (902, [1.0, 2.0, 3.0])]
+    v = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = v.where((F.col("vec_id") < 10) | (F.col("vec_id") >= 900))
+    corpus = v.where(F.col("vec_id") >= 100)
+    return queries, corpus, dim
+
+
+def _per_pair_topk(pairs, k):
+    """Reference ranking: per-pair cosine (both norms inside the pair
+    expression) under the same window as the operators."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
+    return sorted(
+        (tuple(r) for r in pairs.withColumn("cos", F.round(S.cosine("qv", "cv"), 4))
+         .withColumn("rk", F.row_number().over(w))
+         .where(F.col("rk") <= k)
+         .select("qid", "cid", "cos", "rk")
+         .collect()),
+        key=lambda r: (r[0], r[3]),
+    )
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=lambda r: (r[0], r[3]))
+
+
+def test_topk_scorers_match_per_pair_cosine(spark):
+    """Norm-column scoring returns exactly the per-pair formula's rows:
+    same cos bits, same tie-break on planted exact ties; a zero, NULL or
+    different-length vector scores NULL and ranks last, never raising."""
+    from pyspark.sql import Window
+
+    queries, corpus, dim = _cosine_fixture(spark)
+    q = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    c = corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
+    k = 4
+
+    got = _rows(S.cosine_topk(queries, corpus, k=k))
+    assert got == _per_pair_topk(c.crossJoin(q), k)
+    by_q = {}
+    for qid, cid, cos, rk in got:
+        by_q.setdefault(qid, []).append((cid, cos))
+    for i in range(10):  # planted tie: x and 2x share cos, cid orders them
+        (c1, s1), (c2, s2) = by_q[i][:2]
+        assert (c1, c2) == (100 + i, 600 + i) and s1 == s2 is not None
+    for special in (900, 901):
+        assert [s for _, s in by_q[special]] == [None] * k
+    # the 3-d vector matches only itself; every 16-d partner scores NULL
+    assert by_q[902][0] == (902, 1.0)
+    assert [s for _, s in by_q[902][1:]] == [None] * (k - 1)
+    assert all(cid < 900 for i in range(10) for cid, _ in by_q[i])
+
+    # IVF: reference cells by per-pair cosine, candidates share a cell
+    cents = corpus.where(F.col("vec_id") < 108)
+    cv = cents.select(F.col("vec_id").alias("cell"), F.col("embedding").alias("ce"))
+
+    def cells(df, n):
+        w = Window.partitionBy("vid").orderBy(F.col("ccos").desc(), F.col("cell"))
+        return (
+            df.crossJoin(cv)
+            .withColumn("ccos", F.round(S.cosine("vv", "ce"), 4))
+            .withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") <= n)
+            .select("vid", "cell")
+        )
+
+    qc = cells(q.select(F.col("qid").alias("vid"), F.col("qv").alias("vv")), 2)
+    cc = cells(c.select(F.col("cid").alias("vid"), F.col("cv").alias("vv")), 1)
+    pairs = (
+        q.join(qc.withColumnRenamed("vid", "qid"), "qid")
+        .join(cc.withColumnRenamed("vid", "cid"), "cell")
+        .join(c, "cid")
+    )
+    got = _rows(S.ivf_topk(queries, corpus, cents, k=k, nprobe=2))
+    assert got == _per_pair_topk(pairs, k)
+
+    # LSH: candidates share a bucket (exact bucket and one-flip probes)
+    planes = 3
+    qb = S.lsh_bucket(queries, planes, dim=dim).withColumnRenamed("vid", "qid")
+    cb = S.lsh_bucket(corpus, planes, dim=dim).withColumnRenamed("vid", "cid")
+    exact = q.join(qb, "qid").join(cb, "bucket").join(c, "cid")
+    got = _rows(S.ann_topk_lsh(queries, corpus, k=k, num_planes=planes, dim=dim))
+    assert got == _per_pair_topk(exact, k)
+    probes = qb.select(
+        "qid",
+        F.explode(F.array("bucket", *[F.col("bucket").bitwiseXOR(1 << p) for p in range(planes)]))
+        .alias("bucket"),
+    )
+    multi = q.join(probes, "qid").join(cb, "bucket").join(c, "cid")
+    got = _rows(S.ann_topk_lsh(queries, corpus, k=k, num_planes=planes, dim=dim, hamming=1))
+    assert got == _per_pair_topk(multi, k)

@@ -498,3 +498,34 @@ def test_cuped_broadcasts_scalar_frames(spark, qs):
     plan = plan_of(qs["x8_cuped"](spark, SF))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_cosine_topk_one_dot_product_per_pair(spark):
+    """Each vector's norm is a column computed below the broadcast
+    nested-loop join; the projection directly above the join scores a
+    pair with exactly one zip_with (the dot product). Exchanges stay the
+    corpus repartition plus the per-query window shuffle."""
+    from diepy_spark.operators.similarity import cosine_topk
+    from tools.plan_audit import audit, plan_nodes, subtree
+
+    v = load_table(spark, SF, "embeddings")
+    plan = plan_of(cosine_topk(v.where(F.col("vec_id") < 5), v.where(F.col("vec_id") >= 5), k=3))
+    nodes = plan_nodes(plan)
+    (j,) = [i for i, node in enumerate(nodes) if node[1] == "BroadcastNestedLoopJoin"]
+    _, parent, parent_text = nodes[j - 1]
+    assert parent == "Project"
+    assert parent_text.count("zip_with(") == 1
+    self_zip = r"zip_with\(([\w#]+), \1,"
+    assert len(re.findall(self_zip, plan)) == 2
+    assert sum(len(re.findall(self_zip, text)) for *_, text in subtree(nodes, j)) == 2
+    assert audit(plan)["per_pair_norm"] == 0
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
+    assert "REPARTITION_BY_NUM" in plan
+    assert plan.count("Arguments: hashpartitioning(qid") == 1
+    # the per-pair spelling (both norms inside the pair projection) is
+    # what the audit counter flags
+    from diepy_spark.operators.similarity import cosine
+
+    q = v.where(F.col("vec_id") < 5).select(F.col("embedding").alias("qv"))
+    per_pair = v.crossJoin(F.broadcast(q)).select(cosine("qv", "embedding").alias("cos"))
+    assert audit(plan_of(per_pair))["per_pair_norm"] == 2

@@ -9,7 +9,15 @@ tallies the plan-smell counters that predict 100 TB pain:
 - Generate (explode) nodes — duplicated corpus explodes are the most
   expensive re-derivation,
 - BroadcastNestedLoopJoin (the interpreted-condition trap),
-- row-at-a-time Python eval nodes (BatchEvalPython — must stay 0).
+- row-at-a-time Python eval nodes (BatchEvalPython — must stay 0),
+- per-pair norms: self-zips (`zip_with(x, x, ...)`, a vector's squared
+  norm) evaluated above a join, in the same node as a dot product of two
+  different vectors — the per-pair `similarity.cosine()` shape, which
+  recomputes both norms for every scored pair. Searches compute norms
+  once per vector as columns below the join, so this reads 0 for every
+  x3 query except `x3_hard_negatives`, whose pairs are a bounded list
+  where each vector meets O(1) partners (there the per-pair form is the
+  cheaper one).
 
 Queries that EXECUTE during plan construction (streaming replays, file
 roundtrips) are skipped — their returned frame is a memory/scratch scan,
@@ -103,6 +111,50 @@ def _single_partition_sorts(plan: str) -> int:
     return n
 
 
+_TREE_NODE = re.compile(r"^([ :|+\-]*)(?:\* )?(\w+)[^()]*\((\d+)\)$")
+_DETAIL = re.compile(r"^\((\d+)\) [^\n]*\n(.*?)(?=^\(\d+\) |\Z)", re.M | re.S)
+_ZIP = re.compile(r"zip_with\(([\w#]+), ([\w#]+),")
+
+
+def plan_nodes(plan: str) -> list[tuple[int, str, str]]:
+    """(depth, name, detail text) for each node of a formatted plan's tree,
+    in tree order, so a node's subtree is the run of deeper nodes after it
+    (see `subtree`). The detail text is the node's `(id) Name` block."""
+    details = dict(_DETAIL.findall(plan))
+    nodes = []
+    for line in plan.splitlines():
+        m = _TREE_NODE.match(line)
+        if m and not line.startswith("("):
+            nodes.append((len(m.group(1)), m.group(2), details.get(m.group(3), "")))
+    return nodes
+
+
+def subtree(nodes: list[tuple[int, str, str]], i: int) -> list[tuple[int, str, str]]:
+    """The nodes below nodes[i]."""
+    out = []
+    for node in nodes[i + 1:]:
+        if node[0] <= nodes[i][0]:
+            break
+        out.append(node)
+    return out
+
+
+def _per_pair_norms(plan: str) -> int:
+    """Self-zips in nodes that sit above a join AND zip two different
+    vectors: a node computing a pair's dot product together with the
+    pair's norms."""
+    nodes = plan_nodes(plan)
+    n = 0
+    for i, (_, _, text) in enumerate(nodes):
+        zips = _ZIP.findall(text)
+        if any(a != b for a, b in zips) and any(
+            "Join" in name or name == "CartesianProduct"
+            for _, name, _ in subtree(nodes, i)
+        ):
+            n += sum(a == b for a, b in zips)
+    return n
+
+
 def audit(plan: str) -> dict[str, int]:
     return {
         "scans": len(re.findall(r"Scan parquet", plan)),
@@ -118,6 +170,7 @@ def audit(plan: str) -> dict[str, int]:
         # x8_sprt disease — sweep any query where this column is >0 and
         # check what frame feeds it.
         "onepart": _single_partition_sorts(plan),
+        "per_pair_norm": _per_pair_norms(plan),
     }
 
 
@@ -149,12 +202,12 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 - audit must not abort
             print(f"  ERR {name}: {exc}")
     rows.sort(key=lambda r: -(r[1]["scans"] + r[1]["exchanges"]))
-    print(f"{'query':34s} scans exch reused gen bnlj pyeval 1part")
+    print(f"{'query':34s} scans exch reused gen bnlj pyeval 1part ppnorm")
     for name, a in rows:
         print(
             f"{name:34s} {a['scans']:5d} {a['exchanges']:4d} {a['reused']:6d}"
             f" {a['generates']:3d} {a['bnlj']:4d} {a['pyeval']:6d}"
-            f" {a['onepart']:5d}"
+            f" {a['onepart']:5d} {a['per_pair_norm']:6d}"
         )
     return 0
 
