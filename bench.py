@@ -83,9 +83,10 @@ def main() -> None:
     # restarts the session at every family boundary, so each family's
     # numbers approximate its own fresh-process run — comparable
     # round-over-round and across families. JIT state survives the
-    # restart (same JVM); session-cached artifacts are appId-keyed and
-    # rebuild inside their own family's cold run, exactly like the
-    # isolated measurement they're compared against. Opt out with
+    # restart (same JVM); every memoized artifact (session_cached:
+    # frames and driver-side models alike) belongs to one session and
+    # rebuilds inside its own family's cold run, exactly like the
+    # isolated measurement it's compared against. Opt out with
     # SPARK_GRAFT_BENCH_CYCLE=0.
     cycle = os.environ.get("SPARK_GRAFT_BENCH_CYCLE", "1") != "0"
 

@@ -63,12 +63,26 @@ def clean_corpus(
     (measured 4x this function's runtime), while the cache makes the
     threshold filter a scan over materialized doubles instead.
     """
+    feat, _, deduped = _gate_exact_chain(
+        df, text_col, id_col, min_tokens, min_score, max_dup3, pin=DataFrame.persist
+    )
+    try:
+        return _near_dedup(deduped, text_col, id_col, jaccard_threshold, max_df)
+    finally:
+        feat.unpersist()
+
+
+def _gate_exact_chain(df, text_col, id_col, min_tokens, min_score, max_dup3, pin):
+    """(feat, gate, deduped): the per-doc feature frame, pinned by
+    ``pin``; the quality-gate survivors as (id_col, n_tokens, score); and
+    the gate survivors' exact-dedup representatives (full rows plus
+    n_tokens, score), lazily localCheckpointed."""
     tf = _token_frame(
         df, text_col, id_col, F.length(text_col).alias("n_chars_raw"), min_tokens=1
     )
     q = quality_exprs()
     g3 = F.col("g3")
-    feat = (
+    feat = pin(
         # g3 materialized as a real column — the dup fraction references it
         # three times, and inlining would re-build the gram array per
         # reference under interpreted HOF eval (see dedup.shingle_frame)
@@ -86,7 +100,6 @@ def clean_corpus(
                 F.size(g3) - F.size(F.array_distinct(g3)), F.size(g3)
             ).alias("dup_frac3"),
         )
-        .persist()
     )
     gate = feat.where(
         (F.col("n_tokens") >= min_tokens)
@@ -107,25 +120,31 @@ def clean_corpus(
     # extra job that measured +60% on this operator at sf0.1. Checkpoint
     # blocks — unlike CacheManager entries — are reference-counted by the
     # ContextCleaner: once the caller drops the returned frame they are
-    # GC-reclaimed, and the persisted feat/pairs frames below are
-    # explicitly released before returning, so repeated calls never
+    # GC-reclaimed, and the persisted feat/pairs frames are explicitly
+    # released before clean_corpus returns, so repeated calls never
     # accumulate cache state (pinned by
     # tests/test_operators.py::test_clean_corpus_cache_lifecycle).
     deduped = survivors.join(
         exact_rep.select(id_col), id_col, "left_semi"
     ).localCheckpoint(eager=False)
+    return feat, gate, deduped
+
+
+def _near_dedup(deduped, text_col, id_col, jaccard_threshold, max_df):
+    """One representative per n-gram-Jaccard duplicate cluster of
+    ``deduped``; the pair frame is persisted only while the labels are
+    built."""
     pairs = ngram_jaccard_pairs(
         deduped, threshold=jaccard_threshold, max_df=max_df, text_col=text_col, id_col=id_col
     ).persist()
     try:
         # dedup_corpus materializes the cluster labels EAGERLY (the CC loop
         # acts per round and localCheckpoints the result), so by the time it
-        # returns, `feat` and `pairs` have been consumed — the returned
-        # frame depends only on deduped's checkpoint blocks + the
-        # checkpointed labels.
+        # returns, `pairs` (and clean_corpus's `feat`) have been consumed —
+        # the returned frame depends only on deduped's checkpoint blocks +
+        # the checkpointed labels.
         return dedup_corpus(deduped, pairs, id_col=id_col)
     finally:
-        feat.unpersist()
         pairs.unpersist()
 
 
@@ -154,58 +173,18 @@ def corpus_funnel(
     this module stays free of embedding-model wiring. All counts are
     exact integers — the whole funnel hash-checks cross-engine.
 
-    ``clean`` (r13, guide §2.1 "remove shuffles outright"): the
-    already-built clean_corpus survivor frame at the SAME thresholds —
-    the persisted cleaned-corpus artifact a production stack writes
-    once. When given, stages 3 (neardup) and 4 (semdedup) aggregate it
-    directly and the funnel never re-runs the near-dup pair generation
-    + connected components (its dominant cost); the funnel then prices
-    one extra feature pass + one md5 aggregate on top of the pipeline
-    run it instruments, not a second pipeline run. Identical by
-    construction: clean_corpus's chain IS this function's
-    feat→gate→exact→neardup chain at equal thresholds."""
-    tf = _token_frame(
-        df, text_col, id_col, F.length(text_col).alias("n_chars_raw"), min_tokens=1
+    ``clean``: the already-built clean_corpus survivor frame at the SAME
+    thresholds (the persisted cleaned-corpus artifact). When given,
+    stages 3 and 4 aggregate it instead of re-running the near-dup pair
+    generation + connected components, the funnel's dominant cost. Both
+    paths run clean_corpus's own chain (_gate_exact_chain, _near_dedup)."""
+    # feat has 4 consumers here: lazily checkpointed, never unpersisted
+    feat, gate, deduped = _gate_exact_chain(
+        df, text_col, id_col, min_tokens, min_score, max_dup3,
+        pin=lambda f: f.localCheckpoint(eager=False),
     )
-    q = quality_exprs()
-    feat = (
-        tf.select(
-            F.col(id_col), "toks", "n_chars_raw",
-            F.expr(_grams_over("toks", 3)).alias("g3"),
-        )
-        .select(
-            F.col(id_col),
-            q["n_tokens"].alias("n_tokens"),
-            q["score"].alias("score"),
-            F.try_divide(
-                F.size(F.col("g3")) - F.size(F.array_distinct("g3")),
-                F.size(F.col("g3")),
-            ).alias("dup_frac3"),
-        )
-        .localCheckpoint(eager=False)  # per-doc features, 4 consumers
-    )
-    gate = feat.where(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("score") >= min_score)
-        & (F.col("dup_frac3") <= max_dup3)
-    ).select(id_col, "n_tokens")
-    survivors = df.join(gate, id_col)
-    deduped = survivors.join(
-        exact_representatives(survivors, text_col, id_col).select(id_col),
-        id_col,
-        "left_semi",
-    ).localCheckpoint(eager=False)
     if clean is None:
-        pairs = ngram_jaccard_pairs(
-            deduped, threshold=jaccard_threshold, max_df=max_df,
-            text_col=text_col, id_col=id_col,
-        ).persist()
-        try:
-            # dedup_corpus materializes the CC labels EAGERLY (see
-            # clean_corpus) — by return time `pairs` has been consumed.
-            clean = dedup_corpus(deduped, pairs, id_col=id_col)
-        finally:
-            pairs.unpersist()
+        clean = _near_dedup(deduped, text_col, id_col, jaccard_threshold, max_df)
     sem = clean.join(
         F.broadcast(sem_flags.select(id_col, "is_dup")), id_col, "left"
     ).where(~F.coalesce("is_dup", F.lit(False)))

@@ -19,7 +19,7 @@ from diepy_spark.operators import similarity as S
 from diepy_spark.operators import text as T
 from diepy_spark.operators import multimodal as M
 from diepy_spark.operators.text import LANG_PROFILES
-from diepy_spark.session import tune
+from diepy_spark.session import session_cached, tune
 from diepy_spark.sources.registry import load_table
 
 # tuning constants shared by Spark plans and oracle SQL
@@ -51,40 +51,23 @@ def _vecs(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
-
-# ---------------------------------------------------------------------------
-# Trained-model cache: centroid tables and PQ codebooks are DETERMINISTIC
-# functions of (sf_dir, hyperparams) — training twice in one process is
-# pure waste, and at production scale these artifacts are trained once
-# and PERSISTED (the SemDeDup paper writes assignments out; a faiss index
-# stores its quantizers). Memoizing here mirrors that: queries stay
-# hash-checked end to end, the driver-sized model just isn't re-derived
-# per consumer. Keyed on every input that affects the result.
-# ---------------------------------------------------------------------------
-_MODEL_CACHE: dict = {}
-
-
+@session_cached
 def _cents_cached(spark, sf_dir, k, iterations, scale):
     from diepy_spark.operators.clustering import kmeans_centroids_int
 
-    key = ("cents", sf_dir, k, iterations, scale)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = kmeans_centroids_int(
-            _vecs(spark, sf_dir), k=k, iterations=iterations, scale=scale
-        )
-    return _MODEL_CACHE[key]
+    return kmeans_centroids_int(
+        _vecs(spark, sf_dir), k=k, iterations=iterations, scale=scale
+    )
 
 
+@session_cached
 def _books_cached(spark, sf_dir, m, ncodes, scale):
     from diepy_spark.operators.similarity import pq_codebooks
 
-    key = ("books", sf_dir, m, ncodes, scale)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = pq_codebooks(
-            _vecs(spark, sf_dir), m=m, ncodes=ncodes, scale=scale
-        )
-    return _MODEL_CACHE[key]
+    return pq_codebooks(_vecs(spark, sf_dir), m=m, ncodes=ncodes, scale=scale)
 
+
+@session_cached
 def _sd_pairs_cached(spark, sf_dir):
     """The SemDeDup assignment + within-cell pair frame shared by the
     flag table (_sdflags_cached) and the threshold sweep
@@ -94,19 +77,14 @@ def _sd_pairs_cached(spark, sf_dir):
     assignment is already cut inside _semdedup_assign_pairs."""
     from diepy_spark.operators.similarity import _semdedup_assign_pairs
 
-    key = (
-        "sdpairs", spark.sparkContext.applicationId, sf_dir,
-        _sd_k(spark, sf_dir), SD_ITER, SD_SCALE,
+    cents = _cents_cached(spark, sf_dir, _sd_k(spark, sf_dir), SD_ITER, SD_SCALE)
+    a, pr = _semdedup_assign_pairs(
+        _vecs(spark, sf_dir), cents, SD_SCALE, "vec_id", "embedding"
     )
-    if key not in _MODEL_CACHE:
-        cents = _cents_cached(spark, sf_dir, _sd_k(spark, sf_dir), SD_ITER, SD_SCALE)
-        a, pr = _semdedup_assign_pairs(
-            _vecs(spark, sf_dir), cents, SD_SCALE, "vec_id", "embedding"
-        )
-        _MODEL_CACHE[key] = (a, pr.localCheckpoint(eager=False))
-    return _MODEL_CACHE[key]
+    return a, pr.localCheckpoint(eager=False)
 
 
+@session_cached
 def _sdflags_cached(spark, sf_dir):
     """The SemDeDup flag frame shared by its report (x2_semdedup) and
     corpus consumer (x2_semdedup_apply) — narratively the PERSISTED
@@ -115,20 +93,15 @@ def _sdflags_cached(spark, sf_dir):
     lineage-cut: the expensive subtree is the k x dim literal-distance
     assignment plus the within-cell pair join, re-derived otherwise by
     every consumer."""
-    key = (
-        "sdflags", spark.sparkContext.applicationId, sf_dir,
-        _sd_k(spark, sf_dir), SD_ITER, SD_SCALE, SD_THR_NUM, SD_THR_DEN,
-    )
-    if key not in _MODEL_CACHE:
-        cents = _cents_cached(spark, sf_dir, _sd_k(spark, sf_dir), SD_ITER, SD_SCALE)
-        _MODEL_CACHE[key] = S.semdedup_flags(
-            _vecs(spark, sf_dir), cents,
-            thr_num=SD_THR_NUM, thr_den=SD_THR_DEN, scale=SD_SCALE,
-            assign_pairs=_sd_pairs_cached(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    cents = _cents_cached(spark, sf_dir, _sd_k(spark, sf_dir), SD_ITER, SD_SCALE)
+    return S.semdedup_flags(
+        _vecs(spark, sf_dir), cents,
+        thr_num=SD_THR_NUM, thr_den=SD_THR_DEN, scale=SD_SCALE,
+        assign_pairs=_sd_pairs_cached(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
+@session_cached
 def _clean_corpus_cached(spark, sf_dir):
     """The composed clean_corpus survivor frame (quality gate -> exact
     dedup -> near-dup dedup) at the declared thresholds — narratively
@@ -138,19 +111,17 @@ def _clean_corpus_cached(spark, sf_dir):
     session-memoized with a lineage cut like the SemDeDup flag table."""
     from diepy_spark.operators.corpus import clean_corpus
 
-    key = ("cleancorpus", spark.sparkContext.applicationId, sf_dir)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = clean_corpus(
-            _docs(spark, sf_dir),
-            min_tokens=CLEAN_MIN_TOKENS,
-            min_score=CLEAN_MIN_SCORE,
-            max_dup3=CLEAN_MAX_DUP3,
-            jaccard_threshold=JACCARD_THRESHOLD,
-            max_df=JACCARD_MAX_DF,
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return clean_corpus(
+        _docs(spark, sf_dir),
+        min_tokens=CLEAN_MIN_TOKENS,
+        min_score=CLEAN_MIN_SCORE,
+        max_dup3=CLEAN_MAX_DUP3,
+        jaccard_threshold=JACCARD_THRESHOLD,
+        max_df=JACCARD_MAX_DF,
+    ).localCheckpoint(eager=False)
 
 
+@session_cached
 def _supply_ps(spark, sf_dir):
     """The distinct part↔supplier edge list every x11 graph query is
     built on: (l_partkey*10+1, l_suppkey*10+2) DISTINCT over lineitem.
@@ -160,26 +131,23 @@ def _supply_ps(spark, sf_dir):
     contract — instead of re-running the scan + distinct exchange per
     query. Fourteen x11 plans consume this frame; results are
     hash-identical by construction (same expression, same distinct)."""
-    key = ("supplyps", spark.sparkContext.applicationId, sf_dir)
-    if key not in _MODEL_CACHE:
-        from diepy_spark.operators.clustering import keyed_checkpoint
+    from diepy_spark.operators.clustering import keyed_checkpoint
 
-        li = load_table(spark, sf_dir, "lineitem")
-        # r13: materialized hash-partitioned on src (keyed_checkpoint —
-        # the Pregel/GraphX edge layout, see _supply_sym) so directed
-        # consumers' joins/degree aggregates keyed on src skip the
-        # edge-side exchange every round (hits' hub half-step is the
-        # heavy one).
-        _MODEL_CACHE[key] = keyed_checkpoint(
-            li.select(
-                (F.col("l_partkey") * 10 + 1).alias("src"),
-                (F.col("l_suppkey") * 10 + 2).alias("dst"),
-            ).distinct(),
-            "src",
-        )
-    return _MODEL_CACHE[key]
+    li = load_table(spark, sf_dir, "lineitem")
+    # r13: materialized hash-partitioned on src (keyed_checkpoint — the
+    # Pregel/GraphX edge layout, see _supply_sym) so directed consumers'
+    # joins/degree aggregates keyed on src skip the edge-side exchange
+    # every round (hits' hub half-step is the heavy one).
+    return keyed_checkpoint(
+        li.select(
+            (F.col("l_partkey") * 10 + 1).alias("src"),
+            (F.col("l_suppkey") * 10 + 2).alias("dst"),
+        ).distinct(),
+        "src",
+    )
 
 
+@session_cached
 def _supply_sym(spark, sf_dir):
     """Symmetrized _supply_ps, session-memoized as a SRC-PARTITIONED
     checkpoint (r13, guide §2.4). Part ids are ≡1 (mod 10) and supplier
@@ -192,20 +160,18 @@ def _supply_sym(spark, sf_dir):
     frames move per superstep). One explicit repartition per session buys
     pagerank/ppr/katz/bfs/closeness/kcore/LPA-degree passes their
     edge-side exchange at EVERY iteration."""
-    key = ("supplysym", spark.sparkContext.applicationId, sf_dir)
-    if key not in _MODEL_CACHE:
-        from diepy_spark.operators.clustering import keyed_checkpoint
+    from diepy_spark.operators.clustering import keyed_checkpoint
 
-        ps = _supply_ps(spark, sf_dir)
-        _MODEL_CACHE[key] = keyed_checkpoint(
-            ps.unionByName(
-                ps.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ),
-            "src",
-        )
-    return _MODEL_CACHE[key]
+    ps = _supply_ps(spark, sf_dir)
+    return keyed_checkpoint(
+        ps.unionByName(
+            ps.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ),
+        "src",
+    )
 
 
+@session_cached
 def _ev_vhist_cached(spark, sf_dir):
     """The per-(event_type, user-parity, cent-value) COUNT histogram over
     events with non-null value — THE value-frequency artifact the x8
@@ -219,21 +185,18 @@ def _ev_vhist_cached(spark, sf_dir):
     store persists. Parity is the shared cohort key (user ids are
     NOT NULL by the events schema; both parity spellings used by the
     consumers coincide)."""
-    key = ("evvhist", spark.sparkContext.applicationId, sf_dir)
-    if key not in _MODEL_CACHE:
-        ev = load_table(spark, sf_dir, "events")
-        _MODEL_CACHE[key] = (
-            ev.where(F.col("value").isNotNull())
-            .selectExpr(
-                "event_type",
-                "CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS par",
-                "CAST(round(value * 100) AS BIGINT) AS cents",
-            )
-            .groupBy("event_type", "par", "cents")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .localCheckpoint(eager=False)
+    return (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("value").isNotNull())
+        .selectExpr(
+            "event_type",
+            "CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS par",
+            "CAST(round(value * 100) AS BIGINT) AS cents",
         )
-    return _MODEL_CACHE[key]
+        .groupBy("event_type", "par", "cents")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .localCheckpoint(eager=False)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -253,6 +216,7 @@ def x2_minhash_signatures(spark, sf_dir):
     return D.minhash_signatures(_docs(spark, sf_dir), SIG_NUM_HASHES).orderBy("d")
 
 
+@session_cached
 def _mh_sigs_cached(spark, sf_dir):
     """The MinHash SIGNATURE frame at the standard LSH_NUM_HASHES width,
     session-memoized (r13) — narratively the persisted signature index a
@@ -262,15 +226,12 @@ def _mh_sigs_cached(spark, sf_dir):
     x2_containment_est) collapse to ONE corpus shingle+hash pass.
     Doc-count x LSH_NUM_HASHES cells — orders of magnitude below the
     shingle ledger it derives from."""
-    key = ("mhsigs", spark.sparkContext.applicationId, sf_dir,
-           LSH_NUM_HASHES)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = D.minhash_signatures(
-            _docs(spark, sf_dir), LSH_NUM_HASHES
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return D.minhash_signatures(
+        _docs(spark, sf_dir), LSH_NUM_HASHES
+    ).localCheckpoint(eager=False)
 
 
+@session_cached
 def _lsh_pairs_cached(spark, sf_dir):
     """The verified MinHash-LSH near-dup pair frame at the standard
     constants, shared by its three declared consumers
@@ -279,18 +240,14 @@ def _lsh_pairs_cached(spark, sf_dir):
     and joins everywhere (the _cc_cached pattern). Session-keyed with a
     lineage cut: the banding + exact-Jaccard verify chain is the
     expensive part, and each consumer would otherwise re-derive it."""
-    key = ("lshpairs", spark.sparkContext.applicationId, sf_dir,
-           LSH_NUM_HASHES, LSH_BAND_SIZE, LSH_THRESHOLD, JACCARD_MAX_DF)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = D.minhash_lsh_pairs(
-            _docs(spark, sf_dir),
-            num_hashes=LSH_NUM_HASHES,
-            band_size=LSH_BAND_SIZE,
-            threshold=LSH_THRESHOLD,
-            max_df=JACCARD_MAX_DF,
-            sigs=_mh_sigs_cached(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return D.minhash_lsh_pairs(
+        _docs(spark, sf_dir),
+        num_hashes=LSH_NUM_HASHES,
+        band_size=LSH_BAND_SIZE,
+        threshold=LSH_THRESHOLD,
+        max_df=JACCARD_MAX_DF,
+        sigs=_mh_sigs_cached(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
 def x2_minhash_lsh_pairs(spark, sf_dir):
@@ -341,6 +298,7 @@ def x2_cluster_size_dist(spark, sf_dir):
     )
 
 
+@session_cached
 def _jaccard_pairs(spark, sf_dir):
     """The n-gram Jaccard near-dup PAIR LIST, session-memoized (r13) —
     narratively the persisted dup-pair artifact a dedup pipeline writes
@@ -348,15 +306,12 @@ def _jaccard_pairs(spark, sf_dir):
     (ngram_jaccard_pairs, the CC label input, dedup apply/best/stats,
     x11_cc_twophase) collapse to one gram-bucketed pair generation.
     Pair-graph-sized, orders of magnitude below the corpus."""
-    key = ("jacpairs", spark.sparkContext.applicationId, sf_dir,
-           JACCARD_THRESHOLD, JACCARD_MAX_DF)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = D.ngram_jaccard_pairs(
-            _docs(spark, sf_dir), threshold=JACCARD_THRESHOLD, max_df=JACCARD_MAX_DF
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return D.ngram_jaccard_pairs(
+        _docs(spark, sf_dir), threshold=JACCARD_THRESHOLD, max_df=JACCARD_MAX_DF
+    ).localCheckpoint(eager=False)
 
 
+@session_cached
 def _cc_cached(spark, sf_dir):
     """Connected components over the n-gram Jaccard near-dup graph,
     shared by the five cluster consumers (dup_clusters, size dist,
@@ -367,13 +322,9 @@ def _cc_cached(spark, sf_dir):
     magnitude below the corpus."""
     from diepy_spark.operators.clustering import connected_components
 
-    key = ("ccjac", spark.sparkContext.applicationId, sf_dir,
-           JACCARD_THRESHOLD, JACCARD_MAX_DF)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = connected_components(
-            _jaccard_pairs(spark, sf_dir), "da", "db"
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return connected_components(
+        _jaccard_pairs(spark, sf_dir), "da", "db"
+    ).localCheckpoint(eager=False)
 
 
 def x2_dedup_apply(spark, sf_dir):
@@ -1551,6 +1502,7 @@ LANGCLF_N = 3  # char n-gram order of the trained language identifier
 LANGCLF_TOP = 64  # model vocabulary: top n-grams per language
 
 
+@session_cached
 def _langclf_cached(spark, sf_dir):
     """The trained-NB language predictions shared by the accuracy report
     (x5_lang_classify) and the detector-agreement matrix
@@ -1558,13 +1510,9 @@ def _langclf_cached(spark, sf_dir):
     pipeline materializes once. Session-keyed; the lineage cut stops
     each consumer re-running the per-document trigram scoring forest
     (at 100 TB: persist this frame, it is the classification output)."""
-    key = ("langclf", spark.sparkContext.applicationId, sf_dir,
-           LANGCLF_N, LANGCLF_TOP)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = T.lang_classify(
-            _docs(spark, sf_dir), n=LANGCLF_N, top_n=LANGCLF_TOP
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return T.lang_classify(
+        _docs(spark, sf_dir), n=LANGCLF_N, top_n=LANGCLF_TOP
+    ).localCheckpoint(eager=False)
 
 
 def x5_lang_classify(spark, sf_dir):
@@ -1845,6 +1793,7 @@ NJ_MIN_COMMON = 2
 NJ_TOP = 30
 
 
+@session_cached
 def _nj_edges_cached(spark, sf_dir):
     """The deduped (part, supplier) wedge-edge frame under NJ_PART_MAX,
     shared by x11_neighbor_jaccard and x11_adamic_adar — distinct runs
@@ -1852,16 +1801,13 @@ def _nj_edges_cached(spark, sf_dir):
     side, candidate side, degree dim) re-deriving the scan+distinct
     (was 8 scans for neighbor-jaccard alone). At 100 TB this frame is
     the persisted edge projection every link-prediction job reads."""
-    key = ("njedges", spark.sparkContext.applicationId, sf_dir, NJ_PART_MAX)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = (
-            load_table(spark, sf_dir, "lineitem")
-            .where(F.col("l_partkey") < NJ_PART_MAX)
-            .select("l_partkey", "l_suppkey")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    return _MODEL_CACHE[key]
+    return (
+        load_table(spark, sf_dir, "lineitem")
+        .where(F.col("l_partkey") < NJ_PART_MAX)
+        .select("l_partkey", "l_suppkey")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
 
 
 def x11_neighbor_jaccard(spark, sf_dir):
@@ -2749,17 +2695,13 @@ BPE_WORD_MAX = 16  # bounds the per-word fold (drops pathological id runs)
 _BPE_STEP = T.BPE_STEP
 
 
+@session_cached
 def _bpe_merges_cached(spark, sf_dir) -> list[tuple[str, str]]:
     """The learned merge table as driver-side (a, b) pairs — memoized
-    like the centroid/codebook models (_MODEL_CACHE): training once per
-    (sf_dir), then every encode-side consumer replays the same 8 merges
-    as literal folds."""
-    key = ("bpe", sf_dir, BPE_MERGES)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = [
-            (r["a"], r["b"]) for r in x5_bpe_train(spark, sf_dir).collect()
-        ]
-    return _MODEL_CACHE[key]
+    like the centroid/codebook models: training once per session, then
+    every encode-side consumer replays the same 8 merges as literal
+    folds."""
+    return [(r["a"], r["b"]) for r in x5_bpe_train(spark, sf_dir).collect()]
 
 
 def x5_bpe_apply(spark, sf_dir):
@@ -3680,6 +3622,7 @@ PQ_NQ = 4
 PQ_K = 3
 
 
+@session_cached
 def _pq_adc_cached(spark, sf_dir):
     """The PQ-ADC ranking frame shared by its declared query
     (x3_pq_adc) and the recall instrument (x3_pq_vs_rq_recall) — the
@@ -3689,19 +3632,14 @@ def _pq_adc_cached(spark, sf_dir):
     reads it."""
     from diepy_spark.operators.similarity import pq_adc_topk
 
-    key = ("pqadc", spark.sparkContext.applicationId, sf_dir,
-           PQ_M, PQ_CODES, PQ_NQ, PQ_K, KM_SCALE)
-    if key not in _MODEL_CACHE:
-        v = _vecs(spark, sf_dir)
-        books = _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE)
-        _MODEL_CACHE[key] = pq_adc_topk(
-            v.where(F.col("vec_id") < PQ_NQ),
-            v.where(F.col("vec_id") >= PQ_NQ),
-            books,
-            k=PQ_K,
-            scale=KM_SCALE,
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    v = _vecs(spark, sf_dir)
+    return pq_adc_topk(
+        v.where(F.col("vec_id") < PQ_NQ),
+        v.where(F.col("vec_id") >= PQ_NQ),
+        _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE),
+        k=PQ_K,
+        scale=KM_SCALE,
+    ).localCheckpoint(eager=False)
 
 
 def x3_pq_adc(spark, sf_dir):
@@ -3732,8 +3670,7 @@ def x3_ivfpq(spark, sf_dir):
     shuffles. Queries/corpus split and codebooks match x3_pq_adc so the
     two reports are comparable: same candidates scored, different
     candidate generation."""
-    from diepy_spark.operators.clustering import kmeans_centroids_int
-    from diepy_spark.operators.similarity import ivfpq_topk, pq_codebooks
+    from diepy_spark.operators.similarity import ivfpq_topk
 
     tune(spark)
     v = _vecs(spark, sf_dir)
@@ -3753,6 +3690,7 @@ def x3_ivfpq(spark, sf_dir):
 LP_ITER = 3
 
 
+@session_cached
 def _lpa_labels_cached(spark, sf_dir):
     """The LPA community assignment over the symmetrized supply graph,
     session-memoized (r13) — narratively the persisted community table a
@@ -3762,13 +3700,10 @@ def _lpa_labels_cached(spark, sf_dir):
     window lineage for the modularity consumer."""
     from diepy_spark.operators.clustering import label_propagation
 
-    key = ("lpa", spark.sparkContext.applicationId, sf_dir, LP_ITER)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = label_propagation(
-            _supply_sym(spark, sf_dir), iterations=LP_ITER,
-            assume_distinct=True, assume_symmetric=True,
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return label_propagation(
+        _supply_sym(spark, sf_dir), iterations=LP_ITER,
+        assume_distinct=True, assume_symmetric=True,
+    ).localCheckpoint(eager=False)
 
 
 def x11_label_prop(spark, sf_dir):
@@ -4599,8 +4534,6 @@ def x2_semdedup_probe(spark, sf_dir):
     subset (vec_id < SD_PROBE_MAX keeps the instrument constant-cost at
     every sf); the quantizer itself trains on the FULL corpus exactly as
     x2_semdedup does. Output: (method, n_exact, n_found, recall)."""
-    from diepy_spark.operators.clustering import kmeans_centroids_int
-
     tune(spark)
     v = _vecs(spark, sf_dir)
     cents = _cents_cached(spark, sf_dir, _sd_k(spark, sf_dir), SD_ITER, SD_SCALE)
@@ -4944,6 +4877,17 @@ def x3_kmeans(spark, sf_dir):
     )
 
 
+@session_cached
+def _km_trace_cached(spark, sf_dir):
+    """The KM_ITER + 1 centroid snapshots of x3_kmeans_stability's
+    training run (c0 = seeds), driver-sized."""
+    from diepy_spark.operators.clustering import kmeans_centroid_trace
+
+    return kmeans_centroid_trace(
+        _vecs(spark, sf_dir), k=KM_K, iterations=KM_ITER, scale=KM_SCALE
+    )
+
+
 def x3_kmeans_stability(spark, sf_dir):
     """K-means CONVERGENCE diagnostic — per training round, how many
     vectors changed cluster, over how many, into how many distinct
@@ -4957,18 +4901,12 @@ def x3_kmeans_stability(spark, sf_dir):
     vec_id-join of two such projections."""
     from diepy_spark.operators.clustering import (
         assign_to_centroids,
-        kmeans_centroid_trace,
         quantize_vectors,
     )
 
     tune(spark)
     v = _vecs(spark, sf_dir)
-    key = ("km_trace", sf_dir, KM_K, KM_ITER, KM_SCALE)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = kmeans_centroid_trace(
-            v, k=KM_K, iterations=KM_ITER, scale=KM_SCALE
-        )
-    snaps = _MODEL_CACHE[key]
+    snaps = _km_trace_cached(spark, sf_dir)
     q = quantize_vectors(v, scale=KM_SCALE).localCheckpoint(eager=False)
     asg = [
         assign_to_centroids(q, c).select(
@@ -5051,15 +4989,13 @@ SD_CELL = 250
 _SD_K_SQL = f"(SELECT greatest({KM_K}, count(*) // {SD_CELL}) FROM embeddings)"
 
 
+@session_cached
 def _sd_k(spark, sf_dir) -> int:
-    """max(KM_K, n_vecs div SD_CELL), memoized per sf_dir — the Spark
+    """max(KM_K, n_vecs div SD_CELL), memoized per session — the Spark
     twin of _SD_K_SQL (Python // and DuckDB // agree on nonnegative
     ints).  The one count() is the same single corpus pass the trained
     quantizer already needs; at production scale it's table metadata."""
-    key = ("sdk", sf_dir)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = max(KM_K, _vecs(spark, sf_dir).count() // SD_CELL)
-    return _MODEL_CACHE[key]
+    return max(KM_K, _vecs(spark, sf_dir).count() // SD_CELL)
 
 
 def x2_semdedup(spark, sf_dir):
@@ -5110,8 +5046,6 @@ def x3_ivf_trained(spark, sf_dir):
     IVFT_NQ smallest vec_ids, corpus = the rest; training sees the full
     table (queries are drawn from the indexed corpus, as in a recall
     benchmark)."""
-    from diepy_spark.operators.clustering import kmeans_centroids_int
-
     tune(spark)
     v = _vecs(spark, sf_dir)
     cents = _cents_cached(spark, sf_dir, KM_K, KM_ITER, KM_SCALE)
@@ -6195,16 +6129,27 @@ def x3_rq_distortion(spark, sf_dir):
     worth it. Plan: still zero shuffles before the m-row aggregate —
     level-1 code, residual, and level-2 error are all literal-forest
     projections."""
-    from diepy_spark.operators.similarity import rq_codebooks, rq_distortion
+    from diepy_spark.operators.similarity import rq_distortion
 
     tune(spark)
-    v = _vecs(spark, sf_dir)
-    b1 = _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE)
-    key = ("rqbooks", sf_dir, PQ_M, PQ_CODES, KM_SCALE)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = rq_codebooks(v, b1, scale=KM_SCALE)
-    return rq_distortion(v, b1, _MODEL_CACHE[key], scale=KM_SCALE).orderBy(
-        "s"
+    return rq_distortion(
+        _vecs(spark, sf_dir),
+        _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE),
+        _rq_books_cached(spark, sf_dir),
+        scale=KM_SCALE,
+    ).orderBy("s")
+
+
+@session_cached
+def _rq_books_cached(spark, sf_dir):
+    """The level-2 residual codebooks over the level-1 PQ books, shared
+    by x3_rq_distortion and the RQ-ADC search."""
+    from diepy_spark.operators.similarity import rq_codebooks
+
+    return rq_codebooks(
+        _vecs(spark, sf_dir),
+        _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE),
+        scale=KM_SCALE,
     )
 
 
@@ -6226,29 +6171,22 @@ def x3_rq_adc(spark, sf_dir):
     return _rq_adc_cached(spark, sf_dir).orderBy("qid", "rk")
 
 
+@session_cached
 def _rq_adc_cached(spark, sf_dir):
     """The RQ-ADC ranking frame shared by x3_rq_adc and
     x3_pq_vs_rq_recall — same session-memo discipline as
     _pq_adc_cached."""
-    from diepy_spark.operators.similarity import rq_adc_topk, rq_codebooks
+    from diepy_spark.operators.similarity import rq_adc_topk
 
     v = _vecs(spark, sf_dir)
-    b1 = _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE)
-    rkey = ("rqbooks", sf_dir, PQ_M, PQ_CODES, KM_SCALE)
-    if rkey not in _MODEL_CACHE:
-        _MODEL_CACHE[rkey] = rq_codebooks(v, b1, scale=KM_SCALE)
-    key = ("rqadc", spark.sparkContext.applicationId, sf_dir,
-           PQ_M, PQ_CODES, PQ_NQ, PQ_K, KM_SCALE)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = rq_adc_topk(
-            v.where(F.col("vec_id") < PQ_NQ),
-            v.where(F.col("vec_id") >= PQ_NQ),
-            b1,
-            _MODEL_CACHE[rkey],
-            k=PQ_K,
-            scale=KM_SCALE,
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return rq_adc_topk(
+        v.where(F.col("vec_id") < PQ_NQ),
+        v.where(F.col("vec_id") >= PQ_NQ),
+        _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE),
+        _rq_books_cached(spark, sf_dir),
+        k=PQ_K,
+        scale=KM_SCALE,
+    ).localCheckpoint(eager=False)
 
 
 # --- x3_pq_vs_rq_recall: does the second byte buy ranking quality? ---------
@@ -6325,6 +6263,7 @@ def x3_pq_vs_rq_recall(spark, sf_dir):
 # --- x3_pq_trained_distortion: does TRAINING the codebooks pay? ------------
 
 
+@session_cached
 def _trained_books_cached(spark, sf_dir):
     """Per-subspace TRAINED PQ codebooks (the upgrade pq_codebooks'
     docstring promises): for each of the PQ_M subspaces, integer-exact
@@ -6334,25 +6273,20 @@ def _trained_books_cached(spark, sf_dir):
     m driver-sized codebooks."""
     from diepy_spark.operators.clustering import kmeans_centroids_int
 
-    key = ("pqtrained", sf_dir, PQ_M, PQ_CODES, KM_SCALE, KM_ITER)
-    if key not in _MODEL_CACHE:
-        v = _vecs(spark, sf_dir)
-        sub = EMB_DIM // PQ_M
-        _MODEL_CACHE[key] = [
-            kmeans_centroids_int(
-                v.select(
-                    "vec_id",
-                    F.expr(
-                        f"slice(embedding, {s * sub + 1}, {sub})"
-                    ).alias("embedding"),
-                ),
-                k=PQ_CODES,
-                iterations=KM_ITER,
-                scale=KM_SCALE,
-            )
-            for s in range(PQ_M)
-        ]
-    return _MODEL_CACHE[key]
+    v = _vecs(spark, sf_dir)
+    sub = EMB_DIM // PQ_M
+    return [
+        kmeans_centroids_int(
+            v.select(
+                "vec_id",
+                F.expr(f"slice(embedding, {s * sub + 1}, {sub})").alias("embedding"),
+            ),
+            k=PQ_CODES,
+            iterations=KM_ITER,
+            scale=KM_SCALE,
+        )
+        for s in range(PQ_M)
+    ]
 
 
 def x3_pq_trained_distortion(spark, sf_dir):
@@ -6580,21 +6514,19 @@ def x11_hyperball(spark, sf_dir):
     )
 
 
+@session_cached
 def _hb_prepared(spark, sf_dir):
     """Session-memoized (edge frame, register tiers) for the supply
     graph — ONE HyperBall propagation per session serving both
     x11_hyperball and x11_hyperball_error (the _ph_sigs
     persisted-index discipline: the sketch index is written once and
     every distance instrument folds it)."""
-    key = ("hbprep", spark.sparkContext.applicationId, sf_dir, HB_ITER, HB_M)
-    if key not in _MODEL_CACHE:
-        from diepy_spark.operators.clustering import hb_prepare
+    from diepy_spark.operators.clustering import hb_prepare
 
-        _MODEL_CACHE[key] = hb_prepare(
-            _supply_sym(spark, sf_dir), iterations=HB_ITER, m=HB_M,
-            assume_distinct=True,
-        )
-    return _MODEL_CACHE[key]
+    return hb_prepare(
+        _supply_sym(spark, sf_dir), iterations=HB_ITER, m=HB_M,
+        assume_distinct=True,
+    )
 
 
 def x11_hyperball_error(spark, sf_dir):
@@ -6958,6 +6890,7 @@ def _rw_sig_sql() -> str:
     )
 
 
+@session_cached
 def _adj_arr_cached(spark, sf_dir):
     """The CSR adjacency-array artifact over the symmetrized supply
     graph (clustering.adjacency_arrays: dst-ascending neighbor array
@@ -6967,12 +6900,10 @@ def _adj_arr_cached(spark, sf_dir):
     exchange."""
     from diepy_spark.operators.clustering import adjacency_arrays
 
-    key = ("adjarr", spark.sparkContext.applicationId, sf_dir)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = adjacency_arrays(_supply_sym(spark, sf_dir))
-    return _MODEL_CACHE[key]
+    return adjacency_arrays(_supply_sym(spark, sf_dir))
 
 
+@session_cached
 def _rw_walks_cached(spark, sf_dir):
     """The deterministic walk corpus (t, walk, node) shared by its two
     declared consumers (x11_random_walks, x11_walk_cooccur) —
@@ -6981,14 +6912,10 @@ def _rw_walks_cached(spark, sf_dir):
     pattern). Session-keyed with a lineage cut."""
     from diepy_spark.operators.clustering import random_walks
 
-    key = ("rwwalks", spark.sparkContext.applicationId, sf_dir, RW_STEPS)
-    if key not in _MODEL_CACHE:
-        sym = _supply_sym(spark, sf_dir)
-        _MODEL_CACHE[key] = random_walks(
-            sym, steps=RW_STEPS, assume_distinct=True,
-            adj=_adj_arr_cached(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return random_walks(
+        _supply_sym(spark, sf_dir), steps=RW_STEPS, assume_distinct=True,
+        adj=_adj_arr_cached(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
 def x11_random_walks(spark, sf_dir):
@@ -7028,6 +6955,20 @@ N2V_STEPS = 3
 N2V_WEIGHTS = (1, 4, 16)  # integer-scaled (1/p, 1, 1/q): p=4, q=1/4
 
 
+@session_cached
+def _n2v_walks_cached(spark, sf_dir):
+    """The persisted biased-walk corpus (the _rw_walks_cached pattern):
+    the expensive candidate-expansion chain runs once per session, every
+    re-derivation reads the checkpoint."""
+    from diepy_spark.operators.clustering import node2vec_walks
+
+    wb, wc, wf = N2V_WEIGHTS
+    return node2vec_walks(
+        _supply_sym(spark, sf_dir), steps=N2V_STEPS, wb=wb, wc=wc, wf=wf,
+        assume_distinct=True, adj=_adj_arr_cached(spark, sf_dir),
+    ).localCheckpoint(eager=False)
+
+
 def x11_node2vec(spark, sf_dir):
     """node2vec SECOND-ORDER biased walks (operators/clustering.py:
     node2vec_walks — Grover & Leskovec 2016) over the same graph as
@@ -7048,22 +6989,8 @@ def x11_node2vec(spark, sf_dir):
     (prev, x), one per-walk cumulative window (thousands of small
     partitions, no global sort), one interval filter back to one row
     per walk."""
-    from diepy_spark.operators.clustering import node2vec_walks
-
     tune(spark)
-    key = ("n2vwalks", spark.sparkContext.applicationId, sf_dir,
-           N2V_STEPS, N2V_WEIGHTS)
-    if key not in _MODEL_CACHE:
-        sym = _supply_sym(spark, sf_dir)
-        wb, wc, wf = N2V_WEIGHTS
-        # the persisted biased-walk corpus (the _rw_walks_cached
-        # pattern): the expensive candidate-expansion chain runs once
-        # per session, every re-derivation reads the checkpoint
-        _MODEL_CACHE[key] = node2vec_walks(
-            sym, steps=N2V_STEPS, wb=wb, wc=wc, wf=wf,
-            assume_distinct=True, adj=_adj_arr_cached(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-    walks = _MODEL_CACHE[key]
+    walks = _n2v_walks_cached(spark, sf_dir)
     return (
         walks.groupBy("t")
         .agg(
@@ -7093,29 +7020,22 @@ WC_WINDOW = 2  # skip-gram context radius over the walk sequence
 WC_TOP = 20
 
 
+@session_cached
 def _wc_pairs_cached(spark, sf_dir):
     """The skip-gram (center, context, cnt) pair table over the cached
     walk corpus, shared by x11_walk_cooccur and x11_walk_pmi —
     narratively the co-occurrence matrix an embedding pipeline writes
     once and derives counts and association scores from."""
-    key = ("wcpairs", spark.sparkContext.applicationId, sf_dir,
-           RW_STEPS, WC_WINDOW)
-    if key not in _MODEL_CACHE:
-        walks = _rw_walks_cached(spark, sf_dir)
-        a = walks.select(
-            "walk", F.col("t").alias("ta"), F.col("node").alias("center")
-        )
-        b = walks.select(
-            "walk", F.col("t").alias("tb"), F.col("node").alias("context")
-        )
-        _MODEL_CACHE[key] = (
-            a.join(b, "walk")
-            .where(f"ta != tb AND abs(ta - tb) <= {WC_WINDOW}")
-            .groupBy("center", "context")
-            .agg(F.expr("CAST(count(*) AS BIGINT)").alias("cnt"))
-            .localCheckpoint(eager=False)
-        )
-    return _MODEL_CACHE[key]
+    walks = _rw_walks_cached(spark, sf_dir)
+    a = walks.select("walk", F.col("t").alias("ta"), F.col("node").alias("center"))
+    b = walks.select("walk", F.col("t").alias("tb"), F.col("node").alias("context"))
+    return (
+        a.join(b, "walk")
+        .where(f"ta != tb AND abs(ta - tb) <= {WC_WINDOW}")
+        .groupBy("center", "context")
+        .agg(F.expr("CAST(count(*) AS BIGINT)").alias("cnt"))
+        .localCheckpoint(eager=False)
+    )
 
 
 def x11_walk_cooccur(spark, sf_dir):
@@ -13245,24 +13165,20 @@ BPE_EVAL_MOD = 5
 BPE_EVAL_HOLD = 4  # doc_id % 5 == 4 -> held-out (~20% of docs)
 
 
+@session_cached
 def _bpe_split_merges_cached(spark, sf_dir) -> list[tuple[str, str]]:
     """Merge table trained on the TRAIN split only (doc_id % MOD !=
     HOLD) — memoized like _bpe_merges_cached; the held-out evaluator
     must never see evaluation text at training time."""
-    key = ("bpe_split", sf_dir, BPE_MERGES, BPE_EVAL_MOD, BPE_EVAL_HOLD)
-    if key not in _MODEL_CACHE:
-        d = _docs(spark, sf_dir).where(
-            f"doc_id % {BPE_EVAL_MOD} != {BPE_EVAL_HOLD}"
-        )
-        words = (
-            d.select(F.explode(F.expr(D.tokens_expr("text"))).alias("w"))
-            .where(f"length(w) BETWEEN {BPE_WORD_MIN} AND {BPE_WORD_MAX}")
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        tbl = T.bpe_merge_table(words, BPE_MERGES)
-        _MODEL_CACHE[key] = [(r["a"], r["b"]) for r in tbl.collect()]
-    return _MODEL_CACHE[key]
+    d = _docs(spark, sf_dir).where(f"doc_id % {BPE_EVAL_MOD} != {BPE_EVAL_HOLD}")
+    words = (
+        d.select(F.explode(F.expr(D.tokens_expr("text"))).alias("w"))
+        .where(f"length(w) BETWEEN {BPE_WORD_MIN} AND {BPE_WORD_MAX}")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    tbl = T.bpe_merge_table(words, BPE_MERGES)
+    return [(r["a"], r["b"]) for r in tbl.collect()]
 
 
 def x5_bpe_compression(spark, sf_dir):
@@ -13750,28 +13666,23 @@ def _unigram_words(spark, sf_dir):
     )
 
 
+@session_cached
 def _unigram_model_cached(spark, sf_dir) -> list[tuple[str, int]]:
     """EM-refined (piece, integer score) table — memoized like the BPE
-    merges / kmeans centroids (_MODEL_CACHE). Consumed by the EM unit
-    tests and available to library users; the declared encode query
-    scores with the seed ladder (static-oracle contract)."""
-    key = (
-        "unigram", sf_dir, T.UNI_VOCAB, T.UNI_MAX_PIECE,
-        UNI_DICT_MAX, UNI_EM_ITERS,
+    merges / kmeans centroids. Consumed by the EM unit tests and
+    available to library users; the declared encode query scores with
+    the seed ladder (static-oracle contract)."""
+    rows = (
+        _unigram_words(spark, sf_dir)
+        .groupBy("w")
+        .agg(F.sum("n").cast("bigint").alias("n"))
+        .orderBy(F.col("n").desc(), "w")
+        .limit(UNI_DICT_MAX)
+        .collect()
     )
-    if key not in _MODEL_CACHE:
-        rows = (
-            _unigram_words(spark, sf_dir)
-            .groupBy("w")
-            .agg(F.sum("n").cast("bigint").alias("n"))
-            .orderBy(F.col("n").desc(), "w")
-            .limit(UNI_DICT_MAX)
-            .collect()
-        )
-        _MODEL_CACHE[key] = T.unigram_train_em(
-            [(r["w"], int(r["n"])) for r in rows], iters=UNI_EM_ITERS
-        )
-    return _MODEL_CACHE[key]
+    return T.unigram_train_em(
+        [(r["w"], int(r["n"])) for r in rows], iters=UNI_EM_ITERS
+    )
 
 
 _UNI_SUBS = (
@@ -13889,6 +13800,36 @@ def _uni_score_sql(array_open: str, array_close: str, size_fn: str,
     )
 
 
+@session_cached
+def _uni_scored_cached(spark, sf_dir):
+    """(piece, sc): the seed vocabulary with its integer ladder scores —
+    the persisted tokenizer artifact x5_unigram_encode segments with."""
+    from pyspark.sql import Window
+
+    wd = _unigram_words(spark, sf_dir).groupBy("w").agg(
+        F.sum("n").cast("bigint").alias("n")
+    )
+    subs = wd.selectExpr("n", _UNI_SUBS.format(mp=T.UNI_MAX_PIECE) + " AS piece")
+    pf = subs.groupBy("piece").agg(F.sum("n").cast("bigint").alias("freq"))
+    wr = Window.partitionBy("is_multi").orderBy(F.col("freq").desc(), "piece")
+    sel = (
+        pf.withColumn("is_multi", F.expr("length(piece) > 1"))
+        .withColumn("rk", F.row_number().over(wr))
+        .where(f"NOT is_multi OR rk <= {T.UNI_VOCAB}")
+    )
+    packed = sel.agg(
+        F.expr("collect_list(struct(piece, freq))").alias("pl"),
+        F.sum("freq").cast("bigint").alias("tot"),
+    )
+    sc_expr = _uni_score_sql("array(", ")", "size", "filter", "div")
+    return (
+        packed.select(F.explode("pl").alias("x"), "tot")
+        .selectExpr("x.piece AS piece", "x.freq AS freq", "tot")
+        .selectExpr("piece", f"CAST({sc_expr} AS BIGINT) AS sc")
+        .localCheckpoint(eager=False)
+    )
+
+
 def x5_unigram_encode(spark, sf_dir):
     """Distributed Viterbi segmentation of the full word-type
     dictionary under the seed unigram-LM — the per-language
@@ -13911,41 +13852,8 @@ def x5_unigram_encode(spark, sf_dir):
     dict x 16 x UNI_MAX_PIECE cells; the DP is a zero-shuffle per-row
     fold; the final report is one map-side-combined aggregate."""
     tune(spark)
-    from pyspark.sql import Window
-
     wl = _unigram_words(spark, sf_dir)
-    key = (
-        "uniscored", spark.sparkContext.applicationId, sf_dir,
-        T.UNI_VOCAB, T.UNI_MAX_PIECE, T.UNI_MU, T.UNI_OCTAVES,
-    )
-    if key not in _MODEL_CACHE:
-        wd = wl.groupBy("w").agg(F.sum("n").cast("bigint").alias("n"))
-        subs = wd.selectExpr(
-            "n", _UNI_SUBS.format(mp=T.UNI_MAX_PIECE) + " AS piece"
-        )
-        pf = subs.groupBy("piece").agg(
-            F.sum("n").cast("bigint").alias("freq")
-        )
-        wr = Window.partitionBy("is_multi").orderBy(
-            F.col("freq").desc(), "piece"
-        )
-        sel = (
-            pf.withColumn("is_multi", F.expr("length(piece) > 1"))
-            .withColumn("rk", F.row_number().over(wr))
-            .where(f"NOT is_multi OR rk <= {T.UNI_VOCAB}")
-        )
-        packed = sel.agg(
-            F.expr("collect_list(struct(piece, freq))").alias("pl"),
-            F.sum("freq").cast("bigint").alias("tot"),
-        )
-        sc_expr = _uni_score_sql("array(", ")", "size", "filter", "div")
-        _MODEL_CACHE[key] = (
-            packed.select(F.explode("pl").alias("x"), "tot")
-            .selectExpr("x.piece AS piece", "x.freq AS freq", "tot")
-            .selectExpr("piece", f"CAST({sc_expr} AS BIGINT) AS sc")
-            .localCheckpoint(eager=False)  # the persisted tokenizer
-        )
-    scored = _MODEL_CACHE[key]
+    scored = _uni_scored_cached(spark, sf_dir)
     wd2 = wl.select("w").distinct()
     grid = wd2.selectExpr(
         "w",
@@ -17720,20 +17628,17 @@ _RRF_T = (
 )
 
 
+@session_cached
 def _bm25_topk_cached(spark, sf_dir):
     """The BM25 ranked list at the standard constants, shared by its
     declared report (x3_bm25_topk) and the hybrid fusion consumer
     (x3_hybrid_rank) — narratively the lexical retrieval run a hybrid
     pipeline executes once. Session-keyed + lineage-cut (the
     tokenize/postings subtree is the expensive part)."""
-    key = ("bm25", spark.sparkContext.applicationId, sf_dir,
-           BM_NQ, BM_QTERMS, BM_K, BM_MINLEN)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = T.bm25_topk(
-            _docs(spark, sf_dir),
-            n_queries=BM_NQ, n_qterms=BM_QTERMS, k=BM_K, min_len=BM_MINLEN,
-        ).localCheckpoint(eager=False)
-    return _MODEL_CACHE[key]
+    return T.bm25_topk(
+        _docs(spark, sf_dir),
+        n_queries=BM_NQ, n_qterms=BM_QTERMS, k=BM_K, min_len=BM_MINLEN,
+    ).localCheckpoint(eager=False)
 
 
 def x3_bm25_topk(spark, sf_dir):
@@ -19878,6 +19783,7 @@ EXTENDED_ORACLES["x8_eb_shrinkage"] = _eb_oracle_sql()
 KC_K = 8  # coreset size for greedy k-center selection
 
 
+@session_cached
 def _kcenter_cached(spark, sf_dir):
     """Greedy k-center (Gonzalez 1985 farthest-point traversal) over the
     quantized embedding corpus: seed = min vec_id, then KC_K - 1 rounds
@@ -19892,32 +19798,28 @@ def _kcenter_cached(spark, sf_dir):
         quantize_vectors,
     )
 
-    key = ("kcenter", spark.sparkContext.applicationId, sf_dir, KC_K,
-           KM_SCALE)
-    if key not in _MODEL_CACHE:
-        q = quantize_vectors(
-            _vecs(spark, sf_dir), scale=KM_SCALE
-        ).localCheckpoint(eager=False)
-        row = q.orderBy("vec_id").limit(1).collect()[0]
-        sel = [(0, int(row["vec_id"]), list(row["xi"]), 0)]
-        for r in range(1, KC_K):
-            dcols = centroid_dist_columns([c[2] for c in sel])
-            mind = (
-                F.least(*[F.col(f"d{j}") for j in range(len(sel))])
-                if len(sel) > 1
-                else F.col("d0")
-            )
-            pick = (
-                q.select("vec_id", "xi", *dcols)
-                .select("vec_id", "xi", mind.alias("md"))
-                .orderBy(F.desc("md"), "vec_id")
-                .limit(1)
-                .collect()[0]
-            )
-            sel.append((r, int(pick["vec_id"]), list(pick["xi"]),
-                        int(pick["md"])))
-        _MODEL_CACHE[key] = (q, sel)
-    return _MODEL_CACHE[key]
+    q = quantize_vectors(
+        _vecs(spark, sf_dir), scale=KM_SCALE
+    ).localCheckpoint(eager=False)
+    row = q.orderBy("vec_id").limit(1).collect()[0]
+    sel = [(0, int(row["vec_id"]), list(row["xi"]), 0)]
+    for r in range(1, KC_K):
+        dcols = centroid_dist_columns([c[2] for c in sel])
+        mind = (
+            F.least(*[F.col(f"d{j}") for j in range(len(sel))])
+            if len(sel) > 1
+            else F.col("d0")
+        )
+        pick = (
+            q.select("vec_id", "xi", *dcols)
+            .select("vec_id", "xi", mind.alias("md"))
+            .orderBy(F.desc("md"), "vec_id")
+            .limit(1)
+            .collect()[0]
+        )
+        sel.append((r, int(pick["vec_id"]), list(pick["xi"]),
+                    int(pick["md"])))
+    return q, sel
 
 
 def x3_kcenter_select(spark, sf_dir):
@@ -20280,6 +20182,7 @@ PI_ITER = 5
 PI_VSCALE = 1_000_000  # normalization scale for the iterated vector
 
 
+@session_cached
 def _power_iter_cached(spark, sf_dir):
     """Dominant eigenvector of the (uncentered) Gram matrix X^T X over
     the quantized embedding corpus by PI_ITER rounds of power
@@ -20292,52 +20195,48 @@ def _power_iter_cached(spark, sf_dir):
     so the driver only ever carries collected integers into the next
     round's literals and the oracle can replay the identical chain.
     Returns (q, v) — checkpointed quantized frame, final vector."""
-    key = ("powiter", spark.sparkContext.applicationId, sf_dir, PI_ITER,
-           KM_SCALE, PI_VSCALE)
-    if key not in _MODEL_CACHE:
-        from diepy_spark.operators.clustering import quantize_vectors
+    from diepy_spark.operators.clustering import quantize_vectors
 
-        q = quantize_vectors(
-            _vecs(spark, sf_dir), scale=KM_SCALE
-        ).localCheckpoint(eager=False)
-        dim = len(q.select("xi").limit(1).collect()[0]["xi"])
-        v = [PI_VSCALE] * dim
-        for _ in range(PI_ITER):
-            vlit = "array({})".format(
-                ", ".join(f"CAST({c} AS BIGINT)" for c in v)
+    q = quantize_vectors(
+        _vecs(spark, sf_dir), scale=KM_SCALE
+    ).localCheckpoint(eager=False)
+    dim = len(q.select("xi").limit(1).collect()[0]["xi"])
+    v = [PI_VSCALE] * dim
+    for _ in range(PI_ITER):
+        vlit = "array({})".format(
+            ", ".join(f"CAST({c} AS BIGINT)" for c in v)
+        )
+        s = q.selectExpr(
+            "xi",
+            f"aggregate(zip_with(xi, {vlit}, (a, b) -> a * b),"
+            " CAST(0 AS BIGINT), (acc, p) -> acc + p) AS s",
+        )
+        m = s.selectExpr(
+            f"greatest(max(abs(s)) div {PI_VSCALE},"
+            " CAST(1 AS BIGINT)) AS md"
+        )
+        w = (
+            s.crossJoin(F.broadcast(m))
+            .selectExpr("xi", "s div md AS sp")
+            .select(
+                F.posexplode("xi").alias("i", "x"),
+                F.col("sp"),
             )
-            s = q.selectExpr(
-                "xi",
-                f"aggregate(zip_with(xi, {vlit}, (a, b) -> a * b),"
-                " CAST(0 AS BIGINT), (acc, p) -> acc + p) AS s",
-            )
-            m = s.selectExpr(
-                f"greatest(max(abs(s)) div {PI_VSCALE},"
-                " CAST(1 AS BIGINT)) AS md"
-            )
-            w = (
-                s.crossJoin(F.broadcast(m))
-                .selectExpr("xi", "s div md AS sp")
-                .select(
-                    F.posexplode("xi").alias("i", "x"),
-                    F.col("sp"),
-                )
-                .groupBy("i")
-                .agg(F.expr("CAST(sum(x * sp) AS BIGINT)").alias("w"))
-            )
-            mw = w.selectExpr(
-                f"greatest(max(abs(w)) div {PI_VSCALE},"
-                " CAST(1 AS BIGINT)) AS mwd"
-            )
-            rows = (
-                w.crossJoin(F.broadcast(mw))
-                .selectExpr("i", "w div mwd AS v")
-                .orderBy("i")
-                .collect()
-            )
-            v = [int(r["v"]) for r in rows]
-        _MODEL_CACHE[key] = (q, v)
-    return _MODEL_CACHE[key]
+            .groupBy("i")
+            .agg(F.expr("CAST(sum(x * sp) AS BIGINT)").alias("w"))
+        )
+        mw = w.selectExpr(
+            f"greatest(max(abs(w)) div {PI_VSCALE},"
+            " CAST(1 AS BIGINT)) AS mwd"
+        )
+        rows = (
+            w.crossJoin(F.broadcast(mw))
+            .selectExpr("i", "w div mwd AS v")
+            .orderBy("i")
+            .collect()
+        )
+        v = [int(r["v"]) for r in rows]
+    return q, v
 
 
 def x3_power_iteration(spark, sf_dir):
@@ -20837,6 +20736,40 @@ def _nsw_dist(a: str, b: str) -> str:
     )
 
 
+@session_cached
+def _nsw_graph_cached(spark, sf_dir):
+    """(queries, corpus, kNN graph) of x3_nsw_search: the quantized
+    query and corpus frames and the NSW_KG-out-degree proximity graph
+    over the corpus — the persisted index artifact."""
+    from pyspark.sql import Window
+
+    from diepy_spark.operators.clustering import quantize_vectors
+
+    v = _vecs(spark, sf_dir)
+    q0 = quantize_vectors(
+        v.where(F.col("vec_id") < TOPK_QUERY_MAX), scale=KM_SCALE
+    ).selectExpr("vec_id AS qid", "xi AS qxi")
+    c0 = quantize_vectors(
+        v.where(
+            (F.col("vec_id") >= TOPK_QUERY_MAX)
+            & (F.col("vec_id") < TOPK_QUERY_MAX + NSW_CORPUS_MAX)
+        ),
+        scale=KM_SCALE,
+    ).localCheckpoint(eager=False)
+    a = c0.selectExpr("vec_id AS src", "xi AS sxi")
+    b = c0.selectExpr("vec_id AS dst", "xi AS dxi")
+    wsrc = Window.partitionBy("src").orderBy("d", "dst")
+    g0 = (
+        a.join(b, F.col("src") != F.col("dst"))
+        .selectExpr("src", "dst", f"{_nsw_dist('sxi', 'dxi')} AS d")
+        .withColumn("rn", F.row_number().over(wsrc))
+        .where(F.col("rn") <= NSW_KG)
+        .select("src", "dst")
+        .localCheckpoint(eager=False)  # the persisted index artifact
+    )
+    return q0, c0, g0
+
+
 def x3_nsw_search(spark, sf_dir):
     """GRAPH-BASED ANN — greedy best-first search over a kNN proximity
     graph (the Navigable-Small-World family underlying HNSW, Malkov &
@@ -20856,38 +20789,10 @@ def x3_nsw_search(spark, sf_dir):
     (distance, id); the walk is NSW_HOPS unrolled in-plan joins over
     the checkpointed NQ x degree frontier — the oracle replays the
     identical chain with MATERIALIZED per-hop CTEs."""
-    from diepy_spark.operators.clustering import quantize_vectors
-
     tune(spark)
     from pyspark.sql import Window
 
-    key = ("nswgraph", spark.sparkContext.applicationId, sf_dir,
-           NSW_CORPUS_MAX, NSW_KG, KM_SCALE)
-    if key not in _MODEL_CACHE:
-        v = _vecs(spark, sf_dir)
-        q0 = quantize_vectors(
-            v.where(F.col("vec_id") < TOPK_QUERY_MAX), scale=KM_SCALE
-        ).selectExpr("vec_id AS qid", "xi AS qxi")
-        c0 = quantize_vectors(
-            v.where(
-                (F.col("vec_id") >= TOPK_QUERY_MAX)
-                & (F.col("vec_id") < TOPK_QUERY_MAX + NSW_CORPUS_MAX)
-            ),
-            scale=KM_SCALE,
-        ).localCheckpoint(eager=False)
-        a = c0.selectExpr("vec_id AS src", "xi AS sxi")
-        b = c0.selectExpr("vec_id AS dst", "xi AS dxi")
-        wsrc = Window.partitionBy("src").orderBy("d", "dst")
-        g0 = (
-            a.join(b, F.col("src") != F.col("dst"))
-            .selectExpr("src", "dst", f"{_nsw_dist('sxi', 'dxi')} AS d")
-            .withColumn("rn", F.row_number().over(wsrc))
-            .where(F.col("rn") <= NSW_KG)
-            .select("src", "dst")
-            .localCheckpoint(eager=False)  # the persisted index artifact
-        )
-        _MODEL_CACHE[key] = (q0, c0, g0)
-    q, c, graph = _MODEL_CACHE[key]
+    q, c, graph = _nsw_graph_cached(spark, sf_dir)
     entry = c.agg(F.min("vec_id").alias("cur"))
     state = (
         q.crossJoin(F.broadcast(entry))
@@ -21677,6 +21582,7 @@ def _ph_band_slices() -> list[tuple[int, int]]:
     return out
 
 
+@session_cached
 def _ph_sigs(spark, sf_dir):
     """(doc_id, sig): the packed PH_BITS blockhash signature per asset —
     one payload pass, the index artifact the near-dup pairing, the
@@ -21685,16 +21591,6 @@ def _ph_sigs(spark, sf_dir):
     the PERSISTED signature index a production pipeline writes once and
     joins everywhere); the localCheckpoint cuts the 60-block payload
     aggregation out of every consumer's lineage."""
-    key = (
-        "phsigs", spark.sparkContext.applicationId, sf_dir,
-        PH_BITS, MEDIA_DOC_MAX,
-    )
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = _ph_sigs_build(spark, sf_dir)
-    return _MODEL_CACHE[key]
-
-
-def _ph_sigs_build(spark, sf_dir):
     d = _docs(spark, sf_dir).where(F.col("doc_id") < MEDIA_DOC_MAX)
     p = M.with_binary_payload(d).selectExpr(
         "doc_id", "CAST(payload AS STRING) AS s"
@@ -23707,8 +23603,9 @@ FC_N_MIN = 2000   # node-space floor (matches TRI_N at small sf)
 FC_DENS = 8       # node space = n_orders div FC_DENS -> avg degree ~2*FC_DENS
 
 
+@session_cached
 def _fc_n(spark, sf_dir) -> int:
-    """max(FC_N_MIN, n_orders div FC_DENS), memoized per sf_dir — the
+    """max(FC_N_MIN, n_orders div FC_DENS), memoized per session — the
     data-derived node space for the 4-cycle graph (the _sd_k pattern):
     wedge mass is sum(deg^2) ~ nodes * avg_deg^2, so a FIXED node space
     makes density — and the wedge join — grow quadratically with data.
@@ -23716,12 +23613,7 @@ def _fc_n(spark, sf_dir) -> int:
     and keeps the wedge volume LINEAR in data.  Python // and DuckDB //
     agree on nonnegative ints; at production scale the count is table
     metadata."""
-    key = ("fcn", sf_dir)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = max(
-            FC_N_MIN, load_table(spark, sf_dir, "orders").count() // FC_DENS
-        )
-    return _MODEL_CACHE[key]
+    return max(FC_N_MIN, load_table(spark, sf_dir, "orders").count() // FC_DENS)
 
 
 _FC_N_SQL = f"greatest({FC_N_MIN}, (SELECT count(*) FROM orders) // {FC_DENS})"

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from diepy_spark.functions.inference import infer_from_dataframe
-from diepy_spark.session import tune
+from diepy_spark.session import session_cached, tune
 from diepy_spark.sources.files import apply_schema, read_untyped_csv
 from diepy_spark.sources.registry import load_table
 from diepy_spark.sources.writers import write_csv
@@ -52,6 +52,7 @@ def _mfpt() -> int:
     return int(os.environ.get("SPARK_GRAFT_STREAM_MFPT", "1"))
 
 _counter = itertools.count()
+# (artifact, sf_dir) -> scratch path: files outlive sessions, so process-scoped
 _scratch_cache: dict[tuple[str, str], str] = {}
 
 
@@ -499,6 +500,41 @@ def t3_roundtrip_parquet(spark, sf_dir):
     ).orderBy("o_orderkey")
 
 
+@session_cached
+def _bucketed_tables(spark, sf_dir) -> tuple[str, str]:
+    """Write t6_bucketed_join's bucketed orders and customer catalog
+    tables once per session and return their names. Session-scoped: the
+    tables live in the session's in-memory catalog, so a new SparkContext
+    must rebuild them."""
+    import re
+    import shutil
+
+    from diepy_spark.sources.bucketing import save_bucketed
+
+    sfx = re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    ot, ct = f"t6_orders_b_{sfx}", f"t6_customer_b_{sfx}"
+    # A FRESH session's in-memory catalog doesn't know tables a
+    # previous process left in spark-warehouse; saveAsTable then
+    # fails with LOCATION_ALREADY_EXISTS. Clear both catalog entry
+    # and stale location before writing.
+    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
+    for t in (ot, ct):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
+    save_bucketed(
+        load_table(spark, sf_dir, "orders"), ot, ["o_custkey"], num_buckets=8
+    )
+    save_bucketed(
+        load_table(spark, sf_dir, "customer").withColumnRenamed(
+            "c_custkey", "o_custkey"
+        ),
+        ct,
+        ["o_custkey"],
+        num_buckets=8,
+    )
+    return ot, ct
+
+
 def t6_bucketed_join(spark, sf_dir):
     """Bucketed-catalog roundtrip + CO-LOCATED join
     (sources/bucketing.py:save_bucketed): orders and customer written as
@@ -510,42 +546,7 @@ def t6_bucketed_join(spark, sf_dir):
     write->catalog->join). Output: per-nation order counts and exact
     totals from the bucketed join."""
     tune(spark)
-    from diepy_spark.sources.bucketing import save_bucketed
-
-    import re as _re
-
-    sfx = _re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    ot, ct = f"t6_orders_b_{sfx}", f"t6_customer_b_{sfx}"
-    # appId in the key: the tables live in the session's in-memory
-    # catalog, so a new SparkContext (bench.py cycles sessions per
-    # family) must rebuild them — a path-keyed cache would hand the new
-    # catalog a table name it doesn't know.
-    key = ("bucketed", spark.sparkContext.applicationId, sf_dir)
-    if key not in _scratch_cache:
-        # A FRESH session's in-memory catalog doesn't know tables a
-        # previous process left in spark-warehouse; saveAsTable then
-        # fails with LOCATION_ALREADY_EXISTS. Clear both catalog entry
-        # and stale location before writing.
-        import shutil
-
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        for t in (ot, ct):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-        save_bucketed(
-            load_table(spark, sf_dir, "orders"), ot, ["o_custkey"], num_buckets=8
-        )
-        save_bucketed(
-            load_table(spark, sf_dir, "customer").withColumnRenamed(
-                "c_custkey", "o_custkey"
-            ),
-            ct,
-            ["o_custkey"],
-            num_buckets=8,
-        )
-        _scratch_cache[key] = "done"
+    ot, ct = _bucketed_tables(spark, sf_dir)
     o = spark.table(ot)
     c = spark.table(ct)
     j = o.join(c, "o_custkey")
@@ -1260,6 +1261,7 @@ def _events_late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     return _scratch_cache[key]
 
 
+@session_cached
 def _late_run(spark, sf_dir) -> dict:
     """Run the late-data stream ONCE per (session, sf_dir) and cache the
     materialized result plus the engine's progress metrics —
@@ -1270,36 +1272,31 @@ def _late_run(spark, sf_dir) -> dict:
     import json as _json
     import shutil
 
-    key = ("late-run", spark.sparkContext.applicationId, sf_dir)
-    if key not in _scratch_cache:
-        src = ST.read_events_stream(
-            spark, _events_late_stream_dir(spark, sf_dir),
-            max_files_per_trigger=1,
+    src = ST.read_events_stream(
+        spark, _events_late_stream_dir(spark, sf_dir),
+        max_files_per_trigger=1,
+    )
+    name = f"x7_mem_{next(_counter)}"
+    ck = tempfile.mkdtemp(prefix="diepy-ck-")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = ST.run_to_memory(
+            _late_agg(src), name, ck, output_mode="append"
         )
-        name = f"x7_mem_{next(_counter)}"
-        ck = tempfile.mkdtemp(prefix="diepy-ck-")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = ST.run_to_memory(
-                _late_agg(src), name, ck, output_mode="append"
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        arrived = dropped = 0
-        for p in q.recentProgress:
-            d = _json.loads(p.json) if hasattr(p, "json") else p
-            arrived += int(d.get("numInputRows", 0))
-            for so in d.get("stateOperators", []):
-                dropped += int(so.get("numRowsDroppedByWatermark", 0))
-        out = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        spark.streams.resetTerminated()
-        shutil.rmtree(ck, ignore_errors=True)
-        _scratch_cache[key] = {
-            "df": out, "arrived": arrived, "dropped": dropped
-        }
-    return _scratch_cache[key]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    arrived = dropped = 0
+    for p in q.recentProgress:
+        d = _json.loads(p.json) if hasattr(p, "json") else p
+        arrived += int(d.get("numInputRows", 0))
+        for so in d.get("stateOperators", []):
+            dropped += int(so.get("numRowsDroppedByWatermark", 0))
+    out = spark.table(name).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(name)
+    spark.streams.resetTerminated()
+    shutil.rmtree(ck, ignore_errors=True)
+    return {"df": out, "arrived": arrived, "dropped": dropped}
 
 
 def x7_stream_late(spark, sf_dir):

@@ -32,7 +32,8 @@ TABLES = (
 SMALL_DIMS = frozenset({"region", "nation"})
 
 # Localize (rewrite into a partitioned scratch copy) only when the source
-# cannot parallelize a scan AND is big enough for that to matter.
+# cannot parallelize a scan (one row group) AND is big enough for that to
+# matter — a rule on the input alone, whatever the core count.
 _LOCALIZE_MIN_ROWS = 50_000
 
 
@@ -104,6 +105,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         groups, rows = _source_row_groups(path)
     except Exception:  # directory input or exotic layout: leave as-is
         return df
-    if rows >= _LOCALIZE_MIN_ROWS and groups < spark.sparkContext.defaultParallelism // 4:
+    if groups == 1 and rows >= _LOCALIZE_MIN_ROWS:
         df = _localize(spark, df, sf_dir, name)
     return df

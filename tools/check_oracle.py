@@ -4,7 +4,7 @@ Runs every __spark_entry__.queries() entry on Spark AND its oracle_sql() on
 DuckDB at a given sf dir, then compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted).
 
-Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+Usage: python tools/check_oracle.py [sf_dir] [query_name | family_prefix* ...]
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ import hashlib
 import os
 import sys
 import time
+from fnmatch import fnmatchcase
 
 import duckdb
 import pandas as pd
@@ -68,7 +69,7 @@ def main() -> int:
 
     ok = fail = 0
     for name, fn in queries.items():
-        if only and name not in only:
+        if only and not any(fnmatchcase(name, pat) for pat in only):
             continue
         t0 = time.time()
         try:

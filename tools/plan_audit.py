@@ -26,7 +26,7 @@ codebook collects, limit-probes — `TRAINS_AT_BUILD`) still produce an
 interesting final plan and are audited by default; pass `--lazy-only`
 for a strictly no-execution audit that skips them too.
 
-Usage: python tools/plan_audit.py [--lazy-only] [sf_dir] [query ...]
+Usage: python tools/plan_audit.py [--lazy-only] [sf_dir] [query | family_prefix* ...]
 Prints one line per query sorted by (scans + exchanges) descending.
 """
 
@@ -37,6 +37,7 @@ import os
 import re
 import sys
 from contextlib import redirect_stdout
+from fnmatch import fnmatchcase
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -187,7 +188,7 @@ def main() -> int:
     spark = get_spark()
     rows = []
     for name, fn in entrymod.queries().items():
-        if only and name not in only:
+        if only and not any(fnmatchcase(name, pat) for pat in only):
             continue
         if not only and name.startswith(SKIP_PREFIXES):
             continue
