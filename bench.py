@@ -42,6 +42,22 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def detail_path(here: str) -> str:
+    """Where this run's per-query detail goes: BENCHDETAIL_r<N>.json for
+    the first N above the newest recorded BENCH_r<n>.json whose detail
+    file does not exist yet, so a rerun never overwrites a committed
+    capture."""
+    rounds = [
+        int(m.group(1))
+        for f in os.listdir(here)
+        if (m := re.match(r"BENCH_r(\d+)\.json$", f))
+    ]
+    n = (max(rounds) + 1) if rounds else 0
+    while os.path.exists(os.path.join(here, f"BENCHDETAIL_r{n}.json")):
+        n += 1
+    return os.path.join(here, f"BENCHDETAIL_r{n}.json")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Bench profile: 2-batch streaming replay (see plans/pipeline._mfpt —
@@ -175,18 +191,11 @@ def main() -> None:
     # Durable per-query detail (VERDICT r5 #6): the driver's BENCH_r{N}
     # capture clips the giant stdout line, so only ~35 of 200+ per-query
     # pairs survived into BENCH_r05.json. Persist the full map to
-    # BENCHDETAIL_r{N}.json in the repo (N = next round after the newest
-    # recorded BENCH_r*.json); tools/compare_bench.py prefers it when
-    # sitting next to the BENCH file it's asked to load.
+    # a new BENCHDETAIL_r{N}.json in the repo (detail_path);
+    # tools/compare_bench.py prefers it when sitting next to the BENCH
+    # file it's asked to load.
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for f in os.listdir(here)
-            if (m := re.match(r"BENCH_r(\d+)\.json$", f))
-        ]
-        n = (max(rounds) + 1) if rounds else 0
-        with open(os.path.join(here, f"BENCHDETAIL_r{n}.json"), "w") as fh:
+        with open(detail_path(os.path.dirname(os.path.abspath(__file__))), "x") as fh:
             json.dump(payload, fh)
     except OSError:
         pass

@@ -18,12 +18,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from diepy_spark.core.database import make_backend
-from diepy_spark.functions.inference import (
-    SAMPLE_SIZE_DEFAULT,
-    infer_from_dataframe,
-)
+from diepy_spark.functions.inference import infer_from_dataframe
 from diepy_spark.sources.excel import read_excel_sheets, sheet_to_untyped_df, split_sheet_address
-from diepy_spark.sources.files import apply_schema, is_csv_path, is_excel_path, read_untyped_csv
+from diepy_spark.sources.files import apply_schema, is_excel_path, read_untyped_csv
 from diepy_spark.sources.writers import write_csv, write_xlsx
 
 logger = logging.getLogger("diepy_spark")
@@ -69,7 +66,6 @@ class DiepyContext:
     def import_file(
         self, filepath: str, table: str | None = None, schema: str | None = None,
         delimiter: str = ",", truncate: bool = False,
-        sample_size: int | None = SAMPLE_SIZE_DEFAULT, lenient_dates: bool = False,
     ) -> int | None:
         try:
             if is_excel_path(filepath):
@@ -79,10 +75,10 @@ class DiepyContext:
                 if table.endswith((".csv", ".tab", ".tsv", ".txt")):  # x.csv.gz
                     table = os.path.splitext(table)[0]
             raw = read_untyped_csv(self.spark, filepath, delimiter)
-            specs = infer_from_dataframe(raw, sample_size)
+            specs = infer_from_dataframe(raw)
             if not self.backend.table_exists(table, schema):
                 self.backend.create_table(table, specs, schema)
-            typed = apply_schema(raw, specs, lenient=lenient_dates)
+            typed = apply_schema(raw, specs)
             self.backend.append(typed, table, schema, truncate=truncate)
             return typed.count()
         except Exception:
@@ -121,9 +117,8 @@ class DiepyContext:
     def export_table(
         self, table: str, filename: str, schema: str | None = None,
         unix: bool = False, windows: bool = False, zip: bool = False,
-        single_file: bool = True,
     ) -> str:
         df: DataFrame = self.backend.read_table(table, schema)
         if is_excel_path(filename):
             return write_xlsx(df, filename, sheet_name=table)
-        return write_csv(df, filename, unix=unix, windows=windows, zip=zip, single_file=single_file)
+        return write_csv(df, filename, unix=unix, windows=windows, zip=zip)

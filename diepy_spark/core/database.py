@@ -51,10 +51,10 @@ class JdbcBackend:
     live (tests/test_jdbc_live.py) whenever session.find_jdbc_jars()
     discovers a driver jar; contract-tested by recording otherwise."""
 
-    def __init__(self, spark: SparkSession, url: str, driver: str | None = None):
+    def __init__(self, spark: SparkSession, url: str):
         self.spark = spark
         self.url = url
-        self.driver = driver if driver is not None else _driver_for_url(url)
+        self.driver = _driver_for_url(url)
 
     def _opts(self, rw):
         rw = rw.option("url", self.url)
@@ -108,26 +108,17 @@ class JdbcBackend:
         )
 
     def append(
-        self,
-        df: DataFrame,
-        table: str,
-        schema: str | None = None,
-        truncate: bool = False,
-        num_partitions: int | None = None,
+        self, df: DataFrame, table: str, schema: str | None = None, truncate: bool = False
     ) -> None:
-        """num_partitions caps the write connections (Spark coalesces the
-        frame first). Pass 1 for single-writer targets (file DBs like
-        DuckDB/SQLite) — the same single-connection shape as the
-        reference's executemany loop; leave None for server databases
-        where parallel inserts are the point."""
+        """One write connection per partition of `df`, batched at 1000
+        rows (the reference's executemany batch). A DuckDB file takes
+        these concurrent writers too (tests/test_jdbc_live.py)."""
         name = f"{schema}.{table}" if schema else table
         writer = (
             self._opts(df.write.format("jdbc"))
             .option("dbtable", name)
             .option("batchsize", 1000)
         )
-        if num_partitions is not None:
-            writer = writer.option("numPartitions", num_partitions)
         if truncate:
             writer.option("truncate", True).mode("overwrite").save()
         else:

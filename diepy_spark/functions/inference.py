@@ -65,6 +65,16 @@ SAMPLE_SIZE_DEFAULT = 20000
 # Varchar bucket ladder (core.py:530-544): inferred length < bound → VARCHAR(bound).
 VARCHAR_BUCKETS = (50, 100, 200, 500, 1000, 4000)
 
+# Spark type per emitted DDL type (ColumnSpec.spark_type); the rest are strings.
+_SPARK_FOR_SQL = {
+    "SMALLINT": ShortType(),
+    "INT": IntegerType(),
+    "BIGINT": LongType(),
+    "FLOAT": DoubleType(),
+    "TIMESTAMP": TimestampType(),
+    "DATE": DateType(),
+}
+
 _D1 = datetime(2000, 1, 1, 12, 34, 56, 123456)
 _D2 = datetime(2007, 10, 20, 14, 32, 12, 654321)
 _D1_DATE = datetime(2000, 1, 1, 12, 34, 56)
@@ -194,24 +204,9 @@ class ColumnSpec:
         return self.type or "text"
 
     def spark_type(self) -> DataType:
-        t = self._resolved()
-        if t == "int":
-            if self.max_value == 1 and self.min_value == 0:
-                return ShortType()  # the 0/1 "bool-ish" bucket stays SMALLINT
-            if self.max_value >= 32768 or (self.widen_min and self.min_value <= -32768):
-                if self.max_value >= 2**31 or self.min_value < -(2**31):
-                    return LongType()  # widen beyond INT (documented divergence)
-                return IntegerType()
-            return ShortType()
-        if t == "float":
-            return DoubleType()
-        if t == "datetime":
-            return TimestampType()
-        if t == "date":
-            return DateType()
-        if t == "time":
-            return StringType()  # Spark has no TIME; normalized HH:MM:SS (§7.5)
-        return StringType()
+        """The Spark type of the DDL type: VARCHAR/TEXT, and TIME (Spark has
+        no TIME; normalized HH:MM:SS, §7.5), are strings."""
+        return _SPARK_FOR_SQL.get(self.sql_type(), StringType())
 
     def sql_type(self) -> str:
         """Dialect-portable DDL type for JDBC createTableColumnTypes —
@@ -219,10 +214,10 @@ class ColumnSpec:
         t = self._resolved()
         if t == "int":
             if self.max_value == 1 and self.min_value == 0:
-                return "SMALLINT"
+                return "SMALLINT"  # the 0/1 "bool-ish" bucket stays SMALLINT
             if self.max_value >= 32768 or (self.widen_min and self.min_value <= -32768):
                 if self.max_value >= 2**31 or self.min_value < -(2**31):
-                    return "BIGINT"
+                    return "BIGINT"  # widen beyond INT (documented divergence)
                 return "INT"
             return "SMALLINT"
         if t == "float":

@@ -6,27 +6,24 @@ those pairs — i.e. connected components. The reference has no graph or
 iteration surface at all (SURVEY.md §2.5); this is north-star extension
 surface for training-data dedup at scale.
 
-Three execution paths, picked adaptively:
-- tiny graphs (below ``local_threshold`` edges) solve with driver-side
+Two execution paths, picked by graph size:
+- tiny graphs (up to ``local_threshold`` edges) solve with driver-side
   union-find — a dedup pair graph is usually orders of magnitude smaller
   than its corpus;
-- the distributed default is the LARGE-STAR/SMALL-STAR alternation of
-  Kiveris et al., "Connected Components in MapReduce and Beyond" (SoCC'14):
-  rounds grow with log(diameter), not diameter, so a pathological chain of
+- larger graphs run the LARGE-STAR/SMALL-STAR alternation of Kiveris et
+  al., "Connected Components in MapReduce and Beyond" (SoCC'14): rounds
+  grow with log(diameter), not diameter, so a pathological chain of
   near-dups (doc A ~ B ~ C ~ ...) converges in a handful of rounds where
-  plain propagation needs one round per hop;
-- ``algorithm="min-label"`` keeps the simpler min-propagation variant
-  (one self-join + aggregate per round, rounds = diameter) — marginally
-  cheaper per round on the shallow star-shaped graphs dedup usually emits.
+  plain min-label propagation needs one round per hop.
 
-Both distributed variants reach the same unique fixpoint — every node
-labeled with the minimum node id of its component — so results are
-deterministic regardless of execution order or algorithm choice (pinned by
-tests/test_operators.py equivalence tests and the recursive-CTE oracle).
+Both paths reach the same unique fixpoint — every node labeled with the
+minimum node id of its component — so results are deterministic
+regardless of execution order or path (pinned by tests/test_operators.py
+equivalence tests and the recursive-CTE oracle).
 
-Scale design: each round persists its frame and unpersists the previous
-one, keeping lineage flat (no exponential plan growth); the driver loop
-collects ONE scalar per round (a change count / edge-set signature).
+Scale design: each round localCheckpoints its edge frame, keeping lineage
+flat (no exponential plan growth); the driver loop collects ONE scalar
+per round (an edge-set signature).
 """
 
 from __future__ import annotations
@@ -108,7 +105,6 @@ def connected_components(
     dst: str = "b",
     max_iter: int = 20,
     local_threshold: int = 1_000_000,
-    algorithm: str = "two-phase",
 ) -> DataFrame:
     """(node, cluster) for every node appearing in `edges`, where `cluster`
     is the minimum node id of the node's connected component. Raises if the
@@ -118,11 +114,10 @@ def connected_components(
     `local_threshold`, the closure is solved with driver-side union-find —
     a dedup pair graph is usually a few orders of magnitude smaller than
     the corpus, and a millisecond union-find beats several sequential
-    shuffle rounds. Above the threshold the distributed path runs:
-    large-star/small-star by default (rounds ~ log diameter), or
-    ``algorithm="min-label"`` for plain min propagation (rounds =
-    diameter). All paths reach the same unique min-id fixpoint; pass
-    ``local_threshold=0`` to force a distributed path."""
+    shuffle rounds. Above the threshold the distributed large-star/
+    small-star path runs (connected_components_two_phase, rounds ~ log
+    diameter). Both paths reach the same unique min-id fixpoint; pass
+    ``local_threshold=0`` to force the distributed path."""
     spark = edges.sparkSession
     und = (
         edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
@@ -138,27 +133,10 @@ def connected_components(
             head = und.collect()
             und.unpersist()
             return _local_union_find(spark, head, und.schema["n"].dataType)
-    if algorithm == "two-phase":
-        try:
-            return connected_components_two_phase(und, "n", "m", max_iter=max_iter)
-        finally:
-            und.unpersist()
-
-    # least(min(neighbor), self) is already one propagation step — saves a
-    # round. Lazy persist: round 0's action materializes everything in one
-    # job instead of paying a separate warm-up job.
-    labels = und.groupBy("n").agg(F.least(F.min("m"), F.col("n")).alias("label")).persist()
-
-    # Label frames shrink to |nodes| rows immediately; the default partition
-    # count just adds scheduling latency to every sequential round. Scope the
-    # iteration to a few partitions — AQE re-expands nothing here, and a
-    # production run sizes this to |nodes|/target-partition-size.
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        return _iterate(und, labels, max_iter)
+        return connected_components_two_phase(und, "n", "m", max_iter=max_iter)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
+        und.unpersist()
 
 
 def connected_components_two_phase(
@@ -174,7 +152,7 @@ def connected_components_two_phase(
 
     until the edge set is a fixed point — at which point every node points
     directly at its component's minimum. Rounds grow with log(diameter)
-    (empirically ~log_2), which is why this is the 100 TB-safe default:
+    (empirically ~log_2), which is why this is the 100 TB-safe path:
     a duplicate CHAIN of length d needs ~log d rounds here vs d rounds of
     plain min propagation.
 
@@ -293,41 +271,6 @@ def _local_union_find(spark, rows, node_type) -> DataFrame:
         [StructField("node", node_type, False), StructField("cluster", node_type, False)]
     )
     return spark.createDataFrame(out, schema)
-
-
-def _iterate(und: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
-    for _ in range(max_iter):
-        # candidate: min label among closed neighborhood
-        nbr_min = (
-            und.join(labels.withColumnRenamed("n", "m"), "m")
-            .groupBy("n")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # localCheckpoint, not persist: labels feeds THREE places in the
-        # next round's expression, so the logical plan multiplies per round
-        # and the driver dies building plan strings near round ~10 even
-        # though every round's data is cached. Checkpointing truncates the
-        # lineage; the count below materializes it (one job per round).
-        new_labels = (
-            labels.join(nbr_min, "n", "left")
-            .select(
-                "n",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
-                    "label"
-                ),
-                (F.col("nbr_label") < F.col("label")).alias("changed"),
-            )
-        ).localCheckpoint(eager=False)
-        changes = new_labels.where(F.col("changed")).count()
-        labels = new_labels.select("n", "label")
-        if changes == 0:
-            result = labels.select(
-                F.col("n").alias("node"), F.col("label").alias("cluster")
-            ).localCheckpoint(eager=True)
-            und.unpersist()
-            return result
-    und.unpersist()
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
 def _keep_predicate(id_col: str):

@@ -21,17 +21,18 @@ suffix and LCP arrays"):
                  space-joined suffix strings, the oracle's sort key);
   after ceil(log2 max_tokens) rounds the rank totally orders suffixes
   (ties only between IDENTICAL truncated suffixes, broken by (d, i) —
-  pinned to the same tie-break in the oracle).
+  pinned to the same tie-break in the oracle). adjacent_suffix_lcp seeds
+  the ladder with one dense rank over g-token windows and finishes the
+  order with one fused tuple sort (see its docstring).
 
-Adjacent-suffix LCP by rank-table descent: walk k = 64, 32, ..., 1; if
-rank_k matches at both cursors, advance both by k. Clamped end-windows
-can overshoot (two identical length-5 remainders match at k=8), so the
-final LCP clamps to the remaining suffix lengths — exact, proven by the
-unit suite against a brute-force Python suffix sort.
+Adjacent-suffix LCP: each consecutive suffix pair joins back to its two
+documents' token arrays and compares the two max_tokens-bounded windows
+in one codegen expression — exact, proven by the unit suite against a
+brute-force Python suffix sort.
 
-Scale design — this is the point of prefix doubling: every shuffle
-carries FIXED-WIDTH integers (doc id, position, rank), never suffix
-text; a naive "sort the suffix strings" plan shuffles O(corpus² ) bytes
+Scale design — this is the point of prefix doubling: after the seed
+(one g-token window per position, g <= 8), every ladder shuffle carries
+FIXED-WIDTH integers (doc id, position, rank), never suffix text; a naive "sort the suffix strings" plan shuffles O(corpus² ) bytes
 (every suffix materializes its full tail), which is exactly what the
 oracle does at sf0.01 and exactly what a 100 TB corpus cannot.
 O(log max_tokens) rounds, each: one per-doc window (lead) + one
@@ -54,8 +55,8 @@ from pyspark.sql import functions as F
 
 from diepy_spark.operators.dedup import tokens_expr
 
-SA_MAX_TOKENS = 128  # doubling rounds: 1->2->...->128 (7), LCP levels 64..1
-_FUSE_ARITY = 16  # max rank keys in the fused arrays-mode row-number pass
+SA_MAX_TOKENS = 128  # token cap per document: pins the round count at any scale
+_FUSE_ARITY = 16  # max rank keys in the fused row-number pass
 
 
 def block_dense_rank(
@@ -241,22 +242,6 @@ def block_running_sum(
     )
 
 
-def _suffix_positions(
-    df: DataFrame, text_col: str, id_col: str, max_tokens: int
-) -> DataFrame:
-    """(d, i, n, tok): every 1-based token position of every document,
-    tokens truncated to max_tokens (pins the doubling-round count at any
-    scale factor), n = truncated document length. Docs with zero tokens
-    are excluded (no suffixes)."""
-    toks_sql = f"slice({tokens_expr(text_col)}, 1, {max_tokens})"
-    return (
-        df.where(F.expr(f"size({tokens_expr(text_col)}) >= 1"))
-        .select(F.col(id_col).alias("d"), F.expr(toks_sql).alias("__toks"))
-        .select("d", F.expr("size(__toks)").alias("n"), F.posexplode("__toks").alias("j", "tok"))
-        .select("d", "n", (F.col("j") + F.lit(1)).cast("int").alias("i"), "tok")
-    )
-
-
 def _suffix_seed_windows(
     df: DataFrame, text_col: str, id_col: str, max_tokens: int, g: int
 ) -> DataFrame:
@@ -291,64 +276,45 @@ def suffix_array_ranks(
     id_col: str = "doc_id",
     max_tokens: int = SA_MAX_TOKENS,
     seed_g: int = 1,
-    retain: bool = True,
     ladder_top: int | None = None,
-) -> dict[int, DataFrame]:
-    """Prefix-doubling rank tables {k: (d, i, n, r)} for k = seed_g,
-    2*seed_g, ..., up to the first level >= max_tokens (that last table
-    is the suffix array order). O(log(max_tokens/seed_g)) rounds; per
-    round one per-doc lead window + one block dense rank — integer-only
-    shuffles.
+) -> tuple[int, DataFrame]:
+    """Prefix-ladder rank table (k, (d, i, n, r)) for the first level
+    k = seed_g * 4^m >= ladder_top (default max_tokens; at max_tokens the
+    table is the suffix array order). Per round one per-doc lead window
+    + one block dense rank — integer-only shuffles; block_dense_rank's
+    internal checkpoint cuts lineage every round.
 
-    seed_g > 1 (power of two) collapses the first log2(seed_g) rounds
-    into ONE dense rank over g-token window strings: the seeding
-    exchange ships ~g tokens per position instead of integers — at 270k
-    positions that's comparable bytes to the three integer rounds it
-    replaces, for a third of the stage barriers. Callers that need the
-    FULL level ladder (the rank-descent LCP) use seed_g=1.
+    The seed (a power of two) is ONE dense rank over seed_g-token window
+    strings: the seeding exchange ships ~g tokens per position instead
+    of integers — at 270k positions that's comparable bytes to the three
+    integer doubling rounds it replaces, for a third of the stage
+    barriers. The ladder then QUADRUPLES — rank_4k from the 4-tuple
+    (r_k[i], r_k[i+k], r_k[i+2k], r_k[i+3k]) — an order as valid as
+    doubling (lexicographic tuple of consecutive k-windows == the
+    4k-window order, sentinel 0 for positions past the end) in half the
+    rounds.
 
-    retain=False skips the per-level localCheckpoint: callers that read
-    ONLY the top table (arrays-mode LCP) don't pay caching for levels
-    consumed once — block_dense_rank's internal checkpoint already cuts
-    lineage every round. It also switches the ladder from DOUBLING to
-    QUADRUPLING — rank_4k from the 4-tuple (r_k[i], r_k[i+k], r_k[i+2k],
-    r_k[i+3k]) — which is just as valid an order (lexicographic tuple of
-    consecutive k-windows == the 4k-window order, sentinel 0 for
-    positions past the end) but halves the remaining rounds. The descent
-    LCP needs every power of two, so retain=True keeps strict doubling.
-
-    ladder_top stops the ladder at the FIRST level >= ladder_top instead
-    of max_tokens, for callers that finish the ordering themselves (the
-    fused arrays-mode row-number pass) — the token arrays are still
-    truncated at max_tokens, only the round count changes."""
+    ladder_top lets a caller that finishes the ordering itself (the
+    fused row-number pass of adjacent_suffix_lcp) stop early — the token
+    arrays are still truncated at max_tokens, only the round count
+    changes."""
     if seed_g & (seed_g - 1):
         raise ValueError(f"suffix_array_ranks: seed_g must be a power of 2, got {seed_g}")
     stop = max_tokens if ladder_top is None else min(ladder_top, max_tokens)
-    levels: dict[int, DataFrame] = {}
-    if seed_g == 1:
-        cur = block_dense_rank(
-            _suffix_positions(df, text_col, id_col, max_tokens), ["tok"], out="r"
-        ).select("d", "n", "i", "r")
-        k = 1
-    else:
-        # r13: the seed-window frame (tokenize + per-position string
-        # windows) is the most expensive input of the ladder and the
-        # range partitioner computes it twice (sampling sketch + the
-        # shuffle itself) — cut it once.
-        seedw = _suffix_seed_windows(
-            df, text_col, id_col, max_tokens, seed_g
-        ).localCheckpoint(eager=False)
-        cur = block_dense_rank(seedw, ["key"], out="r").select(
-            "d", "n", "i", "r"
-        )
-        k = seed_g
-    levels[k] = cur.localCheckpoint(eager=False) if retain else cur
+    # r13: the seed-window frame (tokenize + per-position string windows)
+    # is the most expensive input of the ladder and the range partitioner
+    # computes it twice (sampling sketch + the shuffle itself) — cut it
+    # once.
+    seedw = _suffix_seed_windows(
+        df, text_col, id_col, max_tokens, seed_g
+    ).localCheckpoint(eager=False)
+    cur = block_dense_rank(seedw, ["key"], out="r").select("d", "n", "i", "r")
+    k = seed_g
     wd = Window.partitionBy("d").orderBy("i")
-    arity = 2 if retain else 4
     while k < stop:
-        paired = levels[k]
+        paired = cur
         keys = ["r"]
-        for j in range(1, arity):
+        for j in range(1, 4):
             paired = paired.withColumn(
                 f"__r{j}", F.coalesce(F.lead("r", j * k).over(wd), F.lit(0))
             )
@@ -356,9 +322,8 @@ def suffix_array_ranks(
         cur = block_dense_rank(paired, keys, out="__rn").select(
             "d", "n", "i", F.col("__rn").alias("r")
         )
-        k *= arity
-        levels[k] = cur.localCheckpoint(eager=False) if retain else cur
-    return levels
+        k *= 4
+    return k, cur
 
 
 def adjacent_suffix_lcp(
@@ -366,7 +331,6 @@ def adjacent_suffix_lcp(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_tokens: int = SA_MAX_TOKENS,
-    mode: str = "arrays",
 ) -> DataFrame:
     """(da, ia, db, ib, lcp): each consecutive suffix pair in suffix-array
     order (ties between identical suffixes broken by (d, i)) with its
@@ -374,88 +338,54 @@ def adjacent_suffix_lcp(
     the corpus (the suffix-array theorem); the lcp distribution is the
     repeated-span length distribution Lee et al. threshold on.
 
-    ``mode`` picks the LCP tail (same rows either way — both modes are
-    pinned against the brute force by the unit suite):
+    The LCP tail joins each side of the adjacency frame back to its
+    document's token array and compares the two max_tokens-bounded
+    windows in ONE whole-stage-codegen expression (zip_with +
+    array_position): two corpus-linear equi-joins, rows bounded by
+    max_tokens. Since it reads no intermediate rank table, the rank
+    ladder seeds at g = the largest power of two <= min(8, max_tokens).
 
-    - ``"arrays"`` (default): join each side of the adjacency frame back
-      to its document's token array and compare the two max_tokens-
-      bounded windows in ONE whole-stage-codegen expression (zip_with +
-      array_position). Two corpus-linear equi-joins, rows bounded by
-      max_tokens — the fast path while per-pair token windows are cheap
-      to ship.
-    - ``"ranks"``: pure-integer rank-table descent (see module
-      docstring) — 2 equi-joins per doubling level, shuffle currency
-      stays fixed-width integers, never token text. The tier for long
-      max_tokens where shipping token windows per pair would double the
-      corpus bytes over the wire.
+    The tail of the ladder is FUSED into the final ordering pass: the
+    top-level dense rank existed only to be the suffix-array sort key,
+    and the level-k key TUPLE (r[i], r[i+k], ..., r[i+(m-1)k], d, i)
+    with m*k >= max_tokens is the identical total order (lexicographic
+    comparison of consecutive k-window ranks covering the whole
+    truncated suffix == the truncated-suffix order, sentinel 0 for
+    positions past the end; dense_rank is order-isomorphic to its key).
+    r13 fused the LAST quadrupling round (m = 4); r14 widens the fuse to
+    m <= _FUSE_ARITY = 16 rank keys, so at the default (max_tokens=128,
+    seed g=8) the ladder stops AT THE SEED and the intermediate
+    quadrupling block pass disappears entirely: one dense rank over
+    g-token windows + ONE lead window (15 leads, a single window node /
+    one exchange by d) + one adjacency pass — guide §2.4, remove
+    shuffles outright. Byte accounting: the fused exchange carries m
+    ints per position ONCE where the ladder shipped 4 ints per position
+    through every remaining round's two exchanges — fewer barriers at
+    comparable shuffle bytes.
 
-    arrays mode seeds the rank ladder at g=8 (it only needs the TOP
-    table); ranks mode seeds at 1 because the descent consumes every
-    level.
-
-    arrays mode additionally FUSES the tail of the ladder into the
-    final ordering pass: the top-level dense rank existed only to be
-    the suffix-array sort key, and the level-k key TUPLE
-    (r[i], r[i+k], ..., r[i+(m-1)k], d, i) with m*k >= max_tokens is the
-    identical total order (lexicographic comparison of consecutive
-    k-window ranks covering the whole truncated suffix == the truncated-
-    suffix order, sentinel 0 for positions past the end; dense_rank is
-    order-isomorphic to its key). r13 fused the LAST quadrupling round
-    (m = 4); r14 widens the fuse to m <= _FUSE_ARITY = 16 rank keys, so
-    at the default (max_tokens=128, seed g=8) the ladder stops AT THE
-    SEED and the intermediate quadrupling block pass disappears
-    entirely: one dense rank over g-token windows + ONE lead window
-    (15 leads, a single window node / one exchange by d) + one
-    adjacency pass — guide §2.4, remove shuffles outright. Byte
-    accounting: the fused exchange carries m ints per position ONCE
-    where the ladder shipped 4 ints per position through every
-    remaining round's two exchanges — fewer barriers at comparable
-    shuffle bytes.
-
-    Both modes take adjacent pairs straight off the range-partitioned
-    sort (block_adjacent_pairs, r14): the old shape materialized a
-    block row number, localCheckpointed the suffix frame and
-    self-joined it on (rn, rn-1) — the offsets aggregate, the
-    checkpoint (whose lazy form still pays full physical planning +
-    AQE stage execution at call time) and two hash exchanges of the
-    whole frame, all replaced by a per-partition lead() plus a
-    partition-count-bounded boundary stitch."""
-    if mode == "arrays":
-        g = min(8, max_tokens)
-        top_needed = g
-        while _FUSE_ARITY * top_needed < max_tokens:
-            top_needed *= 4
-        levels = suffix_array_ranks(
-            df,
-            text_col,
-            id_col,
-            max_tokens,
-            seed_g=g,
-            retain=False,
-            ladder_top=top_needed,
+    Adjacent pairs come straight off the range-partitioned sort
+    (block_adjacent_pairs, r14): the old shape materialized a block row
+    number, localCheckpointed the suffix frame and self-joined it on
+    (rn, rn-1) — the offsets aggregate, the checkpoint (whose lazy form
+    still pays full physical planning + AQE stage execution at call
+    time) and two hash exchanges of the whole frame, all replaced by a
+    per-partition lead() plus a partition-count-bounded boundary
+    stitch."""
+    g = 1 << (min(8, max_tokens).bit_length() - 1)
+    top_needed = g
+    while _FUSE_ARITY * top_needed < max_tokens:
+        top_needed *= 4
+    k, paired = suffix_array_ranks(
+        df, text_col, id_col, max_tokens, seed_g=g, ladder_top=top_needed
+    )
+    keys = ["r"]
+    wd = Window.partitionBy("d").orderBy("i")
+    arity = min(_FUSE_ARITY, -(-max_tokens // k))  # ceil, >= 1
+    for j in range(1, arity):
+        paired = paired.withColumn(
+            f"__r{j}", F.coalesce(F.lead("r", j * k).over(wd), F.lit(0))
         )
-        k = max(levels)
-        paired = levels[k]
-        keys = ["r"]
-        wd = Window.partitionBy("d").orderBy("i")
-        arity = min(_FUSE_ARITY, -(-max_tokens // k))  # ceil, >= 1
-        for j in range(1, arity):
-            paired = paired.withColumn(
-                f"__r{j}", F.coalesce(F.lead("r", j * k).over(wd), F.lit(0))
-            )
-            keys.append(f"__r{j}")
-        sa_keys = [*keys, "d", "i"]
-    else:
-        levels = suffix_array_ranks(
-            df,
-            text_col,
-            id_col,
-            max_tokens,
-            seed_g=1,
-            retain=True,
-        )
-        paired = levels[max(levels)]
-        sa_keys = ["r", "d", "i"]
+        keys.append(f"__r{j}")
     # adjacency DIRECTLY off the range-partitioned sort (r14, guide
     # §2.4): the old shape materialized a row number (offsets aggregate
     # + broadcast join), checkpointed the frame, and self-joined it on
@@ -463,7 +393,7 @@ def adjacent_suffix_lcp(
     # Consecutive-pair extraction needs none of that: pairs are adjacent
     # rows of the range sort itself (+ a partition-count-bounded
     # boundary stitch).
-    adj = block_adjacent_pairs(paired, sa_keys, carry=["d", "i", "n"]).select(
+    adj = block_adjacent_pairs(paired, [*keys, "d", "i"], carry=["d", "i", "n"]).select(
         F.col("d").alias("da"),
         F.col("i").alias("ia"),
         F.col("n").alias("na"),
@@ -471,73 +401,27 @@ def adjacent_suffix_lcp(
         F.col("i2").alias("ib"),
         F.col("n2").alias("nb"),
     )
-    if mode == "arrays":
-        toks_sql = f"slice({tokens_expr(text_col)}, 1, {max_tokens})"
-        # consumed twice (da and db sides): tokenize the corpus once
-        docs = (
-            df.where(F.expr(f"size({tokens_expr(text_col)}) >= 1"))
-            .select(F.col(id_col).alias("d"), F.expr(toks_sql).alias("__t"))
-            .localCheckpoint(eager=False)
-        )
-        out = (
-            adj.join(docs.select(F.col("d").alias("da"), F.col("__t").alias("__ta")), "da")
-            .join(docs.select(F.col("d").alias("db"), F.col("__t").alias("__tb")), "db")
-            .withColumn("__m", F.least(F.col("na") - F.col("ia") + 1, F.col("nb") - F.col("ib") + 1))
-            # Spark array_position, like duckdb list_position, returns 0
-            # on no-match: all-equal windows coalesce to the full min
-            # length (identical suffixes), not to -1.
-            .withColumn(
-                "lcp",
-                F.expr(
-                    "CAST(coalesce(nullif(array_position("
-                    " zip_with(slice(__ta, ia, __m), slice(__tb, ib, __m),"
-                    "          (x, y) -> x = y), false), 0) - 1, __m) AS INT)"
-                ),
-            )
-        )
-        return out.select("da", "ia", "db", "ib", "lcp")
-    if mode != "ranks":
-        raise ValueError(f"adjacent_suffix_lcp: unknown mode {mode!r}")
-    adj = adj.withColumn("acc", F.lit(0))
-    # ALL levels descend, top included: two identical max-length suffixes
-    # match only at the top level (64+...+1 = 127 < 128 would undercount
-    # by one); the final remaining-length clamp absorbs the overshoot.
-    for k in sorted(levels, reverse=True):
-        rk = levels[k]
-        ra = rk.select(
-            F.col("d").alias("da"), F.col("i").alias("__pa"), F.col("r").alias("__ra")
-        )
-        rb = rk.select(
-            F.col("d").alias("db"), F.col("i").alias("__pb"), F.col("r").alias("__rb")
-        )
-        adj = (
-            adj.withColumn("__pa", (F.col("ia") + F.col("acc")).cast("int"))
-            .withColumn("__pb", (F.col("ib") + F.col("acc")).cast("int"))
-            .join(ra, ["da", "__pa"], "left")
-            .join(rb, ["db", "__pb"], "left")
-            .withColumn(
-                "acc",
-                F.col("acc")
-                + F.when(
-                    F.col("__ra").isNotNull() & (F.col("__ra") == F.col("__rb")),
-                    F.lit(k),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("__pa", "__pb", "__ra", "__rb")
-            # each level's join consumes the previous level's result once;
-            # cut lineage so the 7-deep join chain doesn't re-derive.
-            .localCheckpoint(eager=False)
-        )
-    return adj.select(
-        "da",
-        "ia",
-        "db",
-        "ib",
-        F.least(
-            F.col("acc"),
-            F.col("na") - F.col("ia") + F.lit(1),
-            F.col("nb") - F.col("ib") + F.lit(1),
-        )
-        .cast("int")
-        .alias("lcp"),
+    toks_sql = f"slice({tokens_expr(text_col)}, 1, {max_tokens})"
+    # consumed twice (da and db sides): tokenize the corpus once
+    docs = (
+        df.where(F.expr(f"size({tokens_expr(text_col)}) >= 1"))
+        .select(F.col(id_col).alias("d"), F.expr(toks_sql).alias("__t"))
+        .localCheckpoint(eager=False)
     )
+    out = (
+        adj.join(docs.select(F.col("d").alias("da"), F.col("__t").alias("__ta")), "da")
+        .join(docs.select(F.col("d").alias("db"), F.col("__t").alias("__tb")), "db")
+        .withColumn("__m", F.least(F.col("na") - F.col("ia") + 1, F.col("nb") - F.col("ib") + 1))
+        # Spark array_position, like duckdb list_position, returns 0
+        # on no-match: all-equal windows coalesce to the full min
+        # length (identical suffixes), not to -1.
+        .withColumn(
+            "lcp",
+            F.expr(
+                "CAST(coalesce(nullif(array_position("
+                " zip_with(slice(__ta, ia, __m), slice(__tb, ib, __m),"
+                "          (x, y) -> x = y), false), 0) - 1, __m) AS INT)"
+            ),
+        )
+    )
+    return out.select("da", "ia", "db", "ib", "lcp")

@@ -259,8 +259,8 @@ def x2_ngram_jaccard_pairs(spark, sf_dir):
 
 
 def x2_dup_clusters(spark, sf_dir):
-    """Duplicate GROUPS, not just pairs: connected components (iterative
-    min-label propagation, operators/clustering.py) over the n-gram
+    """Duplicate GROUPS, not just pairs: connected components
+    (operators/clustering.py) over the n-gram
     Jaccard near-dup graph. Cluster id = min doc_id of the component —
     a unique fixpoint, so the result is deterministic. Oracle: transitive
     closure via DuckDB recursive CTE over the same pair graph."""
@@ -5924,7 +5924,6 @@ def x11_cc_twophase(spark, sf_dir):
         "da",
         "db",
         local_threshold=0,
-        algorithm="two-phase",
     )
     return cc.withColumn(
         "cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster"))
@@ -6325,7 +6324,7 @@ def x3_pq_trained_distortion(spark, sf_dir):
     )
 
 
-SA_MAX_T = 128  # suffix-array token cap: pins 7 doubling rounds at any sf
+SA_MAX_T = 128  # suffix-array token cap: pins the round count at any sf
 SA_LCP_THRESHOLDS = (8, 16, 32)
 
 
@@ -6339,9 +6338,9 @@ def x1_suffix_array(spark, sf_dir):
     adjacent LCP — the suffix-array theorem) and the full repeated-span
     length distribution, the evidence for choosing the gram tiers' L.
 
-    Scale shape: every doubling round shuffles FIXED-WIDTH integers
-    (doc, position, rank) — never suffix text; O(log max_tokens) = 7
-    rounds, each one per-doc lead window + one two-pass block dense rank
+    Scale shape: one two-pass block dense rank over 8-token windows,
+    then one fused sort on 16 lead-window ranks per position
+    (fixed-width integers, never suffix text) and one adjacency pass
     (the x8_sprt shape: range partition, parallel local ranks,
     partition-count-bounded offsets broadcast back — no corpus frame
     through a single task). The oracle materializes and sorts the actual
@@ -11605,7 +11604,7 @@ EXTENDED_ORACLES["x9_retention_plan"] = f"""
 
 # Same pair graph, same min-id fixpoint, same rendering as
 # x2_dup_clusters — the identical oracle text is the point: a hash match
-# proves the two-phase tier reaches the union-find/min-label fixpoint.
+# proves the two-phase tier reaches the union-find fixpoint.
 EXTENDED_ORACLES["x11_cc_twophase"] = EXTENDED_ORACLES["x2_dup_clusters"]
 
 

@@ -82,6 +82,21 @@ def session_cached(fn: _F) -> _F:
     return wrapper  # type: ignore[return-value]
 
 
+def _find_jars(env_var: str, patterns: tuple[str, ...], roots: tuple[str, ...]) -> list[str]:
+    """Jars named by `env_var` (comma-separated paths; empty string =
+    none) when it is set, else every match of `patterns` under `roots`."""
+    env = os.environ.get(env_var)
+    if env is not None:
+        return [p for p in env.split(",") if p]
+    out: set[str] = set()
+    for root in map(os.path.expanduser, roots):
+        if not os.path.isdir(root):
+            continue
+        for pat in patterns:
+            out.update(glob.glob(os.path.join(root, "**", pat), recursive=True))
+    return sorted(out)
+
+
 def find_jdbc_jars() -> list[str]:
     """Best-effort discovery of JDBC driver jars in standard local
     artifact caches (coursier, maven, system java dirs). The Spark distro
@@ -91,27 +106,11 @@ def find_jdbc_jars() -> list[str]:
     Override or disable with SPARK_GRAFT_JDBC_JARS (comma-separated
     paths; empty string = none). Results are static per process — call
     before the first get_spark (jars are a JVM-start config)."""
-    env = os.environ.get("SPARK_GRAFT_JDBC_JARS")
-    if env is not None:
-        return [p for p in env.split(",") if p]
-    pats = (
-        "duckdb_jdbc*.jar",
-        "sqlite-jdbc*.jar",
-        "h2-[0-9]*.jar",
-        "postgresql-[0-9]*.jar",
+    return _find_jars(
+        "SPARK_GRAFT_JDBC_JARS",
+        ("duckdb_jdbc*.jar", "sqlite-jdbc*.jar", "h2-[0-9]*.jar", "postgresql-[0-9]*.jar"),
+        ("~/.cache/coursier", "~/.m2", "/usr/share/java"),
     )
-    roots = (
-        os.path.expanduser("~/.cache/coursier"),
-        os.path.expanduser("~/.m2"),
-        "/usr/share/java",
-    )
-    out: set[str] = set()
-    for root in roots:
-        if not os.path.isdir(root):
-            continue
-        for pat in pats:
-            out.update(glob.glob(os.path.join(root, "**", pat), recursive=True))
-    return sorted(out)
 
 
 def find_delta_jars() -> list[str]:
@@ -128,28 +127,17 @@ def find_delta_jars() -> list[str]:
     caches swept), so the delta branch is real code awaiting an
     environment that can run it — SURVEY §7.2. Override with
     SPARK_GRAFT_DELTA_JARS (comma-separated; empty string = none)."""
-    env = os.environ.get("SPARK_GRAFT_DELTA_JARS")
-    if env is not None:
-        return [p for p in env.split(",") if p]
-    pats = ("delta-spark_*.jar", "delta-core_*.jar", "delta-storage-*.jar")
-    roots = (
-        os.path.expanduser("~/.cache/coursier"),
-        os.path.expanduser("~/.m2"),
-        os.path.expanduser("~/.ivy2"),
-        "/usr/share/java",
+    if os.environ.get("SPARK_GRAFT_DELTA_JARS") is None:
+        # The extension jar alone is useless without delta's Python bindings.
+        try:
+            import delta  # noqa: F401, PLC0415 - probe import
+        except ImportError:
+            return []
+    return _find_jars(
+        "SPARK_GRAFT_DELTA_JARS",
+        ("delta-spark_*.jar", "delta-core_*.jar", "delta-storage-*.jar"),
+        ("~/.cache/coursier", "~/.m2", "~/.ivy2", "/usr/share/java"),
     )
-    out: set[str] = set()
-    for root in roots:
-        if not os.path.isdir(root):
-            continue
-        for pat in pats:
-            out.update(glob.glob(os.path.join(root, "**", pat), recursive=True))
-    # The extension jar alone is useless without delta's Python bindings.
-    try:
-        import delta  # noqa: F401, PLC0415 - probe import
-    except ImportError:
-        return []
-    return sorted(out)
 
 
 def get_spark(app_name: str = "diepy-spark", cpus: str | None = None) -> SparkSession:

@@ -6,8 +6,7 @@ per-cell cast (core.py:374-389). Spark design: `spark.read.csv` with every
 column as string (distributed, splittable for plain/bzip2; .gz decompresses
 transparently but single-stream per file — document, don't fight), then one
 declarative try_cast projection applies the inferred schema. Everything
-stays in whole-stage codegen; the optional dateutil path for exotic date
-formats is an Arrow-batched pandas UDF, never row-at-a-time Python.
+stays in whole-stage codegen: each inferred type has one cast.
 """
 
 from __future__ import annotations
@@ -17,7 +16,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DateType, StringType, TimestampType
+from pyspark.sql.types import DateType
 
 from diepy_spark.functions.inference import ColumnSpec, normalize_headers
 
@@ -87,33 +86,23 @@ def _needs_multiline(spark: SparkSession, src: str | list[str]) -> bool:
     return len(probe.take(1)) > 0
 
 
-def read_untyped_csv(
-    spark: SparkSession,
-    path: str,
-    delimiter: str = ",",
-    header: bool = True,
-    multiline: bool | str = "auto",
-) -> DataFrame:
-    """All-string scan of a delimited file.
+def read_untyped_csv(spark: SparkSession, path: str, delimiter: str = ",") -> DataFrame:
+    """All-string scan of a delimited file with a header row.
 
     multiLine parsing (needed for quoted embedded newlines — the
     reference's csv module accepts them, core.py:234-254) makes a file
-    UNSPLITTABLE: one task parses everything. The default "auto" runs a
-    cheap distributed quote census (_needs_multiline) and keeps the scan
-    splittable whenever the file provably contains no quoted fields — on a
-    100 TB import that is the difference between a single-core parse and a
-    full-cluster one. Pass multiline=True/False to skip the probe when the
-    producer is known. Gzip decompresses transparently by extension (a
-    single stream per file either way); .zip archives are expanded to
-    scratch first (extract_zip_members) since Hadoop input streams can't
-    unzip."""
+    UNSPLITTABLE: one task parses everything. A cheap distributed quote
+    census (_needs_multiline) keeps the scan splittable whenever the file
+    provably contains no quoted fields — on a 100 TB import that is the
+    difference between a single-core parse and a full-cluster one. Gzip
+    decompresses transparently by extension (a single stream per file
+    either way); .zip archives are expanded to scratch first
+    (extract_zip_members) since Hadoop input streams can't unzip."""
     src = extract_zip_members(path) if path.lower().endswith(".zip") else path
-    if multiline == "auto":
-        multiline = _needs_multiline(spark, src)
     df = (
-        spark.read.option("header", header)
+        spark.read.option("header", True)
         .option("sep", delimiter)
-        .option("multiLine", bool(multiline))
+        .option("multiLine", _needs_multiline(spark, src))
         .option("quote", '"')
         .option("escape", '"')
         .option("mode", "PERMISSIVE")
@@ -140,10 +129,9 @@ def read_untyped_jsonl(spark: SparkSession, path: str) -> DataFrame:
     return out.toDF(*fixed)
 
 
-# Formats accepted by the fast JVM cast path for inferred datetime/date/time
-# columns. The reference accepts anything dateutil does; these cover ISO +
-# the overwhelmingly common variants. lenient=True switches to dateutil in a
-# vectorized pandas UDF for the full acceptance surface.
+# Formats accepted by the JVM cast for inferred datetime/date/time columns.
+# The reference accepts anything dateutil does; these cover ISO + the
+# overwhelmingly common variants.
 _TS_FORMATS = (
     "yyyy-MM-dd HH:mm:ss.SSSSSS",
     "yyyy-MM-dd HH:mm:ss",
@@ -161,41 +149,7 @@ def _multi_format_ts(col, formats):
     return F.coalesce(*[F.try_to_timestamp(col, F.lit(f)) for f in formats])
 
 
-def _dateutil_udf(kind: str):
-    import pandas as pd
-    from dateutil.parser import parse as duparse
-    from pyspark.sql.functions import pandas_udf
-
-    if kind == "time":
-        @pandas_udf(StringType())
-        def conv(s: pd.Series) -> pd.Series:
-            def one(v):
-                if v is None or v == "":
-                    return None
-                try:
-                    return duparse(str(v)).time().strftime("%H:%M:%S")
-                except (ValueError, OverflowError):
-                    return None
-            return s.map(one)
-        return conv
-
-    out_type = DateType() if kind == "date" else TimestampType()
-
-    @pandas_udf(out_type)
-    def conv(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None or v == "":
-                return None
-            try:
-                d = duparse(str(v))
-                return d.date() if kind == "date" else d
-            except (ValueError, OverflowError):
-                return None
-        return s.map(one)
-    return conv
-
-
-def apply_schema(df: DataFrame, specs: list[ColumnSpec], lenient: bool = False) -> DataFrame:
+def apply_schema(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
     """Apply inferred ColumnSpecs to an all-string DataFrame as ONE
     projection: empty string ⇒ NULL (core.py:376-377), then a type-directed
     cast per column. try_cast never throws — unparseable stragglers become
@@ -205,27 +159,19 @@ def apply_schema(df: DataFrame, specs: list[ColumnSpec], lenient: bool = False) 
         c = F.when(F.col(raw) == "", None).otherwise(F.trim(F.col(raw)))
         t = spec.type or "text"
         if t == "datetime":
-            expr = _dateutil_udf("datetime")(c) if lenient else _multi_format_ts(c, _TS_FORMATS)
+            expr = _multi_format_ts(c, _TS_FORMATS)
         elif t == "date":
             # _TS_FORMATS fallback: the lattice's midnight rule
             # (core.py:605-606) classifies datetime-shaped values with a
             # 00:00:00 time part as dates, so the cast must accept both
             # shapes.
-            expr = (
-                _dateutil_udf("date")(c)
-                if lenient
-                else F.coalesce(
-                    *[F.try_to_timestamp(c, F.lit(f)) for f in _DATE_FORMATS],
-                    _multi_format_ts(c, _TS_FORMATS),
-                ).cast(DateType())
-            )
+            expr = F.coalesce(
+                *[F.try_to_timestamp(c, F.lit(f)) for f in _DATE_FORMATS],
+                _multi_format_ts(c, _TS_FORMATS),
+            ).cast(DateType())
         elif t == "time":
             # normalized HH:MM:SS string (Spark has no TIME type — SURVEY §7.5)
-            expr = (
-                _dateutil_udf("time")(c)
-                if lenient
-                else F.date_format(_multi_format_ts(c, _TIME_FORMATS), "HH:mm:ss")
-            )
+            expr = F.date_format(_multi_format_ts(c, _TIME_FORMATS), "HH:mm:ss")
         elif t == "text":
             expr = F.when(F.col(raw) == "", None).otherwise(F.col(raw))  # keep raw spacing
         elif t == "int":

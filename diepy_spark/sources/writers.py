@@ -1,4 +1,4 @@
-"""File sinks: CSV/TSV (+gzip) and filename decoration.
+"""File sinks: CSV/TSV and JSON-Lines (+gzip) and filename decoration.
 
 Reference behavior (core.py:299-336, cli.py:54-82): header row, delimiter by
 output extension (.tab/.tsv ⇒ tab), line terminator unix/windows/os-default,
@@ -6,22 +6,20 @@ gzip for .gz/--zip (we implement the DOCUMENTED gzip semantics — the
 reference has a positional-arg bug, quirk Q1), and --datestamp/--timestamp
 filename decoration.
 
-Scale strategy for "one output file": a 100 TB table cannot become one CSV
-on a driver. Default: single_file=True coalesces to 1 task when the data is
-moderate (same semantics as the reference, which always wrote one file);
-single_file=False writes a directory of parts for big exports.
+Every export is one file at the exact requested name, as the reference
+always wrote: Spark writes a single part (coalesce(1)) into a temp dir
+next to it, and the part is moved into place.
 """
 
 from __future__ import annotations
 
 import glob
-import gzip
 import os
 import shutil
 import tempfile
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 
 from diepy_spark.functions.rendering import render_for_export
 from diepy_spark.sources.files import delimiter_for
@@ -49,53 +47,39 @@ def _line_sep(unix: bool, windows: bool) -> str:
     return os.linesep
 
 
+def _write_one_part(writer: DataFrameWriter, path: str) -> str:
+    """Save `writer` (of a coalesce(1) frame) into a temp dir beside
+    `path`, then move its single part file to `path`."""
+    tmp = tempfile.mkdtemp(prefix="diepy-export-", dir=os.path.dirname(os.path.abspath(path)) or ".")
+    try:
+        writer.mode("overwrite").save(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*"))[0]
+        shutil.move(part, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
+
+
 def write_csv(
     df: DataFrame,
     path: str,
     unix: bool = False,
     windows: bool = False,
     zip: bool = False,
-    single_file: bool = True,
 ) -> str:
-    """Write a rendered CSV/TSV, gzip'd when the name says so or zip=True.
-
-    single_file=True: Spark writes one part (coalesce(1)) into a temp dir,
-    which is then moved to the exact requested filename — byte-stream
-    equivalent to the reference's single output file. single_file=False:
-    `path` becomes a directory of parts (the 100 TB path).
-    """
+    """Write a rendered CSV/TSV to exactly `path` (one file, byte-stream
+    equivalent to the reference's output), gzip'd when the name says so
+    or zip=True."""
     if zip and not path.endswith(".gz"):
         path += ".gz"
     compressed = path.endswith(".gz")
-    sep = delimiter_for(path)
-    lsep = _line_sep(unix, windows)
-    rendered = render_for_export(df)
-
     writer = (
-        rendered.write.option("header", True)
-        .option("sep", sep)
-        .option("lineSep", lsep)
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .mode("overwrite")
+        render_for_export(df).coalesce(1).write.format("csv").options(
+            header=True, sep=delimiter_for(path), lineSep=_line_sep(unix, windows),
+            emptyValue="", nullValue="",
+        ).option("compression", "gzip" if compressed else "none")
     )
-    if compressed:
-        writer = writer.option("compression", "gzip")
-
-    if not single_file:
-        writer.csv(path)
-        return path
-
-    tmp = tempfile.mkdtemp(prefix="diepy-export-", dir=os.path.dirname(os.path.abspath(path)) or ".")
-    try:
-        rendered.coalesce(1).write.options(
-            header=True, sep=sep, lineSep=lsep, emptyValue="", nullValue=""
-        ).option("compression", "gzip" if compressed else "none").mode("overwrite").csv(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*"))[0]
-        shutil.move(part, path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    return _write_one_part(writer, path)
 
 
 def write_xlsx(df: DataFrame, path: str, sheet_name: str, max_rows: int = 1_000_000) -> str:
@@ -143,32 +127,14 @@ def write_xlsx(df: DataFrame, path: str, sheet_name: str, max_rows: int = 1_000_
     return path
 
 
-def write_jsonl(df: DataFrame, path: str, single_file: bool = True) -> str:
+def write_jsonl(df: DataFrame, path: str) -> str:
     """JSON-Lines export with the SAME value rendering as write_csv (K7:
     bools as 1/0, Python-isoformat timestamps, NULL fields omitted per the
     JSON convention and read back as NULL) so either format round-trips
-    through the inference lattice identically.
-
-    single_file=True mirrors write_csv's exact-filename contract;
-    single_file=False writes a directory of parts (the 100 TB path). Gzip
-    by filename extension, as with CSV."""
+    through the inference lattice identically. One file at exactly
+    `path`, gzip by filename extension, as with CSV."""
     compressed = path.endswith(".gz")
-    rendered = render_for_export(df)
-    if not single_file:
-        w = rendered.write.mode("overwrite")
-        if compressed:
-            w = w.option("compression", "gzip")
-        w.json(path)
-        return path
-    tmp = tempfile.mkdtemp(
-        prefix="diepy-export-", dir=os.path.dirname(os.path.abspath(path)) or "."
+    writer = render_for_export(df).coalesce(1).write.format("json").option(
+        "compression", "gzip" if compressed else "none"
     )
-    try:
-        rendered.coalesce(1).write.mode("overwrite").option(
-            "compression", "gzip" if compressed else "none"
-        ).json(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*"))[0]
-        shutil.move(part, path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    return _write_one_part(writer, path)

@@ -7,9 +7,9 @@ core.py:112-151,205-213).
 
 Activates only when session.find_jdbc_jars() discovers a DuckDB driver
 jar in a local artifact cache (the Spark distro ships none); skipped
-with a reason otherwise. DuckDB is a single-writer engine, so writes go
-through one partition (`num_partitions=1`) — the same single-connection
-shape as the reference's executemany loop.
+with a reason otherwise. Writes open one connection per partition of
+the frame; a DuckDB file takes those concurrent inserts (pinned by
+test_live_append_from_many_partitions).
 """
 
 import os
@@ -57,23 +57,34 @@ def test_live_create_insert_read_truncate(spark, backend):
         ("bb", 40000, datetime.date(2024, 3, 4)),
     ]
     df = spark.createDataFrame(rows, "name string, n int, d date")
-    backend.append(df, "people", num_partitions=1)  # K2 (batchsize=1000)
+    backend.append(df, "people")  # K2 (batchsize=1000)
     got = sorted(
         (r["name"], r["n"], r["d"]) for r in backend.read_table("people").collect()
     )  # S8
     assert got == sorted(rows)
 
     # append again -> rows double
-    backend.append(df, "people", num_partitions=1)
+    backend.append(df, "people")
     assert backend.read_table("people").count() == 4
 
     # K3: truncate-then-load replaces contents, keeping the table
     repl = spark.createDataFrame(
         [("zz", 7, datetime.date(2025, 5, 6))], "name string, n int, d date"
     )
-    backend.append(repl, "people", truncate=True, num_partitions=1)
+    backend.append(repl, "people", truncate=True)
     got = [(r["name"], r["n"], r["d"]) for r in backend.read_table("people").collect()]
     assert got == [("zz", 7, datetime.date(2025, 5, 6))]
+
+
+def test_live_append_from_many_partitions(spark, backend):
+    """Each of the frame's 4 partitions writes over its own connection
+    into the one DuckDB file; every row lands."""
+    backend._execute_update("CREATE TABLE many_t (k BIGINT)")
+    df = spark.range(0, 4000, numPartitions=4).selectExpr("id AS k")
+    backend.append(df, "many_t")
+    got = backend.read_table("many_t").agg({"k": "sum"}).collect()[0][0]
+    assert backend.read_table("many_t").count() == 4000
+    assert got == sum(range(4000))
 
 
 def test_live_create_errors_on_existing(spark, backend):
@@ -91,7 +102,7 @@ def test_live_partitioned_read_matches_single(spark, backend):
         "CAST(id AS INT) AS k", "CAST(id % 7 AS INT) AS v"
     )
     backend._execute_update("CREATE TABLE wide_t (k INTEGER, v INTEGER)")
-    backend.append(df, "wide_t", num_partitions=1)
+    backend.append(df, "wide_t")
 
     serial = backend.read_table("wide_t")
     striped = backend.read_table("wide_t", num_partitions=4)
@@ -104,7 +115,7 @@ def test_live_partitioned_read_matches_single(spark, backend):
     # Degenerate bounds (constant key) fall back to the serial shape.
     one = spark.createDataFrame([(5, 1), (5, 2)], "k int, v int")
     backend._execute_update("CREATE TABLE const_t (k INTEGER, v INTEGER)")
-    backend.append(one, "const_t", num_partitions=1)
+    backend.append(one, "const_t")
     fb = backend.read_table("const_t", num_partitions=4)
     assert fb.rdd.getNumPartitions() == 1
     assert fb.count() == 2

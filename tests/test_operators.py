@@ -412,8 +412,8 @@ def test_winnow_short_doc_single_window(spark):
 
 @pytest.mark.parametrize("local_threshold", [1_000_000, 0])
 def test_connected_components_chain_and_islands(spark, local_threshold):
-    """All execution paths (driver union-find, two-phase, min-label) must
-    reach the identical min-id fixpoint."""
+    """Both execution paths (driver union-find, two-phase) must reach the
+    identical min-id fixpoint."""
     from diepy_spark.operators.clustering import connected_components
 
     # chain 1-2-3-4-5 (diameter forces multiple propagation rounds),
@@ -428,13 +428,6 @@ def test_connected_components_chain_and_islands(spark, local_threshold):
         for r in connected_components(edges, local_threshold=local_threshold).collect()
     }
     assert got == want
-    ml = {
-        r["node"]: r["cluster"]
-        for r in connected_components(
-            edges, local_threshold=local_threshold, algorithm="min-label"
-        ).collect()
-    }
-    assert ml == want
 
 
 def test_connected_components_diameter_guard(spark):
@@ -442,17 +435,14 @@ def test_connected_components_diameter_guard(spark):
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(1, 12)], "a long, b long")
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(edges, max_iter=1, local_threshold=0, algorithm="min-label")
+        connected_components(edges, max_iter=1, local_threshold=0)
 
 
 def test_two_phase_solves_long_chain_in_log_rounds(spark):
     """The scale story of large-star/small-star: an 80-hop duplicate chain
-    (diameter 80) converges within ~log rounds — min-label propagation
-    with the same budget cannot (one round per hop)."""
-    from diepy_spark.operators.clustering import (
-        connected_components,
-        connected_components_two_phase,
-    )
+    (diameter 80) converges within ~log rounds, where plain min-label
+    propagation would need one round per hop."""
+    from diepy_spark.operators.clustering import connected_components_two_phase
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(1, 81)], "a long, b long")
     got = {
@@ -460,8 +450,6 @@ def test_two_phase_solves_long_chain_in_log_rounds(spark):
         for r in connected_components_two_phase(edges, max_iter=12).collect()
     }
     assert got == {i: 1 for i in range(1, 82)}
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(edges, max_iter=12, local_threshold=0, algorithm="min-label")
 
 
 def test_two_phase_random_graphs_match_union_find(spark):

@@ -201,12 +201,9 @@ def test_auto_multiline_quote_census(spark, tmp_path):
     assert _needs_multiline(spark, str(clean)) is False
     assert _needs_multiline(spark, str(quoted)) is True
 
-    # both parse correctly under auto
+    # both parse correctly
     c = read_untyped_csv(spark, str(clean))
     assert c.count() == 2 and c.columns == ["a", "b"]
     q = read_untyped_csv(spark, str(quoted)).orderBy("a").collect()
     assert len(q) == 2
     assert q[0]["b"] == "line one\nline two"
-
-    # explicit override skips the probe and still parses the clean file
-    assert read_untyped_csv(spark, str(clean), multiline=False).count() == 2

@@ -40,17 +40,13 @@ def brute_adjacent_lcp(texts, max_tokens):
     return sorted(out)
 
 
-def run_case(spark, texts, max_tokens, modes=("arrays", "ranks")):
+def run_case(spark, texts, max_tokens):
     df = spark.createDataFrame(texts, ["doc_id", "text"])
     want = brute_adjacent_lcp(texts, max_tokens)
-    for mode in modes:
-        got = sorted(
-            tuple(r)
-            for r in adjacent_suffix_lcp(
-                df, max_tokens=max_tokens, mode=mode
-            ).collect()
-        )
-        assert got == want, mode
+    got = sorted(
+        tuple(r) for r in adjacent_suffix_lcp(df, max_tokens=max_tokens).collect()
+    )
+    assert got == want
 
 
 def test_crafted_edges(spark):
@@ -66,19 +62,21 @@ def test_crafted_edges(spark):
 
 def test_top_level_identical_suffixes(spark):
     # Docs exactly max_tokens long and identical: the adjacent pair's LCP
-    # must be max_tokens itself — the top-level descent + clamp path.
+    # must be max_tokens itself — the all-equal-window clamp.
     t = " ".join(["w%d" % (i % 3) for i in range(8)])
     run_case(spark, [(1, t), (2, t), (3, t[: len(t) // 2])], max_tokens=8)
 
 
-def test_randomized(spark):
+@pytest.mark.parametrize("max_tokens", [16, 5])
+def test_randomized(spark, max_tokens):
+    # 5 is no power of two: the rank ladder's seed rounds down to 4.
     rng = random.Random(41)
     vocab = ["a", "b", "ab", "ba", "c0"]
     texts = [
         (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 20))))
         for d in range(12)
     ]
-    run_case(spark, texts, max_tokens=16)
+    run_case(spark, texts, max_tokens=max_tokens)
 
 
 def test_block_rank_helpers(spark):
