@@ -9,10 +9,12 @@ oracle_sql()   -> matching DuckDB SQL per query (omitted only for
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from diepy_spark.session import tune
 from diepy_spark.plans.relational import RELATIONAL_QUERIES, r3_hash_aggregate
 from diepy_spark.plans.oracles import RELATIONAL_ORACLES
 from diepy_spark.plans.extended import EXTENDED_QUERIES, EXTENDED_ORACLES
@@ -21,7 +23,7 @@ from diepy_spark.plans.pipeline import PIPELINE_QUERIES, PIPELINE_ORACLES
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return r3_hash_aggregate(spark, "/root/testdata/sf0.001")
+    return r3_hash_aggregate(tune(spark), "/root/testdata/sf0.001")
 
 
 # The driver's correctness harness records the FIRST 50 entries of
@@ -95,6 +97,19 @@ _PRIORITY = [
 ]
 
 
+def _tuned(fn: Callable[[SparkSession, str], DataFrame]):
+    """`fn` with the runtime confs applied to the session it is handed
+    first: the caller's session is not ours (a hostile timezone, no
+    nanosAsLong for the events ns-timestamps), so every query defends
+    here, once, instead of in each plan."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(tune(spark), sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     merged.update(RELATIONAL_QUERIES)
@@ -103,10 +118,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name in _PRIORITY:
         if name in merged:
-            out[name] = merged[name]
+            out[name] = _tuned(merged[name])
     for name, fn in merged.items():
         if name not in out:
-            out[name] = fn
+            out[name] = _tuned(fn)
     return out
 
 

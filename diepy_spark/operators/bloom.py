@@ -16,8 +16,8 @@ hash-verified) in any engine with md5 + integer arithmetic.
 
 Portability contract: positions derive from non-overlapping 4-nibble
 slices of ``md5(seed || ':' || key)`` — pure ``instr``/``substr``
-arithmetic identical in Spark SQL and DuckDB (same trick as
-operators/sketch.py:hex_frac_sql, integer- instead of fraction-valued).
+arithmetic identical in Spark SQL and DuckDB (operators/sketch.py:
+hex_int_sql, the integer sibling of hex_frac_sql).
 ``m`` must divide 16**4 (slice values are uniform mod m only then).
 """
 
@@ -26,19 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["hex_int_sql", "bloom_build", "bloom_probe", "bloom_position_sql"]
+from diepy_spark.operators.sketch import hex_int_sql
 
-_HEX = "0123456789abcdef"
-
-
-def hex_int_sql(col: str, start: int, nibbles: int = 4) -> str:
-    """SQL expression for the integer value of ``nibbles`` hex chars of
-    `col` starting at 1-based `start`. Identical in Spark SQL and DuckDB."""
-    terms = [
-        f"(instr('{_HEX}', substr({col},{start + i},1))-1)*{16 ** (nibbles - 1 - i)}"
-        for i in range(nibbles)
-    ]
-    return "(" + " + ".join(terms) + ")"
+__all__ = ["bloom_build", "bloom_probe", "bloom_position_sql"]
 
 
 def bloom_position_sql(key_sql: str, seed: str, i: int, m: int) -> str:
@@ -49,7 +39,7 @@ def bloom_position_sql(key_sql: str, seed: str, i: int, m: int) -> str:
     if 16 ** 4 % m != 0:
         raise ValueError(f"m={m} must divide 65536 for uniform slices")
     md5 = f"md5(concat('{seed}:', CAST({key_sql} AS STRING)))"
-    return f"({hex_int_sql(md5, 1 + 4 * i)} % {m})"
+    return f"({hex_int_sql(md5, 4, 1 + 4 * i)} % {m})"
 
 
 def bloom_build(
@@ -101,7 +91,7 @@ def bloom_probe(
     out = probe.withColumn("__bloom_md5", md5c)
     for i in range(k):
         out = out.withColumn(
-            f"__bp{i}", F.expr(hex_int_sql("__bloom_md5", 1 + 4 * i)) % m
+            f"__bp{i}", F.expr(hex_int_sql("__bloom_md5", 4, 1 + 4 * i)) % m
         )
     cond = F.lit(True)
     for i in range(k):

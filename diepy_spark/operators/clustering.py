@@ -24,9 +24,23 @@ equivalence tests and the recursive-CTE oracle).
 Scale design: each round localCheckpoints its edge frame, keeping lineage
 flat (no exponential plan growth); the driver loop collects ONE scalar
 per round (an edge-set signature).
+
+The graph analytics built on the same edge frames (PageRank, Katz, HITS,
+label propagation, k-core, BFS, closeness, triangles, HyperBall, walks)
+follow the same determinism rule: integer arithmetic only, so every
+result is hash-comparable with its DuckDB oracle. Each iteration is
+written once and shared by its operators:
+- ``_edge_frame``: the distinct, self-loop-free (src, dst) frame;
+- ``_frontier_bfs``: the frontier-only BFS rounds of bfs_distances,
+  per_source_bfs and hyperball_exact_error;
+- ``_pagerank``: the round loop of pagerank and personalized_pagerank;
+- ``_orient`` + ``_close_wedges``: the degree-oriented triangle
+  enumeration of triangle_count and triangle_edge_support.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -330,20 +344,23 @@ def dedup_stats(
     )
 
 
+# Integer damping d = PR_DAMP_NUM / PR_DAMP_DEN of pagerank and
+# personalized_pagerank; the DuckDB oracles spell the same 85/100.
+PR_DAMP_NUM = 85
+PR_DAMP_DEN = 100
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 5,
     scale: int = 10**9,
-    damp_num: int = 85,
-    damp_den: int = 100,
-    materialize_static: bool = True,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """PageRank in PURE INTEGER arithmetic — ranks are bigints in units of
-    1/scale, damping is the exact rational damp_num/damp_den, and every
-    division is a floor division. Floating-point PageRank is
+    1/scale, damping is the exact rational PR_DAMP_NUM/PR_DAMP_DEN, and
+    every division is a floor division. Floating-point PageRank is
     aggregation-order dependent (partial sums of doubles merge in
     nondeterministic order), so its values can't be hash-compared across
     engines or even across runs; the integer form is bit-identical
@@ -352,17 +369,17 @@ def pagerank(
     r_{t+1}(v) = (1-d)*scale + d * Σ_{u→v} floor(r_t(u) / outdeg(u)),
     with the damping product also floor-divided. Nodes with no out-edges
     leak their mass (standard simplification — symmetrize the edge set if
-    every node must redistribute, as the declared query does).
+    every node must redistribute, as the declared query does). This is
+    personalized_pagerank with every node a seed: both run the one round
+    loop of _pagerank.
 
     Scale: per iteration ONE shuffle join of ranks against edges on the
     source key plus ONE aggregate on the destination key — the textbook
-    distributed PageRank shape. The edge/degree subplans are identical
-    across iterations, so classic planning reuses their exchanges; at
-    many more iterations than the default 5, localCheckpoint each round
-    to cut lineage (see connected_components).
+    distributed PageRank shape. The edge/degree/node frames are
+    referenced by every iteration, so each is lazily checkpointed once.
 
-    Overflow audit: Σ ranks ≈ N*scale; damp_num * inflow therefore needs
-    N*scale*damp_num < 2^63 — at scale=1e9 that allows ~10^8 nodes.
+    Overflow audit: Σ ranks ≈ N*scale; PR_DAMP_NUM * inflow therefore
+    needs N*scale*85 < 2^63 — at scale=1e9 that allows ~10^8 nodes.
 
     Measured (round 6, sf0.1): scoping spark.sql.shuffle.partitions to 8
     around build+execute cuts the 5-iteration run 6.2s -> 4.7s (task
@@ -374,14 +391,52 @@ def pagerank(
     number) at the session level, as connected_components does around
     its own per-round actions.
 
-    ``assume_distinct=True`` (the triangle_edge_support assume_canonical
-    precedent) skips the edge dedup exchange AND the edge lineage cut
-    when the caller guarantees the input is already a distinct,
-    materialized edge frame (the _supply_ps/_supply_sym session-memo
-    contract) — the per-iteration reads then stream the caller's
-    checkpointed blocks directly instead of materializing a second
-    copy. Output identical: distinct of a distinct set is the set.
-    """
+    ``assume_distinct`` as in _edge_frame (PageRank keeps self-loops, so
+    only the dedup + lineage cut is skipped)."""
+    return _pagerank(edges, None, src, dst, iterations, scale, assume_distinct)
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    seed_col: str = "node",
+    iterations: int = 5,
+    scale: int = 10**9,
+    assume_distinct: bool = False,
+) -> DataFrame:
+    """Personalized (topic-sensitive) PageRank — Haveliwala 2002: the
+    teleport mass returns to the SEED set instead of uniformly, so ranks
+    measure proximity to the seeds (the recommendation / related-items
+    primitive the global `pagerank` can't express). Same pure-integer
+    discipline and the same round loop as `pagerank`: seeds start with
+    `scale` mass and receive the integer teleport each round, non-seeds
+    start at 0 and receive only damped inflow; every division is a floor
+    division, so the run is bit-identical across engines and
+    partitionings.
+
+    r_{t+1}(v) = [v ∈ S]·floor(scale·(den−num)/den)
+                 + num·(Σ_{u→v} floor(r_t(u)/outdeg(u))) div den
+
+    ``assume_distinct`` as in `pagerank`."""
+    sd = seeds.select(F.col(seed_col).alias("node")).distinct()
+    return _pagerank(edges, sd, src, dst, iterations, scale, assume_distinct)
+
+
+def _pagerank(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    src: str,
+    dst: str,
+    iterations: int,
+    scale: int,
+    assume_distinct: bool,
+) -> DataFrame:
+    """The integer PageRank round loop of pagerank and
+    personalized_pagerank over a (node, s) static frame: s = 1 marks a
+    teleport target (every node when `seeds` is None, else the distinct
+    (node) frame `seeds`), s = 0 the rest. A node starts with s*scale."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not assume_distinct:
         e = e.distinct()
@@ -390,27 +445,32 @@ def pagerank(
         e.select("u").unionByName(e.select(F.col("v").alias("u"))).distinct()
         .select(F.col("u").alias("node"))
     )
-    if materialize_static:
-        # the edge/degree/node frames are referenced by EVERY iteration;
-        # lazy localCheckpoint computes each once at the first action
-        # instead of once per reference (measured ~30% at sf0.1, growing
-        # with iteration count). Blocks are GC-reclaimed when the result
-        # frame is dropped; pass False for a pure plan (e.g. to inspect
-        # the un-truncated lineage).
-        if not assume_distinct:
-            e = e.localCheckpoint(eager=False)
-        # Plain lazy checkpoints for the vertex-sized statics: capturing
-        # their 32-partition aggregate layout in the checkpoint metadata
-        # (keyed_checkpoint) pins every per-round join to 32 fixed tasks,
-        # which measured SLOWER than letting AQE coalesce the per-round
-        # exchanges (interleaved A/B: run1 9.7->3.8 s, run2 4.8->3.3 s at
-        # sf0.1) — the saved Exchange was cheaper than the task-count it
-        # forced. The |E|-sized edge memo keeps its keyed layout (see
-        # _supply_sym); vertex statics stay AQE-planned.
-        deg = deg.localCheckpoint(eager=False)
-        nodes = nodes.localCheckpoint(eager=False)
-    teleport = (scale * (damp_den - damp_num)) // damp_den
-    ranks = nodes.select("node", F.lit(int(scale)).cast("bigint").alias("r"))
+    if seeds is None:
+        nodes = nodes.withColumn("s", F.lit(1))
+    else:
+        sd = seeds.withColumn("is_seed", F.lit(1))
+        nodes = nodes.join(sd, "node", "left").select(
+            "node", F.coalesce("is_seed", F.lit(0)).alias("s")
+        )
+    # the edge/degree/node frames are referenced by EVERY iteration;
+    # lazy localCheckpoint computes each once at the first action
+    # instead of once per reference (measured ~30% at sf0.1, growing
+    # with iteration count). Plain checkpoints for the vertex-sized
+    # statics: capturing their 32-partition aggregate layout
+    # (keyed_checkpoint) pins every per-round join to 32 fixed tasks,
+    # which measured SLOWER than letting AQE coalesce the per-round
+    # exchanges (interleaved A/B: run1 9.7->3.8 s, run2 4.8->3.3 s at
+    # sf0.1) — the saved Exchange was cheaper than the task-count it
+    # forced. The |E|-sized edge memo keeps its keyed layout (see
+    # _supply_sym).
+    if not assume_distinct:
+        e = e.localCheckpoint(eager=False)
+    deg = deg.localCheckpoint(eager=False)
+    nodes = nodes.localCheckpoint(eager=False)
+    teleport = (scale * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
+    ranks = nodes.select(
+        "node", (F.col("s").cast("bigint") * int(scale)).alias("r")
+    )
     for _ in range(iterations):
         contrib = (
             e.join(ranks.select(F.col("node").alias("u"), "r"), "u")
@@ -421,8 +481,8 @@ def pagerank(
         ranks = nodes.join(inflow, "node", "left").select(
             "node",
             F.expr(
-                f"CAST({teleport} AS BIGINT) + "
-                f"({damp_num} * coalesce(inflow, CAST(0 AS BIGINT))) div {damp_den}"
+                f"CAST(s AS BIGINT) * {teleport} + ({PR_DAMP_NUM}"
+                f" * coalesce(inflow, CAST(0 AS BIGINT))) div {PR_DAMP_DEN}"
             ).alias("r"),
         )
     return ranks
@@ -446,69 +506,80 @@ def triangle_count(
     sum-over-nodes deg² candidates — a single celebrity node with 10M
     neighbors yields 10^14 wedges (the "last reducer" that never
     finishes). Orienting every edge from the (degree, id)-lower endpoint
-    to the higher one caps every out-degree at O(sqrt(|E|)), so the wedge
-    join is bounded by |E|^1.5 TOTAL and no reducer is hot, while still
-    counting each triangle exactly once (its lowest-ordered vertex emits
-    the wedge). Two shuffles build degrees + orientation; the triangle
-    step is one self-join on the wedge midpoint plus one semi-join back
-    onto the oriented edge set — all equi-joins AQE can re-plan.
+    to the higher one (_orient) caps every out-degree at O(sqrt(|E|)),
+    so the wedge join (_close_wedges) is bounded by |E|^1.5 TOTAL and no
+    reducer is hot, while still counting each triangle exactly once (its
+    lowest-ordered vertex emits the wedge). Two shuffles build degrees +
+    orientation; the triangle step is one self-join on the wedge
+    midpoint plus one semi-join back onto the oriented edge set — all
+    equi-joins AQE can re-plan.
 
     Determinism: the (degree, id) total order is data-defined, so output
     is independent of partitioning and engine (oracle-checkable).
     """
-    a, b = F.col(src), F.col(dst)
-    canon = (
-        edges.where(a != b)
-        .select(
-            F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-        )
-        .distinct()
-    )
-    deg = (
-        canon.select(F.col("u").alias("node"))
-        .unionAll(canon.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    # orient: s -> t iff (deg(s), s) < (deg(t), t)
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    lower = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        canon.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(lower, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(lower, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-        # referenced three times below (both wedge legs + the closing
-        # edge); without a lineage cut Catalyst inlines the canon+degree
-        # subplan into every reference (3x scans/shuffles of the raw edge
-        # list — 45 scans at one audit). Lazy local checkpoint = compute
-        # once, same values (pagerank's static-frame pattern). NOT keyed
-        # on the midpoint here: unlike the k-truss enumeration (whose
-        # keyed layout is re-read every peel round and measured faster),
-        # triangle_count consumes the wedge join once and the keyed
-        # repartition measured ~1.3 s slower than AQE-planned exchanges
-        # in an interleaved A/B at sf0.1.
-        .localCheckpoint(eager=False)
-    )
-    # wedges from each low vertex: s -> t1, s -> t2 with (t1, t2) oriented
-    e1 = oriented.select(F.col("s").alias("w_s"), F.col("t").alias("w_a"))
-    e2 = oriented.select(F.col("s").alias("w_s"), F.col("t").alias("w_b"))
-    wedges = e1.join(e2, "w_s").where(F.col("w_a") != F.col("w_b"))
-    # the closing edge w_a -> w_b exists in oriented form exactly once for
-    # the correctly-ordered one of the two (w_a, w_b) permutations
-    closing = oriented.select(F.col("s").alias("w_a"), F.col("t").alias("w_b"))
-    tris = wedges.join(closing, ["w_a", "w_b"])
+    # referenced three times by _close_wedges (both wedge legs + the
+    # closing edge); without a lineage cut Catalyst inlines the
+    # canon+degree subplan into every reference (3x scans/shuffles of the
+    # raw edge list — 45 scans at one audit). Lazy local checkpoint =
+    # compute once, same values (pagerank's static-frame pattern). NOT
+    # keyed on the midpoint here: unlike the k-truss enumeration (whose
+    # keyed layout is re-read every peel round and measured faster),
+    # triangle_count consumes the wedge join once and the keyed
+    # repartition measured ~1.3 s slower than AQE-planned exchanges in an
+    # interleaved A/B at sf0.1.
+    oriented = _orient(_canon_edges(edges, src, dst)).localCheckpoint(eager=False)
+    tris = _close_wedges(oriented)
     # one pass over tris: each triangle contributes its three vertices
     return (
         tris.select(F.explode(F.array("w_s", "w_a", "w_b")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("tri"))
     )
+
+
+def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(u, v): the distinct undirected edges of `edges` as canonical
+    u < v pairs, self-loops dropped."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.where(a != b)
+        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .distinct()
+    )
+
+
+def _orient(canon: DataFrame) -> DataFrame:
+    """(s, t): every canonical (u, v) edge directed from its
+    (degree, id)-lower endpoint to the higher one, so every out-degree is
+    O(sqrt(|E|)). The caller checkpoints the result: _close_wedges reads
+    it three times."""
+    deg = (
+        canon.select(F.col("u").alias("node"))
+        .unionAll(canon.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
+    lower = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    return canon.join(du, "u").join(dv, "v").select(
+        F.when(lower, F.col("u")).otherwise(F.col("v")).alias("s"),
+        F.when(lower, F.col("v")).otherwise(F.col("u")).alias("t"),
+    )
+
+
+def _close_wedges(oriented: DataFrame) -> DataFrame:
+    """(w_s, w_a, w_b): every triangle of the oriented edge frame exactly
+    once — the wedges s -> t1, s -> t2 from each low vertex, kept when
+    the closing edge w_a -> w_b exists (in oriented form it does for
+    exactly one of the two (w_a, w_b) permutations)."""
+    e1 = oriented.select(F.col("s").alias("w_s"), F.col("t").alias("w_a"))
+    e2 = oriented.select(F.col("s").alias("w_s"), F.col("t").alias("w_b"))
+    wedges = e1.join(e2, "w_s").where(F.col("w_a") != F.col("w_b"))
+    closing = oriented.select(F.col("s").alias("w_a"), F.col("t").alias("w_b"))
+    return wedges.join(closing, ["w_a", "w_b"])
 
 
 def kmeans_int(
@@ -683,6 +754,30 @@ def _train_loop(q: DataFrame, id_col: str, k: int, iterations: int, trace: bool 
     return (cents, snaps) if trace else cents
 
 
+def _edge_frame(
+    edges: DataFrame, src: str, dst: str, assume_distinct: bool
+) -> DataFrame:
+    """(src, dst): the distinct, self-loop-free edge frame every iterative
+    graph operator here starts from, lazily checkpointed once (the rounds
+    reference it, and the cut keeps their lineage flat).
+
+    ``assume_distinct=True`` (the operators' option of that name, after
+    triangle_edge_support's assume_canonical) skips the dedup exchange
+    AND the lineage cut when the caller guarantees the input is already
+    a distinct, self-loop-free, materialized edge frame (the
+    _supply_ps/_supply_sym session-memo contract): the rounds then
+    stream the caller's checkpointed blocks instead of materializing a
+    second copy. The self-loop filter stays, a free narrow filter over
+    those blocks. Output identical: distinct of a distinct set is the
+    set."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
+        F.col("src") != F.col("dst")
+    )
+    if not assume_distinct:
+        e = e.distinct().localCheckpoint(eager=False)
+    return e
+
+
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
@@ -711,11 +806,7 @@ def label_propagation(
     frame lazily checkpoints once; the evolving label frame checkpoints
     per round to cut lineage growth (the connected_components pattern).
 
-    Output: (node, label). ``assume_distinct``: the pagerank contract —
-    skip the edge dedup + lineage cut when the input is an
-    already-distinct, self-loop-free materialized session frame (the
-    narrow where() below stays: it is a free filter over the caller's
-    checkpointed blocks).
+    Output: (node, label). ``assume_distinct``: see _edge_frame.
 
     ``assume_symmetric`` (r13): when the caller guarantees the edge set
     is ITS OWN TRANSPOSE (every (a, b) has its (b, a) — the _supply_sym
@@ -729,11 +820,7 @@ def label_propagation(
     (|V| rows) moves per round. Vote counts, and so the argmax and every
     downstream hash, are unchanged.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
-        F.col("src") != F.col("dst")
-    )
-    if not assume_distinct:
-        e = e.distinct().localCheckpoint(eager=False)
+    e = _edge_frame(edges, src, dst, assume_distinct)
     labels = (
         e.select(F.col("src").alias("node")).distinct()
         .select("node", F.col("node").alias("label"))
@@ -826,14 +913,8 @@ def kcore(
     DATA-DERIVED threshold (e.g. median degree + 1 via
     robust.freq_median) — the frame broadcasts into each round's filter,
     keeping the whole operator lazy and oracle-mirrorable.
-    ``assume_distinct``: the pagerank contract — skip the edge dedup +
-    lineage cut when the input is an already-distinct, self-loop-free
-    materialized session frame."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
-        F.col("src") != F.col("dst")
-    )
-    if not assume_distinct:
-        e = e.distinct().localCheckpoint(eager=False)
+    ``assume_distinct``: see _edge_frame."""
+    e = _edge_frame(edges, src, dst, assume_distinct)
     kf = k.localCheckpoint(eager=False) if isinstance(k, DataFrame) else None
     for _ in range(iterations):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -872,57 +953,54 @@ def bfs_distances(
 
     Pure integer arithmetic (hop counts), so the result is bit-identical
     cross-engine and the oracle unrolls the same rounds as chained CTEs
-    (the pagerank pattern).
-
-    Scale shape (r13 frontier-only re-plan, the systolic-delta BFS
-    shape proven on hyperball_exact_error): per round only the NEWLY
-    reached nodes travel the edges — a node first reached in round t
-    has min hop distance t, so the settled set never re-joins and the
-    per-round join volume is frontier x degree, not reached x degree.
-    Output identical to the naive re-join-everything form. The static
-    edge frame lazily checkpoints once and frontier/dist per round
-    (flat lineage). Feed SYMMETRIZED edges for undirected semantics.
-    Output: (node, d) for the reached set only; d <= iterations.
-    ``assume_distinct``: the pagerank contract — skip the edge dedup +
-    lineage cut when the input is an already-distinct, self-loop-free
-    materialized session frame."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
-        F.col("src") != F.col("dst")
-    )
-    if not assume_distinct:
-        e = e.distinct().localCheckpoint(eager=False)
-    seed_col = seeds.columns[0]
+    (the pagerank pattern). The rounds are _frontier_bfs with no key
+    beside the node, so every seed shares one frontier. Feed SYMMETRIZED
+    edges for undirected semantics. Output: (node, d) for the reached
+    set only; d <= iterations. ``assume_distinct``: see _edge_frame."""
+    e = _edge_frame(edges, src, dst, assume_distinct)
     frontier = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("d", F.lit(0))
-        .localCheckpoint(eager=False)
+        _seed_nodes(seeds).withColumn("d", F.lit(0)).localCheckpoint(eager=False)
     )
-    # r14: the settled set is BY CONSTRUCTION the disjoint union of the
-    # per-round frontier checkpoints, so the per-round `dist` checkpoint
-    # (one more planning + materialization pass per round for rows that
-    # all sit in frontier blocks already) is dropped; the union of
-    # checkpointed frames keeps lineage flat on its own.
+    return _frontier_bfs(e, frontier, [], iterations)
+
+
+def _seed_nodes(seeds: DataFrame) -> DataFrame:
+    """(node): the distinct values of the first column of `seeds`."""
+    return seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+
+
+def _frontier_bfs(
+    e: DataFrame, frontier: DataFrame, keys: list[str], iterations: int
+) -> DataFrame:
+    """The frontier-only BFS rounds of bfs_distances, per_source_bfs and
+    hyperball_exact_error: (*keys, node, d) for every (keys, node) pair
+    within `iterations` hops of the round-0 `frontier` (*keys, node, d=0),
+    over the (src, dst) edge frame `e`. `keys` (none, or the source id)
+    keep sources apart: a node reached from two sources is two rows.
+
+    Only NEWLY reached pairs travel the edges each round — a pair first
+    reached in round t has min hop distance t, so the settled set never
+    re-joins and the per-round join volume is frontier x degree, not
+    reached x degree (the systolic-delta shape of the HyperBall register
+    loop). Output identical to the naive re-join-everything form. The
+    settled set is BY CONSTRUCTION the disjoint union of the per-round
+    frontier checkpoints, so the union of checkpointed frames keeps
+    lineage flat without a per-round checkpoint of its own."""
     fronts = [frontier]
     for t in range(1, iterations + 1):
-        dist = fronts[0]
-        for f in fronts[1:]:
-            dist = dist.unionByName(f)
+        settled = reduce(DataFrame.unionByName, fronts)
         cand = (
-            e.join(frontier.select(F.col("node").alias("src")), "src")
-            .select(F.col("dst").alias("node"))
+            e.join(frontier.select(*keys, F.col("node").alias("src")), "src")
+            .select(*keys, F.col("dst").alias("node"))
             .distinct()
         )
         frontier = (
-            cand.join(dist, "node", "left_anti")
+            cand.join(settled, [*keys, "node"], "left_anti")
             .withColumn("d", F.lit(t))
             .localCheckpoint(eager=False)
         )
         fronts.append(frontier)
-    dist = fronts[0]
-    for f in fronts[1:]:
-        dist = dist.unionByName(f)
-    return dist
+    return reduce(DataFrame.unionByName, fronts)
 
 
 def rw_pick_sql(
@@ -987,9 +1065,8 @@ def random_walks(
 
     Output: (t, walk, node) for t = 0..steps — the full trajectory set,
     one frame; aggregate or reshape downstream. ``assume_distinct``:
-    the pagerank contract — skip the edge dedup exchange when the input
-    is an already-distinct, self-loop-free materialized session frame.
-    ``adj``: a prebuilt adjacency_arrays frame over the SAME edge set
+    see _edge_frame (here only the dedup is skipped: adjacency_arrays
+    checkpoints). ``adj``: a prebuilt adjacency_arrays frame over the SAME edge set
     (the session CSR artifact), skipping the build."""
     if adj is None:
         e = edges.select(
@@ -1056,9 +1133,7 @@ def node2vec_walks(
     Output: (t, walk, node, cls) for t = 0..steps; cls in
     {'start','uniform','back','common','forward'} records which bias
     class the arriving step used (the p/q mix diagnostic).
-    ``assume_distinct``: the pagerank contract — skip the edge dedup
-    exchange when the input is an already-distinct, self-loop-free
-    materialized session frame. ``adj``: a prebuilt adjacency_arrays
+    ``assume_distinct``: as in `random_walks`. ``adj``: a prebuilt adjacency_arrays
     frame over the SAME edge set (the session CSR artifact).
 
     r14 re-plan (guide §2.3 "shuffle fewer bytes"): the old shape
@@ -1233,80 +1308,6 @@ def n2v_draw_sql(
     return f"CAST({hex_int_sql(h)} AS BIGINT)"
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "node",
-    iterations: int = 5,
-    scale: int = 10**9,
-    damp_num: int = 85,
-    damp_den: int = 100,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """Personalized (topic-sensitive) PageRank — Haveliwala 2002: the
-    teleport mass returns to the SEED set instead of uniformly, so ranks
-    measure proximity to the seeds (the recommendation / related-items
-    primitive the global `pagerank` can't express). Same pure-integer
-    discipline as `pagerank`: seeds start with `scale` mass and receive
-    the integer teleport each round, non-seeds start at 0 and receive
-    only damped inflow; every division is a floor division, so the run
-    is bit-identical across engines and partitionings.
-
-    r_{t+1}(v) = [v ∈ S]·floor(scale·(den−num)/den)
-                 + num·(Σ_{u→v} floor(r_t(u)/outdeg(u))) div den
-
-    Scale: identical per-iteration shape to `pagerank` (one edge join +
-    one destination aggregate); the static edge/degree/node frames are
-    lazily checkpointed once for all iterations. ``assume_distinct``:
-    the pagerank contract — skip the edge dedup + lineage cut when the
-    input is an already-distinct materialized session frame."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not assume_distinct:
-        e = e.distinct()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (
-        e.select("u")
-        .unionByName(e.select(F.col("v").alias("u")))
-        .distinct()
-        .select(F.col("u").alias("node"))
-    )
-    sd = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("is_seed", F.lit(1))
-    )
-    nodes = nodes.join(sd, "node", "left").select(
-        "node", F.coalesce("is_seed", F.lit(0)).alias("s")
-    ).localCheckpoint(eager=False)
-    if not assume_distinct:
-        e = e.localCheckpoint(eager=False)
-    # plain checkpoints for vertex statics — see pagerank's comment (the
-    # keyed layout pinned per-round joins to 32 fixed tasks, measured
-    # slower than AQE-coalesced exchanges at sf0.1)
-    deg = deg.localCheckpoint(eager=False)
-    teleport = (scale * (damp_den - damp_num)) // damp_den
-    ranks = nodes.select(
-        "node", (F.col("s").cast("bigint") * int(scale)).alias("r")
-    )
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.select(F.col("node").alias("u"), "r"), "u")
-            .join(deg, "u")
-            .select(F.col("v").alias("node"), F.expr("r div deg").alias("c"))
-        )
-        inflow = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
-        ranks = nodes.join(inflow, "node", "left").select(
-            "node",
-            F.expr(
-                f"CAST(s AS BIGINT) * {teleport} + "
-                f"({damp_num} * coalesce(inflow, CAST(0 AS BIGINT))) div {damp_den}"
-            ).alias("r"),
-        )
-    return ranks
-
-
 def _hb_register_tiers(e: DataFrame, iterations: int, m: int):
     """Shared HyperBall register machinery (used by hyperball and
     hyperball_exact_error): given the prepared distinct, self-loop-free
@@ -1359,28 +1360,6 @@ def _hb_register_tiers(e: DataFrame, iterations: int, m: int):
         yield t, cur
 
 
-def _hb_node_ball(regs: DataFrame, m: int, alpha: float) -> DataFrame:
-    """Per-node HLL fold shared by hyperball and hyperball_exact_error:
-    (node, ball) where ball is the 4-decimal-rounded DECIMAL(18,4) HLL
-    estimate (with Flajolet linear-counting small-range correction) of
-    the node's current register set — exact, order-independent summands
-    for the downstream DECIMAL aggregation."""
-    agg = regs.groupBy("node").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("mr"))).alias("s"),
-        F.count(F.lit(1)).alias("nb"),
-    )
-    raw = F.lit(alpha * m * m) / (F.col("s") + (F.lit(m) - F.col("nb")))
-    v = F.lit(m) - F.col("nb")
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (v > 0),
-        F.lit(float(m)) * F.log(F.lit(m) / v),
-    ).otherwise(raw)
-    return agg.select(
-        "node",
-        F.round(est, 4).cast("decimal(18,4)").alias("ball"),
-    )
-
-
 def _hb_tier_balls(
     tier_regs: list[tuple[int, DataFrame]],
     m: int,
@@ -1388,7 +1367,7 @@ def _hb_tier_balls(
     sd: DataFrame | None = None,
 ) -> DataFrame:
     """(t, ball) per node per round, folded in ONE aggregation pass
-    (r14, guide §2.4): the old shape ran _hb_node_ball's groupBy once
+    (r14, guide §2.4): the old shape ran a per-node groupBy once
     PER TIER — iterations+1 separate passes over register state that is
     nodes x m rows each — then unioned the results. Tagging each tier
     with its round literal and folding by (t, node) is one pass over
@@ -1434,14 +1413,8 @@ def hb_prepare(
     persisted-index discipline) run the propagation ONCE and fold it
     from as many consumers as they like — narratively the sketch index
     a production pipeline writes beside the graph and joins
-    everywhere. ``assume_distinct``: the pagerank contract — skip the
-    edge dedup + lineage cut when the input is an already-distinct,
-    self-loop-free materialized session frame."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
-        F.col("src") != F.col("dst")
-    )
-    if not assume_distinct:
-        e = e.distinct().localCheckpoint(eager=False)
+    everywhere. ``assume_distinct``: see _edge_frame."""
+    e = _edge_frame(edges, src, dst, assume_distinct)
     return e, list(_hb_register_tiers(e, iterations, m))
 
 
@@ -1555,12 +1528,7 @@ def hyperball_exact_error(
     if prepared is None:
         prepared = hb_prepare(edges, iterations, src, dst, m)
     e, tier_regs = prepared
-    seed_col = seeds.columns[0]
-    sd = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sd = _seed_nodes(seeds).localCheckpoint(eager=False)
     alpha = hll_alpha(m)
 
     est_all = _hb_tier_balls(tier_regs, m, alpha, sd=sd)
@@ -1571,38 +1539,12 @@ def hyperball_exact_error(
 
     # Exact per-seed balls: BFS keyed by (seed, node) so each seed's
     # ball stays separate (bfs_distances folds seeds together via
-    # min-distance; this instrument must not). Frontier-only propagation
-    # — the BFS analogue of the register loop's systolic delta: a pair
-    # first reached in round t has min distance t, so only NEWLY reached
-    # pairs need to travel the edges next round; the reached set itself
-    # never re-joins. Identical output to the naive re-join-everything
-    # form, at frontier x degree join volume per round instead of
-    # reached x degree.
+    # min-distance; this instrument must not). The round-0 frame is a
+    # projection of the already-checkpointed sd.
     frontier = sd.select(
         F.col("node").alias("seed"), "node", F.lit(0).alias("d")
     )
-    # r14: settled set = disjoint union of the frontier checkpoints; the
-    # per-round `dist` checkpoint is redundant (see bfs_distances). The
-    # round-0 frame is a projection of the already-checkpointed sd.
-    fronts = [frontier]
-    for t in range(1, iterations + 1):
-        dist = fronts[0]
-        for f in fronts[1:]:
-            dist = dist.unionByName(f)
-        cand = (
-            e.join(frontier.select("seed", F.col("node").alias("src")), "src")
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = (
-            cand.join(dist, ["seed", "node"], "left_anti")
-            .withColumn("d", F.lit(t))
-            .localCheckpoint(eager=False)
-        )
-        fronts.append(frontier)
-    dist = fronts[0]
-    for f in fronts[1:]:
-        dist = dist.unionByName(f)
+    dist = _frontier_bfs(e, frontier, ["seed"], iterations)
     exact = (
         dist.select(F.explode(F.sequence(F.col("d"), F.lit(iterations))).alias("t"))
         .groupBy("t")
@@ -1652,9 +1594,7 @@ def hits(
     allows max degree ~9e6.
 
     Output: (node, hub, auth) for every node, scores in units of
-    1/scale with max = scale. ``assume_distinct``: the pagerank
-    contract — skip the edge dedup + lineage cut when the input is an
-    already-distinct materialized session frame."""
+    1/scale with max = scale. ``assume_distinct`` as in `pagerank`."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not assume_distinct:
         e = e.distinct().localCheckpoint(eager=False)
@@ -1721,48 +1661,18 @@ def per_source_bfs(
     frontier and loses per-source attribution). Pure integer hop
     counts; the oracle unrolls the same rounds as chained CTEs.
 
-    Scale shape (r13 frontier-only re-plan, as in bfs_distances /
-    hyperball_exact_error): only NEWLY reached (s, node) pairs travel
-    the edges each round — a pair first reached in round t has min
-    distance t, so the settled set never re-joins and per-round join
-    volume is frontier x degree, not reached x degree. Output identical
-    to the naive min-aggregate form. State is bounded by |seeds| x
-    reached nodes — the seed set is the priced lever, exactly as in
-    Brandes-style sampled centrality. Feed SYMMETRIZED edges for
-    undirected semantics. ``assume_distinct``: the pagerank contract —
-    skip the edge dedup + lineage cut when the input is an
-    already-distinct, self-loop-free materialized session frame."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
-        F.col("src") != F.col("dst")
+    The rounds are _frontier_bfs keyed by the source s. A seed listed
+    twice is one source. State is bounded by |seeds| x reached nodes —
+    the seed set is the priced lever, exactly as in Brandes-style
+    sampled centrality. Feed SYMMETRIZED edges for undirected
+    semantics. ``assume_distinct``: see _edge_frame."""
+    e = _edge_frame(edges, src, dst, assume_distinct)
+    frontier = (
+        _seed_nodes(seeds)
+        .select(F.col("node").alias("s"), "node", F.lit(0).alias("d"))
+        .localCheckpoint(eager=False)
     )
-    if not assume_distinct:
-        e = e.distinct().localCheckpoint(eager=False)
-    seed_col = seeds.columns[0]
-    frontier = seeds.selectExpr(
-        f"{seed_col} AS s", f"{seed_col} AS node", "CAST(0 AS INT) AS d"
-    ).localCheckpoint(eager=False)
-    # r14: settled set = disjoint union of the frontier checkpoints; the
-    # per-round `dist` checkpoint is redundant (see bfs_distances).
-    fronts = [frontier]
-    for t in range(1, iterations + 1):
-        dist = fronts[0]
-        for f in fronts[1:]:
-            dist = dist.unionByName(f)
-        cand = (
-            e.join(frontier.select("s", F.col("node").alias("src")), "src")
-            .select("s", F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = (
-            cand.join(dist, ["s", "node"], "left_anti")
-            .withColumn("d", F.lit(t).cast("int"))
-            .localCheckpoint(eager=False)
-        )
-        fronts.append(frontier)
-    dist = fronts[0]
-    for f in fronts[1:]:
-        dist = dist.unionByName(f)
-    return dist
+    return _frontier_bfs(e, frontier, ["s"], iterations)
 
 
 def closeness_centrality(
@@ -1798,19 +1708,17 @@ def katz_centrality(
     dst: str = "dst",
     iterations: int = 4,
     scale: int = 10**9,
-    alpha_num: int = 1,
     alpha_den: int = 1024,
-    materialize_static: bool = True,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Katz centrality in PURE INTEGER arithmetic (Katz 1953): x(v)
     counts walks of every length into v, geometrically damped —
-    x_{t+1}(v) = beta*scale + (alpha_num * Σ_{u→v} x_t(u)) // alpha_den
-    with beta = 1. The degree-normalization-free sibling of
-    ``pagerank``: a node adjacent to one hub scores high even with a
-    single edge (PageRank splits the hub's mass across its out-degree;
-    Katz does not), which is why Katz is the standard influence score
-    on follower/citation graphs.
+    x_{t+1}(v) = beta*scale + (Σ_{u→v} x_t(u)) // alpha_den with
+    alpha = 1/alpha_den and beta = 1. The degree-normalization-free
+    sibling of ``pagerank``: a node adjacent to one hub scores high even
+    with a single edge (PageRank splits the hub's mass across its
+    out-degree; Katz does not), which is why Katz is the standard
+    influence score on follower/citation graphs.
 
     Same determinism contract as ``pagerank``: bigint ranks in units of
     1/scale, floor divisions, bit-identical across engines; the oracle
@@ -1823,7 +1731,8 @@ def katz_centrality(
 
     Scale: per iteration ONE shuffle join of scores against edges on
     the source key plus ONE aggregate on the destination key — the
-    pagerank shape without the degree dimension."""
+    pagerank shape without the degree dimension; the edge and node
+    frames checkpoint once. ``assume_distinct`` as in `pagerank`."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not assume_distinct:
         e = e.distinct()
@@ -1831,12 +1740,11 @@ def katz_centrality(
         e.select("u").unionByName(e.select(F.col("v").alias("u"))).distinct()
         .select(F.col("u").alias("node"))
     )
-    if materialize_static:
-        if not assume_distinct:
-            e = e.localCheckpoint(eager=False)
-        # plain checkpoint — the keyed layout measured slower (see
-        # pagerank's static-frame comment)
-        nodes = nodes.localCheckpoint(eager=False)
+    if not assume_distinct:
+        e = e.localCheckpoint(eager=False)
+    # plain checkpoint — the keyed layout measured slower (see
+    # _pagerank's static-frame comment)
+    nodes = nodes.localCheckpoint(eager=False)
     x = nodes.select("node", F.lit(int(scale)).cast("bigint").alias("x"))
     for _ in range(iterations):
         inflow = (
@@ -1848,8 +1756,7 @@ def katz_centrality(
             "node",
             F.expr(
                 f"CAST({int(scale)} AS BIGINT) + "
-                f"({alpha_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
-                f" div {alpha_den}"
+                f"coalesce(inflow, CAST(0 AS BIGINT)) div {alpha_den}"
             ).alias("x"),
         )
     return x
@@ -1874,15 +1781,10 @@ def triangle_edge_support(
     aggregate over |E|) when the caller guarantees the input is already
     distinct canonical (u < v) pairs — the k-truss loop re-derives
     support from an edge set that IS its own previous canon output."""
-    a, b = F.col(src), F.col(dst)
     if assume_canonical:
-        canon = edges.select(a.alias("u"), b.alias("v"))
+        canon = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     else:
-        canon = (
-            edges.where(a != b)
-            .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-            .distinct()
-        )
+        canon = _canon_edges(edges, src, dst)
     tri = _triangle_list_canon(canon)
     return triangle_incidence(tri).groupBy("u", "v").agg(
         F.count(F.lit(1)).cast("bigint").alias("sup")
@@ -1898,35 +1800,10 @@ def _triangle_list_canon(canon: DataFrame) -> DataFrame:
     shape (Wang & Cheng, VLDB'12): peeling rounds only REMOVE edges, so
     every later round's support is a re-validation of this list — three
     node-id columns per triangle instead of a fresh |E|^1.5 pass."""
-    deg = (
-        canon.select(F.col("u").alias("node"))
-        .unionAll(canon.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    lower = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        canon.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(lower, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(lower, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-    )
-    # 3 references below; keyed on the wedge midpoint s (r13) so the
-    # wedge self-join reads both legs exchange-free — see triangle_count
-    oriented = keyed_checkpoint(oriented, "s")
-    e1 = oriented.select(F.col("s").alias("w_s"), F.col("t").alias("w_a"))
-    e2 = oriented.select(F.col("s").alias("w_s"), F.col("t").alias("w_b"))
-    wedges = e1.join(e2, "w_s").where(F.col("w_a") != F.col("w_b"))
-    closing = oriented.select(
-        F.col("s").alias("w_a"), F.col("t").alias("w_b")
-    )
-    tris = wedges.join(closing, ["w_a", "w_b"])
+    # 3 references in _close_wedges; keyed on the wedge midpoint s (r13)
+    # so the wedge self-join reads both legs exchange-free — see
+    # triangle_count for why that one is not keyed
+    tris = _close_wedges(keyed_checkpoint(_orient(canon), "s"))
     srt = F.array_sort(F.array("w_s", "w_a", "w_b"))
     return tris.select(
         F.element_at(srt, 1).alias("x"),

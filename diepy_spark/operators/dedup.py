@@ -1015,12 +1015,12 @@ def cdc_chunks(
     with operators/bloom.py — bit-identical in DuckDB, so the whole
     operator is oracle-checkable.
     """
-    from diepy_spark.operators.bloom import hex_int_sql
+    from diepy_spark.operators.sketch import hex_int_sql
 
     _ident(id_col)
     toks = tokens_expr(text_col)
     grams = _grams_over("__toks", k)
-    flag = f"IF(({hex_int_sql('md5(g)', 1)} % {divisor}) = 0, 1, 0)"
+    flag = f"IF(({hex_int_sql('md5(g)', 4)} % {divisor}) = 0, 1, 0)"
     base = (
         df.where(F.expr(f"size({toks}) >= 1"))
         .repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))

@@ -53,17 +53,19 @@ def hex_frac_sql(col: str, nibbles: int = 8) -> str:
     return " + ".join(terms)
 
 
-def hex_int_sql(col: str, nibbles: int = 8) -> str:
-    """SQL expression mapping the first `nibbles` hex chars of `col` to an
-    integer in [0, 16^nibbles) — the integer sibling of hex_frac_sql for
-    deterministic modular choices (random-walk steps, bucket picks).
-    String instr arithmetic only, so bit-identical in Spark SQL and
-    DuckDB; 8 nibbles stays under 2^32 (exact in BIGINT everywhere)."""
-    terms = [
-        f"(instr('{_HEX}', substr({col},{i},1))-1)"
-        f"*CAST({16 ** (nibbles - i)} AS BIGINT)"
-        for i in range(1, nibbles + 1)
-    ]
+def hex_int_sql(col: str, nibbles: int = 8, start: int = 1) -> str:
+    """SQL expression for the integer value of the `nibbles` hex chars of
+    `col` from 1-based `start` on, in [0, 16^nibbles) — the integer
+    sibling of hex_frac_sql for deterministic modular choices (random-walk
+    steps, bucket picks, bloom/CMS slice positions, digests). String
+    instr arithmetic only, so bit-identical in Spark SQL and DuckDB. Up to
+    4 nibbles the expression is INT arithmetic; longer slices multiply by
+    BIGINT literals (15 nibbles stay under 2^60, exact in BIGINT)."""
+    terms = []
+    for i in range(nibbles):
+        w = 16 ** (nibbles - 1 - i)
+        w_sql = str(w) if nibbles <= 4 else f"CAST({w} AS BIGINT)"
+        terms.append(f"(instr('{_HEX}', substr({col},{start + i},1))-1)*{w_sql}")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -115,10 +117,7 @@ def hll_bucket_sql(col: str, m: int = HLL_M) -> str:
     Valid and bit-identical in Spark SQL and DuckDB."""
     if 256 % m:
         raise ValueError(f"hll_bucket_sql: m={m} must divide 256")
-    two = (
-        f"((instr('{_HEX}', substr({col},1,1))-1)*16"
-        f" + (instr('{_HEX}', substr({col},2,1))-1))"
-    )
+    two = hex_int_sql(col, 2)
     return two if m == HLL_M else f"({two} % {m})"
 
 
@@ -245,11 +244,7 @@ def cms_position_sql(key_sql: str, seed: str, row: int, w: int) -> str:
     if 16 ** 4 % w != 0:
         raise ValueError(f"w={w} must divide 65536 for uniform slices")
     md5 = f"md5(concat('{seed}:', CAST({key_sql} AS STRING)))"
-    terms = [
-        f"(instr('{_HEX}', substr({md5},{1 + 4 * row + i},1))-1)*{16 ** (3 - i)}"
-        for i in range(4)
-    ]
-    return "((" + " + ".join(terms) + f") % {w})"
+    return f"({hex_int_sql(md5, 4, 1 + 4 * row)} % {w})"
 
 
 def cms_cells(

@@ -19,7 +19,7 @@ from diepy_spark.operators import similarity as S
 from diepy_spark.operators import text as T
 from diepy_spark.operators import multimodal as M
 from diepy_spark.operators.text import LANG_PROFILES
-from diepy_spark.session import session_cached, tune
+from diepy_spark.session import session_cached
 from diepy_spark.sources.registry import load_table
 
 # tuning constants shared by Spark plans and oracle SQL
@@ -42,12 +42,10 @@ NEAR_DUP_NUM_PLANES = 8
 
 
 def _docs(spark, sf_dir):
-    tune(spark)
     return load_table(spark, sf_dir, "documents")
 
 
 def _vecs(spark, sf_dir):
-    tune(spark)
     return load_table(spark, sf_dir, "embeddings")
 
 
@@ -380,7 +378,6 @@ def x1_bloom_dedup(spark, sf_dir):
     same md5-slice bit positions and the exact truth."""
     from diepy_spark.operators.bloom import bloom_build, bloom_probe
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     idx = d.where(F.col("doc_id") % INC_DEDUP_MOD != 0).select(
         F.md5("text").alias("fp")
@@ -440,7 +437,6 @@ def x5_ngram_novelty(spark, sf_dir):
     single-shuffle currency as span dedup, no pair joins anywhere."""
     from diepy_spark.operators.dedup import shingle_frame
 
-    tune(spark)
     g = shingle_frame(_docs(spark, sf_dir)).select(
         "d", F.explode("sh_arr").alias("s")
     )
@@ -489,7 +485,6 @@ def x12_seasonality(spark, sf_dir):
     identity chi2 = sum((7c - n)^2) / (7n) keeps the sum an exact
     integer, so no order-dependent double accumulation exists to
     drift."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.expr("dayofweek(ts) - 1").alias("dow")
     )
@@ -894,7 +889,6 @@ def x9_merge_upsert(spark, sf_dir):
 
 
 def _t_orders(spark, sf_dir):
-    tune(spark)
     return load_table(spark, sf_dir, "orders")
 
 
@@ -1096,7 +1090,6 @@ def x10_training_corpus(spark, sf_dir):
     job reads. Every stage is the declared operator the standalone
     queries pin, so this is the composition proof: the whole
     clean->dedup->pack path hash-checks end to end against one oracle."""
-    tune(spark)
     base = _clean_corpus_cached(spark, sf_dir)
     # the same flag table x10_pipeline_funnel / x2_semdedup read — the
     # persisted SemDeDup artifact, not a per-query re-derivation
@@ -1260,7 +1253,6 @@ def x8_hll_distinct(spark, sf_dir):
     (operators/sketch.py:hll_distinct) vs the exact count, per event type."""
     from diepy_spark.operators.sketch import hll_distinct
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return hll_distinct(ev, ["event_type"], "user_id", include_exact=True).orderBy(
         "event_type"
@@ -1398,7 +1390,6 @@ def x11_pagerank(spark, sf_dir):
     CTEs. Top PR_TOP nodes by rank."""
     from diepy_spark.operators.clustering import pagerank
 
-    tune(spark)
     sym = _supply_sym(spark, sf_dir)
     ranks = pagerank(
         sym, iterations=PR_ITER, scale=PR_SCALE, assume_distinct=True
@@ -1423,7 +1414,6 @@ def x11_ppr(spark, sf_dir):
     Top PR_TOP reachable nodes by rank."""
     from diepy_spark.operators.clustering import personalized_pagerank
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sym = _supply_sym(spark, sf_dir)
     seeds = (
@@ -1451,7 +1441,6 @@ def x11_bfs(spark, sf_dir):
     hops with its shortest distance."""
     from diepy_spark.operators.clustering import bfs_distances
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sym = _supply_sym(spark, sf_dir)
     seeds = (
@@ -1588,7 +1577,6 @@ def x1_cms_span_dedup(spark, sf_dir):
     from diepy_spark.operators.dedup import _grams_over
     from diepy_spark.operators.sketch import cms_cells, cms_estimate
 
-    tune(spark)
     tk = _docs(spark, sf_dir).select(
         F.expr(D.tokens_expr("text")).alias("toks")
     )
@@ -1716,7 +1704,6 @@ def x8_bloom_semijoin(spark, sf_dir):
     the downstream exact join removes them when exactness is required."""
     from diepy_spark.operators.bloom import bloom_build, bloom_probe
 
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     keys = cust.where(F.col("c_mktsegment") == BLOOM_SEGMENT).select("c_custkey")
@@ -1743,7 +1730,6 @@ def x9_snapshot_diff(spark, sf_dir):
     (round(x*1.1, 2) is NOT: the engines break .005 ties differently)."""
     from diepy_spark.operators.merge import snapshot_diff
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     bump = F.expr(
         "CAST((CAST(round(o_totalprice * 100) AS BIGINT) * 11) div 10 AS DOUBLE) / 100"
@@ -1779,7 +1765,6 @@ def x11_triangle_count(spark, sf_dir):
     at every sf). Output: per-node triangle counts."""
     from diepy_spark.operators.clustering import triangle_count
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     edges = orders.select(
         ((F.col("o_orderkey") * 37 + 11) % TRI_N).alias("src"),
@@ -1821,7 +1806,6 @@ def x11_neighbor_jaccard(spark, sf_dir):
     and pairs below NJ_MIN_COMMON shared suppliers never leave the
     wedge aggregate. Jaccard is an exact integer rational (inclusion–
     exclusion denominator), rounded only for rendering."""
-    tune(spark)
     e = _nj_edges_cached(spark, sf_dir)
     deg = e.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("deg"))
     a = e.select(F.col("l_partkey").alias("pa"), "l_suppkey")
@@ -1866,7 +1850,6 @@ def x2_fuzzy_join(spark, sf_dir):
     blocking-key groups, so the quadratic term is bounded by the largest
     block, not the corpus. Output pairs carry the distance and each
     name's part count (the match-weight inputs)."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part")
     names = p.groupBy(F.col("p_name").alias("name")).agg(
         F.count(F.lit(1)).alias("n_parts")
@@ -1921,7 +1904,6 @@ def x12_dq_profile(spark, sf_dir):
     1x), then `stack` unpivots the row into one row per column. Rendering
     is engine-portable: doubles via exact DECIMAL(18,2) text, timestamps
     via explicit microsecond format."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c, kind in DQ_COLS:
@@ -1960,7 +1942,6 @@ def x8_cms_heavy_hitters(spark, sf_dir):
     broadcast lookups."""
     from diepy_spark.operators.sketch import cms_cells, cms_estimate
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
     exact = (
         li.groupBy("l_partkey")
@@ -1990,7 +1971,6 @@ def x9_incremental_agg(spark, sf_dir):
     incremental path is lossless — the algebraic property every
     streaming/incremental pipeline stands on. Derived columns (avg) come
     from merged states, never from merging averages."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     split = F.lit(INC_SPLIT).cast("timestamp")
 
@@ -2037,7 +2017,6 @@ def x3_knn_classify(spark, sf_dir):
     accuracy report. Plan: the query block is broadcast (cosine_topk),
     the vote is a (qid, label) aggregate over k*|Q| rows, and the label
     join touches only neighbor ids."""
-    tune(spark)
     v = _vecs(spark, sf_dir)
     q = v.where(F.col("vec_id") < KNN_QUERY_MAX)
     c = v.where(F.col("vec_id") >= KNN_QUERY_MAX)
@@ -2076,7 +2055,6 @@ def x9_scd2(spark, sf_dir):
     dimension-table build step of every warehouse). One shuffle on the
     key; both windows (change detection + interval close) share its sort.
     Determinism: ties on o_orderdate break by o_orderkey."""
-    tune(spark)
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -2115,7 +2093,6 @@ def x9_scd2_lookup(spark, sf_dir):
     Scale: history build = one key shuffle (two windows share the sort);
     the as-of attach is the union+last_value single sort-merge pass of
     operators/timeseries.py:asof_join — never a range join."""
-    tune(spark)
     from pyspark.sql import Window
 
     from diepy_spark.operators.timeseries import asof_join
@@ -2163,7 +2140,6 @@ def x12_skew_diag(spark, sf_dir):
     factor (count / mean-per-key). One aggregate builds the key histogram;
     the global stats are windows over the keys-dimension frame, never the
     fact table."""
-    tune(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
@@ -2215,7 +2191,6 @@ def x8_power_mde(spark, sf_dir):
     and the closed form is a shared double expression, so the report
     hash-checks. At 100 TB: one map-side-combined pass, rows = event
     types."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     agg = (
         ev.select(
@@ -2262,7 +2237,6 @@ def x12_entropy(spark, sf_dir):
     combine."""
     from pyspark.sql import Window
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     outs = []
     for c in ENTROPY_COLS:
@@ -2320,7 +2294,6 @@ def x12_mutual_info(spark, sf_dir):
     terms fold in cell order (engine-identical), rounded at render."""
     from pyspark.sql import Window
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     cube = (
         o.selectExpr(
@@ -2402,7 +2375,6 @@ def x12_volume_anomaly(spark, sf_dir):
     x12_freshness/x8_cusum."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(F.expr("CAST(date_trunc('day', ts) AS DATE)").alias("day"))
@@ -2448,7 +2420,6 @@ def x12_key_discovery(spark, sf_dir):
     MERGE key choice would collapse). One exact distinct aggregate per
     candidate; at 100 TB the same shape runs on approx_count_distinct
     first and exact-verifies only the survivors."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     n_rows = o.count()
     outs = []
@@ -2508,7 +2479,6 @@ def x12_correlation(spark, sf_dir):
     matrix hash-checks. At 100 TB this is the textbook algebraic
     aggregate: map-side combine does almost all the work, one row
     reaches the driver."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     proj = li.selectExpr(
         *[f"{expr} AS {name}" for name, expr in CORR_VARS]
@@ -2567,7 +2537,6 @@ def x12_salted_join(spark, sf_dir):
     under retries, invisible in the result: the aggregate is
     hash-identical to the plain-join oracle, which is exactly the
     correctness contract of salting."""
-    tune(spark)
     from diepy_spark.operators.skew import salted_join
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -2792,7 +2761,6 @@ def x8_cms_join_size(spark, sf_dir):
     vs skew handling. Same cells/constants as x8_cms_heavy_hitters."""
     from diepy_spark.operators.sketch import cms_cells
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select("o_custkey")
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     ca = cms_cells(o, "o_custkey", d=CMS_D, w=CMS_W, seed=CMS_SEED).select(
@@ -2831,7 +2799,6 @@ def x12_drift(spark, sf_dir):
     divisions rounded — deterministic cross-engine. One aggregate per
     side over the class dimension; at 100 TB this is two map-side-combined
     scans and a |classes|-row join."""
-    tune(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
@@ -2891,7 +2858,6 @@ def x12_gaps(spark, sf_dir):
     than the key set — enters the single window that pairs each gap start
     with the next island start. The trailing non-gap after the max key is
     excluded via one broadcast scalar."""
-    tune(spark)
     from pyspark.sql import Window
 
     keys = (
@@ -2944,7 +2910,6 @@ def x9_rollup_cascade(spark, sf_dir):
     cascade is lossless by construction). The oracle aggregates raw
     events straight to daily — hash equality IS the losslessness proof.
     Money stays in exact integer cents until the final render."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     hourly = (
         ev.groupBy(
@@ -2985,7 +2950,6 @@ def x11_kcore(spark, sf_dir):
     from diepy_spark.operators.clustering import kcore
     from diepy_spark.operators.robust import freq_median
 
-    tune(spark)
     sym = _supply_sym(spark, sf_dir)
     # sym is distinct with src != dst by construction (disjoint id
     # classes mod 10) — no re-dedup pass before the degree count
@@ -3014,7 +2978,6 @@ def x8_ab_test(spark, sf_dir):
     IDENTICALLY in both engines (each sub-term is one IEEE op on exact
     int-derived doubles, so the hash can't drift). One row out:
     cohort sizes, converters, rates, and z."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(
@@ -3107,7 +3070,6 @@ def x8_cuped(spark, sf_dir):
     Scale: two map-side-combinable aggregates (per-user, then per-cohort)
     plus a 1-row broadcast of the global stats — no extra pass, no
     user-level shuffle beyond the groupBy(user_id)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
@@ -3201,7 +3163,6 @@ def x8_srm(spark, sf_dir):
     Scale: one distinct on (segment, user, cohort) — map-side combinable
     — then a segment-keyed conditional count; integer counts feed the
     shared one-line chi2 float form (df=1 collapses to (n_a-n_b)^2/N)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     g = ev.selectExpr(
         "event_type",
@@ -3255,7 +3216,6 @@ def x8_perm_test(spark, sf_dir):
     never re-shuffles per permutation), the simulation-in-one-pass shape
     that works at any scale. Exact integer cents end-to-end; the mean
     differences are the only float layer, text-shared with the oracle."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pu = (
         ev.selectExpr("user_id", f"{_CUPED_CENTS} AS cents")
@@ -3326,7 +3286,6 @@ def x8_delta_method(spark, sf_dir):
     moments per cohort (int64-safe at test scale; promote the products
     to DECIMAL at 100 TB); the ratio difference z-statistic renders
     from shared float texts. Output: one row."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pu = (
         ev.selectExpr("user_id", f"{_CUPED_CENTS} AS cents")
@@ -3391,7 +3350,6 @@ def x8_fdr_bh(spark, sf_dir):
     ppl-bucket windows), not the data."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pu = (
         ev.selectExpr("event_type", "user_id", f"{_CUPED_CENTS} AS cents")
@@ -3498,7 +3456,6 @@ def x8_mwu(spark, sf_dir):
     2r + c - 1), so U, the tie term sum(t^3 - t), and the cohort counts
     are all exact BIGINTs; the z closed form is the only float layer and
     is textually shared with the oracle (_MWU_* constants)."""
-    tune(spark)
     from pyspark.sql import Window
 
     # the (cents, cohort) histogram is an exact rollup of the shared
@@ -3565,7 +3522,6 @@ def x12_ref_integrity(spark, sf_dir):
     report is a 4-row union. Zero orphans on this generator's output is
     itself the assertion — the query proves the check runs, the counts
     prove against the oracle that it counts correctly."""
-    tune(spark)
 
     def pair(child, key, parent, pkey, label):
         c = load_table(spark, sf_dir, child)
@@ -3652,7 +3608,6 @@ def x3_pq_adc(spark, sf_dir):
     everything is exact integer arithmetic, so encode + search
     hash-check end to end. Queries = PQ_NQ smallest vec_ids, corpus =
     the rest."""
-    tune(spark)
     return _pq_adc_cached(spark, sf_dir).orderBy("qid", "rk")
 
 
@@ -3672,7 +3627,6 @@ def x3_ivfpq(spark, sf_dir):
     candidate generation."""
     from diepy_spark.operators.similarity import ivfpq_topk
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     cents = _cents_cached(spark, sf_dir, KM_K, KM_ITER, KM_SCALE)
     books = _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE)
@@ -3715,7 +3669,6 @@ def x11_label_prop(spark, sf_dir):
     groups separate where connected components would merge everything
     reachable. The oracle unrolls the same rounds as chained CTEs (the
     pagerank pattern). Output: the full final (node, label) assignment."""
-    tune(spark)
     return _lpa_labels_cached(spark, sf_dir).orderBy("node")
 
 
@@ -3732,7 +3685,6 @@ def x11_modularity(spark, sf_dir):
     division at the end, so no order-dependent accumulation exists.
     Scale shape: two label joins on the edge list + two bounded
     aggregates; the community dimension is the only driver-sized thing."""
-    tune(spark)
     # _supply_sym is a narrow union over the checkpointed edge blocks —
     # already cheap for the three consumers below, no second copy needed
     sym = _supply_sym(spark, sf_dir)
@@ -3781,7 +3733,6 @@ def x3_cluster_purity(spark, sf_dir):
         quantize_vectors,
     )
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     cents = _cents_cached(spark, sf_dir, KM_K, KM_ITER, KM_SCALE)
     q = quantize_vectors(v, "vec_id", "embedding", KM_SCALE)
@@ -3851,7 +3802,6 @@ def x8_sprt(spark, sf_dir):
     regardless of where range boundaries land."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(
@@ -3922,7 +3872,6 @@ def x12_freshness(spark, sf_dir):
     grid): the staleness monitor that catches a dead producer whose rows
     simply stop arriving (row counts and distributions look fine — only
     recency moves). One aggregate + one broadcast of the global max."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
@@ -4032,7 +3981,6 @@ def x9_takedown(spark, sf_dir):
     (takedown lists are small by nature); each table is one anti-join
     scan — the same plan the physical delete-rewrite runs, so these
     numbers are the sweep's pre-flight and its verification."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     ev = load_table(spark, sf_dir, "events")
@@ -4121,7 +4069,6 @@ def x8_jackknife(spark, sf_dir):
     engines (the entropy idiom), so the float accumulation is
     engine-identical. Scale: one per-user aggregate, then everything is
     g-row arithmetic."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(
@@ -4257,7 +4204,6 @@ def x8_mann_kendall(spark, sf_dir):
     the O(days²) sign pair join is over a bounded calendar frame, never
     the events table; the daily frame is checkpointed once for its three
     consumers (pairs, tie groups, n)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
@@ -4311,7 +4257,6 @@ def x8_cusum(spark, sf_dir):
     1-row TakeOrdered."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
@@ -4367,7 +4312,6 @@ def x12_fd_discovery(spark, sf_dir):
     corpus size), checkpointed, and every ordered pair's two distinct
     counts aggregate g, never the table. Output: (lhs, rhs, n_lhs,
     n_pairs, holds) for all 12 ordered pairs."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     g = li.select(*FD_COLS).distinct().localCheckpoint(eager=False)
     frames = []
@@ -4405,7 +4349,6 @@ def x12_dup_keys(spark, sf_dir):
     aggregate). In this synthetic data lineitem's (l_orderkey,
     l_linenumber) actually violates — the audit is the instrument that
     catches exactly that before an upsert silently fans out."""
-    tune(spark)
     frames = []
     for tbl, keys in DUPKEY_SPECS:
         t = load_table(spark, sf_dir, tbl)
@@ -4451,7 +4394,6 @@ def x8_did(spark, sf_dir):
     time trend. One scan -> eight integer aggregates (sum/count per
     cohort x period, map-side combined); the estimate is a shared double
     closed form over them. Output: the four cell means and the DiD."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     d = ev.select(
         (F.col("user_id") % 2).alias("grp"),
@@ -4493,7 +4435,6 @@ def x2_semdedup_apply(spark, sf_dir):
     prune the document corpus; per language, how many docs and chars
     survive semantic dedup. The flag frame is node-sized relative to a
     100 TB corpus — it broadcast-joins back, the corpus never reshuffles."""
-    tune(spark)
     fl = _sdflags_cached(spark, sf_dir)
     d = _docs(spark, sf_dir)
     j = d.join(
@@ -4534,7 +4475,6 @@ def x2_semdedup_probe(spark, sf_dir):
     subset (vec_id < SD_PROBE_MAX keeps the instrument constant-cost at
     every sf); the quantizer itself trains on the FULL corpus exactly as
     x2_semdedup does. Output: (method, n_exact, n_found, recall)."""
-    tune(spark)
     v = _vecs(spark, sf_dir)
     cents = _cents_cached(spark, sf_dir, _sd_k(spark, sf_dir), SD_ITER, SD_SCALE)
     sub = v.where(F.col("vec_id") < SD_PROBE_MAX)
@@ -4585,7 +4525,6 @@ def x12_benford(spark, sf_dir):
     9-group aggregate; expected fractions are shared repr literals."""
     import math
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     d = o.selectExpr(
         "substr(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -4627,7 +4566,6 @@ def x8_trimmed_mean(spark, sf_dir):
     per-bin KEPT mass is pure integer clamp arithmetic
     (least/greatest of cumulative ranks vs the trim cuts), handling
     partial bins exactly. The only float op is the final division."""
-    tune(spark)
     from pyspark.sql import Window
 
     # rollup of the shared session value-frequency artifact (r14)
@@ -4701,7 +4639,6 @@ def x11_assortativity(spark, sf_dir):
     every directed edge, then ONE moment aggregate (m, Σx, Σy, Σxy,
     Σx², Σy² — exact BIGINTs) feeds the shared closed-form Pearson text
     (_ASSORT_R). Output: edge count, node count, and r."""
-    tune(spark)
     sym = _supply_sym(spark, sf_dir)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # node-sized frame consumed three times -> cut lineage once
@@ -4770,7 +4707,6 @@ def x12_outliers(spark, sf_dir):
     ratios, which are single divisions — hash-exact cross-engine."""
     from diepy_spark.operators.robust import robust_outliers
 
-    tune(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
@@ -4808,7 +4744,6 @@ def x8_bootstrap_ci(spark, sf_dir):
     integer cents."""
     from diepy_spark.operators.sampling import poisson_bootstrap_means
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         "o_orderkey",
@@ -4860,7 +4795,6 @@ def x3_kmeans(spark, sf_dir):
         quantize_vectors,
     )
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     # r13: kmeans_int == assign_to_centroids(q, _train_loop(q)), and the
     # trained centroid table is exactly what _cents_cached memoizes
@@ -4904,7 +4838,6 @@ def x3_kmeans_stability(spark, sf_dir):
         quantize_vectors,
     )
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     snaps = _km_trace_cached(spark, sf_dir)
     q = quantize_vectors(v, scale=KM_SCALE).localCheckpoint(eager=False)
@@ -5010,7 +4943,6 @@ def x2_semdedup(spark, sf_dir):
     contract, honored by the fixture and not just the docstring.
     Output: per-cluster vector counts, flagged counts, and keep
     fraction."""
-    tune(spark)
     fl = _sdflags_cached(spark, sf_dir)
     return (
         fl.groupBy("cluster")
@@ -5046,7 +4978,6 @@ def x3_ivf_trained(spark, sf_dir):
     IVFT_NQ smallest vec_ids, corpus = the rest; training sees the full
     table (queries are drawn from the indexed corpus, as in a recall
     benchmark)."""
-    tune(spark)
     v = _vecs(spark, sf_dir)
     cents = _cents_cached(spark, sf_dir, KM_K, KM_ITER, KM_SCALE)
     return S.ivf_topk_trained(
@@ -5227,7 +5158,6 @@ def x10_epoch_plan(spark, sf_dir):
     totals are one map-side-combined scan; the weight normalizer is an
     ordered fold over the source-bounded frame; everything after the
     one floor/ceil render is integer arithmetic."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     per = (
         d.select(
@@ -5300,7 +5230,6 @@ def x5_zipf(spark, sf_dir):
     accumulation is engine-identical."""
     from pyspark.sql import Window
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     tk = d.select("lang", F.explode(F.expr(D.tokens_expr("text"))).alias("tok"))
     h = (
@@ -5403,7 +5332,6 @@ def x8_tost(spark, sf_dir):
     every float op is a closed form over those integers stated identically
     in both engines. At 100 TB: one scan, one 2-row shuffle. Output: one
     row with cohort moments, Welch SE, both z's, and the verdict."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pu = (
         ev.where(F.col("event_type") == "purchase")
@@ -5472,7 +5400,6 @@ def x12_psi(spark, sf_dir):
     frame; everything after is bounded by PSI_NBINS."""
     from pyspark.sql import Window
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c",
         "o_orderdate",
@@ -5559,7 +5486,6 @@ def x3_embedding_drift(spark, sf_dir):
     exact bigint fold, so the hash anchors on integers and the rendered
     shift is one sqrt/divide chain. At 100 TB: one scan, one shuffle on
     (label, dim) — no pairwise work anywhere."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings")
     x = e.selectExpr(
         "vec_id",
@@ -5645,7 +5571,6 @@ def x3_pq_distortion(spark, sf_dir):
     shuffles; the only exchange is the m-row aggregate."""
     from diepy_spark.operators.similarity import pq_distortion
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     books = _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE)
     rep = pq_distortion(v, books, scale=KM_SCALE)
@@ -5714,7 +5639,6 @@ def x10_pipeline_funnel(spark, sf_dir):
     integers end to end."""
     from diepy_spark.operators.corpus import corpus_funnel
 
-    tune(spark)
     flags = _sdflags_cached(spark, sf_dir).select(
         F.col("vec_id").alias("doc_id"), "is_dup"
     )
@@ -5846,7 +5770,6 @@ def x9_retention_plan(spark, sf_dir):
     partition-level lifecycle gate."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
@@ -5942,7 +5865,6 @@ def x11_degree_dist(spark, sf_dir):
     x11_pagerank/x11_assortativity; two bounded aggregates (degree per
     node, then nodes per (kind, degree)) — output is
     distinct-degree-sized."""
-    tune(spark)
     sym = _supply_sym(spark, sf_dir)
     deg = sym.groupBy("src").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("deg")
@@ -6041,7 +5963,6 @@ def x2_semdedup_sweep(spark, sf_dir):
     production threshold is one arm, so the sweep row reconciles with
     the standing report). The run you do before betting a corpus on a
     similarity cutoff."""
-    tune(spark)
     from diepy_spark.operators.similarity import semdedup_threshold_sweep
 
     cents = _cents_cached(spark, sf_dir, _sd_k(spark, sf_dir), SD_ITER, SD_SCALE)
@@ -6076,7 +5997,6 @@ def x10_mix_rebalance(spark, sf_dir):
     the plan itself is languages-sized."""
     from diepy_spark.operators.dedup import tokens_expr
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     tok = (
         d.select(
@@ -6130,7 +6050,6 @@ def x3_rq_distortion(spark, sf_dir):
     projections."""
     from diepy_spark.operators.similarity import rq_distortion
 
-    tune(spark)
     return rq_distortion(
         _vecs(spark, sf_dir),
         _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE),
@@ -6166,7 +6085,6 @@ def x3_rq_adc(spark, sf_dir):
     afford the full product). Same queries/corpus split and level-1
     codebooks as x3_pq_adc, so the two rankings are directly
     comparable — finer reconstruction, same candidates."""
-    tune(spark)
     return _rq_adc_cached(spark, sf_dir).orderBy("qid", "rk")
 
 
@@ -6208,7 +6126,6 @@ def x3_pq_vs_rq_recall(spark, sf_dir):
     from diepy_spark.operators.clustering import quantize_vectors
     from pyspark.sql import Window
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     qs = v.where(F.col("vec_id") < PQ_NQ)
     cs = v.where(F.col("vec_id") >= PQ_NQ)
@@ -6301,7 +6218,6 @@ def x3_pq_trained_distortion(spark, sf_dir):
     iteration) before committing a store to m bytes/vector."""
     from diepy_spark.operators.similarity import pq_distortion
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     det = pq_distortion(
         v, _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE),
@@ -6382,7 +6298,6 @@ def x8_ks_test(spark, sf_dir):
     cum <= 60k, n <= 60k at sf0.1 keeps the product far under 2^63);
     the sqrt layer is float-only in the final reported columns, textually
     shared with the oracle."""
-    tune(spark)
     from pyspark.sql import Window
 
     # rollup of the shared session value-frequency artifact (r14): the
@@ -6441,7 +6356,6 @@ def x8_wasserstein(spark, sf_dir):
     Scale shape: one corpus collapse to the value-domain histogram,
     then the cumulative + lead windows run over the bounded domain
     frame."""
-    tune(spark)
     from pyspark.sql import Window
 
     # rollup of the shared session value-frequency artifact (r14)
@@ -6507,7 +6421,6 @@ def x11_hyperball(spark, sf_dir):
     projection, so the hash gate covers the whole sketch."""
     from diepy_spark.operators.clustering import hyperball
 
-    tune(spark)
     return hyperball(
         prepared=_hb_prepared(spark, sf_dir), iterations=HB_ITER, m=HB_M
     )
@@ -6542,7 +6455,6 @@ def x11_hyperball_error(spark, sf_dir):
     Exact side state is seeds x ball (bounded sample), never all-pairs."""
     from diepy_spark.operators.clustering import hyperball_exact_error
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     seeds = (
         li.where(F.col("l_partkey") <= HBE_SEED_MAX)
@@ -6566,7 +6478,6 @@ def x8_qte(spark, sf_dir):
     x8_ks_test bounded-window discipline — no global row rank). The
     quartile pick rule is pure integers (4*cum >= k*n), so every output
     is an exact BIGINT in cents."""
-    tune(spark)
     from pyspark.sql import Window
 
     # rollup of the shared session value-frequency artifact (r14); the
@@ -6628,7 +6539,6 @@ def x11_hits(spark, sf_dir):
     role."""
     from diepy_spark.operators.clustering import hits
 
-    tune(spark)
     e = _supply_ps(spark, sf_dir)
     scored = hits(
         e, iterations=HITS_ITER, scale=HITS_SCALE, assume_distinct=True
@@ -6672,7 +6582,6 @@ def x8_acf(spark, sf_dir):
     lag join, spine explode and totals all run over <= days rows. No
     window over corpus data; the only ordered output is the K-row
     result."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     obs = (
         ev.select(
@@ -6759,7 +6668,6 @@ def x8_runs_test(spark, sf_dir):
     rows — bounded by the calendar, never by the corpus."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
@@ -6836,7 +6744,6 @@ def x8_anova(spark, sf_dir):
     Scale shape: ONE map-side-combined groupBy over the corpus down to
     k rows; everything after runs on the k-row frame. No window, no
     second pass."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     g = (
         o.selectExpr(
@@ -6935,7 +6842,6 @@ def x11_random_walks(spark, sf_dir):
     adjacency) — never a walks x neighbors expansion; state width is
     constant in t. The corpus frame is the shared _rw_walks_cached
     artifact (x11_walk_cooccur consumes the same walks)."""
-    tune(spark)
     walks = _rw_walks_cached(spark, sf_dir)
     return (
         walks.groupBy("t")
@@ -6988,7 +6894,6 @@ def x11_node2vec(spark, sf_dir):
     (prev, x), one per-walk cumulative window (thousands of small
     partitions, no global sort), one interval filter back to one row
     per walk."""
-    tune(spark)
     walks = _n2v_walks_cached(spark, sf_dir)
     return (
         walks.groupBy("t")
@@ -7051,7 +6956,6 @@ def x11_walk_cooccur(spark, sf_dir):
     (steps+1)^2 candidate rows, a CONSTANT per walk, so the join output
     is linear in walk count, then one map-side-combined pair count.
     Tie-breaks pinned (cnt desc, center, context)."""
-    tune(spark)
     pairs = _wc_pairs_cached(spark, sf_dir)
     tot = pairs.agg(
         F.expr("CAST(SUM(cnt) AS BIGINT)").alias("total_pairs"),
@@ -7096,7 +7000,6 @@ def x11_walk_pmi(spark, sf_dir):
     Scale shape: everything re-aggregates the bounded cached pair
     frame — two marginal aggregates, a 1-row total broadcast, two
     marginal joins, one top-k. The corpus is never rescanned."""
-    tune(spark)
     pairs = _wc_pairs_cached(spark, sf_dir)
     cw = pairs.groupBy("center").agg(
         F.expr("CAST(SUM(cnt) AS BIGINT)").alias("cw")
@@ -9017,8 +8920,8 @@ EXTENDED_ORACLES["x12_salted_join"] = """
 def _cdc_oracle_sql() -> str:
     """DuckDB mirror of x1_cdc_chunks: gram-ending-at-token via lag
     concatenation, boundary via the shared md5-nibble-slice arithmetic
-    (operators.bloom.hex_int_sql — verbatim in both engines)."""
-    from diepy_spark.operators.bloom import hex_int_sql
+    (operators.sketch.hex_int_sql — verbatim in both engines)."""
+    from diepy_spark.operators.sketch import hex_int_sql
 
     lags = " || ' ' || ".join(
         [f"lag(tok, {CDC_K - 1 - j}) OVER w" for j in range(CDC_K - 1)] + ["tok"]
@@ -9032,7 +8935,7 @@ def _cdc_oracle_sql() -> str:
         flagged AS (
           SELECT doc_id, i, tok,
                  CASE WHEN i >= {CDC_K}
-                      AND ({hex_int_sql(f"md5({lags})", 1)} % {CDC_DIV}) = 0
+                      AND ({hex_int_sql(f"md5({lags})", 4)} % {CDC_DIV}) = 0
                  THEN 1 ELSE 0 END AS flag
           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY i)
         ),
@@ -12094,7 +11997,7 @@ def _hb_oracle_reg_ctes() -> list[str]:
 def _hb_oracle_node_est(t: int) -> str:
     """Per-node HLL ball estimate at round t — (node, ball DECIMAL(18,4))
     with the identical fold/linear-counting arithmetic as
-    clustering._hb_node_ball. Shared by both hyperball oracles."""
+    clustering._hb_tier_balls. Shared by both hyperball oracles."""
     from diepy_spark.operators.sketch import hll_alpha
 
     m, alpha = HB_M, hll_alpha(HB_M)
@@ -12653,7 +12556,6 @@ def x8_chisq_independence(spark, sf_dir):
     stay consistent if NULLs ever appear (they would otherwise count
     into n but drop from the inner-join fold).
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = (
         ev.where("event_type IS NOT NULL AND user_id IS NOT NULL")
@@ -12757,7 +12659,6 @@ def x8_theil_sen(spark, sf_dir):
     on events rows. At a 10-year spine, swap the all-pairs join for
     the repeated-median variant on a day-bucketed subsample — the
     estimator degrades gracefully; the corpus aggregate is unchanged."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.where(F.col("value").isNotNull())
@@ -13338,7 +13239,6 @@ def x8_kruskal_wallis(spark, sf_dir):
     group of each value (row_number over the per-cents partition), so
     group sums, N and the tie sum all come out of ONE aggregation
     chain — no 1-row crossJoins (the x8_chisq margin discipline)."""
-    tune(spark)
     from pyspark.sql import Window
 
     # rollup of the shared session value-frequency artifact (r14):
@@ -13483,7 +13383,6 @@ def x8_spearman(spark, sf_dir):
     shared _PEARSON_R text over those sums — one float formula at the
     end. Scale shape: one corpus aggregate collapses to the bounded
     daily frame; all windows partition by event_type within it."""
-    tune(spark)
     from pyspark.sql import Window
 
     d = _daily_cv(spark, sf_dir)
@@ -13570,7 +13469,6 @@ def x8_kendall_tau(spark, sf_dir):
     the calendar frame, never on events rows); tau-b is one shared
     float formula. Scale shape: corpus -> daily frame in one map-side-
     combined aggregate; the pair join runs on the bounded frame."""
-    tune(spark)
     d = _daily_cv(spark, sf_dir)
     a = d.selectExpr("event_type", "day AS d1", "c AS c1", "v AS v1")
     b = d.selectExpr("event_type AS et2", "day AS d2", "c AS c2", "v AS v2")
@@ -13665,25 +13563,6 @@ def _unigram_words(spark, sf_dir):
     )
 
 
-@session_cached
-def _unigram_model_cached(spark, sf_dir) -> list[tuple[str, int]]:
-    """EM-refined (piece, integer score) table — memoized like the BPE
-    merges / kmeans centroids. Consumed by the EM unit tests and
-    available to library users; the declared encode query scores with
-    the seed ladder (static-oracle contract)."""
-    rows = (
-        _unigram_words(spark, sf_dir)
-        .groupBy("w")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-        .orderBy(F.col("n").desc(), "w")
-        .limit(UNI_DICT_MAX)
-        .collect()
-    )
-    return T.unigram_train_em(
-        [(r["w"], int(r["n"])) for r in rows], iters=UNI_EM_ITERS
-    )
-
-
 _UNI_SUBS = (
     "explode(flatten(transform(sequence(1, length(w)),"
     " i0 -> transform(sequence(1, least({mp}, length(w) - i0 + 1)),"
@@ -13706,7 +13585,6 @@ def x5_unigram_train(spark, sf_dir):
     UNI_MAX_PIECE; the rank window partitions by the length class
     (never a SinglePartition exchange); the normalizer comes from the
     pack-array/explode shape — zero joins."""
-    tune(spark)
     from pyspark.sql import Window
 
     wd = (
@@ -13850,7 +13728,6 @@ def x5_unigram_encode(spark, sf_dir):
     into the grid join; the score grid is one explode bounded by
     dict x 16 x UNI_MAX_PIECE cells; the DP is a zero-shuffle per-row
     fold; the final report is one map-side-combined aggregate."""
-    tune(spark)
     wl = _unigram_words(spark, sf_dir)
     scored = _uni_scored_cached(spark, sf_dir)
     wd2 = wl.select("w").distinct()
@@ -14028,7 +13905,6 @@ def x11_closeness(spark, sf_dir):
     centrality is estimated on graphs too big for all-pairs."""
     from diepy_spark.operators.clustering import closeness_centrality
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sym = _supply_sym(spark, sf_dir)
     seeds = (
@@ -14112,7 +13988,6 @@ def x8_holt_linear(spark, sf_dir):
     cents-as-double. Scale shape: corpus collapses to the bounded
     (type x day) frame in one map-side-combined aggregate; the
     recurrence is a zero-shuffle per-group fold."""
-    tune(spark)
     d = _daily_cv(spark, sf_dir)
     g = d.groupBy("event_type").agg(
         F.expr(
@@ -14209,7 +14084,6 @@ def x8_cohens_kappa(spark, sf_dir):
     higher-order functions over that array (the x8_chisq_independence
     margin discipline — zero joins, zero windows, zero
     BroadcastNestedLoopJoin)."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     dd = d.select(F.struct("doc_id", "lang").alias("dk"), "text")
     heur = T.lang_id(dd, id_col="dk").select(
@@ -14304,7 +14178,6 @@ def x8_mcnemar(spark, sf_dir):
     map-side combine to four integers. The frame is the trained
     model's domain (docs with len(text) >= LANGCLF_N, the
     x5_lang_confusion membership)."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     heur = T.lang_id(d).select("doc_id", F.col("pred_lang").alias("heur"))
     trained = _langclf_cached(spark, sf_dir).select(
@@ -14406,7 +14279,6 @@ def x8_survival_km(spark, sf_dir):
     bounded by 3 x the calendar span — and every window below runs
     partitioned BY ARM over that bounded frame (no single-partition
     funnel anywhere)."""
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -14545,7 +14417,6 @@ def x11_adamic_adar(spark, sf_dir):
     broadcast, and pairs below NJ_MIN_COMMON never leave the wedge
     aggregate. One distinct pass (shared + checkpointed via
     _nj_edges_cached), one wedge shuffle."""
-    tune(spark)
     e = _nj_edges_cached(spark, sf_dir)
     sdeg = e.groupBy("l_suppkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("sdeg")
@@ -14633,7 +14504,6 @@ def x5_source_boilerplate(spark, sf_dir):
     frame the affected-docs pass probes — checkpointed once, never
     re-exploded; the source dimension and the flagged boiler set are
     bounded and BROADCAST back."""
-    tune(spark)
     from diepy_spark.operators.dedup import _grams_over
 
     d = _docs(spark, sf_dir)
@@ -14815,7 +14685,6 @@ def x8_friedman(spark, sf_dir):
     attribution flags (row_number = 1) fold day count and tie term
     into the same per-type aggregation chain — no joins, no
     crossJoins (the x8_kruskal_wallis packing discipline)."""
-    tune(spark)
     from pyspark.sql import Window
 
     dv = _daily_cv(spark, sf_dir).select("event_type", "day", "v")
@@ -14976,7 +14845,6 @@ def x8_capture_recapture(spark, sf_dir):
     array row — the calendar midpoint and all four counts come from
     higher-order functions over it (the x8_chisq_independence
     discipline: zero joins, zero windows, no scalar crossJoin)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     u = (
         ev.where("user_id IS NOT NULL")
@@ -15082,11 +14950,10 @@ def x11_katz(spark, sf_dir):
     rounds as chained CTEs. Top PR_TOP nodes by score."""
     from diepy_spark.operators.clustering import katz_centrality
 
-    tune(spark)
     sym = _supply_sym(spark, sf_dir)
     scores = katz_centrality(
         sym, iterations=KATZ_ITER, scale=PR_SCALE,
-        alpha_num=1, alpha_den=KATZ_ALPHA_DEN, assume_distinct=True,
+        alpha_den=KATZ_ALPHA_DEN, assume_distinct=True,
     )
     return scores.orderBy(F.col("x").desc(), "node").limit(PR_TOP)
 
@@ -15163,7 +15030,6 @@ def x5_source_divergence(spark, sf_dir):
     corpus-wide token dimension aggregates FROM that frame (never
     re-tokenizes); source totals are a bounded broadcast and the
     global total rides them via a window over the |sources|-row frame."""
-    tune(spark)
     from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
@@ -15270,7 +15136,6 @@ def x3_mmr(spark, sf_dir):
     top-MMR_POOL window runs on BOUNDED frames (pool, its pairwise sim
     matrix, the k unrolled argmax rounds — each a qid-partitioned
     window over <= queries x pool rows, checkpointed per round)."""
-    tune(spark)
     from pyspark.sql import Window
 
     from diepy_spark.operators.clustering import quantize_vectors
@@ -15458,7 +15323,6 @@ def x10_curriculum(spark, sf_dir):
     aggregate, which map-side combines into CUR_TIERS rows); the
     cumulative windows run over that tier-bounded frame (the
     documented bounded single-partition class)."""
-    tune(spark)
     from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
@@ -15593,7 +15457,6 @@ def x8_levene(spark, sf_dir):
     the ANOVA fold all run on it — the cumulative window partitions BY
     GROUP, the median dimension broadcasts back, no second corpus
     pass."""
-    tune(spark)
     from pyspark.sql import Window
 
     # rollup of the shared session value-frequency artifact (r14)
@@ -15733,7 +15596,6 @@ def x8_cohort_retention(spark, sf_dir):
     user key (same-key shuffle). The triangle itself is bounded
     (weeks x weeks), and the cohort-size denominator rides a window
     PARTITIONED BY COHORT over it — no single-partition funnel."""
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -15833,7 +15695,6 @@ def x5_keyness(spark, sf_dir):
     frame as x5_source_divergence; the corpus token dimension
     aggregates from it; source totals broadcast; the per-source rank
     is a window partitioned BY SOURCE over the vocab-bounded frame."""
-    tune(spark)
     from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
@@ -15937,7 +15798,6 @@ def x3_ndcg(spark, sf_dir):
     Scale shape: reuses the declared exact/LSH operators (queries
     broadcast, bucket equi-join — no corpus shuffle); everything after
     the rankings is arithmetic over queries x k bounded frames."""
-    tune(spark)
     v = _vecs(spark, sf_dir)
     q1 = v.where(F.col("vec_id") < TOPK_QUERY_MAX)
     c1 = v.where(F.col("vec_id") >= TOPK_QUERY_MAX)
@@ -16043,7 +15903,6 @@ def x2_dedup_venn(spark, sf_dir):
     (da, db) aggregate with method flags, and the Venn cells are
     flag-product sums in a single global aggregate — no pairwise
     joins, no 1-row crossJoins."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     dom = (F.col("da") < MEDIA_DOC_MAX) & (F.col("db") < MEDIA_DOC_MAX)
     a = (
@@ -16133,7 +15992,6 @@ def x8_mood_median(spark, sf_dir):
     median attaches back by an equi-join on cents against the
     BROADCAST bounded frame (no 1-row crossJoin, no BNLJ); the packed
     chi2 runs as higher-order functions over the 2k-cell array."""
-    tune(spark)
     from pyspark.sql import Window
 
     # rollup of the shared session value-frequency artifact (r14)
@@ -16273,7 +16131,6 @@ def x11_rich_club(spark, sf_dir):
     edge frame; the degree dimension broadcasts back onto the edges;
     each rung is a conditional sum in the SAME single aggregate —
     the ladder never rescans the graph."""
-    tune(spark)
     ps = _supply_ps(spark, sf_dir).selectExpr("src AS u", "dst AS v")
     deg = (
         ps.selectExpr("u AS node")
@@ -16391,7 +16248,6 @@ def x8_odds_ratio(spark, sf_dir):
     Scale shape: one map-side-combined corpus aggregate to per-user
     (arm, converted), one global aggregate with four conditional sums
     — no joins, no windows, nothing bounded by anything but 2x2."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     u = (
         ev.where("user_id IS NOT NULL")
@@ -16492,7 +16348,6 @@ def x8_ccf(spark, sf_dir):
 
     Scale shape: the corpus collapses to two bounded calendar series
     in ONE aggregate; the lag join and totals run over <= days rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     obs = (
         ev.where(F.col("event_type").isin(CCF_X, CCF_Y))
@@ -16633,7 +16488,6 @@ def x6_payload_entropy(spark, sf_dir):
     Scale shape: one explode to (doc, byte) counts with map-side
     combine; per-doc totals ride the same aggregate chain; nothing
     leaves the media slice."""
-    tune(spark)
     d = _docs(spark, sf_dir).where(
         (F.col("doc_id") < MEDIA_DOC_MAX) & (F.length("text") > 0)
     )
@@ -16716,7 +16570,6 @@ def x10_loo_ablation(spark, sf_dir):
     Scale shape: ONE corpus pass (tokenize + stopword fold per row,
     no shuffle before the per-source aggregate); the global totals
     ride a window over the |sources|-row bounded frame."""
-    tune(spark)
     from pyspark.sql import Window
 
     en_list = ", ".join(f"'{w}'" for w in LANG_PROFILES["en"])
@@ -16826,7 +16679,6 @@ def x8_trend_proportions(spark, sf_dir):
     Scale shape: ONE corpus aggregate to the bounded per-day
     (trials, successes) frame; the five scalar sums fold that frame
     in a single aggregate — no joins, no windows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.where("event_type IS NOT NULL")
@@ -16959,7 +16811,6 @@ def x11_ktruss(spark, sf_dir):
         triangle_incidence,
     )
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     ktn = orders.agg(
         F.expr(f"2 * (count(*) div {KT_DENOM}) + 1").alias("kt_n")
@@ -17120,7 +16971,6 @@ def x8_sign_test(spark, sf_dir):
     7-day self-join, sign counts and the CDF fold all run on it (the
     fold is a higher-order function over a <=m-element sequence).
     P(X>=s) folds as P(X<=m-s) by symmetry."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.where(F.col("value").isNotNull())
@@ -17265,7 +17115,6 @@ def x8_rate_ratio(spark, sf_dir):
     Scale shape: one map-side-combined corpus aggregate to per-user
     (arm, events, exposure), one global aggregate with four
     conditional sums — no joins, no windows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     u = (
         ev.where("user_id IS NOT NULL")
@@ -17364,7 +17213,6 @@ def x5_term_dispersion(spark, sf_dir):
     Scale shape: the same single tokenize-pass (source, token) count
     frame; the top-K term dimension is a vocab-frame rank broadcast
     back; per-term aggregation carries the bounded source dimension."""
-    tune(spark)
     from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
@@ -17473,7 +17321,6 @@ def x3_cluster_quality(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     # r13: same _cents_cached reuse as x3_kmeans — the partition being
     # evaluated IS x3_kmeans' assignment, so derive it from the shared
@@ -17948,7 +17795,6 @@ def x5_unigram_em(spark, sf_dir):
     cells; per-iter piece tables vocabulary-sized, checkpointed and
     broadcast into the next round's grid join — zero corpus-sized
     shuffles after the first aggregate)."""
-    tune(spark)
     from pyspark.sql import Window
 
     wd = (
@@ -18282,7 +18128,6 @@ def x10_dsir_select(spark, sf_dir):
     plan, bucketed key); per-doc importance is one map-side-combined
     sum, and the manifest is a distributed TakeOrdered top-N, never a
     single-partition global sort."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     dw = (
         d.select(
@@ -18494,7 +18339,6 @@ def x3_adc_rerank(spark, sf_dir):
     from diepy_spark.operators.clustering import quantize_vectors
     from diepy_spark.operators.similarity import pq_adc_topk
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     books = _books_cached(spark, sf_dir, PQ_M, PQ_CODES, KM_SCALE)
     short = pq_adc_topk(
@@ -18643,7 +18487,6 @@ def x8_power_analysis(spark, sf_dir):
     Scale shape: identical to x8_ab_test — one corpus aggregate to
     per-user flags, one 2-row cohort aggregate, arithmetic on a 1-row
     frame."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(
@@ -18918,7 +18761,6 @@ def x2_ppjoin_health(spark, sf_dir):
     Scale shape: identical to the linkage front half — one tokenize
     pass, signature compression, vocabulary-sized df/prefix frames;
     the instrument never materializes a candidate pair."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     return D.ppjoin_prefix_health(
         d.where(F.col("doc_id") % 2 == 1),
@@ -19014,7 +18856,6 @@ def x8_cusum_changepoint(spark, sf_dir):
     Scale shape: one map-side-combined daily aggregate, one
     per-type ordered window for the running sum (types partition the
     work), one argmax row per type — no joins, no explodes."""
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -19116,7 +18957,6 @@ def x3_query_likelihood(spark, sf_dir):
     ranker comparison reads the two lists query-for-query. Scores are
     integer ln-nanos end to end (each ln rounded once at 9 decimals,
     carried as BIGINT), so ranking and output are hash-exact."""
-    tune(spark)
     return T.ql_topk(
         _docs(spark, sf_dir),
         n_queries=BM_NQ, n_qterms=BM_QTERMS, k=BM_K, min_len=BM_MINLEN,
@@ -19208,7 +19048,6 @@ def x8_fdr_sign(spark, sf_dir):
     sort is over n_types rows. The DuckDB oracle pads the CDF folds
     to a uniform mx iterations (the list_reduce cross-row hazard —
     tests/test_fold_stability.py)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.where(F.col("value").isNotNull())
@@ -19424,7 +19263,6 @@ def x2_bbit_minhash(spark, sf_dir):
     an integer ratio — bit-identical cross-engine.  Scale shape:
     identical to x2_minhash_est — one signature pass, LSH-bounded pair
     list, two signature-frame joins by doc id."""
-    tune(spark)
     sigs = _mh_sigs_cached(spark, sf_dir)
     # the verified pair table and the signature frame are the SHARED
     # session artifacts (_lsh_pairs_cached / _mh_sigs_cached — the
@@ -19537,7 +19375,6 @@ def x10_soft_dedup(spark, sf_dir):
     (_cc_cached — dup-graph-node-sized), one broadcast-sized size
     aggregate on top, one corpus pass for token counts; the per-source
     report is a tiny hash aggregate."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     cc = _cc_cached(spark, sf_dir)
     sizes = cc.groupBy("cluster").agg(F.count(F.lit(1)).alias("csize"))
@@ -19659,7 +19496,6 @@ def x8_eb_shrinkage(spark, sf_dir):
     evaluates the SAME formula text in both engines.  Scale shape: one
     map-side-combined aggregate to user grain, one 1-row scalar frame
     broadcast back over it, TakeOrdered(30) — no global sort."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     S = EB_SCALE
     users = (
@@ -19839,7 +19675,6 @@ def x3_kcenter_select(spark, sf_dir):
     pattern).  Scale shape: KC_K broadcast-literal scans of the
     checkpointed corpus (no shuffle, no pairwise blow-up), one final
     assignment aggregate."""
-    tune(spark)
     from diepy_spark.operators.clustering import centroid_dist_columns
 
     q, sel = _kcenter_cached(spark, sf_dir)
@@ -19955,7 +19790,6 @@ def x12_tail_index(spark, sf_dir):
     over (lang), k+1 rows per language retained, one aggregate."""
     from pyspark.sql import Window
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     w = Window.partitionBy("lang").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
@@ -20056,7 +19890,6 @@ def x5_heaps_law(spark, sf_dir):
     shape: one corpus pass to (token, first_doc) with map-side
     combine, a ~40-bucket bit-length aggregate, a bounded cumulative
     window — no per-checkpoint corpus rescans."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     first = (
         d.select(F.explode(tokens_col_ref()).alias("tok"), "doc_id")
@@ -20255,7 +20088,6 @@ def x3_power_iteration(spark, sf_dir):
     final vector matches bit-for-bit.  The explained fraction
     evaluates one shared formula text over three exact sums.  Scale
     shape: 2 * PI_ITER linear passes, one d-row output."""
-    tune(spark)
     q, v = _power_iter_cached(spark, sf_dir)
     vlit = "array({})".format(
         ", ".join(f"CAST({c} AS BIGINT)" for c in v)
@@ -20366,7 +20198,6 @@ def x8_overdispersion(spark, sf_dir):
     from exact Sum(c) / Sum(c^2) BIGINT aggregates, divided once.
     Scale shape: one map-side-combined (type, day) aggregate, then a
     types-bounded second aggregate."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.selectExpr(
@@ -20454,7 +20285,6 @@ def x5_kn_bigram(spark, sf_dir):
     to per-doc bigram multiplicities and one to the bigram-type table
     (both map-side combined); the model-side frames are
     vocabulary/type-bounded; one (w1,w2)-keyed scoring join."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     toks = d.select("doc_id", tokens_col_ref().alias("toks")).where(
         F.expr("size(toks) >= 2")
@@ -20585,7 +20415,6 @@ def x6_scene_cuts(spark, sf_dir):
     per asset and never cross assets — the window partitions by
     doc_id, so state is one frame row and the whole operator is
     embarrassingly parallel across assets."""
-    tune(spark)
     d = _docs(spark, sf_dir).where(F.col("doc_id") < MEDIA_DOC_MAX)
     fr = M.frame_sample(
         M.with_binary_payload(d), every=1, frame_size=SCENE_FRAME
@@ -20677,7 +20506,6 @@ def x12_table_checksum(spark, sf_dir):
     no shuffle beyond the source-bounded key."""
     from diepy_spark.operators.sketch import hex_int_sql
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     row_md5 = (
         "md5(concat_ws('|', CAST(doc_id AS STRING), lang, source,"
@@ -20788,7 +20616,6 @@ def x3_nsw_search(spark, sf_dir):
     (distance, id); the walk is NSW_HOPS unrolled in-plan joins over
     the checkpointed NQ x degree frontier — the oracle replays the
     identical chain with MATERIALIZED per-hop CTEs."""
-    tune(spark)
     from pyspark.sql import Window
 
     q, c, graph = _nsw_graph_cached(spark, sf_dir)
@@ -20936,7 +20763,6 @@ def x8_cohens_d(spark, sf_dir):
     ONE shared formula text in both engines, rounded once.  Scale
     shape: one map-side-combined aggregate to (type, is_weekend),
     a types-bounded pivot join, no window."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     side = (
         ev.where(F.col("value").isNotNull())
@@ -21072,7 +20898,6 @@ def x5_mtld(spark, sf_dir):
     cross-row hazard).  Scale shape: per-document folds, no cross-doc
     state — embarrassingly parallel; token arrays are already
     materialized by the shared tokenizer."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     fold = mtld_fold_expr("toks")
     return (
@@ -21197,7 +21022,6 @@ def x3_mrl_recall(spark, sf_dir):
 
     from diepy_spark.operators.clustering import quantize_vectors
 
-    tune(spark)
     v = _vecs(spark, sf_dir)
     q = quantize_vectors(
         v.where(F.col("vec_id") < TOPK_QUERY_MAX), scale=KM_SCALE
@@ -21325,7 +21149,6 @@ def x9_bitemporal_asof(spark, sf_dir):
     one window per cell-customer partition, one tiny aggregate."""
     from pyspark.sql import Window
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "o_orderpriority AS priority",
@@ -21422,7 +21245,6 @@ def x8_binseg(spark, sf_dir):
     aggregate, then per-(type, side) windows — the recursion level
     only re-partitions the SAME bounded daily frame, never rescans
     the corpus."""
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -21657,7 +21479,6 @@ def x6_blockhash_near_dup(spark, sf_dir):
     Hamming verify over candidates only — payloads never join and
     the pair join is an equi-join on (band_id, band_value), never
     all-pairs."""
-    tune(spark)
     exploded = _ph_exploded_bands(spark, sf_dir)
     a = exploded.selectExpr("bid", "bval", "doc_id AS da", "sig AS sa")
     b = exploded.selectExpr("bid", "bval", "doc_id AS db", "sig AS sb")
@@ -21742,7 +21563,6 @@ def x6_band_health(spark, sf_dir):
     one narrow Generate (PH_BANDS rows per asset), one (bid, bval)
     count shuffle with map-side combine, one PH_BANDS-row final
     aggregate — payloads never shuffle, nothing is all-pairs."""
-    tune(spark)
     ex = _ph_exploded_bands(spark, sf_dir)
     buckets = ex.groupBy("bid", "bval").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -21820,7 +21640,6 @@ def x8_auc(spark, sf_dir):
     a 1-row reduce."""
     from pyspark.sql import Window
 
-    tune(spark)
     # rollup of the shared session value-frequency artifact (r14): the
     # pos/neg class split is a filter + pivot over event_type
     hist = (
@@ -21931,7 +21750,6 @@ def x10_soft_epoch(spark, sf_dir):
     source order (the x10_epoch_plan text); floor/ceil/least are the
     only renders.  Scale shape: reuses the persisted cluster-label
     table + one corpus pass; everything after is source-bounded."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     cc = _cc_cached(spark, sf_dir)
     sizes = cc.groupBy("cluster").agg(F.count(F.lit(1)).alias("csize"))
@@ -22065,7 +21883,6 @@ def x3_pq_balanced(spark, sf_dir):
     broadcast-sized, aggregates are map-side combined."""
     from pyspark.sql import Window
 
-    tune(spark)
     from diepy_spark.operators.clustering import quantize_vectors
 
     q = quantize_vectors(_vecs(spark, sf_dir), scale=KM_SCALE)
@@ -22236,7 +22053,6 @@ def x3_tombstone_search(spark, sf_dir):
     — the tombstone set applies as a predicate, not a join."""
     from pyspark.sql import Window
 
-    tune(spark)
     from diepy_spark.operators.clustering import quantize_vectors
 
     v = _vecs(spark, sf_dir)
@@ -22347,7 +22163,6 @@ def x12_dq_expectations(spark, sf_dir):
     bounds are exact cents, uniqueness is count = count(distinct).
     Scale shape: one aggregate per table (map-side combined), a
     6-row union — no joins wider than the rule list."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     li = load_table(spark, sf_dir, "lineitem")
     d = _docs(spark, sf_dir)
@@ -22484,7 +22299,6 @@ def x12_lateness_profile(spark, sf_dir):
     rank pick, one aggregate."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     wa = Window.partitionBy("event_type").orderBy("event_id")
     late = (
@@ -22595,7 +22409,6 @@ def x5_oov_rate(spark, sf_dir):
     raw stream."""
     from diepy_spark.operators.sampling import hash_split
 
-    tune(spark)
     d = hash_split(
         _docs(spark, sf_dir), "doc_id", XSPLIT_WEIGHTS, seed=XSPLIT_SEED
     )
@@ -22695,7 +22508,6 @@ def x8_control_chart(spark, sf_dir):
     aggregate, one per-type lag window, one reduce."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.where("value IS NOT NULL")
@@ -22832,7 +22644,6 @@ def x2_containment_est(spark, sf_dir):
     reuses the verified intersection.  Scale shape: the pair list is
     the shared cached LSH table; sizes join by doc id — no new
     pairwise work."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     sigs = _mh_sigs_cached(spark, sf_dir)
     pairs = _lsh_pairs_cached(spark, sf_dir)
@@ -22924,7 +22735,6 @@ def x1_dedup_manifest(spark, sf_dir):
     CASE over three left-joined keepers.  Scale shape: two hash
     aggregates + the persisted cluster-label table, three keeper joins
     by key — corpus passes: exactly two."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     ex = (
         d.groupBy(F.md5("text").alias("_fp"))
@@ -23029,7 +22839,6 @@ def x8_wilson_ci(spark, sf_dir):
     division, and the bounds evaluate ONE shared formula text (z
     carried as 1.96 exactly) — bit-identical cross-engine.  Scale
     shape: one map-side-combined aggregate, no joins."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     base = (
         ev.where("value IS NOT NULL")
@@ -23120,7 +22929,6 @@ def x10_pack_waste(spark, sf_dir):
     batch id it derives — is partitioning-independent."""
     from diepy_spark.operators.suffixes import block_row_number
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     lens = d.select(
         "doc_id", F.size(tokens_col_ref()).cast("bigint").alias("len")
@@ -23223,7 +23031,6 @@ def x5_yule_k(spark, sf_dir):
     Docs need N > 1 (D divides by N-1).  Scale shape: explode ->
     map-side-combined (doc, type) counts -> per-doc aggregate; no
     windows, no cross-doc state — embarrassingly parallel."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     return (
         d.select("doc_id", F.explode(tokens_col_ref()).alias("tok"))
@@ -23319,7 +23126,6 @@ def x5_collocations(spark, sf_dir):
     counts; marginals re-aggregate FROM the bigram table (vocab-sized,
     never a second corpus pass); the global top-k is TakeOrdered, not
     a single-partition window."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     bg = (
         d.select(tokens_col_ref().alias("toks"))
@@ -23415,7 +23221,6 @@ def x5_burstiness(spark, sf_dir):
     with (tok) tie-break.  Scale shape: the same (doc, term) count
     frame as x5_yule_k aggregated to term grain with map-side combine;
     TakeOrdered for the report — no corpus-dimension windows."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     return (
         d.select("doc_id", F.explode(tokens_col_ref()).alias("tok"))
@@ -23499,7 +23304,6 @@ def x10_token_budget(spark, sf_dir):
     and a per-source window would serialize it through one task."""
     from diepy_spark.operators.suffixes import block_running_sum
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     scored = (
         d.select("doc_id", "source", tokens_col_ref().alias("toks"))
@@ -23642,7 +23446,6 @@ def x11_four_cycles(spark, sf_dir):
     the remaining mitigation is a degree cap with exact handling of the
     heavy tail (Tsourakakis split); the hash projection keeps degrees
     near-uniform here."""
-    tune(spark)
     fc_n = _fc_n(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     e0 = (
@@ -23754,7 +23557,6 @@ def x2_dup_quality(spark, sf_dir):
     against the dup-graph label table (orders of magnitude below the
     corpus), then a 4-row aggregate — no new shuffle beyond the cached
     cluster machinery."""
-    tune(spark)
     d = _docs(spark, sf_dir)
     cc = _cc_cached(spark, sf_dir)
     feats = d.select(
@@ -23873,7 +23675,6 @@ def x10_budget_price(spark, sf_dir):
     max_by/min_by aggregates per source — nothing single-partition."""
     from diepy_spark.operators.suffixes import block_running_sum
 
-    tune(spark)
     d = _docs(spark, sf_dir)
     scored = (
         d.select("doc_id", "source", tokens_col_ref().alias("toks"))
@@ -23996,7 +23797,6 @@ def x6_media_savings(spark, sf_dir):
     all-pairs)."""
     from diepy_spark.operators.clustering import connected_components
 
-    tune(spark)
     d = _docs(spark, sf_dir).where(F.col("doc_id") < MEDIA_DOC_MAX)
     p = (
         M.with_binary_payload(d)

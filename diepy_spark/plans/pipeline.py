@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from diepy_spark.functions.inference import infer_from_dataframe
-from diepy_spark.session import session_cached, tune
+from diepy_spark.session import session_cached
 from diepy_spark.sources.files import apply_schema, read_untyped_csv
 from diepy_spark.sources.registry import load_table
 from diepy_spark.sources.writers import write_csv
@@ -133,7 +133,6 @@ def x7_stream_tumbling(spark, sf_dir):
     """R16's tumbling aggregation, executed by the STREAMING engine
     (watermark + windowed state) over a multi-batch replay, result
     hash-checked against batch SQL."""
-    tune(spark)
     out = _run_stream(ST.tumbling_counts(_events_src(spark, sf_dir), "1 hour", WATERMARK), "append")
     return out.select(
         "w", "event_type", "c", F.round("s", 2).alias("s")
@@ -153,7 +152,6 @@ def x7_stream_topk(spark, sf_dir):
     event types per hour by count (ties: event_type order)."""
     from pyspark.sql import Window
 
-    tune(spark)
     out = _run_stream(
         ST.tumbling_counts(_events_src(spark, sf_dir), "1 hour", WATERMARK), "append"
     )
@@ -168,7 +166,6 @@ def x7_stream_topk(spark, sf_dir):
 
 def x7_stream_sliding(spark, sf_dir):
     """Hopping windows (1 hour, every 15 minutes) via the streaming engine."""
-    tune(spark)
     out = _run_stream(
         ST.sliding_counts(_events_src(spark, sf_dir), "1 hour", "15 minutes", WATERMARK),
         "append",
@@ -188,7 +185,6 @@ def x7_stream_sessions(spark, sf_dir):
     boundary. The batch r34 operator uses the strict-`>` convention with
     an internally consistent oracle — the two conventions are documented,
     deliberate, and each self-consistent."""
-    tune(spark)
     out = _run_stream(ST.session_counts(_events_src(spark, sf_dir), SESSION_GAP, WATERMARK), "append")
     return out.orderBy("user_id", "s_start")
 
@@ -201,7 +197,6 @@ def x7_stream_stateful(spark, sf_dir):
     which equals the batch aggregate."""
     from pyspark.sql import Window
 
-    tune(spark)
     out = _run_stream(ST.sessionize_stateful(_events_src(spark, sf_dir)), "update")
     w = Window.partitionBy("user_id").orderBy(F.col("events_seen").desc())
     return (
@@ -222,7 +217,6 @@ def x7_stream_dedup(spark, sf_dir):
     oracle. Multi-batch: each trigger takes one file from EACH unioned
     copy (the same ts range), so duplicates meet inside the watermark
     horizon and are suppressed across the whole replay."""
-    tune(spark)
     d = _events_stream_dir(spark, sf_dir)
     src = ST.read_events_stream(spark, d, max_files_per_trigger=_mfpt()).unionByName(
         ST.read_events_stream(spark, d, max_files_per_trigger=_mfpt())
@@ -236,7 +230,6 @@ def x7_stream_enrich(spark, sf_dir):
     customer dimension per micro-batch, then tumbling counts/sums per
     nation key (streaming/events.py:enrich_counts). The join is stateless;
     window state is watermark-bounded as in x7_stream_tumbling."""
-    tune(spark)
     # r13 (guide §2.1, the batch-6 stream-static pattern): a stream-static
     # join re-plans and re-evaluates the static side at EVERY trigger —
     # each micro-batch re-scanned the customer parquet and re-built the
@@ -275,7 +268,6 @@ def t1_roundtrip_csv(spark, sf_dir):
     core.py:516-521, while the oracle table is bigint); inferred DATE →
     timestamp (the source column is parquet TIMESTAMP whose values are all
     midnight — the lattice's midnight rule correctly calls them dates)."""
-    tune(spark)
     key = ("roundtrip", sf_dir)
     if key not in _scratch_cache:
         path = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "orders.csv")
@@ -321,7 +313,6 @@ def t8_roundtrip_xlsx(spark, sf_dir):
     driver-bound by design (write_xlsx's max_rows guard documents it),
     hence the absolute subset bound — the distributed formats are
     t1-t4's job."""
-    tune(spark)
     from diepy_spark.sources.excel import read_excel_sheets, sheet_to_untyped_df
     from diepy_spark.sources.writers import write_xlsx
 
@@ -359,7 +350,6 @@ def x7_stream_join(spark, sf_dir):
     straddling batch boundaries exercise cross-batch join state; the
     in-order replay guarantees no late input, so the result equals the
     batch interval join (the oracle)."""
-    tune(spark)
     d = _events_stream_dir(spark, sf_dir)
     clicks = ST.read_events_stream(spark, d, max_files_per_trigger=_mfpt()).where(
         F.col("event_type") == "click"
@@ -388,7 +378,6 @@ def t2_roundtrip_jsonl(spark, sf_dir):
     from diepy_spark.sources.files import read_untyped_jsonl
     from diepy_spark.sources.writers import write_jsonl
 
-    tune(spark)
     key = ("roundtrip_jsonl", sf_dir)
     if key not in _scratch_cache:
         path = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "orders.jsonl")
@@ -428,7 +417,6 @@ def x7_stream_upsert(spark, sf_dir):
 
     from diepy_spark.operators.merge import merge_upsert
 
-    tune(spark)
     src = _events_src(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "ts", "value"
     )
@@ -479,7 +467,6 @@ def t3_roundtrip_parquet(spark, sf_dir):
     lossless including timestamp micros."""
     import tempfile as _tf
 
-    tune(spark)
     key = ("parquet-part", sf_dir)
     if key not in _scratch_cache:
         d = os.path.join(_tf.mkdtemp(prefix="diepy-pq-"), "orders")
@@ -545,7 +532,6 @@ def t6_bucketed_join(spark, sf_dir):
     hash-checks that the bucketed layout is LOSSLESS through
     write->catalog->join). Output: per-nation order counts and exact
     totals from the bucketed join."""
-    tune(spark)
     ot, ct = _bucketed_tables(spark, sf_dir)
     o = spark.table(ot)
     c = spark.table(ct)
@@ -573,7 +559,6 @@ def t7_write_audit_publish(spark, sf_dir):
     and leaves the published path untouched — readers never see a bad
     snapshot. The returned aggregate reads the PUBLISHED data, so the
     hash check proves the staged->audited->published copy is lossless."""
-    tune(spark)
     key = ("wap", sf_dir)
     if key not in _scratch_cache:
         base = tempfile.mkdtemp(prefix="diepy-wap-")
@@ -623,7 +608,6 @@ def x7_stream_outliers(spark, sf_dir):
     stream-static join side."""
     from diepy_spark.operators.robust import freq_median
 
-    tune(spark)
     cents = F.expr("CAST(round(value * 100) AS BIGINT)")
     ev = (
         load_table(spark, sf_dir, "events")
@@ -694,7 +678,6 @@ def t4_roundtrip_orc(spark, sf_dir):
     write→read path is lossless including DECIMAL and DATE columns."""
     import tempfile as _tf
 
-    tune(spark)
     key = ("orc", sf_dir)
     if key not in _scratch_cache:
         d = os.path.join(_tf.mkdtemp(prefix="diepy-orc-"), "orders")
@@ -730,7 +713,6 @@ def x7_stream_ewma(spark, sf_dir):
 
     from diepy_spark.plans.relational import EWMA_ALPHA
 
-    tune(spark)
     out = _run_stream(
         ST.ewma_stateful(_events_src(spark, sf_dir), alpha=EWMA_ALPHA), "update"
     )
@@ -761,7 +743,6 @@ def t9_compaction(spark, sf_dir):
     target instead of a fixed count."""
     import glob as globmod
 
-    tune(spark)
     key = ("compact", sf_dir)
     if key not in _scratch_cache:
         base = tempfile.mkdtemp(prefix="diepy-compact-")
@@ -804,7 +785,6 @@ def t5_roundtrip_nested(spark, sf_dir):
     byte-exactly. Money rides as integer cents (JSON doubles would not
     round-trip bitwise); the item array is sorted before writing so the
     array order is deterministic and the explode replays it."""
-    tune(spark)
     key = ("roundtrip_nested", sf_dir)
     if key not in _scratch_cache:
         li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 4000)
@@ -884,7 +864,6 @@ def x7_stream_cluster_assign(spark, sf_dir):
     )
     from diepy_spark.plans.extended import KM_K, SD_ITER, SD_SCALE, _cents_cached
 
-    tune(spark)
     cents = _cents_cached(spark, sf_dir, KM_K, SD_ITER, SD_SCALE)
     reader = spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
     reader = reader.option("maxFilesPerTrigger", _mfpt())
@@ -928,7 +907,6 @@ def x7_stream_psi(spark, sf_dir):
     after the sink is bounded by the emission."""
     from pyspark.sql import Window
 
-    tune(spark)
     cents = F.expr("CAST(round(value * 100) AS BIGINT)")
     bin_expr = (
         f"least(CAST(floor(c / {SPSI_BIN_CENTS}) AS BIGINT),"
@@ -1030,7 +1008,6 @@ def x7_stream_quantiles(spark, sf_dir):
     days x 64 longs."""
     from pyspark.sql import Window
 
-    tune(spark)
     cents = F.expr("CAST(round(value * 100) AS BIGINT)")
     bin_expr = (
         f"least(CAST(floor(c / {SQNT_BIN_CENTS}) AS BIGINT),"
@@ -1110,7 +1087,6 @@ def x7_stream_ingest(spark, sf_dir):
     from diepy_spark.operators.dedup import tokens_expr
     from diepy_spark.plans.extended import CLEAN_MIN_TOKENS, INC_DEDUP_MOD
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     # r13 (guide §2.1): eager checkpoint — a stream-static join
     # re-evaluates its static side per trigger; the corpus md5+distinct
@@ -1160,7 +1136,6 @@ def x7_stream_takedown(spark, sf_dir):
     persisted takedown table, refreshed per micro-batch epoch."""
     from diepy_spark.plans.extended import TAKEDOWN_MOD
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # r13 (guide §2.1): eager checkpoint — the stream-static join would
     # otherwise re-scan + re-distinct the events history per trigger;
@@ -1314,7 +1289,6 @@ def x7_stream_late(spark, sf_dir):
     depends on batch boundaries, so replay granularity here is
     semantics, not a throughput knob. Sums are exact integer cents —
     the late path must not hide behind float slack."""
-    tune(spark)
     return _late_run(spark, sf_dir)["df"].orderBy("w", "event_type")
 
 
@@ -1350,7 +1324,6 @@ def x7_stream_late_audit(spark, sf_dir):
     dashboards' drop counter and the semantic rule ever disagree, one
     of them is lying; here the disagreement is a hash mismatch. One
     row: arrived / dropped_late / emitted_rows."""
-    tune(spark)
     run = _late_run(spark, sf_dir)
     emitted = run["df"].agg(F.sum("c")).collect()[0][0] or 0
     return spark.createDataFrame(
@@ -1379,7 +1352,6 @@ def x7_stream_hll(spark, sf_dir):
     under the append-mode emission rule."""
     from diepy_spark.operators.sketch import hll_bucket_sql, hll_rho_sql
 
-    tune(spark)
     m, alpha = STREAM_HLL_M, STREAM_HLL_ALPHA
     src = _events_src(spark, sf_dir)
     h = src.select(
@@ -1440,7 +1412,6 @@ def x7_stream_resume(spark, sf_dir):
     import shutil
     import time
 
-    tune(spark)
     key = ("stream-resume", sf_dir)
     if key not in _scratch_cache:
         src_dir = _events_stream_dir(spark, sf_dir)
@@ -1518,7 +1489,6 @@ def t10_schema_evolution(spark, sf_dir):
     required for readers). The hash check proves both generations
     survive the merged read byte-exactly, NULLs where the column
     predates the writer."""
-    tune(spark)
     key = ("schema-evo", sf_dir)
     if key not in _scratch_cache:
         d = os.path.join(tempfile.mkdtemp(prefix="diepy-evo-"), "orders")
@@ -2120,7 +2090,6 @@ def x7_stream_cusum(spark, sf_dir):
     bit-for-bit with no float concern.  Update mode emits the running
     state per touched type each batch; the final row per type (max
     n_events) is the replay's answer."""
-    tune(spark)
     from pyspark.sql import Window
 
     src = (

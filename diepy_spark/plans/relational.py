@@ -13,20 +13,14 @@ Scale notes (100 TB mindset) appear per-query where non-obvious.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.types import DecimalType
 
-from diepy_spark.session import tune
 from diepy_spark.sources.registry import load_table
 
 DEC = DecimalType(18, 2)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)  # deterministic tz + AQE regardless of caller's session
-    return load_table(spark, sf_dir, name)
 
 
 def _dec_sum(col, alias):
@@ -46,7 +40,7 @@ def _dec_sum(col, alias):
 def r1_scan_projection(spark, sf_dir):
     """Ordered projection scan (diepy export analog). Column pruning reaches
     the parquet footer: only 4 of 11 lineitem columns are read."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag").orderBy(
         "l_orderkey", "l_linenumber"
     )
@@ -54,7 +48,7 @@ def r1_scan_projection(spark, sf_dir):
 
 def r2_filter(spark, sf_dir):
     """Filter + projection; both predicates push down to the parquet scan."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.where((F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 100000))
         .select("o_orderkey", "o_totalprice")
@@ -66,7 +60,7 @@ def r3_hash_aggregate(spark, sf_dir):
     """TPC-H Q1 shape: multi-key hash aggregate with exact decimal sums.
     Partial (map-side) aggregation means the shuffle carries only
     |groups| x partitions rows regardless of input size."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -83,9 +77,9 @@ def r3_hash_aggregate(spark, sf_dir):
 def r4_join3_aggregate(spark, sf_dir):
     """3-way equi-join + aggregate. `nation` (25 rows) is explicitly
     broadcast; customer⋈orders shuffles on the join key once."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -97,8 +91,8 @@ def r4_join3_aggregate(spark, sf_dir):
 
 def r5_left_outer_join(spark, sf_dir):
     """Left outer join + count of non-null keys (COUNT(col) semantics)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -110,8 +104,8 @@ def r5_left_outer_join(spark, sf_dir):
 def r6_semi_join(spark, sf_dir):
     """IN-subquery as an explicit left-semi join (what Catalyst rewrites the
     subquery to anyway)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 200000)
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 200000)
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .select("c_custkey", "c_name")
@@ -122,15 +116,15 @@ def r6_semi_join(spark, sf_dir):
 def r7_anti_join(spark, sf_dir):
     """NOT IN as left-anti join. Safe because o_custkey is non-nullable in
     this data (NOT IN with NULLs would yield empty — documented)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 350000)
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 350000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey").orderBy("c_custkey")
 
 
 def r8_topk(spark, sf_dir):
     """Top-k: ORDER BY ... LIMIT k compiles to TakeOrderedAndProject — a
     per-partition heap + single small merge, never a global sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", F.col("o_totalprice").cast(DEC).cast("double").alias("p"))
         .orderBy(F.col("p").desc(), "o_orderkey")
@@ -139,19 +133,19 @@ def r8_topk(spark, sf_dir):
 
 
 def r9_distinct(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select("o_orderpriority").distinct().orderBy("o_orderpriority")
 
 
 def r10_union(spark, sf_dir):
     """UNION (dedup) — union all + distinct, one shuffle."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
     return c.union(s).distinct().orderBy("k")
 
 
 def r11_date_functions(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(
             F.year("o_orderdate").cast("int").alias("y"),
@@ -163,7 +157,7 @@ def r11_date_functions(spark, sf_dir):
 
 
 def r12_string_functions(spark, sf_dir):
-    r = _t(spark, sf_dir, "region")
+    r = load_table(spark, sf_dir, "region")
     return r.select(
         F.upper("r_name").alias("u"),
         F.lower("r_name").alias("l"),
@@ -175,7 +169,7 @@ def r12_string_functions(spark, sf_dir):
 
 
 def r13_conditional_aggregation(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderstatus")
         .agg(
@@ -189,7 +183,7 @@ def r13_conditional_aggregation(spark, sf_dir):
 def r14_ranking_window(spark, sf_dir):
     """Top-2 per group via row_number. Sort happens only within each
     o_custkey partition after one shuffle — no global sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), "o_orderkey")
     return (
         o.select("o_custkey", "o_orderkey", F.row_number().over(w).alias("rk"))
@@ -200,7 +194,7 @@ def r14_ranking_window(spark, sf_dir):
 
 def r15_dedup_accounting(spark, sf_dir):
     """Exact-dup operator (X1) accounting shape."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("total"), F.countDistinct("text").alias("distinct_texts"))
@@ -210,7 +204,7 @@ def r15_dedup_accounting(spark, sf_dir):
 
 def r16_tumbling_window(spark, sf_dir):
     """Batch analog of streaming tumbling window (X7): date_trunc bucketing."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.date_trunc("hour", "ts").alias("w"), "event_type")
         .agg(
@@ -223,7 +217,7 @@ def r16_tumbling_window(spark, sf_dir):
 
 
 def r17_text_stats(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy("source")
         .agg(
@@ -237,7 +231,7 @@ def r17_text_stats(spark, sf_dir):
 
 
 def r18_rollup(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -250,8 +244,8 @@ def r19_range_join(spark, sf_dir):
     join strategy (hash/broadcast); the BETWEEN is a post-join filter, so
     this stays O(matching pairs), not a cartesian. `part` is a broadcast
     candidate at any SF where it fits (it's the small side here)."""
-    p = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
     cond = (p.p_partkey == li.l_partkey) & li.l_quantity.between(
         p.p_size - 5, p.p_size + 5
     )
@@ -268,7 +262,7 @@ def r20_cosine_pairs(spark, sf_dir):
     posexplode gives (i, x); pairs join on position. The vec_id<20 filter
     pushes to the scan, so the pair join is tiny. At scale the bounded
     candidate set comes from LSH bucketing (operators/similarity.py)."""
-    e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 20)
+    e = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 20)
     u = e.select("vec_id", F.posexplode("embedding").alias("i", "x"))
     a = u.alias("a")
     b = u.alias("b")
@@ -288,19 +282,19 @@ def r20_cosine_pairs(spark, sf_dir):
 
 
 def r21_intersect(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
     return c.intersect(s).orderBy("k")
 
 
 def r22_except(spark, sf_dir):
     a = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .where(F.col("o_orderstatus") == "F")
         .select(F.col("o_orderkey").alias("k"))
     )
     b = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .where(F.col("o_totalprice") > 300000)
         .select(F.col("o_orderkey").alias("k"))
     )
@@ -308,7 +302,7 @@ def r22_except(spark, sf_dir):
 
 
 def r23_cube(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -318,7 +312,7 @@ def r23_cube(spark, sf_dir):
 
 def r24_sliding_frame(spark, sf_dir):
     """7-row moving sum over per-day counts (window frame spec)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -333,7 +327,7 @@ def r24_sliding_frame(spark, sf_dir):
 
 
 def r25_json_extraction(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy((F.get_json_object("props", "$.k").cast("int") % 10).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("c"))
@@ -342,7 +336,7 @@ def r25_json_extraction(spark, sf_dir):
 
 
 def r26_lag_window(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("d")
     return (
@@ -355,7 +349,6 @@ def r26_lag_window(spark, sf_dir):
 def r27_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (not derivable from rollup/cube) + the
     grouping() marker — one shuffle, grouping-set expansion map-side."""
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_r27")
     return spark.sql(
         """
@@ -389,7 +382,7 @@ def r28_percentiles(spark, sf_dir):
     (ADVICE r12)."""
     from diepy_spark.operators.robust import freq_quantile_cont_multi
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # r13 (guide §2.3): ONE corpus pass total — n and avg_qty both derive
     # from the value-frequency table inside the operator (avg(l_quantity)
     # == sum(v*c)/sum(c) bit-exactly: l_quantity is an integral grid, so
@@ -434,7 +427,7 @@ def r28b_histogram_quantiles(spark, sf_dir):
     of #groups x #buckets rows — trivially small at any corpus scale. The
     estimate (lower edge of the first bucket whose cumulative count reaches
     ceil(q*n)) is deterministic and identical in DuckDB."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     mb = F.explode(
         F.array(
             F.struct(
@@ -479,7 +472,6 @@ def r28b_histogram_quantiles(spark, sf_dir):
 def r29_exists_subquery(spark, sf_dir):
     """Correlated EXISTS with an extra predicate — decorrelated by Catalyst
     into a semi join (same physical shape as R6)."""
-    tune(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_r29")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_r29")
     return spark.sql(
@@ -495,7 +487,7 @@ def r29_exists_subquery(spark, sf_dir):
 def r30_regexp(spark, sf_dir):
     """Regexp extract/replace/count over customer names — scalar string
     kernel, fully codegen'd, no shuffle before the final sort."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.where(F.col("c_custkey") < 1000)
         .select(
@@ -512,7 +504,7 @@ def r31_array_agg(spark, sf_dir):
     """Sorted array aggregation per group: collect_list is order-
     nondeterministic under parallel aggregation BY DESIGN, so determinism
     comes from sort_array on top (same contract as DuckDB list_sort)."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     return (
         n.groupBy("n_regionkey")
         .agg(
@@ -536,7 +528,7 @@ def r32_asof_join(spark, sf_dir):
     filter; oracle is DuckDB's native ASOF JOIN."""
     from diepy_spark.operators.timeseries import asof_join
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     clicks = e.where(F.col("event_type") == "click").select(
         F.col("user_id"), F.col("ts"), F.col("event_id").alias("click_id")
     )
@@ -561,7 +553,7 @@ def r33_kmv_sketch(spark, sf_dir):
     oracle reproduces the estimate bit-for-bit (operators/sketch.py)."""
     from diepy_spark.operators.sketch import kmv_distinct
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return kmv_distinct(d, on=["lang"], value_col="text", k=64, include_exact=True).orderBy(
         "lang"
     )
@@ -574,7 +566,7 @@ def r34_sessionize(spark, sf_dir):
     the batch analog of the streaming session window."""
     from diepy_spark.operators.timeseries import assign_sessions
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     s = assign_sessions(e, on=["user_id"], ts_col="ts", gap_seconds=1800, tiebreak=["event_id"])
     return (
         s.groupBy("user_id", "session_seq")
@@ -597,7 +589,7 @@ def r35_pivot(spark, sf_dir):
     hidden distinct-collect job at 100 TB; with pinned values it's a single
     hash aggregate with conditional counters, same plan as the oracle's
     CASE form."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -619,7 +611,7 @@ def r51_unpivot(spark, sf_dir):
     the source aggregate. Zero cells are dropped so the long form equals
     the plain GROUP BY the oracle states (the pivot/unpivot pair is
     lossless on the populated cells)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wide = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -649,7 +641,7 @@ def r52_ewma(spark, sf_dir):
     op anywhere in the recurrence fails the hash."""
     from diepy_spark.operators.timeseries import ewma
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sm = ewma(
         ev,
         on=["user_id"],
@@ -676,7 +668,7 @@ def r54_mode(spark, sf_dir):
     value) with map-side combine, then one top-1 window (ties -> the
     lexically smallest value, pinned in both engines). Never Spark's
     mode() (tie choice is engine-internal) and never a value buffer."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     c = o.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -703,7 +695,7 @@ def r55_weighted_median(spark, sf_dir):
     test 2*cum >= total. No per-group value buffer anywhere, so group
     cardinality is the only memory driver — unlike percentile(), which
     buffers every raw value (the r28 scale-shape exception)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     h = (
         li.select(
             "l_returnflag",
@@ -739,7 +731,7 @@ def r56_trailing_range_window(spark, sf_dir):
     day orders share one frame (ties enter together — deterministic
     without a tiebreak). Money stays integer cents inside the frame sum;
     one shuffle on o_custkey."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 500)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 500)
     d = o.select(
         "o_custkey",
         "o_orderkey",
@@ -769,7 +761,7 @@ def r57_window_navigation(spark, sf_dir):
     running frame silently truncates last_value — the classic window
     footgun both engines share). Money stays integer cents until the
     final render; one shuffle on o_custkey."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 300)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 300)
     d = o.select(
         "o_custkey",
         "o_orderkey",
@@ -803,7 +795,7 @@ def r58_rank_functions(spark, sf_dir):
     integer division, so all three are bit-identical cross-engine. One
     shuffle on o_custkey; single-customer partitions hit percent_rank's
     n=1 edge (defined 0.0 in both engines)."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 400)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 400)
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
     return (
         o.select(
@@ -822,7 +814,7 @@ def r36_array_hof(spark, sf_dir):
     embedding column — entirely JVM-side lambda evaluation, zero Python.
     Elements cast to double BEFORE summing so the sequential fold is
     bit-identical to DuckDB's list_aggregate."""
-    v = _t(spark, sf_dir, "embeddings")
+    v = load_table(spark, sf_dir, "embeddings")
     return (
         v.where(F.col("vec_id") < 200)
         .select(
@@ -849,7 +841,7 @@ def r37_window_analytics(spark, sf_dir):
     """Analytic window battery: ntile quartiles, first_value, nth_value with
     an explicit full-partition frame. Single shuffle on o_custkey feeds all
     three functions (one Window spec reused)."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 500)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 500)
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
@@ -870,7 +862,7 @@ def r53_dist_windows(spark, sf_dir):
     cover). One shuffle on o_custkey feeds both; outputs are exact
     rationals of integer ranks/counts so the doubles are bit-identical
     cross-engine (rounded 6 for rendering only)."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 500)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 500)
     w = Window.partitionBy("o_custkey").orderBy(
         F.asc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -890,7 +882,7 @@ def r38_date_arith(spark, sf_dir):
     day difference from an epoch date. Pure codegen'd projection (no
     shuffle before the sort); conventions pinned to the portable forms
     (ISO dow — Spark weekday()+1 == DuckDB isodow)."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") < 5000)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") < 5000)
     return (
         o.select(
             "o_orderkey",
@@ -908,7 +900,7 @@ def r39_scalar_subquery(spark, sf_dir):
     """Correlated scalar subquery: Catalyst decorrelates it to a left outer
     aggregate join (one shuffle pair) — never a per-row subquery execution.
     Customers without orders surface the NULL path."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_r39")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_r39")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_r39")
     return spark.sql(
         """
@@ -923,7 +915,7 @@ def r39_scalar_subquery(spark, sf_dir):
 def r40_null_functions(spark, sf_dir):
     """NULL-handling scalar kernel: coalesce / nullif / least / greatest —
     pure codegen'd projection, no shuffle before the declared sort."""
-    r = _t(spark, sf_dir, "region")
+    r = load_table(spark, sf_dir, "region")
     return (
         r.select(
             "r_regionkey",
@@ -945,7 +937,7 @@ def r41_map_functions(spark, sf_dir):
     Scale: the collect_list group is bounded by |distinct statuses| (3),
     never by row count — the heavy aggregation below it is an ordinary
     two-key count with map-side combine."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per = o.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -977,7 +969,7 @@ def r42_variance_stats(spark, sf_dir):
     exact — and the classic n*Sxx - Sx^2 closed forms divide once into a
     double at the end. One aggregate, map-side combine, same shuffle shape
     as any groupBy."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     x = F.round(F.col("l_quantity") * 100).cast("decimal(38,0)")
     y = F.round(F.col("l_extendedprice") * 100).cast("decimal(38,0)")
     s = li.groupBy("l_returnflag").agg(
@@ -1017,8 +1009,8 @@ def r43_string_agg_filter(spark, sf_dir):
     per group — array_sort on 3 elements, never a whole-group collect.
     FILTER aggregates are plain conditional accumulators (map-side
     combine)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     w = Window.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey")
     )
@@ -1064,7 +1056,7 @@ def r44_resample_gapfill(spark, sf_dir):
     first and last appears, gaps carried forward and flagged."""
     from diepy_spark.operators.timeseries import resample_gapfill
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     out = resample_gapfill(ev, RESAMPLE_EVERY_S, on="event_type")
     return out.select(
         "event_type",
@@ -1092,7 +1084,7 @@ def r45_cohort_retention(spark, sf_dir):
     user-keyed join, where Spark plans a partial distinct before the
     final exchange. Week arithmetic is integer microsecond floor-division
     (identical in both engines, no tz/calendar dependence)."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr(f"unix_micros(cast(ts as timestamp)) div {DAY_US}").alias("d"),
     )
@@ -1129,8 +1121,8 @@ def r46_market_basket(spark, sf_dir):
     basket frame shuffles once on the basket key; the self-join reuses
     that exchange twice (identical subplan → ReusedExchange), and the
     per-pair aggregate is map-side combined. part is a broadcast dim."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     ob = (
         li.join(broadcast(p), li.l_partkey == p.p_partkey)
         .select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("brand"))
@@ -1170,7 +1162,7 @@ def r47_funnel(spark, sf_dir):
     one exchange layout serves the whole chain; stage frames shrink
     monotonically. The final 3-row stage table is driver-sized; its
     conversion-rate windows are free."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
     )
     stage = None
@@ -1213,7 +1205,7 @@ def r48_transitions(spark, sf_dir):
     Scale: one shuffle on user_id for the lag window; the pair aggregate
     is map-side combined into a |types|² frame, and the normalizing
     window runs on that tiny frame, never the events."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts"), "event_id"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1245,7 +1237,7 @@ def r49_rolling_dau(spark, sf_dir):
     and run one exact distinct per target day. No per-day self-joins, no
     quadratic range join; approximate variants swap the final distinct
     for an HLL sketch (x8_hll_distinct) with the same shape."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr(f"unix_micros(cast(ts as timestamp)) div {DAY_US}").alias("d"),
     )
@@ -1287,7 +1279,7 @@ def r50_equidepth_binning(spark, sf_dir):
     boundary frame — the transform is a pure 9-comparison projection, no
     second shuffle of the data. Output: per-bin count and actual price
     range — the sanity report that the bins really are equi-depth."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_totalprice").alias("p"))
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_totalprice").alias("p"))
     h = o.groupBy(F.floor(F.col("p") / R50_W).alias("bucket")).agg(
         F.count(F.lit(1)).alias("c")
     )

@@ -1,13 +1,17 @@
 """The driver hands __spark_entry__ an ARBITRARY SparkSession — none of
-our confs, possibly a hostile timezone. session.tune() must defend at
-runtime on whatever session each query receives (UTC tz, nanosAsLong for
-the events ns-timestamps, Arrow). This pins the verify-skill's manual
+our confs, possibly a hostile timezone. __spark_entry__ applies
+session.tune() to whatever session each query receives (UTC tz,
+nanosAsLong for the events ns-timestamps, Arrow). This pins the verify-skill's manual
 hostile-session probe as a permanent test, using newSession() so the
 probe session has its own SQLConf (session-level state — exactly what
 the driver's session would differ in) while sharing the JVM.
 """
 
 from __future__ import annotations
+
+import os
+
+import pytest
 
 
 def _hostile(spark):
@@ -52,3 +56,28 @@ def test_events_query_survives_hostile_session(spark, sf_oracle):
         f"SELECT * FROM ({e.oracle_sql()['r16_tumbling_window']}) LIMIT 1"
     ).fetchone()
     assert str(first[0]) == str(orc_first[0])
+
+
+@pytest.mark.parametrize("name", ["x12_seasonality", "x7_stream_tumbling"])
+def test_extended_and_pipeline_queries_survive_hostile_session(
+    spark, sf_oracle, name
+):
+    """queries() applies the runtime confs before every plan, so an
+    extended query (day-of-week of events.ts) and a pipeline query (hourly
+    stream windows) hash-match their oracles on the hostile session."""
+    import duckdb
+
+    import __spark_entry__ as e
+    from diepy_spark.sources.registry import TABLES
+    from tools.check_oracle import frame_fingerprint
+
+    ns = _hostile(spark)
+    got = e.queries()[name](ns, sf_oracle).toPandas()
+    assert ns.conf.get("spark.sql.session.timeZone") == "UTC"
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_oracle, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    want = con.execute(e.oracle_sql()[name]).fetchdf()
+    assert frame_fingerprint(got) == frame_fingerprint(want)

@@ -1249,6 +1249,68 @@ def test_bfs_distances_multi_source_min(spark):
     assert one == {1: 0, 2: 1}
 
 
+def _random_graph(n_nodes, n_edges, seed):
+    import random
+
+    rng = random.Random(seed)
+    edges = set()
+    while len(edges) < n_edges:
+        u, v = rng.randrange(n_nodes), rng.randrange(n_nodes)
+        if u != v:
+            edges.add((u, v))
+    return sorted(edges)
+
+
+def test_pagerank_is_personalized_pagerank_seeded_everywhere(spark):
+    """pagerank and personalized_pagerank share one round loop: with every
+    node a seed the personalized ranks are the global ranks."""
+    from diepy_spark.operators.clustering import pagerank, personalized_pagerank
+
+    df = spark.createDataFrame(_random_graph(30, 120, 7), "src long, dst long")
+    nodes = df.select(F.col("src").alias("node")).union(df.select("dst"))
+    got = sorted(pagerank(df, iterations=4).collect())
+    ppr = sorted(personalized_pagerank(df, nodes, iterations=4).collect())
+    assert got == ppr
+    assert len(got) == 30 and len({r["r"] for r in got}) > 1
+
+
+def test_bfs_matches_python_bfs_with_repeated_seed(spark):
+    """per_source_bfs and bfs_distances against a python BFS on a seeded
+    random graph whose seed frame repeats a row: every (source, node) pair
+    is one row, and bfs_distances is the per-node minimum over sources."""
+    from diepy_spark.operators.clustering import bfs_distances, per_source_bfs
+
+    edges = _random_graph(40, 70, 11)
+    adj = {}
+    for u, v in edges:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    sym = spark.createDataFrame(
+        edges + [(v, u) for u, v in edges], "src long, dst long"
+    )
+    seed_ids = [0, 5, 5, 17]
+    seeds = spark.createDataFrame([(s,) for s in seed_ids], "node long")
+    it = 3
+
+    want = []
+    for s in sorted(set(seed_ids)):
+        dist, frontier = {s: 0}, [s]
+        for t in range(1, it + 1):
+            frontier = sorted(
+                {m for n in frontier for m in adj.get(n, ())} - dist.keys()
+            )
+            dist.update((m, t) for m in frontier)
+        want += [(s, n, d) for n, d in dist.items()]
+
+    got = [(r["s"], r["node"], r["d"]) for r in per_source_bfs(sym, seeds, it).collect()]
+    assert sorted(got) == sorted(want)
+    best = {}
+    for _, n, d in want:
+        best[n] = min(d, best.get(n, d))
+    got_min = [(r["node"], r["d"]) for r in bfs_distances(sym, seeds, it).collect()]
+    assert sorted(got_min) == sorted(best.items())
+
+
 def _cosine_fixture(spark):
     """~500 seeded 16-d vectors: ids 0-9 are queries, each near corpus
     vector 100+i, whose exact double 600+i (x2 scales every product and

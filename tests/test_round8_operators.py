@@ -171,6 +171,20 @@ def test_closeness_path_graph(spark):
     assert rows[2].sum_dist == 4 and abs(rows[2].closeness - 0.75) < 1e-9
 
 
+def test_closeness_counts_a_repeated_seed_once(spark):
+    from diepy_spark.operators.clustering import closeness_centrality
+
+    # path 1-2-3-4 with seed 1 listed twice: one source, 3 reached nodes
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "src long, dst long"
+    )
+    sym = edges.unionByName(edges.selectExpr("dst AS src", "src AS dst"))
+    seeds = spark.createDataFrame([(1,), (1,)], "node long")
+    [r] = closeness_centrality(sym, seeds, 4).collect()
+    assert (r.node, r.n_reached, r.sum_dist) == (1, 3, 6)
+    assert abs(r.closeness - 0.5) < 1e-9
+
+
 def test_closeness_isolated_seed(spark):
     from diepy_spark.operators.clustering import closeness_centrality
 
@@ -538,7 +552,7 @@ def test_katz_path_graph(spark):
     rows = {
         r.node: r.x
         for r in katz_centrality(
-            sym, iterations=2, scale=1000, alpha_num=1, alpha_den=4
+            sym, iterations=2, scale=1000, alpha_den=4
         ).collect()
     }
     # x0 = 1000 each. x1: node1 = 1000 + 1000//4 = 1250; node2 = 1000 +
@@ -561,7 +575,7 @@ def test_katz_hub_beats_pagerank_leaf(spark):
     rows = {
         r.node: r.x
         for r in katz_centrality(
-            sym, iterations=3, scale=10**6, alpha_num=1, alpha_den=8
+            sym, iterations=3, scale=10**6, alpha_den=8
         ).collect()
     }
     assert rows[2] > rows[5]  # hub-leaf beats pair node
