@@ -5,8 +5,18 @@
     ctx.import_file("data.csv")             # infer → create → load
     ctx.export_table("data", "out.csv.gz")  # scan → render → write
 
-Error policy: fail-fast by default; ``lenient=True`` restores the
-reference's log-and-continue behavior (quirk Q2).
+An import reads the file twice: the first 20,000 rows for inference, then
+one parse → cast → write action, split across the session's cores
+(split_scan). That action also counts the rows it stored and, per column,
+the non-empty cells that did not fit the inferred type and were stored as
+NULL (apply_schema's observation), so import_file returns the row count
+without another scan.
+
+Error policy: fail-fast by default — an import that stored rejected cells
+raises ValueError after the write, naming the column, the count and an
+example value; ``lenient=True`` logs the same facts and returns the row
+count, and for any other error restores the reference's log-and-continue
+behavior (quirk Q2).
 """
 
 from __future__ import annotations
@@ -15,12 +25,18 @@ import glob as globmod
 import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from diepy_spark.core.database import make_backend
 from diepy_spark.functions.inference import infer_from_dataframe
 from diepy_spark.sources.excel import read_excel_sheets, sheet_to_untyped_df, split_sheet_address
-from diepy_spark.sources.files import apply_schema, is_excel_path, read_untyped_csv
+from diepy_spark.sources.files import (
+    apply_schema,
+    import_report,
+    is_excel_path,
+    read_untyped_csv,
+    split_scan,
+)
 from diepy_spark.sources.writers import write_csv, write_xlsx
 
 logger = logging.getLogger("diepy_spark")
@@ -78,9 +94,11 @@ class DiepyContext:
             specs = infer_from_dataframe(raw)
             if not self.backend.table_exists(table, schema):
                 self.backend.create_table(table, specs, schema)
-            typed = apply_schema(raw, specs)
-            self.backend.append(typed, table, schema, truncate=truncate)
-            return typed.count()
+            obs = Observation()
+            typed = apply_schema(raw, specs, obs)
+            with split_scan(raw):
+                self.backend.append(typed, table, schema, truncate=truncate)
+            return self._stored(obs, specs, filepath)
         except Exception:
             if self.lenient:
                 logger.exception("Had some trouble storing %s", filepath)
@@ -102,15 +120,27 @@ class DiepyContext:
                 sdf, specs = sheet_to_untyped_df(self.spark, pdf)
                 if not self.backend.table_exists(tname, schema):
                     self.backend.create_table(tname, specs, schema)
-                typed = apply_schema(sdf, specs)
+                obs = Observation()
+                typed = apply_schema(sdf, specs, obs)
                 self.backend.append(typed, tname, schema, truncate=truncate)
-                total += typed.count()
+                total += self._stored(obs, specs, f"{path}${sheet_name}")
             except Exception:
                 if self.lenient:
                     logger.exception("Had trouble importing worksheet: %s", sheet_name)
                     continue
                 raise
         return total
+
+    def _stored(self, obs: Observation, specs: list, source: str) -> int:
+        """Rows the append stored; its rejected cells raise ValueError, or
+        are logged when lenient."""
+        rows, problems = import_report(obs, specs)
+        if problems:
+            msg = f"{source}: " + "; ".join(problems)
+            if not self.lenient:
+                raise ValueError(msg)
+            logger.warning(msg)
+        return rows
 
     # ---- export ------------------------------------------------------------
 

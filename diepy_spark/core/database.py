@@ -240,8 +240,18 @@ class WarehouseBackend:
                 f,
                 indent=2,
             )
-        empty = self.spark.createDataFrame([], to_struct_type(specs))
-        empty.write.mode("overwrite").parquet(os.path.join(d, "data"))
+        # the empty data file is written driver-side, without a Spark job;
+        # the footer carries Spark's schema (and its field metadata) as a
+        # Spark write would
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        struct = to_struct_type(specs)
+        arrow = to_arrow_schema(struct).with_metadata(
+            {"org.apache.spark.sql.parquet.row.metadata": struct.json()}
+        )
+        os.makedirs(os.path.join(d, "data"))
+        pq.write_table(arrow.empty_table(), os.path.join(d, "data", "part-00000-empty.parquet"))
 
     def append(
         self,

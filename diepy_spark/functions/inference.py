@@ -19,9 +19,13 @@ Spark design (not a port of the reference's row loop):
 
 - **sample mode (default, reference-faithful):** `df.limit(sample_size)` is
   collected via Arrow (bounded: ≤20k rows no matter how big the table — the
-  same bound the reference uses) and folded column-at-a-time in vectorized
-  fashion. Order dependence demands a sequential fold; doing it on ≤20k
-  driver-side values is exact and O(sample).
+  same bound the reference uses) and folded column by column in row order.
+  Order dependence demands a sequential fold; doing it on ≤20k
+  driver-side values is exact and O(sample). The predicates are pure, so
+  the fold evaluates each one at most once per distinct value (a memo that
+  lives for one `infer_from_dataframe` call); the specs are the same as
+  those of the plain `ColumnSpec.observe` loop, which stays as the
+  reference.
 - **full mode (`sample_size=None`):** one distributed aggregate pass over
   the whole table computes order-INSENSITIVE per-column counts
   (int-like/float-like/date-like/... match counts via regex + try_cast,
@@ -33,10 +37,13 @@ Spark design (not a port of the reference's row loop):
 Type detection fidelity: is_int/is_float mirror Python int()/float()
 acceptance; is_date/is_time/is_datetime use the reference's dateutil
 "two different default dates" trick verbatim in semantics (core.py:575-630).
+is_date answers a valid ISO ``yyyy-MM-dd`` without dateutil (the answer
+dateutil gives too); every other string still goes through dateutil.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -79,6 +86,7 @@ _D1 = datetime(2000, 1, 1, 12, 34, 56, 123456)
 _D2 = datetime(2007, 10, 20, 14, 32, 12, 654321)
 _D1_DATE = datetime(2000, 1, 1, 12, 34, 56)
 _D2_DATE = datetime(2007, 10, 20, 14, 32, 12)
+_ISO_DATE = re.compile(r"([0-9]{4})-([0-9]{2})-([0-9]{2})")
 
 
 def is_int(v) -> bool:
@@ -122,11 +130,24 @@ def is_time(v) -> bool:
 def is_date(v) -> bool:
     """Date-only: parsing with two default TIMES yields both defaults'
     H/M/S back; additionally (reference fallback, core.py:605-606) a value
-    whose own time part is exactly midnight counts as a date."""
+    whose own time part is exactly midnight counts as a date. A valid ISO
+    yyyy-MM-dd is answered without dateutil (tests pin the two paths
+    equal); anything else, such as 2001-02-30, goes through dateutil."""
+    s = str(v)
+    iso = _ISO_DATE.fullmatch(s)
+    if iso:
+        try:
+            datetime(*map(int, iso.groups()))
+            return True
+        except ValueError:
+            pass
+    return _dateutil_date(s)
+
+
+def _dateutil_date(s: str) -> bool:
     if _duparse is None:
         return False
     try:
-        s = str(v)
         v1 = _duparse(s, default=_D1_DATE)
         v2 = _duparse(s, default=_D2_DATE)
         if (
@@ -149,6 +170,27 @@ def is_datetime(v) -> bool:
         return False
 
 
+def _call(pred, value) -> bool:
+    return pred(value)
+
+
+def _memo_test():
+    """A ``test(pred, value)`` that runs each predicate once per distinct
+    value. The predicates are pure, so the answers are the same as
+    ``_call``'s; the values must be of one type (the sample's strings), as
+    ``1``, ``1.0`` and ``True`` are one key."""
+    seen: dict = {}
+
+    def test(pred, value) -> bool:
+        key = (pred, value)
+        hit = seen.get(key)
+        if hit is None:
+            hit = seen[key] = pred(value)
+        return hit
+
+    return test
+
+
 @dataclass
 class ColumnSpec:
     """Folded inference state + emission for one column."""
@@ -163,10 +205,14 @@ class ColumnSpec:
 
     # ---- sequential fold (sample mode) ------------------------------------
     def observe(self, value) -> None:
+        self._observe(value, _call)
+
+    def _observe(self, value, test) -> None:
+        """One fold step; ``test(pred, value)`` evaluates a predicate."""
         if value is None or value == "":
             self.nullable = True
             return
-        self._step_type(value)
+        self._step_type(value, test)
         if self.type == "text":
             n = len(str(value))
             if n > self.length:
@@ -178,13 +224,13 @@ class ColumnSpec:
             if iv > self.max_value:
                 self.max_value = iv
 
-    def _step_type(self, value) -> None:
+    def _step_type(self, value, test) -> None:
         # demotions: only date/float/int can demote, always straight to text
-        if self.type == "date" and not is_date(value):
+        if self.type == "date" and not test(is_date, value):
             self.type = "text"
-        if self.type == "float" and not is_float(value):
+        if self.type == "float" and not test(is_float, value):
             self.type = "text"
-        if self.type == "int" and not is_int(value):
+        if self.type == "int" and not test(is_int, value):
             self.type = "text"
         if self.type == "":
             for probe, tname in (
@@ -194,7 +240,7 @@ class ColumnSpec:
                 (is_time, "time"),
                 (is_datetime, "datetime"),
             ):
-                if probe(value):
+                if test(probe, value):
                     self.type = tname
                     return
             self.type = "text"
@@ -274,10 +320,11 @@ def infer_from_dataframe(
         return _infer_full_scan(df)
     specs = [ColumnSpec(name) for name in normalize_headers(list(df.columns))]
     pdf = df.limit(sample_size).toPandas()
+    test = _memo_test()
     for i, col in enumerate(df.columns):
         spec = specs[i]
         for v in pdf[col]:
-            spec.observe(None if v is None else str(v))
+            spec._observe(None if v is None else str(v), test)
     return specs
 
 

@@ -6,15 +6,19 @@ per-cell cast (core.py:374-389). Spark design: `spark.read.csv` with every
 column as string (distributed, splittable for plain/bzip2; .gz decompresses
 transparently but single-stream per file — document, don't fight), then one
 declarative try_cast projection applies the inferred schema. Everything
-stays in whole-stage codegen: each inferred type has one cast.
+stays in whole-stage codegen: each inferred type has one cast. The action
+that consumes the projection can also count its rows and the cells whose
+cast failed (apply_schema's ``observation``; import_report reads it), and
+split_scan gives a file too small for Spark's own split one split per core.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType
 
@@ -149,44 +153,114 @@ def _multi_format_ts(col, formats):
     return F.coalesce(*[F.try_to_timestamp(col, F.lit(f)) for f in formats])
 
 
-def apply_schema(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
+def _cast(spec: ColumnSpec, raw: str) -> Column:
+    """The typed value of all-string column ``raw``: empty string ⇒ NULL
+    (core.py:376-377), then the cast of ``spec``'s type."""
+    c = F.when(F.col(raw) == "", None).otherwise(F.trim(F.col(raw)))
+    t = spec.type or "text"
+    if t == "datetime":
+        return _multi_format_ts(c, _TS_FORMATS)
+    if t == "date":
+        # _TS_FORMATS fallback: the lattice's midnight rule
+        # (core.py:605-606) classifies datetime-shaped values with a
+        # 00:00:00 time part as dates, so the cast must accept both
+        # shapes.
+        return F.coalesce(
+            *[F.try_to_timestamp(c, F.lit(f)) for f in _DATE_FORMATS],
+            _multi_format_ts(c, _TS_FORMATS),
+        ).cast(DateType())
+    if t == "time":
+        # normalized HH:MM:SS string (Spark has no TIME type — SURVEY §7.5)
+        return F.date_format(_multi_format_ts(c, _TIME_FORMATS), "HH:mm:ss")
+    if t == "text":
+        return F.when(F.col(raw) == "", None).otherwise(F.col(raw))  # keep raw spacing
+    st = spec.spark_type().simpleString()
+    if t == "int":
+        # Reference-faithful truncation (core.py is_int/int(value)):
+        # typed sources (Excel cells arrive as Python floats) can
+        # classify a decimal-valued column as int — int(211445.87)
+        # succeeds — and the reference's insert then TRUNCATES toward
+        # zero. Direct try_cast first (big integers stay exact; a
+        # double round-trip would lose precision past 2^53), the
+        # double route only for decimal-shaped stragglers.
+        return F.coalesce(c.try_cast(st), c.try_cast("double").try_cast(st))
+    return c.try_cast(st)
+
+
+def apply_schema(
+    df: DataFrame, specs: list[ColumnSpec], observation: Observation | None = None
+) -> DataFrame:
     """Apply inferred ColumnSpecs to an all-string DataFrame as ONE
-    projection: empty string ⇒ NULL (core.py:376-377), then a type-directed
-    cast per column. try_cast never throws — unparseable stragglers become
-    NULL (fail-fast policy is enforced upstream at inference time)."""
-    cols = []
-    for spec, raw in zip(specs, df.columns):
-        c = F.when(F.col(raw) == "", None).otherwise(F.trim(F.col(raw)))
-        t = spec.type or "text"
-        if t == "datetime":
-            expr = _multi_format_ts(c, _TS_FORMATS)
-        elif t == "date":
-            # _TS_FORMATS fallback: the lattice's midnight rule
-            # (core.py:605-606) classifies datetime-shaped values with a
-            # 00:00:00 time part as dates, so the cast must accept both
-            # shapes.
-            expr = F.coalesce(
-                *[F.try_to_timestamp(c, F.lit(f)) for f in _DATE_FORMATS],
-                _multi_format_ts(c, _TS_FORMATS),
-            ).cast(DateType())
-        elif t == "time":
-            # normalized HH:MM:SS string (Spark has no TIME type — SURVEY §7.5)
-            expr = F.date_format(_multi_format_ts(c, _TIME_FORMATS), "HH:mm:ss")
-        elif t == "text":
-            expr = F.when(F.col(raw) == "", None).otherwise(F.col(raw))  # keep raw spacing
-        elif t == "int":
-            # Reference-faithful truncation (core.py is_int/int(value)):
-            # typed sources (Excel cells arrive as Python floats) can
-            # classify a decimal-valued column as int — int(211445.87)
-            # succeeds — and the reference's insert then TRUNCATES toward
-            # zero. Direct try_cast first (big integers stay exact; a
-            # double round-trip would lose precision past 2^53), the
-            # double route only for decimal-shaped stragglers.
-            st = spec.spark_type().simpleString()
-            expr = F.coalesce(
-                c.try_cast(st), c.try_cast("double").try_cast(st)
-            )
-        else:
-            expr = c.try_cast(spec.spark_type().simpleString())
-        cols.append(expr.alias(spec.name))
-    return df.select(*cols)
+    projection (_cast per column). try_cast never throws: a non-empty cell
+    that does not fit its column's type — a value outside the inference
+    sample's range or shape — becomes NULL.
+
+    With ``observation``, the action that consumes the result also counts
+    its rows and, per typed column, those rejected cells and the least of
+    their raw values, in the same pass (import_report reads them); text
+    columns cannot reject."""
+    casts = [_cast(spec, raw) for spec, raw in zip(specs, df.columns)]
+    if observation is None:
+        return df.select(*[c.alias(s.name) for c, s in zip(casts, specs)])
+    checked = [i for i, s in enumerate(specs) if (s.type or "text") != "text"]
+    wide = df.select(
+        *[c.alias(f"_c{i}") for i, c in enumerate(casts)],
+        *[F.col(df.columns[i]).alias(f"_raw{i}") for i in checked],
+    )
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    for i in checked:
+        raw = F.col(f"_raw{i}")
+        bad = (raw != "") & F.col(f"_c{i}").isNull()
+        metrics += [
+            F.count_if(bad).alias(f"rejected_{i}"),
+            F.min(F.when(bad, raw)).alias(f"example_{i}"),
+        ]
+    return wide.observe(observation, *metrics).select(
+        *[F.col(f"_c{i}").alias(s.name) for i, s in enumerate(specs)]
+    )
+
+
+def import_report(observation: Observation, specs: list[ColumnSpec]) -> tuple[int, list[str]]:
+    """(rows, one line per column with rejected cells) from the
+    ``observation`` of apply_schema, once its action has run."""
+    m = observation.get
+    problems = [
+        f"column {s.name}: {m[f'rejected_{i}']} non-empty cells are not "
+        f"{s.sql_type()} and were stored as NULL, e.g. {m[f'example_{i}']!r}"
+        for i, s in enumerate(specs)
+        if m.get(f"rejected_{i}")
+    ]
+    return m["rows"], problems
+
+
+_SPLIT_KEY = "spark.sql.files.maxPartitionBytes"
+_MIN_SPLIT = 1 << 20
+
+
+@contextlib.contextmanager
+def split_scan(df: DataFrame):
+    """Scan the files under ``df`` on every core while the block runs.
+
+    Spark packs a file smaller than ``openCostInBytes`` (4 MiB) into one
+    partition, so a 3.4 MB CSV parses, casts and writes on one core.
+    Inside the block ``maxPartitionBytes`` is
+    max(1 MiB, ceil(input bytes / defaultParallelism)) when that is below
+    its value, which gives about one split per core; files under 1 MiB and
+    unsplittable ones (gzip, multiLine) stay one split each, and large
+    inputs keep Spark's own split. The input bytes are the sizes of the
+    files the scan lists, so any Hadoop filesystem works."""
+    spark = df.sparkSession
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    size = sum(
+        int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size())
+    )
+    split = max(_MIN_SPLIT, -(-size // spark.sparkContext.defaultParallelism))
+    if split >= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes():
+        yield
+        return
+    prev = spark.conf.get(_SPLIT_KEY)
+    spark.conf.set(_SPLIT_KEY, str(split))
+    try:
+        yield
+    finally:
+        spark.conf.set(_SPLIT_KEY, prev)

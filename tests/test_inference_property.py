@@ -100,3 +100,35 @@ def test_all_int_columns_never_demote(values):
     else:
         spec = observe_all(values)
         assert spec.type == "int"
+
+
+# ---- the memoized fold of infer_from_dataframe --------------------------------
+
+iso_shaped = st.tuples(
+    st.integers(0, 9999), st.integers(0, 99), st.integers(0, 99)
+).map(lambda t: "%04d-%02d-%02d" % t)
+slash_dates = st.dates().map(lambda d: f"{d.month}/{d.day}/{d.year}")
+mixed = st.one_of(ints, floats, dates, iso_shaped, slash_dates, texts, st.just(""))
+
+
+@given(st.lists(st.lists(mixed, min_size=1, max_size=40), min_size=1, max_size=4))
+@settings(max_examples=300, deadline=None)
+def test_memoized_fold_equals_observe(columns):
+    """One memo shared by every column of a fold, as in
+    infer_from_dataframe; values repeat across and within columns."""
+    from diepy_spark.functions.inference import _memo_test
+
+    test = _memo_test()
+    for values in columns:
+        memo = ColumnSpec("c")
+        for v in values + values[::-1]:
+            memo._observe(v, test)
+        assert memo == observe_all(values + values[::-1])
+
+
+@given(iso_shaped)
+@settings(max_examples=1000, deadline=None)
+def test_is_date_iso_fast_path_equals_dateutil(s):
+    from diepy_spark.functions.inference import _dateutil_date, is_date
+
+    assert is_date(s) == _dateutil_date(s)

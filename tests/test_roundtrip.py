@@ -207,3 +207,96 @@ def test_auto_multiline_quote_census(spark, tmp_path):
     q = read_untyped_csv(spark, str(quoted)).orderBy("a").collect()
     assert len(q) == 2
     assert q[0]["b"] == "line one\nline two"
+
+
+# ---- one-pass import: rejected cells, row count, split scan ------------------
+
+@pytest.fixture()
+def overflow_file(tmp_path):
+    """40,000 rows: ids 1..40000 (the 20,000-row sample infers SMALLINT)
+    and ISO dates with one impossible date at row 30,000."""
+    p = tmp_path / "overflow.csv"
+    lines = ["id,d"] + [
+        f"{i},{'2001-02-30' if i == 30000 else f'2001-01-{i % 28 + 1:02d}'}"
+        for i in range(1, 40001)
+    ]
+    p.write_text("\n".join(lines) + "\n")
+    return str(p)
+
+
+def test_rejected_cells_fail_fast(ctx, overflow_file):
+    with pytest.raises(ValueError) as err:
+        ctx.import_file(overflow_file)
+    msg = str(err.value)
+    assert "column id: 7233 non-empty cells are not SMALLINT" in msg
+    assert "e.g. '32768'" in msg
+    assert "column d: 1 non-empty cells are not DATE" in msg and "'2001-02-30'" in msg
+
+
+def test_rejected_cells_lenient_counts_rows(ctx, overflow_file, caplog):
+    ctx.lenient = True
+    with caplog.at_level("WARNING", logger="diepy_spark"):
+        assert ctx.import_file(overflow_file) == 40000
+    assert "column id: 7233 non-empty cells" in caplog.text
+    assert ctx.backend.read_table("overflow").where("id IS NULL").count() == 7233
+
+
+def test_malformed_date_reported(ctx, tmp_path):
+    """dateutil accepts '11 Oct 2013' as a date, the JVM cast does not:
+    the cell is reported instead of stored as a silent NULL."""
+    p = tmp_path / "dates.csv"
+    p.write_text("n,d\n1,2013-10-11\n2,11 Oct 2013\n3,\n")
+    with pytest.raises(ValueError, match=r"column d: 1 non-empty cells are not DATE.*'11 Oct 2013'"):
+        ctx.import_file(str(p))
+    ctx.lenient = True
+    assert ctx.import_file(str(p), table="dates2") == 3
+
+
+def test_import_splits_scan_across_cores(ctx, spark, tmp_path):
+    """A ~2 MiB CSV is parsed and written as more than one part with every
+    row intact; a small file stays one part; the split conf is restored."""
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    big = tmp_path / "big.csv"
+    ids = range(100_000, 136_000)  # INT from the first row
+    big.write_text("id,note\n" + "".join(f"{i},{'x' * 50}\n" for i in ids))
+    assert big.stat().st_size > 2 * 10**6
+    assert ctx.import_file(str(big)) == 36000
+    small = tmp_path / "small.csv"
+    small.write_text("id,note\n1,a\n2,b\n")
+    assert ctx.import_file(str(small)) == 2
+    assert spark.conf.get(key) == before
+
+    def parts(table):
+        df = ctx.backend.read_table(table)
+        return df.select(F.input_file_name()).distinct().count(), df
+
+    n, df = parts("big")
+    assert n > 1
+    row = df.agg(F.count("*").alias("n"), F.sum("id").alias("s"), F.countDistinct("id")).first()
+    assert (row["n"], row["s"], row[2]) == (36000, sum(ids), 36000)
+    assert parts("small")[0] == 1
+
+
+def test_create_table_schema_matches_spark_write(ctx, spark, tmp_path):
+    """create_table writes its empty data file without a Spark job; the
+    table reads back with the schema of an empty frame written by Spark."""
+    from diepy_spark.functions.inference import ColumnSpec, to_struct_type
+
+    specs = [
+        ColumnSpec("s", "int", max_value=1), ColumnSpec("i", "int", max_value=40000),
+        ColumnSpec("f", "float", nullable=True), ColumnSpec("d", "date"),
+        ColumnSpec("ts", "datetime"), ColumnSpec("t", "text", length=70),
+        ColumnSpec("b", "int", max_value=2**40), ColumnSpec("tm", "time"),
+    ]
+    ctx.backend.create_table("empty", specs)
+    ref = str(tmp_path / "ref")
+    spark.createDataFrame([], to_struct_type(specs)).write.parquet(ref)
+    got, want = ctx.backend.read_table("empty").schema, spark.read.parquet(ref).schema
+    assert got.simpleString() == (
+        "struct<s:smallint,i:int,f:double,d:date,ts:timestamp,t:string,b:bigint,tm:string>"
+    )
+    assert got.json() == want.json()
+    assert ctx.backend.read_table("empty").count() == 0
