@@ -12,9 +12,11 @@ the non-empty cells that did not fit the inferred type and were stored as
 NULL (apply_schema's observation), so import_file returns the row count
 without another scan.
 
-Error policy: fail-fast by default — an import that stored rejected cells
-raises ValueError after the write, naming the column, the count and an
-example value; ``lenient=True`` logs the same facts and returns the row
+Error policy: fail-fast by default — an import with rejected cells raises
+ValueError, naming the column, the count and an example value, and the
+parquet warehouse keeps the table as it was (the write is staged and moved
+in only after the check; a JDBC database keeps the committed rows).
+``lenient=True`` logs the same facts, stores the rows and returns the row
 count, and for any other error restores the reference's log-and-continue
 behavior (quirk Q2).
 """
@@ -83,6 +85,13 @@ class DiepyContext:
         self, filepath: str, table: str | None = None, schema: str | None = None,
         delimiter: str = ",", truncate: bool = False,
     ) -> int | None:
+        """Infer, create (when missing) and load ``filepath`` into
+        ``table``; returns the rows stored. Cells that do not fit their
+        inferred type raise ValueError unless lenient (see the module
+        docstring). On the parquet warehouse that check runs before the
+        rows become visible, so a raising import leaves the table as it
+        was, old rows included under ``truncate``. On a JDBC database
+        the rows have been committed by then and stay."""
         try:
             if is_excel_path(filepath):
                 return self._import_excel(filepath, table, schema, truncate)
@@ -97,8 +106,10 @@ class DiepyContext:
             obs = Observation()
             typed = apply_schema(raw, specs, obs)
             with split_scan(raw):
-                self.backend.append(typed, table, schema, truncate=truncate)
-            return self._stored(obs, specs, filepath)
+                return self.backend.append(
+                    typed, table, schema, truncate=truncate,
+                    check=lambda: self._stored(obs, specs, filepath),
+                )
         except Exception:
             if self.lenient:
                 logger.exception("Had some trouble storing %s", filepath)
@@ -122,8 +133,10 @@ class DiepyContext:
                     self.backend.create_table(tname, specs, schema)
                 obs = Observation()
                 typed = apply_schema(sdf, specs, obs)
-                self.backend.append(typed, tname, schema, truncate=truncate)
-                total += self._stored(obs, specs, f"{path}${sheet_name}")
+                total += self.backend.append(
+                    typed, tname, schema, truncate=truncate,
+                    check=lambda: self._stored(obs, specs, f"{path}${sheet_name}"),
+                )
             except Exception:
                 if self.lenient:
                     logger.exception("Had trouble importing worksheet: %s", sheet_name)

@@ -16,6 +16,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -108,11 +110,16 @@ class JdbcBackend:
         )
 
     def append(
-        self, df: DataFrame, table: str, schema: str | None = None, truncate: bool = False
-    ) -> None:
+        self, df: DataFrame, table: str, schema: str | None = None, truncate: bool = False,
+        check: Callable[[], Any] | None = None,
+    ):
         """One write connection per partition of `df`, batched at 1000
         rows (the reference's executemany batch). A DuckDB file takes
-        these concurrent writers too (tests/test_jdbc_live.py)."""
+        these concurrent writers too (tests/test_jdbc_live.py).
+
+        ``check`` runs after the write and its result is returned. Each
+        partition's connection has committed by then, so the rows stay in
+        the table when ``check`` raises."""
         name = f"{schema}.{table}" if schema else table
         writer = (
             self._opts(df.write.format("jdbc"))
@@ -123,6 +130,7 @@ class JdbcBackend:
             writer.option("truncate", True).mode("overwrite").save()
         else:
             writer.mode("append").save()
+        return check() if check else None
 
     def _reflect_schema(self, name: str):
         """Zero-row probe: the table's Spark schema without moving data
@@ -260,15 +268,38 @@ class WarehouseBackend:
         schema: str | None = None,
         truncate: bool = False,
         partition_by: list[str] | None = None,
-    ) -> None:
+        check: Callable[[], Any] | None = None,
+    ):
         """partition_by: hive-style directory partitioning — scans with a
         predicate on those columns prune whole directories (visible as
-        PartitionFilters in .explain), the first lever for 100 TB tables."""
-        d = os.path.join(self._dir(table, schema), "data")
-        w = df.write.mode("overwrite" if truncate else "append")
+        PartitionFilters in .explain), the first lever for 100 TB tables.
+
+        The write lands in a staging directory beside ``data/``. ``check``
+        (when given) runs next and its result is returned; only then do
+        the staged files move into ``data/`` (or replace it, under
+        ``truncate``). A failed write or a ``check`` that raises leaves
+        the table exactly as it was."""
+        d = self._dir(table, schema)
+        data = os.path.join(d, "data")
+        stage = os.path.join(d, f"_staging-{uuid.uuid4().hex}")
+        w = df.write
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(d)
+        try:
+            w.parquet(stage)
+            result = check() if check else None
+            if truncate:
+                shutil.rmtree(data)
+                os.rename(stage, data)
+            else:
+                for root, _, files in os.walk(stage):
+                    dest = os.path.join(data, os.path.relpath(root, stage))
+                    os.makedirs(dest, exist_ok=True)
+                    for f in files:
+                        os.replace(os.path.join(root, f), os.path.join(dest, f))
+            return result
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
     def read_table(self, table: str, schema: str | None = None) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self._dir(table, schema), "data"))

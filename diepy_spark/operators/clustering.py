@@ -124,29 +124,30 @@ def connected_components(
     is the minimum node id of the node's connected component. Raises if the
     graph hasn't converged after `max_iter` rounds.
 
-    Adaptive execution: when the (deduplicated) edge list is below
-    `local_threshold`, the closure is solved with driver-side union-find —
-    a dedup pair graph is usually a few orders of magnitude smaller than
-    the corpus, and a millisecond union-find beats several sequential
-    shuffle rounds. Above the threshold the distributed large-star/
-    small-star path runs (connected_components_two_phase, rounds ~ log
-    diameter). Both paths reach the same unique min-id fixpoint; pass
-    ``local_threshold=0`` to force the distributed path."""
+    Adaptive execution: when the distinct undirected edge rows (each
+    pair in both directions) number at most `local_threshold`, the
+    closure is solved with driver-side union-find — a dedup pair graph is
+    usually a few orders of magnitude smaller than the corpus, and a
+    millisecond union-find beats several sequential shuffle rounds. Above
+    the threshold the distributed large-star/small-star path runs
+    (connected_components_two_phase, rounds ~ log diameter). Both paths
+    reach the same unique min-id fixpoint; pass ``local_threshold=0`` to
+    force the distributed path."""
     spark = edges.sparkSession
     und = (
         edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
         .unionByName(edges.select(F.col(dst).alias("n"), F.col(src).alias("m")))
         .distinct()
-        .persist()
     )
     if local_threshold > 0:
-        # Probe with a cheap count first: a graph above the threshold must
-        # not pay a threshold-sized collect just to learn it's too big (and
-        # the count also materializes the persist for the distributed path).
-        if und.count() <= local_threshold:
-            head = und.collect()
-            und.unpersist()
+        # One bounded action both sizes and fetches the graph: one row more
+        # than the threshold proves it too big. The driver holds at most
+        # local_threshold + 1 rows, the local path's own bound, and a small
+        # graph never pays a separate count job.
+        head = und.limit(local_threshold + 1).collect()
+        if len(head) <= local_threshold:
             return _local_union_find(spark, head, und.schema["n"].dataType)
+    und = und.persist()
     try:
         return connected_components_two_phase(und, "n", "m", max_iter=max_iter)
     finally:

@@ -112,16 +112,17 @@ def _gate_exact_chain(df, text_col, id_col, min_tokens, min_score, max_dup3, pin
     # the oracle's `ex` CTE groups on the same md5).
     exact_rep = exact_representatives(survivors, text_col, id_col)
     # LAZY localCheckpoint, not persist: connected_components (inside
-    # dedup_corpus) runs its own actions (size probe + label
-    # materialization), and each would otherwise recompute the ENTIRE
-    # gate->dedup pipeline above (measured 4x the runtime). Lazy (not
-    # eager) so the first CC action materializes gate pipeline + pairs +
-    # checkpoint blocks in ONE pass — an eager checkpoint adds a blocking
-    # extra job that measured +60% on this operator at sf0.1. Checkpoint
-    # blocks — unlike CacheManager entries — are reference-counted by the
-    # ContextCleaner: once the caller drops the returned frame they are
-    # GC-reclaimed, and the persisted feat/pairs frames are explicitly
-    # released before clean_corpus returns, so repeated calls never
+    # dedup_corpus) runs its own actions (the pair-graph collect, or the
+    # distributed rounds), and the caller's action reads deduped again;
+    # each would otherwise recompute the ENTIRE gate->dedup pipeline
+    # above (measured 4x the runtime). Lazy (not eager) so the first CC
+    # action materializes gate pipeline + pairs + checkpoint blocks in ONE
+    # pass — an eager checkpoint adds a blocking extra job that measured
+    # +60% on this operator at sf0.1. Checkpoint blocks — unlike
+    # CacheManager entries — are reference-counted by the ContextCleaner:
+    # once the caller drops the returned frame they are GC-reclaimed, and
+    # the persisted feat frame is explicitly released before clean_corpus
+    # returns, so repeated calls never
     # accumulate cache state (pinned by
     # tests/test_operators.py::test_clean_corpus_cache_lifecycle).
     deduped = survivors.join(
@@ -132,20 +133,20 @@ def _gate_exact_chain(df, text_col, id_col, min_tokens, min_score, max_dup3, pin
 
 def _near_dedup(deduped, text_col, id_col, jaccard_threshold, max_df):
     """One representative per n-gram-Jaccard duplicate cluster of
-    ``deduped``; the pair frame is persisted only while the labels are
-    built."""
+    ``deduped``.
+
+    The pair frame is not persisted: connected_components reads it in one
+    action (a small graph's bounded collect; a large graph persists its
+    own undirected edge frame), and both directions of that read share
+    the pair plan's exchanges. dedup_corpus builds the cluster labels
+    EAGERLY (a driver-side union-find frame, or the checkpointed result of
+    the distributed rounds), so by the time it returns, `pairs` (and
+    clean_corpus's `feat`) have been consumed — the returned frame depends
+    only on deduped's checkpoint blocks + the labels."""
     pairs = ngram_jaccard_pairs(
         deduped, threshold=jaccard_threshold, max_df=max_df, text_col=text_col, id_col=id_col
-    ).persist()
-    try:
-        # dedup_corpus materializes the cluster labels EAGERLY (the CC loop
-        # acts per round and localCheckpoints the result), so by the time it
-        # returns, `pairs` (and clean_corpus's `feat`) have been consumed —
-        # the returned frame depends only on deduped's checkpoint blocks +
-        # the checkpointed labels.
-        return dedup_corpus(deduped, pairs, id_col=id_col)
-    finally:
-        pairs.unpersist()
+    )
+    return dedup_corpus(deduped, pairs, id_col=id_col)
 
 
 def corpus_funnel(

@@ -267,10 +267,12 @@ def ngram_jaccard_pairs(
     # Pre-shuffle on the join key: both self-join sides are then the SAME
     # exchange, which Spark's ReuseExchange computes once — without it the
     # planner broadcasts one side and evaluates the kept-shingle subplan
-    # twice. shuffle_hash avoids the sort a merge join would add.
-    kept = sh.join(F.broadcast(stop), "s", "left_anti").repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col("s")
-    )
+    # twice. shuffle_hash avoids the sort a merge join would add. No
+    # partition count: when every join child is an exchange, the planner
+    # resizes them all to spark.sql.shuffle.partitions anyway, and a
+    # counted repartition (REPARTITION_BY_NUM) is one AQE never coalesces,
+    # so a small pair graph would run shuffle.partitions tasks per stage.
+    kept = sh.join(F.broadcast(stop), "s", "left_anti").repartition(F.col("s"))
     a = kept.alias("a")
     b = kept.alias("b")
     common = (
@@ -371,14 +373,10 @@ def minhash_lsh_pairs(
     per-consumer — at 100 TB the signature pass is a full corpus scan."""
     if sigs is None:
         sigs = minhash_signatures(df, num_hashes, n, text_col, id_col)
-    bands = band_frame(sigs, num_hashes, band_size).repartition(
-        # pre-shuffle on the join key → ReuseExchange computes the
-        # signature subplan once for both self-join sides (see
-        # ngram_jaccard_pairs note)
-        df.sparkSession.sparkContext.defaultParallelism,
-        F.col("band"),
-        F.col("sig"),
-    )
+    # pre-shuffle on the join key → ReuseExchange computes the signature
+    # subplan once for both self-join sides; no partition count, so AQE
+    # may coalesce it (see ngram_jaccard_pairs note)
+    bands = band_frame(sigs, num_hashes, band_size).repartition(F.col("band"), F.col("sig"))
     x = bands.alias("x")
     y = bands.alias("y")
     cand = (
@@ -496,10 +494,9 @@ def simhash_candidate_pairs(df: DataFrame, text_col: str = "text", id_col: str =
         )
         .select("d", F.col("cv.chunk").alias("chunk"), F.col("cv.v").alias("v"))
         # pre-shuffle on the join key → ReuseExchange computes the simhash
-        # subplan once for both self-join sides
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, F.col("chunk"), F.col("v")
-        )
+        # subplan once for both self-join sides; no partition count, so AQE
+        # may coalesce it (see ngram_jaccard_pairs note)
+        .repartition(F.col("chunk"), F.col("v"))
     )
     x = chunks.alias("x")
     y = chunks.alias("y")
@@ -736,16 +733,16 @@ def winnow_pairs(
 
     Output: (da, db, n_shared_fp), da < db.
     """
-    spark = df.sparkSession
     # IDENTICAL subplans on both join sides (aliases applied only after the
     # join) + pre-shuffle on the join key -> Spark's ReuseExchange computes
     # the fingerprint index ONCE for both sides (same trick as
-    # minhash_lsh_pairs; asserted in tests/test_plan_shapes.py)
+    # minhash_lsh_pairs; asserted in tests/test_plan_shapes.py); no
+    # partition count, so AQE may coalesce it (see ngram_jaccard_pairs note)
     fp = (
         winnow_fingerprints(df, text_col, id_col, k=k, w=w)
         .select(F.col(id_col).alias("d"), "h")
         .distinct()
-        .repartition(spark.sparkContext.defaultParallelism, F.col("h"))
+        .repartition(F.col("h"))
     )
     a, b = fp.alias("a"), fp.alias("b")
     return (

@@ -474,6 +474,46 @@ def test_two_phase_random_graphs_match_union_find(spark):
         assert two == truth
 
 
+def test_connected_components_local_threshold_boundary(spark, monkeypatch):
+    """A graph of exactly ``local_threshold`` distinct undirected edge
+    rows (each pair in both directions, a self-loop once) is solved on
+    the driver; one row more takes the distributed path. Both equal a
+    plain Python union-find."""
+    import random
+
+    from diepy_spark.operators import clustering as C
+
+    rng = random.Random(5)
+    pairs = {tuple(sorted(rng.sample(range(40), 2))) for _ in range(30)}
+    edges = sorted(pairs) + [(99, 99)]
+    rows = 2 * len(pairs) + 1
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    truth = {x: find(x) for x in parent}
+
+    paths = []
+    for name in ("_local_union_find", "connected_components_two_phase"):
+        fn = getattr(C, name)
+        monkeypatch.setattr(
+            C, name, lambda *a, _fn=fn, _name=name, **k: paths.append(_name) or _fn(*a, **k)
+        )
+    df = spark.createDataFrame(edges, "a long, b long")
+    for threshold, path in ((rows, "_local_union_find"),
+                            (rows - 1, "connected_components_two_phase")):
+        paths.clear()
+        got = C.connected_components(df, local_threshold=threshold).collect()
+        assert paths == [path]
+        assert {r["node"]: r["cluster"] for r in got} == truth
+
+
 # --------------------------------------------------------------------------
 # vocab / tf-idf / weighted sampling / grouped fit / centroids / merge
 # --------------------------------------------------------------------------

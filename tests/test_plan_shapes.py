@@ -273,6 +273,41 @@ def test_winnow_pairs_reuses_fingerprint_exchange(spark):
     assert "ReusedExchange" in plan
 
 
+def test_near_dup_stage_runs_right_sized_shuffles(spark):
+    """The shingle self-join's pre-shuffle carries no partition count: the
+    planner would resize it to spark.sql.shuffle.partitions anyway, and a
+    REPARTITION_BY_NUM exchange is one AQE never coalesces. On ~200
+    documents the exchange is still reused by both join sides, and no
+    stage of clean_corpus runs more tasks than the session has cores."""
+    from diepy_spark.operators.corpus import clean_corpus
+
+    docs = load_table(spark, SF, "documents").where(F.col("doc_id") <= 200)
+    pairs = D.ngram_jaccard_pairs(docs)
+    assert pairs.collect()  # runs the plan read below; the graph is not empty
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    exchanges = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert any("REPARTITION_BY_COL" in ln for ln in exchanges)
+    assert any("ReusedExchange" in ln and "REPARTITION_BY_COL" in ln for ln in exchanges)
+    # the only counted repartitions left are the doc-id spreads
+    assert all("hashpartitioning(doc_id" in ln for ln in exchanges if "REPARTITION_BY_NUM" in ln)
+
+    sc = spark.sparkContext
+    group = "near-dup-right-sized"
+    sc.setJobGroup(group, group)
+    try:
+        clean_corpus(docs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    ran = [
+        st.getStageInfo(s).numCompletedTasks
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    assert ran and max(ran) <= sc.defaultParallelism, ran
+
+
 def test_lang_classify_model_broadcasts(spark):
     """The trained model grid (|langs| x vocab) and the per-lang constant
     frame must BROADCAST into the scoring pass — the per-doc gram frame

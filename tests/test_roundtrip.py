@@ -252,6 +252,38 @@ def test_malformed_date_reported(ctx, tmp_path):
     assert ctx.import_file(str(p), table="dates2") == 3
 
 
+def test_rejected_import_leaves_table_unchanged(ctx, tmp_path):
+    """A fail-fast import stages its write and moves it in only after the
+    rejected-cells check passes: on a raise the table keeps exactly its
+    old rows and files, with or without truncate, and no staging
+    directory is left behind."""
+    good = tmp_path / "good.csv"
+    good.write_text("n,d\n7,2001-02-03\n8,2001-02-04\n")
+    assert ctx.import_file(str(good), table="dates") == 2
+    table_dir = os.path.join(ctx.backend.root, "default", "dates")
+
+    def state():
+        files = sorted(
+            os.path.relpath(os.path.join(root, f), table_dir)
+            for root, _, fs in os.walk(table_dir) for f in fs
+        )
+        return sorted(ctx.backend.read_table("dates").collect()), files
+
+    before = state()
+    bad = tmp_path / "bad.csv"
+    bad.write_text("n,d\n1,2013-10-11\n2,11 Oct 2013\n3,\n")
+    for truncate in (False, True):
+        with pytest.raises(ValueError, match="11 Oct 2013"):
+            ctx.import_file(str(bad), table="dates", truncate=truncate)
+        assert state() == before
+    # a passing import still appends, and truncate still replaces
+    assert ctx.import_file(str(good), table="dates") == 2
+    assert ctx.backend.read_table("dates").count() == 4
+    assert ctx.import_file(str(good), table="dates", truncate=True) == 2
+    assert sorted(ctx.backend.read_table("dates").collect()) == before[0]
+    assert not [f for f in os.listdir(table_dir) if f.startswith("_staging")]
+
+
 def test_import_splits_scan_across_cores(ctx, spark, tmp_path):
     """A ~2 MiB CSV is parsed and written as more than one part with every
     row intact; a small file stays one part; the split conf is restored."""
