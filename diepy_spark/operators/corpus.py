@@ -122,8 +122,7 @@ def _gate_exact_chain(df, text_col, id_col, min_tokens, min_score, max_dup3, pin
     # CacheManager entries — are reference-counted by the ContextCleaner:
     # once the caller drops the returned frame they are GC-reclaimed, and
     # the persisted feat frame is explicitly released before clean_corpus
-    # returns, so repeated calls never
-    # accumulate cache state (pinned by
+    # returns, so repeated calls never accumulate cache state (pinned by
     # tests/test_operators.py::test_clean_corpus_cache_lifecycle).
     deduped = survivors.join(
         exact_rep.select(id_col), id_col, "left_semi"
