@@ -289,7 +289,7 @@ class WarehouseBackend:
             w.parquet(stage)
             result = check() if check else None
             if truncate:
-                shutil.rmtree(data)
+                shutil.rmtree(data, ignore_errors=True)
                 os.rename(stage, data)
             else:
                 for root, _, files in os.walk(stage):
