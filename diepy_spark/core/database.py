@@ -13,6 +13,7 @@ connection URL from diepy.ini picks a backend:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -217,6 +218,11 @@ class JdbcBackend:
         )
 
 
+# create_table's empty data file; the first append that stores a part
+# deletes it
+_PLACEHOLDER = "part-00000-empty.parquet"
+
+
 class WarehouseBackend:
     """Parquet-directory warehouse: <root>/<schema or 'default'>/<table>/.
     Sidecar _diepy_schema.json records the emitted DDL types so the
@@ -259,7 +265,7 @@ class WarehouseBackend:
             {"org.apache.spark.sql.parquet.row.metadata": struct.json()}
         )
         os.makedirs(os.path.join(d, "data"))
-        pq.write_table(arrow.empty_table(), os.path.join(d, "data", "part-00000-empty.parquet"))
+        pq.write_table(arrow.empty_table(), os.path.join(d, "data", _PLACEHOLDER))
 
     def append(
         self,
@@ -278,7 +284,9 @@ class WarehouseBackend:
         (when given) runs next and its result is returned; only then do
         the staged files move into ``data/`` (or replace it, under
         ``truncate``). A failed write or a ``check`` that raises leaves
-        the table exactly as it was."""
+        the table exactly as it was. The first append that stores a part
+        file deletes create_table's empty placeholder, so the table's
+        schema is read from Spark-written footers only."""
         d = self._dir(table, schema)
         data = os.path.join(d, "data")
         stage = os.path.join(d, f"_staging-{uuid.uuid4().hex}")
@@ -292,11 +300,18 @@ class WarehouseBackend:
                 shutil.rmtree(data, ignore_errors=True)
                 os.rename(stage, data)
             else:
+                parts = 0
                 for root, _, files in os.walk(stage):
                     dest = os.path.join(data, os.path.relpath(root, stage))
                     os.makedirs(dest, exist_ok=True)
                     for f in files:
                         os.replace(os.path.join(root, f), os.path.join(dest, f))
+                        parts += f.endswith(".parquet")
+                # Spark reads a table's schema from one footer, picked by
+                # part name; the placeholder's field metadata must not win
+                if parts:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(data, _PLACEHOLDER))
             return result
         finally:
             shutil.rmtree(stage, ignore_errors=True)

@@ -281,11 +281,18 @@ def _local_union_find(spark, rows, node_type) -> DataFrame:
         if a != b:
             lo, hi = (a, b) if a < b else (b, a)
             parent[hi] = lo
-    out = [(x, find(x)) for x in parent]
+    # an Arrow table converts in the JVM; a list of rows would be
+    # unpickled by a Python worker per core
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    t = to_arrow_type(node_type)
     schema = StructType(
         [StructField("node", node_type, False), StructField("cluster", node_type, False)]
     )
-    return spark.createDataFrame(out, schema)
+    table = pa.table({"node": pa.array(list(parent), t),
+                      "cluster": pa.array([find(x) for x in parent], t)})
+    return spark.createDataFrame(table, schema)
 
 
 def _keep_predicate(id_col: str):

@@ -1,9 +1,13 @@
 """Similarity search over embedding columns (SURVEY §2.6 X3).
 
-Embeddings are `array<float>` columns. Cosine is computed with built-in
-higher-order functions (zip_with + aggregate — JVM-side, no UDF); the
-scale paths (LSH buckets, IVF cells) score only same-bucket / same-cell
-pairs.
+Embeddings are `array<float>` columns. Exact search where every stream
+row meets every small-side row (`cosine_topk`, `ivf_assign`: the
+`on=None` case of `topk_by_cosine`) scores each Arrow batch of the stream
+in one vectorized numpy pass (`mapInArrow`, one Python worker per task).
+Every other score — keyed searches, `cosine_pairs`, per-pair `cosine()`
+— is computed with built-in higher-order functions (zip_with + aggregate,
+JVM-side, no UDF); the scale paths (LSH buckets, IVF cells) score only
+same-bucket / same-cell pairs.
 
 Two ways to score a pair, by how many partners a vector meets:
 
@@ -18,12 +22,13 @@ Two ways to score a pair, by how many partners a vector meets:
   norms inside the pair expression touches only the paired vectors,
   while a norm column added before the join would cover the whole table.
 
-Both spellings give bit-identical values: the same float32 products, the
-same double fold order, one division, then rounding. A pair with a zero
-vector scores NULL rather than raising DIVIDE_BY_ZERO under ANSI mode —
-the division is `try_divide`, matching the DuckDB oracle's NULL for
-`x / 0.0` — as does a pair with a NULL embedding or of two different
-lengths; NULL ranks last (`cos DESC NULLS LAST`).
+All three spellings (the Arrow kernel included) give bit-identical
+values: the same float32 products, the same double fold order, one
+division, then rounding. A pair with a zero vector scores NULL rather
+than raising DIVIDE_BY_ZERO under ANSI mode — the division is
+`try_divide`, matching the DuckDB oracle's NULL for `x / 0.0` — as does a
+pair with a NULL embedding or of two different lengths; NULL ranks last
+(`cos DESC NULLS LAST`).
 
 Determinism: cosine values are rounded before any ranking so that top-k
 order (rounded score desc, id asc) is stable across engines and runs.
@@ -82,24 +87,159 @@ def topk_by_cosine(
     k: int,
     on: str | Column | None = None,
 ) -> DataFrame:
-    """Join `stream` with broadcast `small`, score each pair by rounded
-    cosine `cos` and keep the top `k` rows per `per` as rank `rk` (order:
-    cos desc with NULLs last, then `tie` asc — rank ties impossible).
+    """Pair `stream` with the broadcast-sized `small`, score each pair by
+    rounded cosine `cos` and keep the top `k` rows per `per` as rank `rk`
+    (order: cos desc with NULLs last, then `tie` asc — rank ties
+    impossible). `vecs` names the vector column of (`stream`, `small`).
 
-    `vecs` names the vector column of (`stream`, `small`). Each side gets
-    its norm as a column before the join, so each pair costs one dot
-    product. `on` is the join key or condition (None: every pair). The
-    result holds every joined column (norms `_ns`, `_nb` included) plus
-    `cos` and `rk`, for the caller to select from; the `rk <= k` filter
-    over row_number lets Spark plan a partial top-k (WindowGroupLimit)
-    before the window shuffle."""
+    `on` is the join key or condition. With `on`, each side gets its norm
+    as a column before a broadcast join, so each pair costs one dot
+    product; the result holds every joined column (norms `_ns`, `_nb`
+    included) plus `cos` and `rk`.
+
+    With `on=None` every stream row meets every small row. `small` is
+    collected once and each Arrow batch of `stream` is scored by
+    `_arrow_topk` in one `mapInArrow` pass, with the same float arithmetic
+    as `cosine_normed` (bit-identical scores, NULLs and NaNs); a batch
+    emits only the pairs that can still reach the top `k`. The result
+    holds every column of both sides plus `cos` and `rk`. Building the
+    plan runs the collect of `small`.
+
+    Either way the `rk <= k` filter over row_number lets Spark plan a
+    partial top-k (WindowGroupLimit) before the window shuffle."""
     sv, bv = vecs
-    s = stream.withColumn("_ns", _norm(sv))
-    b = F.broadcast(small.withColumn("_nb", _norm(bv)))
-    pairs = s.join(b) if on is None else s.join(b, on)
-    scored = pairs.withColumn("cos", F.round(cosine_normed(bv, sv, "_nb", "_ns"), 4))
+    if on is None:
+        scored = _arrow_topk(stream, small, sv, bv, per, k)
+    else:
+        s = stream.withColumn("_ns", _norm(sv))
+        b = F.broadcast(small.withColumn("_nb", _norm(bv)))
+        scored = s.join(b, on).withColumn("cos", cosine_normed(bv, sv, "_nb", "_ns"))
     w = Window.partitionBy(per).orderBy(F.col("cos").desc(), F.col(tie))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return (
+        scored.withColumn("cos", F.round("cos", 4))
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+    )
+
+
+# Small-side rows scored per pass over one Arrow batch: the float64
+# accumulator holds batch rows x _QUERY_BLOCK scores (20 MB at Spark's
+# default 10,000-row batches), however many rows the small side has.
+_QUERY_BLOCK = 256
+
+# round(cos, 4) gives two scores the same value only when they lie less
+# than its step, 1e-4, apart, so a pair more than that below a batch's
+# k-th best score has k pairs of the same batch strictly ahead of it after
+# rounding and cannot reach the top k. The 1e-12 covers the error of the
+# subtraction and of Spark's decimal rendering of a double.
+_ROUND_MARGIN = 1e-4 + 1e-12
+
+
+def _by_length(arr) -> dict:
+    """The vectors of an Arrow list<float> column grouped by length: each
+    length maps to (row indices, float32 matrix of those vectors as
+    length x rows, float64 norms). A NULL vector, or one with a NULL
+    element, is in no group: its norm is NULL, so each of its pairs
+    scores NULL."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offsets = arr.offsets.to_numpy()
+    starts, lengths = offsets[:-1], np.diff(offsets)
+    ok = ~arr.is_null().to_numpy(zero_copy_only=False)
+    values = arr.values
+    if values.null_count:
+        nulls = np.concatenate(([0], np.cumsum(values.is_null().to_numpy(zero_copy_only=False))))
+        ok &= nulls[offsets[1:]] == nulls[starts]
+    flat = values.to_numpy(zero_copy_only=False)
+    groups = {}
+    for n in np.unique(lengths[ok]).tolist():
+        rows = np.flatnonzero(ok & (lengths == n))
+        mat = flat[starts[rows][None, :] + np.arange(n)[:, None]]
+        sq = np.zeros(len(rows))
+        for x in mat:
+            sq += x * x
+        groups[n] = (rows, mat, np.sqrt(sq))
+    return groups
+
+
+def _dot_grid(a, b):
+    """rows x cols dot products of the columns of `a` (length x rows)
+    with those of `b` (length x cols): each product in float32, summed
+    into float64 in index order — the arithmetic of `_dot`."""
+    import numpy as np
+
+    acc = np.zeros((a.shape[1], b.shape[1]))
+    prod = np.empty(acc.shape, np.float32)
+    for x, y in zip(a, b):
+        acc += np.multiply(x[:, None], y[None, :], out=prod)
+    return acc
+
+
+def _arrow_topk(
+    stream: DataFrame, small: DataFrame, sv: str, bv: str, per: str, k: int
+) -> DataFrame:
+    """Every (stream, small) pair's unrounded cosine `cos`, computed per
+    Arrow batch of `stream`, keeping only the pairs that can reach the
+    top `k` of their `per` key: the pairs within `_ROUND_MARGIN` of the
+    batch's k-th best score, every NaN (it ranks first), and NULLs while
+    fewer than `k` pairs are not NULL. Filtering on a part of a key's
+    pairs — one row of the batch, or one small row in one block — never
+    drops a top-k pair, since it drops only pairs with k pairs of that
+    part ahead of them."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    table = small.toArrow()
+    rows = table.num_rows
+    side = [table.column(c).combine_chunks() for c in range(table.num_columns)]
+    names = stream.columns + table.column_names + ["cos"]
+    by_row = per in stream.columns
+    blocks = [
+        (lo, _by_length(table.column(bv).slice(lo, _QUERY_BLOCK)))
+        for lo in range(0, rows, _QUERY_BLOCK)
+    ]
+    keep_k = max(k, 1)  # k < 1: the window keeps no row anyway
+
+    def score(batches):
+        for batch in batches:
+            mine = _by_length(batch.column(sv))
+            for lo, theirs in blocks:
+                shape = (batch.num_rows, min(_QUERY_BLOCK, rows - lo))
+                cos = np.zeros(shape)
+                null = np.ones(shape, bool)
+                for n in mine.keys() & theirs.keys():
+                    (i, a, na), (j, b, nb) = mine[n], theirs[n]
+                    den = na[:, None] * nb[None, :]
+                    with np.errstate(all="ignore"):
+                        cell = np.ix_(i, j)
+                        cos[cell] = _dot_grid(a, b) / den
+                        null[cell] = den == 0
+                nan = np.isnan(cos) & ~null
+                valid = ~(null | nan)
+                ranked = np.where(valid, cos, -np.inf)
+                axis = 1 if by_row else 0
+                size = shape[axis]
+                kth = -np.inf
+                if size > keep_k:
+                    kth = np.take(np.partition(ranked, size - keep_k, axis), [size - keep_k], axis)
+                short = (~null).sum(axis, keepdims=True) < keep_k
+                keep = (valid & (ranked >= kth - _ROUND_MARGIN)) | nan | (null & short)
+                ii, jj = np.nonzero(keep)
+                yield pa.RecordBatch.from_arrays(
+                    [col.take(ii) for col in batch.columns]
+                    + [col.take(jj + lo) for col in side]
+                    + [pa.array(cos[ii, jj], mask=null[ii, jj])],
+                    names=names,
+                )
+
+    schema = StructType(
+        stream.schema.fields + small.schema.fields + [StructField("cos", DoubleType())]
+    )
+    return stream.mapInArrow(score, schema)
 
 
 def cosine_pairs(
@@ -154,18 +294,15 @@ def cosine_topk(
     """Exact top-k neighbors per query vector, brute force: (qid, cid,
     cos, rk).
 
-    The query side is broadcast (queries are few; the corpus is the big
-    side), so the corpus is scanned once with no shuffle; the per-query
-    top-k is a window over (rounded cos desc, id) — rank ties impossible.
-    Each vector's norm is computed once, before the join, so each
-    (query, doc) pair costs one dot product (`topk_by_cosine`); a zero
-    vector scores NULL and ranks last. The corpus is hash-repartitioned so
-    the dot products use every core even when the source is one small
-    file."""
+    The queries are collected (they are few; the corpus is the big side)
+    and every Arrow batch of the corpus scan is scored against all of
+    them in one vectorized pass (`topk_by_cosine` with `on=None`), so the
+    corpus is scanned once with no shuffle of its own; the per-query top-k
+    is a window over (rounded cos desc, id) — rank ties impossible. A zero
+    or NULL vector scores NULL and ranks last. The corpus keeps its scan's
+    partitioning: a small corpus is one task and one Python worker."""
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    c = corpus.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
+    c = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
     return topk_by_cosine(
         c, q, vecs=("cv", "qv"), per="qid", tie="cid", k=k
     ).select("qid", "cid", "cos", "rk")

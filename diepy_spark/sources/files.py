@@ -149,8 +149,28 @@ _DATE_FORMATS = ("yyyy-MM-dd", "MM/dd/yyyy", "M/d/yyyy", "yyyyMMdd")
 _TIME_FORMATS = ("HH:mm:ss", "H:mm:ss", "HH:mm", "H:mm", "hh:mm:ss a", "h:mm a")
 
 
-def _multi_format_ts(col, formats):
-    return F.coalesce(*[F.try_to_timestamp(col, F.lit(f)) for f in formats])
+# Separators and the `T` of the patterns above (none is a pattern letter
+# in them): a value lacking one that its pattern holds cannot parse, and
+# skipping that format spares the parse exception.
+_LITERALS = ".:/- T"
+
+
+def _multi_format_ts(col, formats, raw):
+    """The first of `formats` that parses `col`, the trimmed value of the
+    cell `raw`. Each format is tried only on cells that hold its pattern's
+    literal characters (`T` in either case, as the parser accepts it).
+    The test reads the raw cell, which holds every character of its
+    trimmed value: a column reference costs nothing to re-read, where
+    each test on `col` would evaluate the trim again."""
+
+    def guarded(f):
+        ts = F.try_to_timestamp(col, F.lit(f))
+        for ch in sorted(set(f) & set(_LITERALS)):
+            held = raw.contains(ch) | raw.contains("t") if ch == "T" else raw.contains(ch)
+            ts = F.when(held, ts)
+        return ts
+
+    return F.coalesce(*[guarded(f) for f in formats])
 
 
 def _cast(spec: ColumnSpec, raw: str) -> Column:
@@ -159,19 +179,16 @@ def _cast(spec: ColumnSpec, raw: str) -> Column:
     c = F.when(F.col(raw) == "", None).otherwise(F.trim(F.col(raw)))
     t = spec.type or "text"
     if t == "datetime":
-        return _multi_format_ts(c, _TS_FORMATS)
+        return _multi_format_ts(c, _TS_FORMATS, F.col(raw))
     if t == "date":
         # _TS_FORMATS fallback: the lattice's midnight rule
         # (core.py:605-606) classifies datetime-shaped values with a
         # 00:00:00 time part as dates, so the cast must accept both
         # shapes.
-        return F.coalesce(
-            *[F.try_to_timestamp(c, F.lit(f)) for f in _DATE_FORMATS],
-            _multi_format_ts(c, _TS_FORMATS),
-        ).cast(DateType())
+        return _multi_format_ts(c, _DATE_FORMATS + _TS_FORMATS, F.col(raw)).cast(DateType())
     if t == "time":
         # normalized HH:MM:SS string (Spark has no TIME type — SURVEY §7.5)
-        return F.date_format(_multi_format_ts(c, _TIME_FORMATS), "HH:mm:ss")
+        return F.date_format(_multi_format_ts(c, _TIME_FORMATS, F.col(raw)), "HH:mm:ss")
     if t == "text":
         return F.when(F.col(raw) == "", None).otherwise(F.col(raw))  # keep raw spacing
     st = spec.spark_type().simpleString()

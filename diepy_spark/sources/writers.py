@@ -87,14 +87,14 @@ def write_xlsx(df: DataFrame, path: str, sheet_name: str, max_rows: int = 1_000_
     in an existing workbook (core.py:338-358, quirk Q10 preserved).
 
     Driver-bound by design (xlsx is not a distributed format); guarded by
-    max_rows so a cluster-scale table can't flatten the driver."""
-    n = df.count()
-    if n > max_rows:
+    max_rows so a cluster-scale table can't flatten the driver: one scan
+    fetches at most max_rows + 1 rows, and one row too many raises."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
         raise ValueError(
-            f"xlsx export is driver-bound; table has {n} rows > guard {max_rows}. "
-            "Export to CSV/parquet instead."
+            f"xlsx export is driver-bound; table has more than {max_rows} rows "
+            "(the guard). Export to CSV/parquet instead."
         )
-    pdf = df.toPandas()
     rows = [list(pdf.columns)] + [
         [v if not (isinstance(v, float) and v != v) else None for v in row]
         for row in pdf.itertuples(index=False, name=None)

@@ -1457,3 +1457,97 @@ def test_topk_scorers_match_per_pair_cosine(spark):
     multi = q.join(probes, "qid").join(cb, "bucket").join(c, "cid")
     got = _rows(S.ann_topk_lsh(queries, corpus, k=k, num_planes=planes, dim=dim, hamming=1))
     assert got == _per_pair_topk(multi, k)
+
+
+def _degenerate_vectors(dim, base):
+    """Vectors that score NULL or NaN: zero, all -0.0, NULL, a NULL
+    element, a NaN, a different length, empty; and one with a -0.0
+    element."""
+    nan = float("nan")
+    return [
+        (base, [0.0] * dim),
+        (base + 1, [-0.0] * dim),
+        (base + 2, None),
+        (base + 3, [None] + [1.0] * (dim - 1)),
+        (base + 4, [nan] + [0.5] * (dim - 1)),
+        (base + 5, [1.0] * (dim + 1)),
+        (base + 6, []),
+        (base + 7, [-0.0] + [2.0] * (dim - 1)),
+    ]
+
+
+def _random_vectors(spark, dim, n, seed):
+    """`n` seeded Gaussian vectors, planted near-copies of vector 0 whose
+    cosines to it differ by less than the 4-digit rounding step (rounding
+    ties spread over the whole id range), and `_degenerate_vectors`."""
+    import random
+
+    rng = random.Random(seed)
+    rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(dim)]) for i in range(n)]
+    v0 = rows[0][1]
+    for j in range(1, n, max(1, n // 12)):
+        eps = rng.uniform(0.0, 0.02)
+        rows[j] = (j, [x + eps * rng.gauss(0.0, 1.0) for x in v0])
+    rows += _degenerate_vectors(dim, 10 * n)
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _nan_safe(rows):
+    return [tuple("NaN" if x != x else x for x in r) for r in rows]
+
+
+@pytest.mark.parametrize(
+    "dim,nq,nc,k",
+    [(1, 20, 400, 5), (3, 300, 400, 3), (64, 12, 600, 10), (100, 8, 30, 50)],
+)
+def test_arrow_topk_matches_per_pair_cosine(spark, dim, nq, nc, k):
+    """The vectorized unkeyed scorer (`topk_by_cosine` with on=None, under
+    cosine_topk and ivf_assign) returns the per-pair formula's rows bit for
+    bit, over many Arrow batches (50 rows each) and, with 300 queries or
+    centroids, several query blocks; k above and below the corpus size;
+    NULL, NaN, zero and mismatched vectors; planted rounding ties."""
+    from pyspark.sql import Window
+
+    v = _random_vectors(spark, dim, nq + nc, seed=dim)
+    queries = v.where((F.col("vec_id") < nq) | (F.col("vec_id") >= 10 * (nq + nc)))
+    corpus = v.where(F.col("vec_id") >= nq)
+    q = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    c = corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
+    try:
+        # unrounded: with k past every pair count no pair is filtered, and
+        # each score equals cosine()'s, NULL for NULL and NaN for NaN
+        every = S._arrow_topk(c, q, "cv", "qv", "qid", 10 * (nq + nc))
+        ref = c.crossJoin(q).select("cid", "qid", S.cosine("qv", "cv").alias("want"))
+        joined = every.join(ref, ["cid", "qid"], "full")
+        assert every.count() == ref.count() == joined.count()
+        assert joined.where(~F.col("cos").eqNullSafe(F.col("want"))).count() == 0
+
+        got = _rows(S.cosine_topk(queries, corpus.repartition(3), k=k))
+        assert _nan_safe(got) == _nan_safe(_per_pair_topk(c.crossJoin(q), k))
+
+        # ivf_assign ranks per stream row: corpus vectors over query "cells"
+        n = min(k, 4)
+        pairs = c.crossJoin(q).select(
+            F.col("cid").alias("vid"), F.col("cv").alias("vv"),
+            F.col("qid").alias("cell"), F.col("qv").alias("ce"),
+        )
+        w = Window.partitionBy("vid").orderBy(F.col("cos").desc(), F.col("cell"))
+        want = sorted(
+            tuple(r) for r in pairs.withColumn("cos", F.round(S.cosine("vv", "ce"), 4))
+            .withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") <= n)
+            .select("vid", "cell", "cos", "rk")
+            .collect()
+        )
+        stream = c.select(F.col("cid").alias("vid"), F.col("cv").alias("vv"))
+        cells = q.select(F.col("qid").alias("cell"), F.col("qv").alias("ce"))
+        scored = S.topk_by_cosine(
+            stream, cells, vecs=("vv", "ce"), per="vid", tie="cell", k=n
+        ).select("vid", "cell", "cos", "rk")
+        assert _nan_safe(sorted(tuple(r) for r in scored.collect())) == _nan_safe(want)
+        assigned = S.ivf_assign(corpus, queries, n=n).collect()
+        assert sorted(tuple(r) for r in assigned) == sorted(r[:2] for r in want)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)

@@ -539,26 +539,24 @@ def test_cuped_broadcasts_scalar_frames(spark, qs):
 
 
 def test_cosine_topk_one_dot_product_per_pair(spark):
-    """Each vector's norm is a column computed below the broadcast
-    nested-loop join; the projection directly above the join scores a
-    pair with exactly one zip_with (the dot product). Exchanges stay the
-    corpus repartition plus the per-query window shuffle."""
+    """The corpus scan feeds one Arrow map that scores every (query, doc)
+    pair in a vectorized kernel: no broadcast nested-loop join, no
+    higher-order dot product, no corpus repartition, and the per-query
+    window shuffle is the only exchange."""
     from diepy_spark.operators.similarity import cosine_topk
     from tools.plan_audit import audit, plan_nodes, subtree
 
     v = load_table(spark, SF, "embeddings")
     plan = plan_of(cosine_topk(v.where(F.col("vec_id") < 5), v.where(F.col("vec_id") >= 5), k=3))
     nodes = plan_nodes(plan)
-    (j,) = [i for i, node in enumerate(nodes) if node[1] == "BroadcastNestedLoopJoin"]
-    _, parent, parent_text = nodes[j - 1]
-    assert parent == "Project"
-    assert parent_text.count("zip_with(") == 1
-    self_zip = r"zip_with\(([\w#]+), \1,"
-    assert len(re.findall(self_zip, plan)) == 2
-    assert sum(len(re.findall(self_zip, text)) for *_, text in subtree(nodes, j)) == 2
-    assert audit(plan)["per_pair_norm"] == 0
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
-    assert "REPARTITION_BY_NUM" in plan
+    (j,) = [i for i, node in enumerate(nodes) if node[1] == "MapInArrow"]
+    below = [name for _, name, _ in subtree(nodes, j)]
+    assert "Scan" in below and "Exchange" not in below
+    a = audit(plan)
+    assert a["bnlj"] == 0 and a["per_pair_norm"] == 0
+    assert "zip_with(" not in plan
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
+    assert "REPARTITION_BY_NUM" not in plan
     assert plan.count("Arguments: hashpartitioning(qid") == 1
     # the per-pair spelling (both norms inside the pair projection) is
     # what the audit counter flags

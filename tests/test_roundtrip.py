@@ -8,6 +8,8 @@ import os
 from datetime import datetime
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from diepy_spark.context import DiepyContext
 from diepy_spark.sources.writers import decorate_filename
@@ -173,6 +175,22 @@ def test_xlsx_roundtrip(ctx, basic_file, tmp_path):
     assert sorted(int(v) for v in back["n"].tolist()) == [1, 40000]
 
 
+def test_write_xlsx_row_guard(spark, tmp_path):
+    """One bounded fetch of max_rows + 1 rows: a table of exactly max_rows
+    rows exports, one row more raises and writes nothing."""
+    from diepy_spark.sources.excel import read_excel_sheets
+    from diepy_spark.sources.writers import write_xlsx
+
+    df = spark.range(1, 6).selectExpr("id AS n")
+    out = str(tmp_path / "five.xlsx")
+    write_xlsx(df, out, "five", max_rows=5)
+    back = read_excel_sheets(out, sheet="five")["five"]
+    assert sorted(int(v) for v in back["n"].tolist()) == [1, 2, 3, 4, 5]
+    with pytest.raises(ValueError, match="more than 4 rows"):
+        write_xlsx(df, str(tmp_path / "four.xlsx"), "four", max_rows=4)
+    assert not (tmp_path / "four.xlsx").exists()
+
+
 def test_single_sheet_addressing(ctx, tmp_path):
     src = tmp_path / "book.xlsx"
     _make_xlsx(src, {"one": {"a": [1]}, "two": {"b": [2]}})
@@ -282,6 +300,82 @@ def test_rejected_import_leaves_table_unchanged(ctx, tmp_path):
     assert ctx.import_file(str(good), table="dates", truncate=True) == 2
     assert sorted(ctx.backend.read_table("dates").collect()) == before[0]
     assert not [f for f in os.listdir(table_dir) if f.startswith("_staging")]
+
+
+@st.composite
+def _datetime_cells(draw):
+    """A cell in one of the shapes of `_TS_FORMATS`, `_DATE_FORMATS` or
+    `_TIME_FORMATS` (numbers in or just out of range, zero-padded or not),
+    or a dateutil-only shape, padded with blanks."""
+    def num(lo, hi):  # mostly in range, sometimes one past either end
+        return draw(st.one_of(st.integers(lo, hi), st.integers(lo - 1, hi + 1)))
+
+    y, mo, d, h, mi, s = num(1, 9998), num(1, 12), num(1, 28), num(0, 23), num(0, 59), num(0, 59)
+    two = "{:02d}".format if draw(st.booleans()) else str
+    frac = draw(st.text("0123456789", min_size=1, max_size=9))
+    sep = draw(st.sampled_from([" ", "T", "t"]))
+    ampm = draw(st.sampled_from(["AM", "pm"]))
+    iso, us = f"{y:04d}-{two(mo)}-{two(d)}", f"{two(mo)}/{two(d)}/{y:04d}"
+    hms, hm = f"{two(h)}:{two(mi)}:{two(s)}", f"{two(h)}:{two(mi)}"
+    shape = draw(st.sampled_from([
+        f"{iso}{sep}{hms}.{frac}", f"{iso}{sep}{hms}", f"{iso} {hm}", f"{us} {hms}",
+        f"{us} {hm}", iso, us, f"{y:04d}{two(mo)}{two(d)}", hms, hm,
+        f"{two(h % 13)}:{two(mi)}:{two(s)} {ampm}", f"{h % 13}:{two(mi)} {ampm}",
+        "1pm", "11 Oct 2013", f"Oct {two(d)} {y} {h % 13}:{two(mi)}{ampm}",
+    ]))
+    pad = draw(st.sampled_from(["", " ", "  "]))
+    return pad + shape + pad
+
+
+@given(st.lists(
+    st.one_of(_datetime_cells(), st.text(".:/- Tt0123456789apm", max_size=24)),
+    min_size=1, max_size=40,
+))
+@example(["2013-10-11t01:02:03", " 2013-10-11T01:02:03.5 ", "2013-10-11 01:02:03.123456789",
+          "1pm", "11 Oct 2013", "10/11/2013 1:02", " 1:02 pm", "20131011", "10/11/2013"])
+@settings(max_examples=40, deadline=None)
+def test_format_guard_keeps_datetime_casts(spark, values):
+    """Trying a format only on values that hold its literal characters
+    gives the same datetime, date and time casts as trying every format."""
+    from pyspark.sql import functions as F
+
+    from diepy_spark.functions.inference import ColumnSpec
+    from diepy_spark.sources.files import _DATE_FORMATS, _TIME_FORMATS, _TS_FORMATS, _cast
+
+    c = F.when(F.col("raw") == "", None).otherwise(F.trim(F.col("raw")))
+
+    def every(formats):
+        return F.coalesce(*[F.try_to_timestamp(c, F.lit(f)) for f in formats])
+
+    want = [
+        every(_TS_FORMATS),
+        every(_DATE_FORMATS + _TS_FORMATS).cast("date"),
+        F.date_format(every(_TIME_FORMATS), "HH:mm:ss"),
+    ]
+    got = [_cast(ColumnSpec("raw", t), "raw") for t in ("datetime", "date", "time")]
+    df = spark.createDataFrame([(v,) for v in values], "raw string")
+    for r in df.select(*want, *got).collect():
+        assert tuple(r[:3]) == tuple(r[3:])
+
+
+def test_table_schema_independent_of_part_names(ctx, tmp_path):
+    """Spark reads a table's schema from one footer, picked by part name.
+    The first stored append deletes create_table's placeholder, whose
+    footer carries field metadata that Spark's parts lack, so the schema
+    is the same whichever way the parts sort."""
+    p = tmp_path / "named.csv"
+    p.write_text("n,d\n7,2001-02-03\n8,2001-02-04\n")
+    assert ctx.import_file(str(p), table="named") == 2
+    data = os.path.join(ctx.backend.root, "default", "named", "data")
+    schemas = []
+    for uid in ("00000000", "ffffffff"):
+        for n, f in enumerate(sorted(os.listdir(data))):
+            if f.endswith(".parquet") and "empty" not in f:
+                os.rename(os.path.join(data, f), os.path.join(data, f"part-{n:05d}-{uid}.parquet"))
+        schemas.append(ctx.backend.read_table("named").schema.json())
+    assert schemas[0] == schemas[1]
+    assert "diepy_type" not in schemas[0]
+    assert ctx.backend.read_table("named").count() == 2
 
 
 def test_import_splits_scan_across_cores(ctx, spark, tmp_path):

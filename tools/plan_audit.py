@@ -5,7 +5,8 @@ tallies the plan-smell counters that predict 100 TB pain:
 
 - parquet scans (re-derived subtrees show up as duplicate scans of the
   same table — the lang_classify/triangle_count disease),
-- exchanges (shuffles) net of ReusedExchange,
+- exchanges (shuffles) net of ReusedExchange (the plan is explained
+  with AQE off, because AQE applies exchange reuse only when it runs),
 - Generate (explode) nodes — duplicated corpus explodes are the most
   expensive re-derivation,
 - BroadcastNestedLoopJoin (the interpreted-condition trap),
@@ -74,6 +75,10 @@ TRAINS_AT_BUILD = {
     "x3_rq_adc",  # level-1 + residual codebook collects at build
     "x3_pq_vs_rq_recall",  # codebook collects at build
     "x3_pq_trained_distortion",  # per-subspace Lloyd's trains at build
+    # unkeyed cosine top-k collects its query (or centroid) side at build
+    "x3_cosine_topk",
+    "x3_ivf_topk",
+    "x3_ndcg",
 }
 
 
@@ -197,8 +202,15 @@ def main() -> int:
         try:
             df = fn(spark, sf_dir)
             buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
+            # AQE plans exchange reuse only at execution; without it the
+            # explained plan shows the static ReusedExchange nodes
+            aqe = spark.conf.get("spark.sql.adaptive.enabled")
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            try:
+                with redirect_stdout(buf):
+                    df.explain("formatted")
+            finally:
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
             rows.append((name, audit(buf.getvalue())))
         except Exception as exc:  # noqa: BLE001 - audit must not abort
             print(f"  ERR {name}: {exc}")
