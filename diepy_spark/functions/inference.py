@@ -47,6 +47,7 @@ import re
 from dataclasses import dataclass, field
 from datetime import datetime
 
+from dateutil.parser import parse as _duparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -61,11 +62,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-
-try:
-    from dateutil.parser import parse as _duparse
-except ImportError:  # pragma: no cover
-    _duparse = None
 
 SAMPLE_SIZE_DEFAULT = 20000
 
@@ -113,8 +109,6 @@ def is_float(v) -> bool:
 def is_time(v) -> bool:
     """Time-only: parsing with two different default DATES yields both
     defaults' Y/M/D back (the value supplied no date part)."""
-    if _duparse is None:
-        return False
     try:
         s = str(v)
         v1 = _duparse(s, default=_D1)
@@ -145,8 +139,6 @@ def is_date(v) -> bool:
 
 
 def _dateutil_date(s: str) -> bool:
-    if _duparse is None:
-        return False
     try:
         v1 = _duparse(s, default=_D1_DATE)
         v2 = _duparse(s, default=_D2_DATE)
@@ -161,8 +153,6 @@ def _dateutil_date(s: str) -> bool:
 
 
 def is_datetime(v) -> bool:
-    if _duparse is None:
-        return False
     try:
         s = str(v)
         return _duparse(s, default=_D1) != _D1 and _duparse(s, default=_D2) != _D2

@@ -15,11 +15,9 @@ At warehouse scale the right tool is a MERGE-capable table format
 skipping, no full-table rewrite. This operator is the FORMAT-FREE
 fallback — plain parquet in, plain DataFrame out — for pipelines that
 haven't adopted a table format; it recomputes the merged result rather
-than committing a delta. sources/table_format.py:merge_into_path is the
-probe-gated router: it runs a real DeltaTable.merge when delta-spark is
-on the classpath and falls back to this operator otherwise
-(tests/test_table_format.py pins which path ran and that both paths
-agree row-for-row).
+than committing a delta. sources/table_format.py:merge_into_path applies
+it to a parquet table at a path and overwrites that path
+(tests/test_table_format.py).
 """
 
 from __future__ import annotations

@@ -485,20 +485,6 @@ def bucket_sql(
     return "CAST(" + " + ".join(terms) + " AS INT)"
 
 
-def lsh_bucket(
-    df: DataFrame, num_planes: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding", seed: str = "ann",
-    dim: int | None = None,
-) -> DataFrame:
-    """(id, bucket) per vector — see bucket_expr. `dim` defaults to the
-    first row's vector length (one tiny job; pass it explicitly in
-    pipelines to keep plan construction job-free)."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    v = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vv"))
-    return v.select("vid", bucket_expr("vv", dim, num_planes, seed).alias("bucket"))
-
-
 def ann_topk_lsh(
     queries: DataFrame, corpus: DataFrame, k: int = 3, num_planes: int = 6,
     id_col: str = "vec_id", vec_col: str = "embedding",

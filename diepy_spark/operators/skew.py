@@ -53,28 +53,3 @@ def salted_join(
         SALT, F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<int>"))
     )
     return salted_left.join(replicated_right, on + [SALT], how).drop(SALT)
-
-
-def salted_distinct_count(
-    df: DataFrame, group_col: str, value_col: str, buckets: int = 16
-) -> DataFrame:
-    """COUNT(DISTINCT value) per group under heavy group skew, two-phase:
-    phase 1 dedups (group, salt, value) — the hot group's distinct work is
-    spread over `buckets` reducers — phase 2 sums partial distinct counts.
-    Exact because the salt is derived from the VALUE: equal values always
-    land in the same bucket, so buckets partition the distinct set."""
-    salted = df.select(
-        F.col(group_col).alias("g"),
-        F.col(value_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(value_col)), F.lit(buckets)).cast("int").alias(SALT),
-    )
-    partial = (
-        salted.dropDuplicates(["g", SALT, "v"])
-        .groupBy("g", SALT)
-        .agg(F.count(F.lit(1)).alias("pc"))
-    )
-    return (
-        partial.groupBy("g")
-        .agg(F.sum("pc").alias("distinct_count"))
-        .select(F.col("g").alias(group_col), "distinct_count")
-    )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from diepy_spark.operators import dedup as D
@@ -262,8 +263,6 @@ def x2_dup_clusters(spark, sf_dir):
     Jaccard near-dup graph. Cluster id = min doc_id of the component —
     a unique fixpoint, so the result is deterministic. Oracle: transitive
     closure via DuckDB recursive CTE over the same pair graph."""
-    from pyspark.sql import Window
-
     cc = _cc_cached(spark, sf_dir)
     return (
         cc.withColumn("cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster")))
@@ -628,8 +627,6 @@ def x3_mips(spark, sf_dir):
     integer dot on the quantized grid, so ranking ties and values are
     bit-identical cross-engine; the query side broadcasts and the corpus
     never shuffles — the same shape cosine_topk pins."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import quantize_vectors
 
     v = _vecs(spark, sf_dir)
@@ -1204,8 +1201,6 @@ def x5_ppl_buckets(spark, sf_dir):
     quantile); output per (lang, tier): doc count, token total, and the
     tier's ppl range. No per-group float sums anywhere — the only
     doubles are ppl values selected (min/max), never accumulated."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     # lm_score is consumed by BOTH the boundary histogram and the tier
     # projection; uncut, each re-runs the two-pass LM (4 corpus explodes,
@@ -2025,8 +2020,6 @@ def x3_knn_classify(spark, sf_dir):
     votes = nn.join(lab, "cid").groupBy("qid", "nlabel").agg(
         F.count(F.lit(1)).alias("votes")
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.col("votes").desc(), F.col("nlabel"))
     pred = (
         votes.withColumn("rn", F.row_number().over(w))
@@ -2055,8 +2048,6 @@ def x9_scd2(spark, sf_dir):
     dimension-table build step of every warehouse). One shuffle on the
     key; both windows (change detection + interval close) share its sort.
     Determinism: ties on o_orderdate break by o_orderkey."""
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"
     )
@@ -2093,8 +2084,6 @@ def x9_scd2_lookup(spark, sf_dir):
     Scale: history build = one key shuffle (two windows share the sort);
     the as-of attach is the union+last_value single sort-merge pass of
     operators/timeseries.py:asof_join — never a range join."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.timeseries import asof_join
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -2140,8 +2129,6 @@ def x12_skew_diag(spark, sf_dir):
     factor (count / mean-per-key). One aggregate builds the key histogram;
     the global stats are windows over the keys-dimension frame, never the
     fact table."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
     keys = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy()
@@ -2235,8 +2222,6 @@ def x12_entropy(spark, sf_dir):
     column's distinct count — the same bounded-state argument as
     freq_median; the corpus is scanned once per column with map-side
     combine."""
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders")
     outs = []
     for c in ENTROPY_COLS:
@@ -2292,8 +2277,6 @@ def x12_mutual_info(spark, sf_dir):
     cells); every pair's joint and marginals re-aggregate that
     checkpointed cube, so adding pairs never rescans orders. All float
     terms fold in cell order (engine-identical), rounded at render."""
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders")
     cube = (
         o.selectExpr(
@@ -2373,8 +2356,6 @@ def x12_volume_anomaly(spark, sf_dir):
     pass; the trailing median is a 7-element sorted-array pick over
     that bounded frame — the same calendar-window shape as
     x12_freshness/x8_cusum."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(F.expr("CAST(date_trunc('day', ts) AS DATE)").alias("day"))
@@ -2626,8 +2607,6 @@ def x5_bpe_pairs(spark, sf_dir):
     pairs, one count — map-side combined, the pair domain is bounded by
     the alphabet squared so the aggregate state is tiny at any corpus
     size. Top BPE_TOP per lang by (count desc, pair)."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     toks = d.select(
         "lang", F.explode(F.expr(D.tokens_expr("text"))).alias("t")
@@ -2799,8 +2778,6 @@ def x12_drift(spark, sf_dir):
     divisions rounded — deterministic cross-engine. One aggregate per
     side over the class dimension; at 100 TB this is two map-side-combined
     scans and a |classes|-row join."""
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders")
     split = F.lit(DRIFT_SPLIT).cast("timestamp")
 
@@ -2858,8 +2835,6 @@ def x12_gaps(spark, sf_dir):
     than the key set — enters the single window that pairs each gap start
     with the next island start. The trailing non-gap after the max key is
     excluded via one broadcast scalar."""
-    from pyspark.sql import Window
-
     keys = (
         load_table(spark, sf_dir, "orders")
         .where(F.col("o_totalprice") > GAP_MIN_PRICE)
@@ -3348,8 +3323,6 @@ def x8_fdr_bh(spark, sf_dir):
     division and window-min comparisons — engine-identical. The BH
     window runs over m rows (the metric dimension, bounded like the
     ppl-bucket windows), not the data."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     pu = (
         ev.selectExpr("event_type", "user_id", f"{_CUPED_CENTS} AS cents")
@@ -3456,8 +3429,6 @@ def x8_mwu(spark, sf_dir):
     2r + c - 1), so U, the tie term sum(t^3 - t), and the cohort counts
     are all exact BIGINTs; the z closed form is the only float layer and
     is textually shared with the oracle (_MWU_* constants)."""
-    from pyspark.sql import Window
-
     # the (cents, cohort) histogram is an exact rollup of the shared
     # session value-frequency artifact (r14) — the events corpus is
     # never re-scanned; counts sum over the dropped event_type key
@@ -3726,8 +3697,6 @@ def x3_cluster_purity(spark, sf_dir):
     majority label's share) plus sizes: the number that says whether the
     learned cells align with the labels kNN/centroid classifiers exploit.
     All counts exact integers; one rounded division per row."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import (
         assign_to_centroids,
         quantize_vectors,
@@ -3800,8 +3769,6 @@ def x8_sprt(spark, sf_dir):
     prefix offsets broadcast back. Values are exact integers, so the
     block decomposition is bit-identical to the sequential walk
     regardless of where range boundaries land."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(
@@ -4193,6 +4160,20 @@ _MK_Z = (
 _DAY_DIV = 86400 * 1_000_000
 
 
+def _day_cents(spark, sf_dir):
+    """Events that carry a value, as (event_type, day, cents): the UTC
+    day number and the value in rounded integer cents."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("value").isNotNull())
+        .selectExpr(
+            "event_type",
+            f"unix_micros(cast(ts as timestamp)) div {_DAY_DIV} AS day",
+            "CAST(round(value * 100) AS BIGINT) AS cents",
+        )
+    )
+
+
 def x8_mann_kendall(spark, sf_dir):
     """MANN–KENDALL trend test over the daily event-count series — the
     nonparametric "is traffic trending?" monitor (Mann 1945, Kendall's
@@ -4255,8 +4236,6 @@ def x8_cusum(spark, sf_dir):
     that calendar-sized frame (single-partition but bounded by
     construction — the documented exception class), and the argmax is a
     1-row TakeOrdered."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events").where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
@@ -4566,8 +4545,6 @@ def x8_trimmed_mean(spark, sf_dir):
     per-bin KEPT mass is pure integer clamp arithmetic
     (least/greatest of cumulative ranks vs the trim cuts), handling
     partial bins exactly. The only float op is the final division."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14)
     h = (
         _ev_vhist_cached(spark, sf_dir)
@@ -5228,8 +5205,6 @@ def x5_zipf(spark, sf_dir):
     windows partition BY LANGUAGE (never global); the five OLS sums
     fold in rank order over the bounded top-rank frame so the float
     accumulation is engine-identical."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     tk = d.select("lang", F.explode(F.expr(D.tokens_expr("text"))).alias("tok"))
     h = (
@@ -5398,8 +5373,6 @@ def x12_psi(spark, sf_dir):
     terms in BIN order (engine-identical accumulation, the x12_entropy
     pattern). At 100 TB: two map-side-combined scans into a 10-row
     frame; everything after is bounded by PSI_NBINS."""
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders").selectExpr(
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c",
         "o_orderdate",
@@ -5768,8 +5741,6 @@ def x9_retention_plan(spark, sf_dir):
     cumulative sum is a window over the bounded calendar frame. The
     executing sibling is x9_takedown (row-level deletes); this is the
     partition-level lifecycle gate."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
@@ -5838,8 +5809,6 @@ def x11_cc_twophase(spark, sf_dir):
     hash match here IS the proof the two algorithms agree; rounds grow
     with log(diameter), each round two self-join exchanges over the
     edge frame and nothing driver-sized anywhere."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import connected_components
 
     cc = connected_components(
@@ -5891,8 +5860,6 @@ def x12_gini(spark, sf_dir):
     group-bounded frame, one float division at the end. Ties in x are
     order-invariant (equal x contribute the same Σi·x under any
     permutation of their positions)."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
 
     def conc(dim):
@@ -6124,8 +6091,6 @@ def x3_pq_vs_rq_recall(spark, sf_dir):
     would move both numbers, and this query is where the movement
     shows)."""
     from diepy_spark.operators.clustering import quantize_vectors
-    from pyspark.sql import Window
-
     v = _vecs(spark, sf_dir)
     qs = v.where(F.col("vec_id") < PQ_NQ)
     cs = v.where(F.col("vec_id") >= PQ_NQ)
@@ -6298,8 +6263,6 @@ def x8_ks_test(spark, sf_dir):
     cum <= 60k, n <= 60k at sf0.1 keeps the product far under 2^63);
     the sqrt layer is float-only in the final reported columns, textually
     shared with the oracle."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14): the
     # per-cohort per-cent counts sum over the dropped event_type key
     hg = (
@@ -6356,8 +6319,6 @@ def x8_wasserstein(spark, sf_dir):
     Scale shape: one corpus collapse to the value-domain histogram,
     then the cumulative + lead windows run over the bounded domain
     frame."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14)
     hg = (
         _ev_vhist_cached(spark, sf_dir)
@@ -6478,8 +6439,6 @@ def x8_qte(spark, sf_dir):
     x8_ks_test bounded-window discipline — no global row rank). The
     quartile pick rule is pure integers (4*cum >= k*n), so every output
     is an exact BIGINT in cents."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14); the
     # artifact's CASE parity and this query's CAST(user_id % 2 = 0 AS
     # INT) coincide (user_id is NOT NULL)
@@ -6666,8 +6625,6 @@ def x8_runs_test(spark, sf_dir):
     Scale shape: one corpus collapse to the bounded day frame; the
     row_number (median) and lag (run boundaries) windows order <= days
     rows — bounded by the calendar, never by the corpus."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
@@ -7280,6 +7237,28 @@ def _bands_union(num_hashes: int, band_size: int) -> str:
     return " UNION ALL ".join(parts)
 
 
+# The MinHash-LSH oracle chain: sig = per-doc signature over _SH_CTES'
+# shingles, bands = its band keys, cand = doc pairs sharing a band key,
+# p = candidates whose exact Jaccard (_JACCARD_CTES) reaches LSH_THRESHOLD.
+_SIG_CTE = f"sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d)"
+_SIG_BANDS_CTES = f"""{_SIG_CTE},
+    bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)})"""
+_LSH_CAND_CTES = f"""{_JACCARD_CTES},
+    {_SIG_BANDS_CTES},
+    cand AS (
+      SELECT DISTINCT x.d AS da, y.d AS db
+      FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.d < y.d
+    )"""
+_LSH_PAIRS_CTES = f"""{_LSH_CAND_CTES},
+    p AS (
+      SELECT c.da, c.db, j.jac FROM cand c JOIN jacs j ON j.da = c.da AND j.db = c.db
+      WHERE j.jac >= {LSH_THRESHOLD}
+    )"""
+# x2_minhash_lsh_pairs' rows, unordered: x2_cross_source_pairs and
+# x2_dedup_savings read them as a derived table.
+_LSH_PAIRS_SQL = f"WITH {_LSH_PAIRS_CTES} SELECT * FROM p"
+
+
 def _lang_hits_sql(lang: str) -> str:
     words = ", ".join(f"'{w}'" for w in LANG_PROFILES[lang])
     return (
@@ -7362,17 +7341,7 @@ EXTENDED_ORACLES: dict[str, str] = {
         WITH {_SH_CTES}
         SELECT d, {_minhash_cols(SIG_NUM_HASHES)} FROM sh GROUP BY d ORDER BY d
     """,
-    "x2_minhash_lsh_pairs": f"""
-        WITH {_JACCARD_CTES},
-        sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d),
-        bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)}),
-        cand AS (
-          SELECT DISTINCT x.d AS da, y.d AS db
-          FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.d < y.d
-        )
-        SELECT c.da, c.db, j.jac FROM cand c JOIN jacs j ON j.da = c.da AND j.db = c.db
-        WHERE j.jac >= {LSH_THRESHOLD} ORDER BY c.da, c.db
-    """,
+    "x2_minhash_lsh_pairs": f"{_LSH_PAIRS_SQL} ORDER BY da, db",
     "x2_ngram_jaccard_pairs": f"""
         WITH {_JACCARD_CTES}
         SELECT da, db, jac FROM jacs WHERE jac >= {JACCARD_THRESHOLD} ORDER BY da, db
@@ -8036,17 +8005,7 @@ _MH_AGREE = " + ".join(
 )
 
 EXTENDED_ORACLES["x2_minhash_est"] = f"""
-    WITH {_JACCARD_CTES},
-    sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d),
-    bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)}),
-    cand AS (
-      SELECT DISTINCT x.d AS da, y.d AS db
-      FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.d < y.d
-    ),
-    p AS (
-      SELECT c.da, c.db, j.jac FROM cand c JOIN jacs j ON j.da = c.da AND j.db = c.db
-      WHERE j.jac >= {LSH_THRESHOLD}
-    )
+    WITH {_LSH_PAIRS_CTES}
     SELECT p.da, p.db, p.jac, ({_MH_AGREE}) / {LSH_NUM_HASHES} AS jac_est
     FROM p JOIN sig sa ON sa.d = p.da JOIN sig sb ON sb.d = p.db
     ORDER BY p.da, p.db
@@ -8334,8 +8293,7 @@ EXTENDED_ORACLES["x11_ppr"] = _ppr_oracle_sql()
 
 EXTENDED_ORACLES["x2_lsh_bucket_health"] = f"""
     WITH {_SH_CTES},
-    sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d),
-    bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)}),
+    {_SIG_BANDS_CTES},
     bsz AS (SELECT band, sig, CAST(count(*) AS BIGINT) AS s
             FROM bands GROUP BY 1, 2)
     SELECT band, CAST(count(*) AS BIGINT) AS n_buckets,
@@ -9064,17 +9022,11 @@ def _temperature_mix_oracle_sql() -> str:
 EXTENDED_ORACLES["x8_temperature_mix"] = _temperature_mix_oracle_sql()
 
 
-def _pq_adc_oracle_sql(k: int = PQ_K) -> str:
-    """Mirror of x3_pq_adc: u = quantized long form, cb = the codebook
-    rows (code j = rank among the PQ_CODES smallest vec_ids, subspace s
-    = (i-1)//subdim), sd = every vector's exact integer distance to
-    every code of its subspace, codes = corpus argmin per (vector,
-    subspace), pairs = ADC sums via the (s, code) lookup join.
-    k parameterized so the round-9 rerank oracle can ask for the
-    wider shortlist."""
-    sub = EMB_DIM // PQ_M
-    return f"""
-        WITH u AS (SELECT vec_id,
+# x3_pq_adc's codebook chain: u = the quantized long form, seeds/cb =
+# the PQ_CODES smallest vec_ids as code rows (code j = rank, subspace s =
+# (i-1)//subdim), sd = every vector's exact integer distance to every
+# code of its subspace.
+_PQ_SD_CTES = f"""u AS (SELECT vec_id,
                      CAST(round(CAST(x AS DOUBLE) * {KM_SCALE}) AS BIGINT) AS x, i
               FROM (SELECT vec_id, unnest(embedding) AS x,
                            generate_subscripts(embedding, 1) AS i
@@ -9083,12 +9035,21 @@ def _pq_adc_oracle_sql(k: int = PQ_K) -> str:
                        CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS j
                 FROM (SELECT DISTINCT vec_id FROM embeddings
                       ORDER BY vec_id LIMIT {PQ_CODES})),
-        cb AS (SELECT s.j, u.i, (u.i - 1) // {sub} AS s, u.x AS c
+        cb AS (SELECT s.j, u.i, (u.i - 1) // {EMB_DIM // PQ_M} AS s, u.x AS c
                FROM seeds s JOIN u ON u.vec_id = s.vec_id),
         sd AS (SELECT u.vec_id, cb.s, cb.j,
                       SUM((u.x - cb.c) * (u.x - cb.c)) AS d
                FROM u JOIN cb ON cb.i = u.i
-               GROUP BY 1, 2, 3),
+               GROUP BY 1, 2, 3)"""
+
+
+def _pq_adc_oracle_sql(k: int = PQ_K) -> str:
+    """Mirror of x3_pq_adc: the _PQ_SD_CTES chain, codes = corpus argmin
+    per (vector, subspace), pairs = ADC sums via the (s, code) lookup join.
+    k parameterized so the round-9 rerank oracle can ask for the
+    wider shortlist."""
+    return f"""
+        WITH {_PQ_SD_CTES},
         codes AS (SELECT vec_id AS cid, s, j AS code FROM (
                     SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
                                ORDER BY d, j) AS rn
@@ -9615,13 +9576,7 @@ EXTENDED_ORACLES["x6_media_dedup"] = """
 
 
 EXTENDED_ORACLES["x2_lsh_curve"] = f"""
-    WITH {_JACCARD_CTES},
-    sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d),
-    bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)}),
-    cand AS (
-      SELECT DISTINCT x.d AS da, y.d AS db
-      FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.d < y.d
-    ),
+    WITH {_LSH_CAND_CTES},
     j AS (
       SELECT least(CAST(floor(jacs.jac * 10) AS BIGINT), 9) AS bucket,
              CASE WHEN cand.da IS NULL THEN 0 ELSE 1 END AS is_cand
@@ -10353,7 +10308,7 @@ def _inc_minhash_oracle_sql() -> str:
 
     return f"""
     WITH {_SH_CTES},
-    sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d),
+    {_SIG_CTE},
     sigi AS (SELECT * FROM sig WHERE d % {INC_DEDUP_MOD} != 0),
     sigb AS (SELECT * FROM sig WHERE d % {INC_DEDUP_MOD} = 0),
     bandsi AS ({bands('sigi')}),
@@ -11337,20 +11292,11 @@ EXTENDED_ORACLES["x3_embedding_drift"] = f"""
     FROM num ORDER BY label
 """
 
-# Loud guard: .replace silently no-ops if the upstream oracle's ORDER BY
-# text ever changes, which would leave an ORDER BY inside a derived-table
-# subquery (x2_cross_source_pairs / x2_dedup_savings reuse this body).
-assert "ORDER BY c.da, c.db" in EXTENDED_ORACLES["x2_minhash_lsh_pairs"], (
-    "x2_minhash_lsh_pairs oracle shape changed"
-)
-_XSRC_PAIRS_SQL = EXTENDED_ORACLES["x2_minhash_lsh_pairs"].replace(
-    "ORDER BY c.da, c.db", ""
-)
 EXTENDED_ORACLES["x2_cross_source_pairs"] = f"""
     SELECT least(d1.source, d2.source) AS src_a,
            greatest(d1.source, d2.source) AS src_b,
            CAST(count(*) AS BIGINT) AS n_pairs
-    FROM ({_XSRC_PAIRS_SQL}) p
+    FROM ({_LSH_PAIRS_SQL}) p
     JOIN documents d1 ON d1.doc_id = p.da
     JOIN documents d2 ON d2.doc_id = p.db
     GROUP BY 1, 2 ORDER BY 1, 2
@@ -11362,23 +11308,8 @@ def _pq_distortion_oracle_sql() -> str:
     (quantized long form -> codebook rows -> every vector's exact
     integer distance to every code of its subspace), then per-(vector,
     subspace) min and the m-row per-subspace aggregate."""
-    sub = EMB_DIM // PQ_M
     return f"""
-        WITH u AS (SELECT vec_id,
-                     CAST(round(CAST(x AS DOUBLE) * {KM_SCALE}) AS BIGINT) AS x, i
-              FROM (SELECT vec_id, unnest(embedding) AS x,
-                           generate_subscripts(embedding, 1) AS i
-                    FROM embeddings)),
-        seeds AS (SELECT vec_id,
-                       CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS j
-                FROM (SELECT DISTINCT vec_id FROM embeddings
-                      ORDER BY vec_id LIMIT {PQ_CODES})),
-        cb AS (SELECT s.j, u.i, (u.i - 1) // {sub} AS s, u.x AS c
-               FROM seeds s JOIN u ON u.vec_id = s.vec_id),
-        sd AS (SELECT u.vec_id, cb.s, cb.j,
-                      SUM((u.x - cb.c) * (u.x - cb.c)) AS d
-               FROM u JOIN cb ON cb.i = u.i
-               GROUP BY 1, 2, 3),
+        WITH {_PQ_SD_CTES},
         best AS (SELECT vec_id, s, min(d) AS err FROM sd GROUP BY 1, 2)
         SELECT CAST(s AS INT) AS s,
                CAST(count(*) AS BIGINT) AS n_vecs,
@@ -11399,7 +11330,7 @@ _DEDUP_CURVE_VALUES = ", ".join(
 EXTENDED_ORACLES["x2_dedup_savings"] = f"""
     WITH t(thr) AS (VALUES {_DEDUP_CURVE_VALUES}),
     e AS (SELECT t.thr, p.da, p.db
-          FROM ({_XSRC_PAIRS_SQL}) p JOIN t ON p.jac >= t.thr),
+          FROM ({_LSH_PAIRS_SQL}) p JOIN t ON p.jac >= t.thr),
     np AS (SELECT thr, CAST(count(*) AS BIGINT) AS n_pairs
            FROM e GROUP BY 1),
     fd AS (SELECT DISTINCT thr, db FROM e),
@@ -11631,21 +11562,7 @@ def _rq_distortion_oracle_sql() -> str:
     error aggregate."""
     sub = EMB_DIM // PQ_M
     return f"""
-        WITH u AS (SELECT vec_id,
-                     CAST(round(CAST(x AS DOUBLE) * {KM_SCALE}) AS BIGINT) AS x, i
-              FROM (SELECT vec_id, unnest(embedding) AS x,
-                           generate_subscripts(embedding, 1) AS i
-                    FROM embeddings)),
-        seeds AS (SELECT vec_id,
-                       CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS j
-                FROM (SELECT DISTINCT vec_id FROM embeddings
-                      ORDER BY vec_id LIMIT {PQ_CODES})),
-        cb AS (SELECT s.j, u.i, (u.i - 1) // {sub} AS s, u.x AS c
-               FROM seeds s JOIN u ON u.vec_id = s.vec_id),
-        sd AS (SELECT u.vec_id, cb.s, cb.j,
-                      SUM((u.x - cb.c) * (u.x - cb.c)) AS d
-               FROM u JOIN cb ON cb.i = u.i
-               GROUP BY 1, 2, 3),
+        WITH {_PQ_SD_CTES},
         codes AS (SELECT vec_id, s, j AS code FROM (
                     SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
                                ORDER BY d, j) AS rn FROM sd) WHERE rn = 1),
@@ -12659,14 +12576,8 @@ def x8_theil_sen(spark, sf_dir):
     on events rows. At a 10-year spine, swap the all-pairs join for
     the repeated-median variant on a day-bucketed subsample — the
     estimator degrades gracefully; the corpus aggregate is unchanged."""
-    ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.where(F.col("value").isNotNull())
-        .selectExpr(
-            "event_type",
-            f"unix_micros(cast(ts as timestamp)) div {_DAY_DIV} AS day",
-            "CAST(round(value * 100) AS BIGINT) AS cents",
-        )
+        _day_cents(spark, sf_dir)
         .groupBy("event_type", "day")
         .agg(F.sum("cents").cast("bigint").alias("v"))
         .localCheckpoint(eager=False)  # bounded: types x calendar days
@@ -12681,8 +12592,6 @@ def x8_theil_sen(spark, sf_dir):
         "d2",
         "CAST(v2 - v1 AS DOUBLE) / CAST(d2 - d1 AS DOUBLE) AS slope",
     )
-    from pyspark.sql import Window
-
     wr = Window.partitionBy("event_type").orderBy("slope", "d1", "d2")
     wn = Window.partitionBy("event_type")
     rk = pairs.select(
@@ -12963,8 +12872,6 @@ def x2_url_dedup(spark, sf_dir):
     Scale shape: ONE shuffle on url_norm (row_number window over many
     small per-URL partitions — never a global window), then a
     map-side-combined rollup to the bounded domain frame."""
-    from pyspark.sql import Window
-
     u = _url_frame(spark, sf_dir)
     w = Window.partitionBy("url_norm").orderBy("doc_id")
     r = u.select(
@@ -13239,8 +13146,6 @@ def x8_kruskal_wallis(spark, sf_dir):
     group of each value (row_number over the per-cents partition), so
     group sums, N and the tie sum all come out of ONE aggregation
     chain — no 1-row crossJoins (the x8_chisq margin discipline)."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14):
     # per-(cents, type) counts sum over the dropped parity key
     hg0 = (
@@ -13342,14 +13247,8 @@ EXTENDED_ORACLES["x8_kruskal_wallis"] = f"""
 def _daily_cv(spark, sf_dir):
     """Per-(event_type, day) volume/revenue frame shared by the
     Spearman and Kendall queries — bounded by types x calendar days."""
-    ev = load_table(spark, sf_dir, "events")
     return (
-        ev.where(F.col("value").isNotNull())
-        .selectExpr(
-            "event_type",
-            f"unix_micros(cast(ts as timestamp)) div {_DAY_DIV} AS day",
-            "CAST(round(value * 100) AS BIGINT) AS cents",
-        )
+        _day_cents(spark, sf_dir)
         .groupBy("event_type", "day")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("c"),
@@ -13383,8 +13282,6 @@ def x8_spearman(spark, sf_dir):
     shared _PEARSON_R text over those sums — one float formula at the
     end. Scale shape: one corpus aggregate collapses to the bounded
     daily frame; all windows partition by event_type within it."""
-    from pyspark.sql import Window
-
     d = _daily_cv(spark, sf_dir)
     wc = Window.partitionBy("event_type").orderBy("c")
     wtc = Window.partitionBy("event_type", "c")
@@ -13585,8 +13482,6 @@ def x5_unigram_train(spark, sf_dir):
     UNI_MAX_PIECE; the rank window partitions by the length class
     (never a SinglePartition exchange); the normalizer comes from the
     pack-array/explode shape — zero joins."""
-    from pyspark.sql import Window
-
     wd = (
         _unigram_words(spark, sf_dir)
         .groupBy("w")
@@ -13681,8 +13576,6 @@ def _uni_score_sql(array_open: str, array_close: str, size_fn: str,
 def _uni_scored_cached(spark, sf_dir):
     """(piece, sc): the seed vocabulary with its integer ladder scores —
     the persisted tokenizer artifact x5_unigram_encode segments with."""
-    from pyspark.sql import Window
-
     wd = _unigram_words(spark, sf_dir).groupBy("w").agg(
         F.sum("n").cast("bigint").alias("n")
     )
@@ -14279,8 +14172,6 @@ def x8_survival_km(spark, sf_dir):
     bounded by 3 x the calendar span — and every window below runs
     partitioned BY ARM over that bounded frame (no single-partition
     funnel anywhere)."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     e = ev.where("user_id IS NOT NULL").selectExpr(
         "user_id",
@@ -14685,8 +14576,6 @@ def x8_friedman(spark, sf_dir):
     attribution flags (row_number = 1) fold day count and tie term
     into the same per-type aggregation chain — no joins, no
     crossJoins (the x8_kruskal_wallis packing discipline)."""
-    from pyspark.sql import Window
-
     dv = _daily_cv(spark, sf_dir).select("event_type", "day", "v")
     w_day = Window.partitionBy("day")
     cnts = dv.withColumn("k_day", F.count(F.lit(1)).over(w_day))
@@ -15030,8 +14919,6 @@ def x5_source_divergence(spark, sf_dir):
     corpus-wide token dimension aggregates FROM that frame (never
     re-tokenizes); source totals are a bounded broadcast and the
     global total rides them via a window over the |sources|-row frame."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     tokc = (
         d.select("source", F.explode(F.expr(D.tokens_expr("text"))).alias("tok"))
@@ -15136,8 +15023,6 @@ def x3_mmr(spark, sf_dir):
     top-MMR_POOL window runs on BOUNDED frames (pool, its pairwise sim
     matrix, the k unrolled argmax rounds — each a qid-partitioned
     window over <= queries x pool rows, checkpointed per round)."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import quantize_vectors
 
     v = _vecs(spark, sf_dir)
@@ -15323,8 +15208,6 @@ def x10_curriculum(spark, sf_dir):
     aggregate, which map-side combines into CUR_TIERS rows); the
     cumulative windows run over that tier-bounded frame (the
     documented bounded single-partition class)."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     qs = T.quality_score(d).select("doc_id", "n_tokens", "score")
     tiers = (
@@ -15457,8 +15340,6 @@ def x8_levene(spark, sf_dir):
     the ANOVA fold all run on it — the cumulative window partitions BY
     GROUP, the median dimension broadcasts back, no second corpus
     pass."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14)
     hist = (
         _ev_vhist_cached(spark, sf_dir)
@@ -15596,8 +15477,6 @@ def x8_cohort_retention(spark, sf_dir):
     user key (same-key shuffle). The triangle itself is bounded
     (weeks x weeks), and the cohort-size denominator rides a window
     PARTITIONED BY COHORT over it — no single-partition funnel."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     uw = (
         ev.where("user_id IS NOT NULL")
@@ -15695,8 +15574,6 @@ def x5_keyness(spark, sf_dir):
     frame as x5_source_divergence; the corpus token dimension
     aggregates from it; source totals broadcast; the per-source rank
     is a window partitioned BY SOURCE over the vocab-bounded frame."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     tokc = (
         d.select(
@@ -15992,8 +15869,6 @@ def x8_mood_median(spark, sf_dir):
     median attaches back by an equi-join on cents against the
     BROADCAST bounded frame (no 1-row crossJoin, no BNLJ); the packed
     chi2 runs as higher-order functions over the 2k-cell array."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14)
     hist = (
         _ev_vhist_cached(spark, sf_dir)
@@ -16570,8 +16445,6 @@ def x10_loo_ablation(spark, sf_dir):
     Scale shape: ONE corpus pass (tokenize + stopword fold per row,
     no shuffle before the per-source aggregate); the global totals
     ride a window over the |sources|-row bounded frame."""
-    from pyspark.sql import Window
-
     en_list = ", ".join(f"'{w}'" for w in LANG_PROFILES["en"])
     d = _docs(spark, sf_dir)
     per = (
@@ -17213,8 +17086,6 @@ def x5_term_dispersion(spark, sf_dir):
     Scale shape: the same single tokenize-pass (source, token) count
     frame; the top-K term dimension is a vocab-frame rank broadcast
     back; per-term aggregation carries the bounded source dimension."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     tokc = (
         d.select(
@@ -17319,8 +17190,6 @@ def x3_cluster_quality(spark, sf_dir):
         assign_to_centroids,
         quantize_vectors,
     )
-    from pyspark.sql import Window
-
     v = _vecs(spark, sf_dir)
     # r13: same _cents_cached reuse as x3_kmeans — the partition being
     # evaluated IS x3_kmeans' assignment, so derive it from the shared
@@ -17514,8 +17383,6 @@ def x3_hybrid_rank(spark, sf_dir):
     rows), so fusion is arithmetic on bounded frames; the dense side
     broadcasts the probe vectors and never shuffles the corpus (the
     cosine_topk shape); the lexical side reuses the cached BM25 run."""
-    from pyspark.sql import Window
-
     lex = _bm25_topk_cached(spark, sf_dir)
     d = _docs(spark, sf_dir)
     probes = (
@@ -17795,8 +17662,6 @@ def x5_unigram_em(spark, sf_dir):
     cells; per-iter piece tables vocabulary-sized, checkpointed and
     broadcast into the next round's grid join — zero corpus-sized
     shuffles after the first aggregate)."""
-    from pyspark.sql import Window
-
     wd = (
         _unigram_words(spark, sf_dir)
         .groupBy("w")
@@ -18334,8 +18199,6 @@ def x3_adc_rerank(spark, sf_dir):
     touching raw vectors, exactly why the pattern scales; the exact
     baseline here is the same brute-force instrument frame
     x3_pq_vs_rq_recall pins."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import quantize_vectors
     from diepy_spark.operators.similarity import pq_adc_topk
 
@@ -18856,16 +18719,8 @@ def x8_cusum_changepoint(spark, sf_dir):
     Scale shape: one map-side-combined daily aggregate, one
     per-type ordered window for the running sum (types partition the
     work), one argmax row per type — no joins, no explodes."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.where("value IS NOT NULL")
-        .selectExpr(
-            "event_type",
-            f"unix_micros(cast(ts as timestamp)) div {_DAY_DIV} AS day",
-            "CAST(round(value * 100) AS BIGINT) AS cents",
-        )
+        _day_cents(spark, sf_dir)
         .groupBy("event_type", "day")
         .agg(F.sum("cents").cast("bigint").alias("v"))
     )
@@ -19048,14 +18903,8 @@ def x8_fdr_sign(spark, sf_dir):
     sort is over n_types rows. The DuckDB oracle pads the CDF folds
     to a uniform mx iterations (the list_reduce cross-row hazard —
     tests/test_fold_stability.py)."""
-    ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.where(F.col("value").isNotNull())
-        .selectExpr(
-            "event_type",
-            f"unix_micros(cast(ts as timestamp)) div {_DAY_DIV} AS day",
-            "CAST(round(value * 100) AS BIGINT) AS cents",
-        )
+        _day_cents(spark, sf_dir)
         .groupBy("event_type", "day")
         .agg(F.sum("cents").cast("bigint").alias("v"))
         .localCheckpoint(eager=False)  # bounded: types x calendar days
@@ -19115,8 +18964,6 @@ def x8_fdr_sign(spark, sf_dir):
             " AS p_common",
         )
     )
-    from pyspark.sql import Window
-
     wall = Window.orderBy(F.col("p_common").asc(), F.col("event_type"))
     wtot = Window.partitionBy()
     ranked = (
@@ -19333,17 +19180,7 @@ def _bbit_oracle_sql() -> str:
     )
     H = LSH_NUM_HASHES
     return f"""
-    WITH {_JACCARD_CTES},
-    sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d),
-    bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)}),
-    cand AS (
-      SELECT DISTINCT x.d AS da, y.d AS db
-      FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.d < y.d
-    ),
-    p AS (
-      SELECT c.da, c.db, j.jac FROM cand c JOIN jacs j ON j.da = c.da AND j.db = c.db
-      WHERE j.jac >= {LSH_THRESHOLD}
-    )
+    WITH {_LSH_PAIRS_CTES}
     SELECT p.da, p.db, p.jac,
            ({_MH_AGREE}) / {H} AS jac_est,
            round(CAST(16 * ({agree_b4}) - {H} AS DOUBLE) / (15 * {H}), 6) AS jac_est_b4,
@@ -19788,8 +19625,6 @@ def x12_tail_index(spark, sf_dir):
     ties at the boundary contribute identical values, so the estimate
     is selection-order-free.  Scale shape: one partitioned top-k window
     over (lang), k+1 rows per language retained, one aggregate."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     w = Window.partitionBy("lang").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
@@ -20568,8 +20403,6 @@ def _nsw_graph_cached(spark, sf_dir):
     """(queries, corpus, kNN graph) of x3_nsw_search: the quantized
     query and corpus frames and the NSW_KG-out-degree proximity graph
     over the corpus — the persisted index artifact."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import quantize_vectors
 
     v = _vecs(spark, sf_dir)
@@ -20616,8 +20449,6 @@ def x3_nsw_search(spark, sf_dir):
     (distance, id); the walk is NSW_HOPS unrolled in-plan joins over
     the checkpointed NQ x degree frontier — the oracle replays the
     identical chain with MATERIALIZED per-hop CTEs."""
-    from pyspark.sql import Window
-
     q, c, graph = _nsw_graph_cached(spark, sf_dir)
     entry = c.agg(F.min("vec_id").alias("cur"))
     state = (
@@ -21018,8 +20849,6 @@ def x3_mrl_recall(spark, sf_dir):
     checkpointed corpus (each tier is a slice of the same array
     column), each tier a per-query top-k window — no extra corpus
     passes, exactly how a production sweep prices MRL tiers."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import quantize_vectors
 
     v = _vecs(spark, sf_dir)
@@ -21147,8 +20976,6 @@ def x9_bitemporal_asof(spark, sf_dir):
     (valid_day, orderkey) row_number per (cell, customer).  Scale
     shape: grid x facts is one bounded-fan join (grid is 6 cells);
     one window per cell-customer partition, one tiny aggregate."""
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "o_orderpriority AS priority",
@@ -21245,16 +21072,8 @@ def x8_binseg(spark, sf_dir):
     aggregate, then per-(type, side) windows — the recursion level
     only re-partitions the SAME bounded daily frame, never rescans
     the corpus."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.where("value IS NOT NULL")
-        .selectExpr(
-            "event_type",
-            f"unix_micros(cast(ts as timestamp)) div {_DAY_DIV} AS day",
-            "CAST(round(value * 100) AS BIGINT) AS cents",
-        )
+        _day_cents(spark, sf_dir)
         .groupBy("event_type", "day")
         .agg(F.sum("cents").cast("bigint").alias("v"))
         .localCheckpoint(eager=False)  # types x days — bounded
@@ -21638,8 +21457,6 @@ def x8_auc(spark, sf_dir):
     shape: one map-side-combined histogram on cents (bounded by
     distinct values), one ordered prefix-sum over that bounded frame,
     a 1-row reduce."""
-    from pyspark.sql import Window
-
     # rollup of the shared session value-frequency artifact (r14): the
     # pos/neg class split is a filter + pivot over event_type
     hist = (
@@ -21881,8 +21698,6 @@ def x3_pq_balanced(spark, sf_dir):
     broadcast seed frame x broadcast dim-group map).  Scale shape:
     one corpus-long-form pass per split, seeds and the dim map are
     broadcast-sized, aggregates are map-side combined."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import quantize_vectors
 
     q = quantize_vectors(_vecs(spark, sf_dir), scale=KM_SCALE)
@@ -22051,8 +21866,6 @@ def x3_tombstone_search(spark, sf_dir):
     (distance, id) tie-breaks; the report is integer counts.  Scale
     shape: two per-query top-k windows over one shared scored frame
     — the tombstone set applies as a predicate, not a join."""
-    from pyspark.sql import Window
-
     from diepy_spark.operators.clustering import quantize_vectors
 
     v = _vecs(spark, sf_dir)
@@ -22297,8 +22110,6 @@ def x12_lateness_profile(spark, sf_dir):
     watermark is integer ceil-to-minutes.  Scale shape: one
     per-type arrival-ordered window (types partition the work), one
     rank pick, one aggregate."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     wa = Window.partitionBy("event_type").orderBy("event_id")
     late = (
@@ -22506,16 +22317,8 @@ def x8_control_chart(spark, sf_dir):
     cents * n against integer cross-multiplied limits where possible
     (the rendered limits divide once).  Scale shape: one daily
     aggregate, one per-type lag window, one reduce."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.where("value IS NOT NULL")
-        .selectExpr(
-            "event_type",
-            f"unix_micros(cast(ts as timestamp)) div {_DAY_DIV} AS day",
-            "CAST(round(value * 100) AS BIGINT) AS cents",
-        )
+        _day_cents(spark, sf_dir)
         .groupBy("event_type", "day")
         .agg(F.sum("cents").cast("bigint").alias("v"))
     )
@@ -22690,17 +22493,7 @@ EXTENDED_QUERIES["x2_containment_est"] = x2_containment_est
 def _containment_est_oracle_sql() -> str:
     H = LSH_NUM_HASHES
     return f"""
-    WITH {_JACCARD_CTES},
-    sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d),
-    bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)}),
-    cand AS (
-      SELECT DISTINCT x.d AS da, y.d AS db
-      FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.d < y.d
-    ),
-    p AS (
-      SELECT c.da, c.db, j.jac FROM cand c JOIN jacs j ON j.da = c.da AND j.db = c.db
-      WHERE j.jac >= {LSH_THRESHOLD}
-    ),
+    WITH {_LSH_PAIRS_CTES},
     sz AS (SELECT d, CAST(count(*) AS BIGINT) AS nsh FROM sh GROUP BY d)
     SELECT p.da, p.db,
            CAST(za.nsh AS INT) AS na, CAST(zb.nsh AS INT) AS nb,

@@ -19,11 +19,15 @@ that rule with a scalar subquery on max(ts).
 
 from __future__ import annotations
 
+import functools
+import glob
 import itertools
 import os
+import shutil
 import tempfile
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from diepy_spark.functions.inference import infer_from_dataframe
@@ -56,6 +60,26 @@ _counter = itertools.count()
 _scratch_cache: dict[tuple[str, str], str] = {}
 
 
+def _scratch_file(name: str):
+    """Memoize ``build(spark, sf_dir) -> path`` of a scratch artifact in
+    _scratch_cache under ``(name, sf_dir)``. Process-scoped, unlike
+    session_cached: the files outlive sessions, so a new session reuses
+    them. A build that raises stores nothing."""
+
+    def deco(build):
+        @functools.wraps(build)
+        def wrapper(spark, sf_dir):
+            key = (name, sf_dir)
+            if key not in _scratch_cache:
+                _scratch_cache[key] = build(spark, sf_dir)
+            return _scratch_cache[key]
+
+        return wrapper
+
+    return deco
+
+
+@_scratch_file("events")
 def _events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table (ns→us-converted) as STREAM_FILES
     time-range-partitioned parquet files with strictly increasing mtimes,
@@ -65,25 +89,19 @@ def _events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     append-mode emission set equals the single-batch one — while watermark
     advancement, cross-batch window state, and state-store recovery are all
     actually exercised. Cached per (process, sf_dir) — data is immutable."""
-    import glob as globmod
-    import time
-
-    key = ("events", sf_dir)
-    if key not in _scratch_cache:
-        d = os.path.join(tempfile.mkdtemp(prefix="diepy-stream-"), "events")
-        (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(STREAM_FILES, F.col("ts"))
-            .sortWithinPartitions("ts")
-            .write.parquet(d)
-        )
-        # part-0000k holds the k-th ts range; stamp ascending mtimes so the
-        # stream source's oldest-first ordering replays event time in order.
-        base = time.time() - 3600
-        for i, p in enumerate(sorted(globmod.glob(os.path.join(d, "part-*")))):
-            os.utime(p, (base + i, base + i))
-        _scratch_cache[key] = d
-    return _scratch_cache[key]
+    d = os.path.join(tempfile.mkdtemp(prefix="diepy-stream-"), "events")
+    (
+        load_table(spark, sf_dir, "events")
+        .repartitionByRange(STREAM_FILES, F.col("ts"))
+        .sortWithinPartitions("ts")
+        .write.parquet(d)
+    )
+    # part-0000k holds the k-th ts range; stamp ascending mtimes so the
+    # stream source's oldest-first ordering replays event time in order.
+    base = time.time() - 3600
+    for i, p in enumerate(sorted(glob.glob(os.path.join(d, "part-*")))):
+        os.utime(p, (base + i, base + i))
+    return d
 
 
 def _run_stream(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -104,8 +122,6 @@ def _run_stream(stream_df: DataFrame, output_mode: str) -> DataFrame:
     blocks, freed by the ContextCleaner when the caller's DataFrame goes
     out of scope), drop the sink view, clear the terminated-query list,
     and remove the replay's one-shot checkpoint dir."""
-    import shutil
-
     spark = stream_df.sparkSession
     name = f"x7_mem_{next(_counter)}"
     ck = tempfile.mkdtemp(prefix="diepy-ck-")
@@ -150,8 +166,6 @@ def x7_stream_topk(spark, sf_dir):
     aggregates and the rank runs as a batch window over the sink — at
     production scale, the materialized-view reader). Top STREAM_TOPK
     event types per hour by count (ties: event_type order)."""
-    from pyspark.sql import Window
-
     out = _run_stream(
         ST.tumbling_counts(_events_src(spark, sf_dir), "1 hour", WATERMARK), "append"
     )
@@ -195,8 +209,6 @@ def x7_stream_stateful(spark, sf_dir):
     that user); the multi-batch replay therefore keeps only the FINAL state
     per user — the row with the max events_seen (monotone within a user) —
     which equals the batch aggregate."""
-    from pyspark.sql import Window
-
     out = _run_stream(ST.sessionize_stateful(_events_src(spark, sf_dir)), "update")
     w = Window.partitionBy("user_id").orderBy(F.col("events_seen").desc())
     return (
@@ -256,6 +268,28 @@ def x7_stream_enrich(spark, sf_dir):
     ).orderBy("w", "c_nationkey")
 
 
+def _canonical_orders(typed: DataFrame) -> DataFrame:
+    """The roundtrip queries' compare form (t1, t2, t8): the lattice's
+    SMALLINT/INT widths → bigint, its midnight-rule DATE → timestamp,
+    ordered by o_orderkey."""
+    casts = {"smallint": "bigint", "int": "bigint", "date": "timestamp"}
+    cols = [
+        F.col(f.name).cast(casts[f.dataType.simpleString()]).alias(f.name)
+        if f.dataType.simpleString() in casts
+        else F.col(f.name)
+        for f in typed.schema.fields
+    ]
+    return typed.select(*cols).orderBy("o_orderkey")
+
+
+@_scratch_file("roundtrip")
+def _orders_csv(spark, sf_dir) -> str:
+    """orders rendered as a CSV file (unix line ends)."""
+    path = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "orders.csv")
+    write_csv(load_table(spark, sf_dir, "orders"), path, unix=True)
+    return path
+
+
 def t1_roundtrip_csv(spark, sf_dir):
     """Full import/export stack under the correctness gate: orders →
     rendered CSV (K4/K7) → all-string scan (S1) → inference lattice
@@ -268,12 +302,7 @@ def t1_roundtrip_csv(spark, sf_dir):
     core.py:516-521, while the oracle table is bigint); inferred DATE →
     timestamp (the source column is parquet TIMESTAMP whose values are all
     midnight — the lattice's midnight rule correctly calls them dates)."""
-    key = ("roundtrip", sf_dir)
-    if key not in _scratch_cache:
-        path = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "orders.csv")
-        write_csv(load_table(spark, sf_dir, "orders"), path, unix=True)
-        _scratch_cache[key] = path
-    raw = read_untyped_csv(spark, _scratch_cache[key])
+    raw = read_untyped_csv(spark, _orders_csv(spark, sf_dir))
     # The reader's quote census picks the splittable non-multiLine path
     # for this quote-free file, but a SMALL single file is still one input
     # split — so spread the rows across cores once and run BOTH passes
@@ -288,17 +317,21 @@ def t1_roundtrip_csv(spark, sf_dir):
     # plan, so repeated calls reuse one entry (no per-call leak).
     spread = raw.repartition(spark.sparkContext.defaultParallelism).persist()
     typed = apply_schema(spread, infer_from_dataframe(spread, sample_size=None))
-    casts = {"smallint": "bigint", "int": "bigint", "date": "timestamp"}
-    cols = [
-        F.col(f.name).cast(casts[f.dataType.simpleString()]).alias(f.name)
-        if f.dataType.simpleString() in casts
-        else F.col(f.name)
-        for f in typed.schema.fields
-    ]
-    return typed.select(*cols).orderBy("o_orderkey")
+    return _canonical_orders(typed)
 
 
 XLSX_CUST_MAX = 100  # xlsx is driver-bound by design — bound the subset
+
+
+@_scratch_file("xlsx")
+def _orders_xlsx(spark, sf_dir) -> str:
+    """The orders of customers below XLSX_CUST_MAX as an xlsx worksheet."""
+    from diepy_spark.sources.writers import write_xlsx
+
+    path = os.path.join(tempfile.mkdtemp(prefix="diepy-xl-"), "orders.xlsx")
+    orders = load_table(spark, sf_dir, "orders")
+    write_xlsx(orders.where(F.col("o_custkey") < XLSX_CUST_MAX), path, "orders")
+    return path
 
 
 def t8_roundtrip_xlsx(spark, sf_dir):
@@ -314,30 +347,11 @@ def t8_roundtrip_xlsx(spark, sf_dir):
     hence the absolute subset bound — the distributed formats are
     t1-t4's job."""
     from diepy_spark.sources.excel import read_excel_sheets, sheet_to_untyped_df
-    from diepy_spark.sources.writers import write_xlsx
 
-    key = ("xlsx", sf_dir)
-    if key not in _scratch_cache:
-        path = os.path.join(tempfile.mkdtemp(prefix="diepy-xl-"), "orders.xlsx")
-        write_xlsx(
-            load_table(spark, sf_dir, "orders").where(
-                F.col("o_custkey") < XLSX_CUST_MAX
-            ),
-            path,
-            "orders",
-        )
-        _scratch_cache[key] = path
-    pdf = read_excel_sheets(_scratch_cache[key], "orders")["orders"]
+    pdf = read_excel_sheets(_orders_xlsx(spark, sf_dir), "orders")["orders"]
     sdf, specs = sheet_to_untyped_df(spark, pdf)
     typed = apply_schema(sdf, specs)
-    casts = {"smallint": "bigint", "int": "bigint", "date": "timestamp"}
-    cols = [
-        F.col(f.name).cast(casts[f.dataType.simpleString()]).alias(f.name)
-        if f.dataType.simpleString() in casts
-        else F.col(f.name)
-        for f in typed.schema.fields
-    ]
-    return typed.select(*cols).orderBy("o_orderkey")
+    return _canonical_orders(typed)
 
 
 JOIN_BOUND = "30 minutes"
@@ -366,6 +380,16 @@ def x7_stream_join(spark, sf_dir):
     )
 
 
+@_scratch_file("roundtrip_jsonl")
+def _orders_jsonl(spark, sf_dir) -> str:
+    """orders rendered as a JSON-Lines file."""
+    from diepy_spark.sources.writers import write_jsonl
+
+    path = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "orders.jsonl")
+    write_jsonl(load_table(spark, sf_dir, "orders"), path)
+    return path
+
+
 def t2_roundtrip_jsonl(spark, sf_dir):
     """The import/export stack over JSON-Lines: orders → rendered JSONL
     (write_jsonl, K7 value rendering) → all-string scan
@@ -376,26 +400,13 @@ def t2_roundtrip_jsonl(spark, sf_dir):
     null-field omission exercises the empty⇒NULL path differently from
     CSV's empty strings."""
     from diepy_spark.sources.files import read_untyped_jsonl
-    from diepy_spark.sources.writers import write_jsonl
 
-    key = ("roundtrip_jsonl", sf_dir)
-    if key not in _scratch_cache:
-        path = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "orders.jsonl")
-        write_jsonl(load_table(spark, sf_dir, "orders"), path)
-        _scratch_cache[key] = path
-    raw = read_untyped_jsonl(spark, _scratch_cache[key])
+    raw = read_untyped_jsonl(spark, _orders_jsonl(spark, sf_dir))
     # Same distributed two-pass layout as t1: spread once, full-scan
     # inference + typed projection over the persisted raw strings.
     spread = raw.repartition(spark.sparkContext.defaultParallelism).persist()
     typed = apply_schema(spread, infer_from_dataframe(spread, sample_size=None))
-    casts = {"smallint": "bigint", "int": "bigint", "date": "timestamp"}
-    cols = [
-        F.col(f.name).cast(casts[f.dataType.simpleString()]).alias(f.name)
-        if f.dataType.simpleString() in casts
-        else F.col(f.name)
-        for f in typed.schema.fields
-    ]
-    return typed.select(*cols).orderBy("o_orderkey")
+    return _canonical_orders(typed)
 
 
 def x7_stream_upsert(spark, sf_dir):
@@ -411,10 +422,6 @@ def x7_stream_upsert(spark, sf_dir):
     production scale the state table is a MERGE-capable warehouse table
     instead and this operator IS the foreachBatch body). Final result:
     the latest event per user — identical for any replay granularity."""
-    import tempfile as _tf
-
-    from pyspark.sql import Window
-
     from diepy_spark.operators.merge import merge_upsert
 
     src = _events_src(spark, sf_dir).select(
@@ -442,7 +449,7 @@ def x7_stream_upsert(spark, sf_dir):
     try:
         q = (
             src.writeStream.foreachBatch(fb)
-            .option("checkpointLocation", _tf.mkdtemp(prefix="diepy-ck-"))
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="diepy-ck-"))
             .trigger(availableNow=True)
             .start()
         )
@@ -456,6 +463,14 @@ def x7_stream_upsert(spark, sf_dir):
     ).orderBy("user_id")
 
 
+@_scratch_file("parquet-part")
+def _orders_by_status(spark, sf_dir) -> str:
+    """orders as parquet partitioned by o_orderstatus."""
+    d = os.path.join(tempfile.mkdtemp(prefix="diepy-pq-"), "orders")
+    load_table(spark, sf_dir, "orders").write.partitionBy("o_orderstatus").parquet(d)
+    return d
+
+
 def t3_roundtrip_parquet(spark, sf_dir):
     """Warehouse-native roundtrip: orders written to scratch as parquet
     PARTITIONED BY o_orderstatus (the 100 TB layout — one directory per
@@ -465,16 +480,7 @@ def t3_roundtrip_parquet(spark, sf_dir):
     non-selected partitions are never opened. Output value-matches the
     source rows of that status, proving the write→layout→read path is
     lossless including timestamp micros."""
-    import tempfile as _tf
-
-    key = ("parquet-part", sf_dir)
-    if key not in _scratch_cache:
-        d = os.path.join(_tf.mkdtemp(prefix="diepy-pq-"), "orders")
-        load_table(spark, sf_dir, "orders").write.partitionBy(
-            "o_orderstatus"
-        ).parquet(d)
-        _scratch_cache[key] = d
-    back = spark.read.parquet(_scratch_cache[key]).where(
+    back = spark.read.parquet(_orders_by_status(spark, sf_dir)).where(
         F.col("o_orderstatus") == "F"
     )
     return back.select(
@@ -494,7 +500,6 @@ def _bucketed_tables(spark, sf_dir) -> tuple[str, str]:
     tables live in the session's in-memory catalog, so a new SparkContext
     must rebuild them."""
     import re
-    import shutil
 
     from diepy_spark.sources.bucketing import save_bucketed
 
@@ -548,6 +553,26 @@ def t6_bucketed_join(spark, sf_dir):
     )
 
 
+@_scratch_file("wap")
+def _published_orders(spark, sf_dir) -> str:
+    """orders staged, audited and renamed into a published path."""
+    base = tempfile.mkdtemp(prefix="diepy-wap-")
+    stage = os.path.join(base, "_staging", "orders")
+    final = os.path.join(base, "published", "orders")
+    load_table(spark, sf_dir, "orders").write.parquet(stage)
+    staged = spark.read.parquet(stage)
+    audit = staged.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("o_orderkey").isNull().cast("int")).alias("null_keys"),
+        (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).alias("dup_keys"),
+    ).collect()[0]
+    if audit.rows <= 0 or audit.null_keys or audit.dup_keys:
+        raise ValueError(f"WAP audit failed; snapshot NOT published: {audit}")
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    os.rename(stage, final)
+    return final
+
+
 def t7_write_audit_publish(spark, sf_dir):
     """WRITE-AUDIT-PUBLISH — the warehouse ingestion discipline every
     production load should follow (and the transactional-format-free
@@ -559,28 +584,7 @@ def t7_write_audit_publish(spark, sf_dir):
     and leaves the published path untouched — readers never see a bad
     snapshot. The returned aggregate reads the PUBLISHED data, so the
     hash check proves the staged->audited->published copy is lossless."""
-    key = ("wap", sf_dir)
-    if key not in _scratch_cache:
-        base = tempfile.mkdtemp(prefix="diepy-wap-")
-        stage = os.path.join(base, "_staging", "orders")
-        final = os.path.join(base, "published", "orders")
-        load_table(spark, sf_dir, "orders").write.parquet(stage)
-        staged = spark.read.parquet(stage)
-        audit = staged.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col("o_orderkey").isNull().cast("int")).alias("null_keys"),
-            (
-                F.count(F.lit(1)) - F.countDistinct("o_orderkey")
-            ).alias("dup_keys"),
-        ).collect()[0]
-        if audit.rows <= 0 or audit.null_keys or audit.dup_keys:
-            raise ValueError(
-                f"WAP audit failed; snapshot NOT published: {audit}"
-            )
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        os.rename(stage, final)
-        _scratch_cache[key] = final
-    pub = spark.read.parquet(_scratch_cache[key])
+    pub = spark.read.parquet(_published_orders(spark, sf_dir))
     return (
         pub.groupBy("o_orderstatus")
         .agg(
@@ -665,6 +669,14 @@ def x7_stream_outliers(spark, sf_dir):
     return _run_stream(agg, "append").orderBy("w", "event_type")
 
 
+@_scratch_file("orc")
+def _orders_orc(spark, sf_dir) -> str:
+    """orders as ORC sorted by o_totalprice within partitions."""
+    d = os.path.join(tempfile.mkdtemp(prefix="diepy-orc-"), "orders")
+    load_table(spark, sf_dir, "orders").sortWithinPartitions("o_totalprice").write.orc(d)
+    return d
+
+
 def t4_roundtrip_orc(spark, sf_dir):
     """ORC roundtrip — the second columnar format Spark ships natively
     (orc-core is in the distro; spark-avro is not, so Avro stays out of
@@ -676,18 +688,7 @@ def t4_roundtrip_orc(spark, sf_dir):
     tests/test_analytics.py::test_orc_roundtrip_pushes_filter). Output
     value-matches the source rows in the range, proving the
     write→read path is lossless including DECIMAL and DATE columns."""
-    import tempfile as _tf
-
-    key = ("orc", sf_dir)
-    if key not in _scratch_cache:
-        d = os.path.join(_tf.mkdtemp(prefix="diepy-orc-"), "orders")
-        (
-            load_table(spark, sf_dir, "orders")
-            .sortWithinPartitions("o_totalprice")
-            .write.orc(d)
-        )
-        _scratch_cache[key] = d
-    back = spark.read.orc(_scratch_cache[key]).where(
+    back = spark.read.orc(_orders_orc(spark, sf_dir)).where(
         (F.col("o_totalprice") >= 100_000) & (F.col("o_totalprice") < 150_000)
     )
     return back.select(
@@ -709,8 +710,6 @@ def x7_stream_ewma(spark, sf_dir):
     touched user each batch; the final row per user (max n_events) must
     be BIT-IDENTICAL to the batch fold because time-ordered disjoint
     batches x in-batch (ts, event_id) sort = the global fold order."""
-    from pyspark.sql import Window
-
     from diepy_spark.plans.relational import EWMA_ALPHA
 
     out = _run_stream(
@@ -729,6 +728,22 @@ COMPACT_SMALL = 64  # the small-file mess
 COMPACT_TARGET = 4  # compacted layout
 
 
+@_scratch_file("compact")
+def _compacted_events(spark, sf_dir) -> str:
+    """events written as COMPACT_SMALL files, then compacted."""
+    base = tempfile.mkdtemp(prefix="diepy-compact-")
+    small = os.path.join(base, "small")
+    packed = os.path.join(base, "compacted")
+    ev = load_table(spark, sf_dir, "events")
+    ev.repartition(COMPACT_SMALL).write.parquet(small)
+    n_small = len(glob.glob(os.path.join(small, "part-*")))
+    spark.read.parquet(small).repartition(COMPACT_TARGET).write.parquet(packed)
+    n_packed = len(glob.glob(os.path.join(packed, "part-*")))
+    if not (n_packed < n_small and n_packed <= COMPACT_TARGET):
+        raise ValueError(f"compaction did not shrink the layout: {n_small} -> {n_packed}")
+    return packed
+
+
 def t9_compaction(spark, sf_dir):
     """SMALL-FILE COMPACTION — the table-maintenance op every streaming
     sink eventually needs (a micro-batch writer leaves thousands of tiny
@@ -741,26 +756,7 @@ def t9_compaction(spark, sf_dir):
     the failure mode that actually bites (a lost or doubled fragment).
     At scale this is the same job with maxRecordsPerFile / a file-size
     target instead of a fixed count."""
-    import glob as globmod
-
-    key = ("compact", sf_dir)
-    if key not in _scratch_cache:
-        base = tempfile.mkdtemp(prefix="diepy-compact-")
-        small = os.path.join(base, "small")
-        packed = os.path.join(base, "compacted")
-        ev = load_table(spark, sf_dir, "events")
-        ev.repartition(COMPACT_SMALL).write.parquet(small)
-        n_small = len(globmod.glob(os.path.join(small, "part-*")))
-        spark.read.parquet(small).repartition(COMPACT_TARGET).write.parquet(
-            packed
-        )
-        n_packed = len(globmod.glob(os.path.join(packed, "part-*")))
-        if not (n_packed < n_small and n_packed <= COMPACT_TARGET):
-            raise ValueError(
-                f"compaction did not shrink the layout: {n_small} -> {n_packed}"
-            )
-        _scratch_cache[key] = packed
-    back = spark.read.parquet(_scratch_cache[key])
+    back = spark.read.parquet(_compacted_events(spark, sf_dir))
     return (
         back.groupBy("event_type")
         .agg(
@@ -774,6 +770,33 @@ def t9_compaction(spark, sf_dir):
     )
 
 
+@_scratch_file("roundtrip_nested")
+def _nested_orders_json(spark, sf_dir) -> str:
+    """Orders below 4000 as nested JSON: a header struct and an item array."""
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 4000)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") < 4000)
+    items = li.groupBy("l_orderkey").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("l_linenumber").alias("ln"),
+                    F.expr("CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("qty_c"),
+                )
+            )
+        ).alias("items")
+    )
+    nested = o.select(
+        "o_orderkey",
+        F.struct(
+            F.col("o_orderstatus").alias("status"),
+            F.expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("price_c"),
+        ).alias("hdr"),
+    ).join(items, o.o_orderkey == items.l_orderkey).drop("l_orderkey")
+    d = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "nested_json")
+    nested.write.json(d)
+    return d
+
+
 def t5_roundtrip_nested(spark, sf_dir):
     """Nested-schema JSON roundtrip — the surface the flat t1/t2 lattice
     path deliberately excludes (the reference's inference is flat by
@@ -785,31 +808,7 @@ def t5_roundtrip_nested(spark, sf_dir):
     byte-exactly. Money rides as integer cents (JSON doubles would not
     round-trip bitwise); the item array is sorted before writing so the
     array order is deterministic and the explode replays it."""
-    key = ("roundtrip_nested", sf_dir)
-    if key not in _scratch_cache:
-        li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 4000)
-        o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") < 4000)
-        items = li.groupBy("l_orderkey").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("l_linenumber").alias("ln"),
-                        F.expr("CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("qty_c"),
-                    )
-                )
-            ).alias("items")
-        )
-        nested = o.select(
-            "o_orderkey",
-            F.struct(
-                F.col("o_orderstatus").alias("status"),
-                F.expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("price_c"),
-            ).alias("hdr"),
-        ).join(items, o.o_orderkey == items.l_orderkey).drop("l_orderkey")
-        d = os.path.join(tempfile.mkdtemp(prefix="diepy-rt-"), "nested_json")
-        nested.write.json(d)
-        _scratch_cache[key] = d
-    back = spark.read.json(_scratch_cache[key])
+    back = spark.read.json(_nested_orders_json(spark, sf_dir))
     return (
         back.select(
             "o_orderkey",
@@ -829,22 +828,20 @@ def t5_roundtrip_nested(spark, sf_dir):
     )
 
 
+@_scratch_file("embeddings")
 def _embeddings_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """The embeddings table as STREAM_FILES vec_id-range parquet files —
     a replayable vector stream. No mtime choreography needed: the
     consumer (x7_stream_cluster_assign) is a stateless projection + a
     complete-mode aggregate, so batch order cannot change the result."""
-    key = ("embeddings", sf_dir)
-    if key not in _scratch_cache:
-        d = os.path.join(tempfile.mkdtemp(prefix="diepy-stream-"), "embeddings")
-        (
-            load_table(spark, sf_dir, "embeddings")
-            .repartitionByRange(STREAM_FILES, F.col("vec_id"))
-            .sortWithinPartitions("vec_id")
-            .write.parquet(d)
-        )
-        _scratch_cache[key] = d
-    return _scratch_cache[key]
+    d = os.path.join(tempfile.mkdtemp(prefix="diepy-stream-"), "embeddings")
+    (
+        load_table(spark, sf_dir, "embeddings")
+        .repartitionByRange(STREAM_FILES, F.col("vec_id"))
+        .sortWithinPartitions("vec_id")
+        .write.parquet(d)
+    )
+    return d
 
 
 def x7_stream_cluster_assign(spark, sf_dir):
@@ -905,8 +902,6 @@ def x7_stream_psi(spark, sf_dir):
     per-day PSI in bin order — the pager that fires the day the value
     distribution drifts. Scale: stream state is days x bins; everything
     after the sink is bounded by the emission."""
-    from pyspark.sql import Window
-
     cents = F.expr("CAST(round(value * 100) AS BIGINT)")
     bin_expr = (
         f"least(CAST(floor(c / {SPSI_BIN_CENTS}) AS BIGINT),"
@@ -1006,8 +1001,6 @@ def x7_stream_quantiles(spark, sf_dir):
     so the report hash-checks. Resolution is the bin width, the standard
     histogram-quantile trade; at 100 TB the state is still
     days x 64 longs."""
-    from pyspark.sql import Window
-
     cents = F.expr("CAST(round(value * 100) AS BIGINT)")
     bin_expr = (
         f"least(CAST(floor(c / {SQNT_BIN_CENTS}) AS BIGINT),"
@@ -1050,6 +1043,7 @@ def x7_stream_quantiles(spark, sf_dir):
     ).orderBy("day")
 
 
+@_scratch_file("docs")
 def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """The ARRIVING 20% of documents (doc_id % INC_DEDUP_MOD == 0 — the
     same crawl-N+1 split as x1_incremental_dedup) as STREAM_FILES
@@ -1058,18 +1052,15 @@ def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     complete-mode, so batch order cannot change the result."""
     from diepy_spark.plans.extended import INC_DEDUP_MOD
 
-    key = ("docs", sf_dir)
-    if key not in _scratch_cache:
-        d = os.path.join(tempfile.mkdtemp(prefix="diepy-stream-"), "docs")
-        (
-            load_table(spark, sf_dir, "documents")
-            .where(F.col("doc_id") % INC_DEDUP_MOD == 0)
-            .repartitionByRange(STREAM_FILES, F.col("doc_id"))
-            .sortWithinPartitions("doc_id")
-            .write.parquet(d)
-        )
-        _scratch_cache[key] = d
-    return _scratch_cache[key]
+    d = os.path.join(tempfile.mkdtemp(prefix="diepy-stream-"), "docs")
+    (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") % INC_DEDUP_MOD == 0)
+        .repartitionByRange(STREAM_FILES, F.col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .write.parquet(d)
+    )
+    return d
 
 
 def x7_stream_ingest(spark, sf_dir):
@@ -1177,6 +1168,7 @@ def _late_bit_sql() -> str:
     )
 
 
+@_scratch_file("events-late")
 def _events_late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """OUT-OF-ORDER arrival layout: events are split into LATE_NB
     event-time quantile buckets (0-based row_number over (ts, event_id)
@@ -1188,52 +1180,38 @@ def _events_late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     and driver-side count materialize a toy arrival sequence ONCE per
     process — a production stream's arrival order is given by the
     source, not synthesized."""
-    import glob as globmod
-    import shutil
-    import time
-
-    key = ("events-late", sf_dir)
-    if key not in _scratch_cache:
-        from pyspark.sql import Window
-
-        base = tempfile.mkdtemp(prefix="diepy-late-")
-        d = os.path.join(base, "events")
-        os.makedirs(d)
-        ev = load_table(spark, sf_dir, "events")
-        tot = ev.count()
-        w = Window.orderBy("ts", "event_id")
-        arr = (
-            ev.withColumn("rn", F.row_number().over(w) - 1)
-            .withColumn(
-                "home", F.expr(f"CAST((rn * {LATE_NB}) DIV {tot} AS INT)")
-            )
-            .withColumn(
-                "strag",
-                F.expr(f"CASE WHEN {_late_bit_sql()} THEN 1 ELSE 0 END"),
-            )
-            .withColumn(
-                "a",
-                F.expr(
-                    f"CASE WHEN strag = 1 THEN least(home + {LATE_SHIFT},"
-                    f" {LATE_NB - 1}) ELSE home END"
-                ),
-            )
+    base = tempfile.mkdtemp(prefix="diepy-late-")
+    d = os.path.join(base, "events")
+    os.makedirs(d)
+    ev = load_table(spark, sf_dir, "events")
+    tot = ev.count()
+    w = Window.orderBy("ts", "event_id")
+    arr = (
+        ev.withColumn("rn", F.row_number().over(w) - 1)
+        .withColumn("home", F.expr(f"CAST((rn * {LATE_NB}) DIV {tot} AS INT)"))
+        .withColumn("strag", F.expr(f"CASE WHEN {_late_bit_sql()} THEN 1 ELSE 0 END"))
+        .withColumn(
+            "a",
+            F.expr(
+                f"CASE WHEN strag = 1 THEN least(home + {LATE_SHIFT},"
+                f" {LATE_NB - 1}) ELSE home END"
+            ),
         )
-        base_t = time.time() - 3600
-        for k in range(LATE_NB):
-            tmp = os.path.join(base, f"b{k}")
-            (
-                arr.where(F.col("a") == k)
-                .drop("rn", "home", "strag", "a")
-                .coalesce(1)
-                .write.parquet(tmp)
-            )
-            part = globmod.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"batch-{k}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (base_t + k, base_t + k))
-        _scratch_cache[key] = d
-    return _scratch_cache[key]
+    )
+    base_t = time.time() - 3600
+    for k in range(LATE_NB):
+        tmp = os.path.join(base, f"b{k}")
+        (
+            arr.where(F.col("a") == k)
+            .drop("rn", "home", "strag", "a")
+            .coalesce(1)
+            .write.parquet(tmp)
+        )
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        dst = os.path.join(d, f"batch-{k}.parquet")
+        shutil.move(part, dst)
+        os.utime(dst, (base_t + k, base_t + k))
+    return d
 
 
 @session_cached
@@ -1245,7 +1223,6 @@ def _late_run(spark, sf_dir) -> dict:
     The memory sink itself is drained and dropped (the _run_stream
     cleanup contract); what's cached is the localCheckpointed frame."""
     import json as _json
-    import shutil
 
     src = ST.read_events_stream(
         spark, _events_late_stream_dir(spark, sf_dir),
@@ -1395,6 +1372,65 @@ def x7_stream_hll(spark, sf_dir):
     ).orderBy("w")
 
 
+@_scratch_file("stream-resume")
+def _resumed_sink(spark, sf_dir) -> str:
+    """The tumbling aggregate's parquet sink after two query lives."""
+    src_dir = _events_stream_dir(spark, sf_dir)
+    parts = sorted(glob.glob(os.path.join(src_dir, "part-*")))
+    base = tempfile.mkdtemp(prefix="diepy-resume-")
+    ind = os.path.join(base, "in")
+    outd = os.path.join(base, "out")
+    ck = os.path.join(base, "ck")
+    os.makedirs(ind)
+    t0 = time.time() - 3600
+
+    def _copy(i: int, p: str) -> None:
+        dst = os.path.join(ind, f"f{i}.parquet")
+        shutil.copy(p, dst)
+        os.utime(dst, (t0 + i, t0 + i))
+
+    def _run() -> None:
+        # _mfpt() is safe here (unlike x7_stream_late): the layout is
+        # in-order disjoint ranges, so the emission set is identical
+        # for any batch grouping — the restart boundary between the
+        # two lives is what this query exercises, not batch count.
+        src = ST.read_events_stream(spark, ind, max_files_per_trigger=_mfpt())
+        agg = (
+            src.withWatermark("ts", WATERMARK)
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("c"),
+                F.expr(
+                    "CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100"
+                    " AS BIGINT)) AS BIGINT)"
+                ).alias("cents"),
+            )
+            .select(F.col("w.start").alias("w"), "event_type", "c", "cents")
+        )
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        try:
+            q = (
+                agg.writeStream.format("parquet")
+                .option("path", outd)
+                .option("checkpointLocation", ck)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    for i, p in enumerate(parts[:2]):
+        _copy(i, p)
+    _run()  # first life: two batches, then the restart boundary
+    for i, p in enumerate(parts[2:], start=2):
+        _copy(i, p)
+    _run()  # second life: resume from the same checkpoint
+    return outd
+
+
 def x7_stream_resume(spark, sf_dir):
     """CHECKPOINT RECOVERY + EXACTLY-ONCE SINK — the operational
     contract every production stream rests on: the tumbling aggregate
@@ -1408,73 +1444,25 @@ def x7_stream_resume(spark, sf_dir):
     even though two separate queries wrote it. Exact integer cents —
     a duplicated or dropped window cannot hide in float slack. Runs
     once per (process, sf_dir); repeat calls read the committed sink."""
-    import glob as globmod
-    import shutil
-    import time
-
-    key = ("stream-resume", sf_dir)
-    if key not in _scratch_cache:
-        src_dir = _events_stream_dir(spark, sf_dir)
-        parts = sorted(globmod.glob(os.path.join(src_dir, "part-*")))
-        base = tempfile.mkdtemp(prefix="diepy-resume-")
-        ind = os.path.join(base, "in")
-        outd = os.path.join(base, "out")
-        ck = os.path.join(base, "ck")
-        os.makedirs(ind)
-        t0 = time.time() - 3600
-
-        def _copy(i: int, p: str) -> None:
-            dst = os.path.join(ind, f"f{i}.parquet")
-            shutil.copy(p, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-
-        def _run() -> None:
-            # _mfpt() is safe here (unlike x7_stream_late): the layout is
-            # in-order disjoint ranges, so the emission set is identical
-            # for any batch grouping — the restart boundary between the
-            # two lives is what this query exercises, not batch count.
-            src = ST.read_events_stream(
-                spark, ind, max_files_per_trigger=_mfpt()
-            )
-            agg = (
-                src.withWatermark("ts", WATERMARK)
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("c"),
-                    F.expr(
-                        "CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100"
-                        " AS BIGINT)) AS BIGINT)"
-                    ).alias("cents"),
-                )
-                .select(F.col("w.start").alias("w"), "event_type", "c", "cents")
-            )
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            try:
-                q = (
-                    agg.writeStream.format("parquet")
-                    .option("path", outd)
-                    .option("checkpointLocation", ck)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-        for i, p in enumerate(parts[:2]):
-            _copy(i, p)
-        _run()  # first life: two batches, then the restart boundary
-        for i, p in enumerate(parts[2:], start=2):
-            _copy(i, p)
-        _run()  # second life: resume from the same checkpoint
-        _scratch_cache[key] = outd
     return (
-        spark.read.parquet(_scratch_cache[key])
+        spark.read.parquet(_resumed_sink(spark, sf_dir))
         .select("w", "event_type", "c", "cents")
         .orderBy("w", "event_type")
     )
+
+
+@_scratch_file("schema-evo")
+def _evolved_orders(spark, sf_dir) -> str:
+    """orders in two parquet generations, the second with a new column."""
+    d = os.path.join(tempfile.mkdtemp(prefix="diepy-evo-"), "orders")
+    o = load_table(spark, sf_dir, "orders")
+    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
+    o.where(F.col("o_custkey") % 2 == 0).select(*cols).write.parquet(d, mode="append")
+    o.where(F.col("o_custkey") % 2 == 1).select(
+        *cols,
+        F.expr("CAST(substring(o_orderpriority, 1, 1) AS INT)").alias("priority_rank"),
+    ).write.parquet(d, mode="append")
+    return d
 
 
 def t10_schema_evolution(spark, sf_dir):
@@ -1489,28 +1477,7 @@ def t10_schema_evolution(spark, sf_dir):
     required for readers). The hash check proves both generations
     survive the merged read byte-exactly, NULLs where the column
     predates the writer."""
-    key = ("schema-evo", sf_dir)
-    if key not in _scratch_cache:
-        d = os.path.join(tempfile.mkdtemp(prefix="diepy-evo-"), "orders")
-        o = load_table(spark, sf_dir, "orders")
-        cols = [
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderpriority",
-        ]
-        o.where(F.col("o_custkey") % 2 == 0).select(*cols).write.parquet(
-            d, mode="append"
-        )
-        o.where(F.col("o_custkey") % 2 == 1).select(
-            *cols,
-            F.expr("CAST(substring(o_orderpriority, 1, 1) AS INT)").alias(
-                "priority_rank"
-            ),
-        ).write.parquet(d, mode="append")
-        _scratch_cache[key] = d
-    back = spark.read.option("mergeSchema", "true").parquet(_scratch_cache[key])
+    back = spark.read.option("mergeSchema", "true").parquet(_evolved_orders(spark, sf_dir))
     return back.select(
         "o_orderkey",
         "o_custkey",
@@ -2090,8 +2057,6 @@ def x7_stream_cusum(spark, sf_dir):
     bit-for-bit with no float concern.  Update mode emits the running
     state per touched type each batch; the final row per type (max
     n_events) is the replay's answer."""
-    from pyspark.sql import Window
-
     src = (
         _events_src(spark, sf_dir)
         .where(F.col("value").isNotNull())

@@ -82,21 +82,6 @@ def session_cached(fn: _F) -> _F:
     return wrapper  # type: ignore[return-value]
 
 
-def _find_jars(env_var: str, patterns: tuple[str, ...], roots: tuple[str, ...]) -> list[str]:
-    """Jars named by `env_var` (comma-separated paths; empty string =
-    none) when it is set, else every match of `patterns` under `roots`."""
-    env = os.environ.get(env_var)
-    if env is not None:
-        return [p for p in env.split(",") if p]
-    out: set[str] = set()
-    for root in map(os.path.expanduser, roots):
-        if not os.path.isdir(root):
-            continue
-        for pat in patterns:
-            out.update(glob.glob(os.path.join(root, "**", pat), recursive=True))
-    return sorted(out)
-
-
 def find_jdbc_jars() -> list[str]:
     """Best-effort discovery of JDBC driver jars in standard local
     artifact caches (coursier, maven, system java dirs). The Spark distro
@@ -106,38 +91,15 @@ def find_jdbc_jars() -> list[str]:
     Override or disable with SPARK_GRAFT_JDBC_JARS (comma-separated
     paths; empty string = none). Results are static per process — call
     before the first get_spark (jars are a JVM-start config)."""
-    return _find_jars(
-        "SPARK_GRAFT_JDBC_JARS",
-        ("duckdb_jdbc*.jar", "sqlite-jdbc*.jar", "h2-[0-9]*.jar", "postgresql-[0-9]*.jar"),
-        ("~/.cache/coursier", "~/.m2", "/usr/share/java"),
-    )
-
-
-def find_delta_jars() -> list[str]:
-    """Jar-discovery analog of find_jdbc_jars for delta-spark (VERDICT r5
-    #4): scan the same local artifact caches for the Delta Lake runtime
-    jars (delta-spark/delta-core + delta-storage). When found AND the
-    `delta` Python package imports, get_spark wires the session
-    extensions so sources/table_format.probe() reports delta=True and
-    merge_into_path takes the real transactional MERGE branch
-    (tests/test_table_format.py pins which branch ran).
-
-    Environment status (recorded round 6): neither the jars nor the
-    Python package exist anywhere in this sandbox (coursier/m2/system
-    caches swept), so the delta branch is real code awaiting an
-    environment that can run it — SURVEY §7.2. Override with
-    SPARK_GRAFT_DELTA_JARS (comma-separated; empty string = none)."""
-    if os.environ.get("SPARK_GRAFT_DELTA_JARS") is None:
-        # The extension jar alone is useless without delta's Python bindings.
-        try:
-            import delta  # noqa: F401, PLC0415 - probe import
-        except ImportError:
-            return []
-    return _find_jars(
-        "SPARK_GRAFT_DELTA_JARS",
-        ("delta-spark_*.jar", "delta-core_*.jar", "delta-storage-*.jar"),
-        ("~/.cache/coursier", "~/.m2", "~/.ivy2", "/usr/share/java"),
-    )
+    env = os.environ.get("SPARK_GRAFT_JDBC_JARS")
+    if env is not None:
+        return [p for p in env.split(",") if p]
+    patterns = ("duckdb_jdbc*.jar", "sqlite-jdbc*.jar", "h2-[0-9]*.jar", "postgresql-[0-9]*.jar")
+    out: set[str] = set()
+    for root in map(os.path.expanduser, ("~/.cache/coursier", "~/.m2", "/usr/share/java")):
+        for pat in patterns:
+            out.update(glob.glob(os.path.join(root, "**", pat), recursive=True))
+    return sorted(out)
 
 
 def get_spark(app_name: str = "diepy-spark", cpus: str | None = None) -> SparkSession:
@@ -152,16 +114,8 @@ def get_spark(app_name: str = "diepy-spark", cpus: str | None = None) -> SparkSe
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
     )
     jars = find_jdbc_jars()
-    delta_jars = find_delta_jars()
-    if jars or delta_jars:
-        builder = builder.config("spark.jars", ",".join(jars + delta_jars))
-    if delta_jars:
-        builder = builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
+    if jars:
+        builder = builder.config("spark.jars", ",".join(jars))
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return tune(builder.getOrCreate())

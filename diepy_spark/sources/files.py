@@ -25,12 +25,7 @@ from pyspark.sql.types import DateType
 from diepy_spark.functions.inference import ColumnSpec, normalize_headers
 
 # Extension recognition, faithful to the reference's regexes (core.py:18-25).
-_CSV_RE = re.compile(r".*(\.csv|\.tab|\.tsv|\.txt)(\.gz|\.zip)?$", re.IGNORECASE)
 _EXCEL_RE = re.compile(r".*(\.xlsx|\.xls)(\.gz|\.zip)?(\$.*)?$", re.IGNORECASE)
-
-
-def is_csv_path(p: str) -> bool:
-    return bool(_CSV_RE.match(p))
 
 
 def is_excel_path(p: str) -> bool:

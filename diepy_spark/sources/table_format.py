@@ -1,74 +1,22 @@
-"""MERGE-capable table-format probe + transactional upsert path.
+"""Keyed upsert into a parquet table at a path.
 
 The reference's write path is truncate-then-reload (core.py:205-213) —
-every refresh rewrites the whole table. operators/merge.py:merge_upsert
-is the format-free incremental form (union + per-key latest window); at
-warehouse scale the production answer is a transactional table format's
-``MERGE INTO`` (Delta Lake / Apache Iceberg): ACID commit, file-level
-skipping, no full-table rewrite, concurrent-writer safety.
+every refresh rewrites the whole table. :func:`merge_into_path` is the
+format-free incremental form: read the parquet at ``path``, apply
+operators/merge.py:merge_upsert, and overwrite the path with the result.
 
-This module probes for those formats at runtime and routes
-:func:`merge_into_path` accordingly:
-
-- ``delta-spark`` importable AND its jar on the Spark classpath →
-  real ``DeltaTable.merge`` (whenMatchedUpdateAll / whenNotMatchedInsertAll)
-  against a Delta table at ``path``.
-- otherwise → the format-free fallback: read parquet at ``path``, apply
-  operators/merge.py:merge_upsert, atomically swap via
-  write-to-tmp + rename-free overwrite (Spark's dynamic overwrite at the
-  path level).
-
-Both paths produce the SAME rows for the same inputs — asserted by
-tests/test_table_format.py, which also pins WHICH path ran so an
-environment upgrade (delta jars appearing) flips loudly, not silently.
-
-Iceberg (pyiceberg / iceberg-spark-runtime) is probed the same way but
-not yet wired: a catalog (not a bare path) is required to address an
-Iceberg table, which the sandbox cannot host; `probe()` reporting
-`iceberg=True` is the signal to add the catalog-backed branch.
+At warehouse scale the production answer is a transactional table
+format's ``MERGE INTO`` (Delta Lake / Apache Iceberg): ACID commit,
+file-level skipping, no full-table rewrite, concurrent-writer safety.
+SURVEY §7.2 records that design; this module carries only the parquet
+rewrite, which needs no table format installed.
 """
 
 from __future__ import annotations
 
-import importlib.util
-
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["probe", "merge_into_path"]
-
-
-def probe(spark: SparkSession | None = None) -> dict[str, bool]:
-    """Which MERGE-capable formats are actually usable here?
-
-    ``delta`` requires BOTH the Python package and the delta-spark jars on
-    the JVM classpath (the package alone can't plan a Delta commit);
-    ``iceberg`` likewise. Pure-Python ``pyiceberg`` is reported separately:
-    it can read/commit Iceberg metadata without a Spark catalog but cannot
-    serve as a Spark MERGE target.
-    """
-    have_delta_py = importlib.util.find_spec("delta") is not None
-    have_pyiceberg = importlib.util.find_spec("pyiceberg") is not None
-    delta_jvm = False
-    iceberg_jvm = False
-    if spark is not None:
-        jvm = spark._jvm  # noqa: SLF001 - classpath probe needs the gateway
-        try:
-            jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
-            delta_jvm = True
-        except Exception:  # noqa: BLE001 - absent class raises via py4j
-            delta_jvm = False
-        try:
-            jvm.java.lang.Class.forName(
-                "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-            )
-            iceberg_jvm = True
-        except Exception:  # noqa: BLE001
-            iceberg_jvm = False
-    return {
-        "delta": have_delta_py and delta_jvm,
-        "iceberg": iceberg_jvm,
-        "pyiceberg": have_pyiceberg,
-    }
+__all__ = ["merge_into_path"]
 
 
 def merge_into_path(
@@ -77,56 +25,13 @@ def merge_into_path(
     updates: DataFrame,
     key_cols: list[str],
     version_col: str | None = None,
-) -> str:
-    """Upsert ``updates`` into the keyed table stored at ``path``;
-    returns the path taken: ``"delta-merge"`` or ``"parquet-rewrite"``.
-
-    Delta branch: transactional ``MERGE INTO`` — matched keys update,
-    new keys insert; only files containing matched keys rewrite, the
-    commit is atomic, and readers never see a half-applied state.
-
-    Fallback branch: read parquet → operators/merge.py:merge_upsert →
-    overwrite. Correct but full-rewrite (the reference's own semantics);
-    the docstring contract both branches share is merge_upsert's:
-    update wins over base, higher ``version_col`` wins when given.
+) -> None:
+    """Upsert ``updates`` into the keyed table stored at ``path``: read
+    parquet → operators/merge.py:merge_upsert → overwrite. Correct but
+    full-rewrite (the reference's own semantics); update wins over base,
+    higher ``version_col`` wins when given.
     """
     from diepy_spark.operators.merge import merge_upsert
-
-    if probe(spark)["delta"]:
-        from delta.tables import DeltaTable  # noqa: PLC0415 - probe-gated
-
-        # DeltaTable.merge raises on multiple source rows matching one
-        # target key, while merge_upsert resolves them with a version
-        # window — pre-dedupe per key the same way so BOTH branches
-        # honour the same contract on duplicate-key updates (ADVICE r5).
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        order = (
-            [F.col(version_col).desc()] if version_col else []
-        ) + [F.monotonically_increasing_id().desc()]
-        w = Window.partitionBy(*key_cols).orderBy(*order)
-        updates = (
-            updates.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-        )
-
-        if not DeltaTable.isDeltaTable(spark, path):
-            # First contact with a plain-parquet path: one-time convert.
-            base = spark.read.parquet(path)
-            base.write.format("delta").mode("overwrite").save(path)
-        tgt = DeltaTable.forPath(spark, path)
-        cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in key_cols)
-        m = tgt.alias("t").merge(updates.alias("s"), cond)
-        if version_col:
-            m = m.whenMatchedUpdateAll(
-                condition=f"s.`{version_col}` >= t.`{version_col}`"
-            )
-        else:
-            m = m.whenMatchedUpdateAll()
-        m.whenNotMatchedInsertAll().execute()
-        return "delta-merge"
 
     base = spark.read.parquet(path)
     merged = merge_upsert(base, updates, key_cols, version_col)
@@ -134,4 +39,3 @@ def merge_into_path(
     # and overwrite the same files in one job).
     merged = merged.localCheckpoint(eager=True)
     merged.write.mode("overwrite").parquet(path)
-    return "parquet-rewrite"

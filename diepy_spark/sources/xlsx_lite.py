@@ -106,12 +106,21 @@ def _serial_to_datetime(serial: float):
     return _EXCEL_EPOCH + datetime.timedelta(days=day, microseconds=us)
 
 
+def _string_item(item: ET.Element | None) -> str:
+    """Text of a shared (``si``) or inline (``is``) string: its own
+    ``<t>``, then the ``<t>`` of each ``<r>`` run (the schema's order).
+    The ``<t>`` inside ``<rPh>`` phonetic runs is a reading guide, not
+    part of the value."""
+    if item is None:
+        return ""
+    t, r = f"{{{_NS_MAIN}}}t", f"{{{_NS_MAIN}}}r"
+    return "".join(el.text or "" for el in item.findall(t) + item.findall(f"{r}/{t}"))
+
+
 def _cell_value(c: ET.Element, shared: list[str], date_styles: frozenset[int] | set[int] = frozenset()):
     t = c.get("t", "n")
     if t == "inlineStr":
-        return "".join(
-            el.text or "" for el in c.iter(f"{{{_NS_MAIN}}}t")
-        )
+        return _string_item(c.find(f"{{{_NS_MAIN}}}is"))
     v = c.find(f"{{{_NS_MAIN}}}v")
     if v is None or v.text is None:
         return None
@@ -141,10 +150,7 @@ def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
     except KeyError:
         return []
     root = ET.fromstring(data)
-    out = []
-    for si in root.iter(f"{{{_NS_MAIN}}}si"):
-        out.append("".join(el.text or "" for el in si.iter(f"{{{_NS_MAIN}}}t")))
-    return out
+    return [_string_item(si) for si in root.iter(f"{{{_NS_MAIN}}}si")]
 
 
 def _sheet_targets(zf: zipfile.ZipFile) -> list[tuple[str, str]]:

@@ -189,17 +189,6 @@ def test_salted_join_rejects_right_preserving_modes(spark):
             K.salted_join(df, df, on=["k"], salt_from=["id"], how=how)
 
 
-def test_salted_distinct_count_exact(spark):
-    from diepy_spark.operators import skew as K
-
-    df = spark.createDataFrame(
-        [("a", i % 7) for i in range(100)] + [("b", i) for i in range(5)],
-        "g string, v long",
-    )
-    rows = {r["g"]: r["distinct_count"] for r in K.salted_distinct_count(df, "g", "v").collect()}
-    assert rows == {"a": 7, "b": 5}
-
-
 # --------------------------------------------------------------------------
 # timeseries: as-of join + sessionization
 # --------------------------------------------------------------------------
@@ -1444,8 +1433,8 @@ def test_topk_scorers_match_per_pair_cosine(spark):
 
     # LSH: candidates share a bucket (exact bucket and one-flip probes)
     planes = 3
-    qb = S.lsh_bucket(queries, planes, dim=dim).withColumnRenamed("vid", "qid")
-    cb = S.lsh_bucket(corpus, planes, dim=dim).withColumnRenamed("vid", "cid")
+    qb = q.select("qid", S.bucket_expr("qv", dim, planes).alias("bucket"))
+    cb = c.select("cid", S.bucket_expr("cv", dim, planes).alias("bucket"))
     exact = q.join(qb, "qid").join(cb, "bucket").join(c, "cid")
     got = _rows(S.ann_topk_lsh(queries, corpus, k=k, num_planes=planes, dim=dim))
     assert got == _per_pair_topk(exact, k)

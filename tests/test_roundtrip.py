@@ -332,7 +332,8 @@ def _datetime_cells(draw):
     min_size=1, max_size=40,
 ))
 @example(["2013-10-11t01:02:03", " 2013-10-11T01:02:03.5 ", "2013-10-11 01:02:03.123456789",
-          "1pm", "11 Oct 2013", "10/11/2013 1:02", " 1:02 pm", "20131011", "10/11/2013"])
+          "1pm", "11 Oct 2013", "10/11/2013 1:02", " 1:02 pm", "20131011", "10/11/2013",
+          "0001-01-01 00:00:00.0"])
 @settings(max_examples=40, deadline=None)
 def test_format_guard_keeps_datetime_casts(spark, values):
     """Trying a format only on values that hold its literal characters
@@ -353,9 +354,11 @@ def test_format_guard_keeps_datetime_casts(spark, values):
         F.date_format(every(_TIME_FORMATS), "HH:mm:ss"),
     ]
     got = [_cast(ColumnSpec("raw", t), "raw") for t in ("datetime", "date", "time")]
+    # Compared in Spark: collect() cannot turn an instant on 0001-01-01
+    # into a Python datetime (year 0 is out of range).
+    same = [w.eqNullSafe(g) for w, g in zip(want, got)]
     df = spark.createDataFrame([(v,) for v in values], "raw string")
-    for r in df.select(*want, *got).collect():
-        assert tuple(r[:3]) == tuple(r[3:])
+    assert [r.raw for r in df.where(~(same[0] & same[1] & same[2])).collect()] == []
 
 
 def test_table_schema_independent_of_part_names(ctx, tmp_path):

@@ -1,5 +1,6 @@
-"""session_cached (diepy_spark/session.py) against a stub session: an
-object with only `sparkContext.applicationId`, so no SparkContext starts."""
+"""session_cached (diepy_spark/session.py) and the process-scoped
+scratch-file memo of plans/pipeline.py against stub sessions: objects
+with only `sparkContext.applicationId`, so no SparkContext starts."""
 
 from types import SimpleNamespace
 
@@ -80,3 +81,57 @@ def test_failed_build_stores_nothing():
     assert session._memo == {}
     assert flaky(s, 1) == 1
     assert calls == [1, 1]
+
+
+@pytest.fixture
+def scratch(monkeypatch):
+    """An empty pipeline scratch memo and a builder factory that records
+    each build as (name, application, sf_dir)."""
+    from diepy_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "_scratch_cache", {})
+    builds = []
+
+    def builder(name, fail_first=False):
+        @pipeline._scratch_file(name)
+        def build(spark, sf_dir):
+            builds.append((name, spark.sparkContext.applicationId, sf_dir))
+            if fail_first and len(builds) == 1:
+                raise ValueError("audit failed")  # as t7's WAP audit raises
+            return f"/scratch/{name}/{sf_dir}/{len(builds)}"
+
+        return build
+
+    return pipeline, builder, builds
+
+
+def test_scratch_file_builds_once_per_name_and_dir(scratch):
+    pipeline, builder, builds = scratch
+    a, b = builder("a"), builder("b")
+    s = _stub("app-1")
+    assert a(s, "sf1") == "/scratch/a/sf1/1"
+    assert a(s, "sf2") == "/scratch/a/sf2/2"
+    assert b(s, "sf1") == "/scratch/b/sf1/3"
+    assert builds == [("a", "app-1", "sf1"), ("a", "app-1", "sf2"), ("b", "app-1", "sf1")]
+    assert set(pipeline._scratch_cache) == {("a", "sf1"), ("a", "sf2"), ("b", "sf1")}
+
+
+def test_scratch_file_second_call_reuses_path_across_sessions(scratch):
+    _, builder, builds = scratch
+    a = builder("a")
+    first = a(_stub("app-1"), "sf1")
+    assert a(_stub("app-1"), "sf1") == first
+    # files outlive sessions: a new application reads the same path
+    assert a(_stub("app-2"), "sf1") == first
+    assert builds == [("a", "app-1", "sf1")]
+
+
+def test_scratch_file_failed_build_stores_nothing(scratch):
+    pipeline, builder, builds = scratch
+    a = builder("wap", fail_first=True)
+    s = _stub("app-1")
+    with pytest.raises(ValueError, match="audit failed"):
+        a(s, "sf1")
+    assert pipeline._scratch_cache == {}
+    assert a(s, "sf1") == "/scratch/wap/sf1/2"
+    assert len(builds) == 2

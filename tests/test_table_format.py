@@ -1,17 +1,11 @@
-"""MERGE-capable table-format routing (sources/table_format.py).
-
-Pins WHICH path merge_into_path takes in this environment and that the
-result matches operators/merge.py:merge_upsert exactly — so if delta
-jars ever appear on the classpath, the path assertion flips loudly and
-the equal-rows assertion proves the transactional branch still honors
-the fallback's contract.
-"""
+"""Keyed parquet upsert (sources/table_format.py): merge_into_path
+leaves the rows operators/merge.py:merge_upsert gives."""
 
 from __future__ import annotations
 
 import pytest
 
-from diepy_spark.sources.table_format import merge_into_path, probe
+from diepy_spark.sources.table_format import merge_into_path
 
 
 @pytest.fixture()
@@ -27,21 +21,9 @@ def base_updates(spark, tmp_path):
     return path, updates
 
 
-def test_probe_reports_environment(spark):
-    p = probe(spark)
-    assert set(p) == {"delta", "iceberg", "pyiceberg"}
-    # This sandbox has neither delta-spark nor iceberg jars; if this
-    # assertion ever fails the environment gained a format — wire the
-    # transactional branch checks below up to it (VERDICT r4 task #2).
-    assert p["delta"] is False
-    assert p["iceberg"] is False
-
-
 def test_merge_into_path_fallback(spark, base_updates):
     path, updates = base_updates
-    taken = merge_into_path(spark, path, updates, ["k"], version_col="ver")
-    expected = "delta-merge" if probe(spark)["delta"] else "parquet-rewrite"
-    assert taken == expected
+    merge_into_path(spark, path, updates, ["k"], version_col="ver")
     got = {
         (r.k, r.v, r.ver)
         for r in spark.read.parquet(path).collect()
@@ -59,24 +41,3 @@ def test_merge_into_path_no_version(spark, tmp_path):
     merge_into_path(spark, path, updates, ["k"])
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c")}
-
-
-def test_find_delta_jars_env_override(monkeypatch):
-    """The delta jar sweep honours SPARK_GRAFT_DELTA_JARS and requires
-    the delta Python package before reporting cache hits (a bare
-    extension jar can't serve DeltaTable calls)."""
-    from diepy_spark.session import find_delta_jars
-
-    monkeypatch.setenv("SPARK_GRAFT_DELTA_JARS", "")
-    assert find_delta_jars() == []
-    monkeypatch.setenv("SPARK_GRAFT_DELTA_JARS", "/x/delta-spark_2.13-3.2.0.jar")
-    assert find_delta_jars() == ["/x/delta-spark_2.13-3.2.0.jar"]
-    monkeypatch.delenv("SPARK_GRAFT_DELTA_JARS")
-    try:
-        import delta  # noqa: F401
-        has_delta_py = True
-    except ImportError:
-        has_delta_py = False
-    if not has_delta_py:
-        # cache sweep is moot without the bindings: must report none
-        assert find_delta_jars() == []

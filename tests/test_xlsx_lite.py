@@ -169,3 +169,36 @@ def test_date_styled_cells(tmp_path):
     assert row[4] == datetime.time(18, 0)
     assert row[5] == 45000  # custom format with quoted 'mm' is NOT a date
     assert row[6] == 45000  # unstyled stays numeric
+
+
+def test_phonetic_runs_are_not_cell_text(tmp_path):
+    """A string's <rPh> phonetic reading is not part of its value (as
+    openpyxl reads it), for a shared string and an inline string; rich
+    text <r> runs still join."""
+    p = str(tmp_path / "phonetic.xlsx")
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    rel = "http://schemas.openxmlformats.org/package/2006/relationships"
+    rph = '<rPh sb="0" eb="2"><t>トウキョウ</t></rPh><phoneticPr fontId="1"/>'
+    with zipfile.ZipFile(p, "w") as zf:
+        zf.writestr("_rels/.rels", f'<Relationships xmlns="{rel}">'
+                    '<Relationship Id="rId1" Type="t" Target="xl/workbook.xml"/></Relationships>')
+        zf.writestr(
+            "xl/workbook.xml",
+            f'<workbook xmlns="{ns}" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
+            '<sheets><sheet name="p" sheetId="1" r:id="rId1"/></sheets></workbook>',
+        )
+        zf.writestr("xl/_rels/workbook.xml.rels", f'<Relationships xmlns="{rel}">'
+                    '<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>')
+        zf.writestr(
+            "xl/sharedStrings.xml",
+            f'<sst xmlns="{ns}"><si><t>東京</t>{rph}</si>'
+            f'<si><r><t>東</t></r><r><rPr><b/></rPr><t>京</t></r>{rph}</si></sst>',
+        )
+        zf.writestr(
+            "xl/worksheets/sheet1.xml",
+            f'<worksheet xmlns="{ns}"><sheetData><row r="1">'
+            '<c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c>'
+            f'<c r="C1" t="inlineStr"><is><t>東京</t>{rph}</is></c>'
+            '</row></sheetData></worksheet>',
+        )
+    assert xlsx_lite.read_workbook(p)["p"] == [["東京", "東京", "東京"]]
