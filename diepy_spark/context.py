@@ -38,6 +38,7 @@ from diepy_spark.sources.files import (
     is_excel_path,
     read_untyped_csv,
     split_scan,
+    unzipped,
 )
 from diepy_spark.sources.writers import write_csv, write_xlsx
 
@@ -99,17 +100,18 @@ class DiepyContext:
                 table = os.path.splitext(os.path.basename(filepath))[0]
                 if table.endswith((".csv", ".tab", ".tsv", ".txt")):  # x.csv.gz
                     table = os.path.splitext(table)[0]
-            raw = read_untyped_csv(self.spark, filepath, delimiter)
-            specs = infer_from_dataframe(raw)
-            if not self.backend.table_exists(table, schema):
-                self.backend.create_table(table, specs, schema)
-            obs = Observation()
-            typed = apply_schema(raw, specs, obs)
-            with split_scan(raw):
-                return self.backend.append(
-                    typed, table, schema, truncate=truncate,
-                    check=lambda: self._stored(obs, specs, filepath),
-                )
+            with unzipped(filepath) as src:
+                raw = read_untyped_csv(self.spark, src, delimiter)
+                specs = infer_from_dataframe(raw)
+                if not self.backend.table_exists(table, schema):
+                    self.backend.create_table(table, specs, schema)
+                obs = Observation()
+                typed = apply_schema(raw, specs, obs)
+                with split_scan(raw):
+                    return self.backend.append(
+                        typed, table, schema, truncate=truncate,
+                        check=lambda: self._stored(obs, specs, filepath),
+                    )
         except Exception:
             if self.lenient:
                 logger.exception("Had some trouble storing %s", filepath)

@@ -21,24 +21,24 @@ Spark design (not a port of the reference's row loop):
   collected via Arrow (bounded: ≤20k rows no matter how big the table — the
   same bound the reference uses) and folded column by column in row order.
   Order dependence demands a sequential fold; doing it on ≤20k
-  driver-side values is exact and O(sample). The predicates are pure, so
-  the fold evaluates each one at most once per distinct value (a memo that
-  lives for one `infer_from_dataframe` call); the specs are the same as
-  those of the plain `ColumnSpec.observe` loop, which stays as the
-  reference.
+  driver-side values is exact and O(sample).
 - **full mode (`sample_size=None`):** one distributed aggregate pass over
   the whole table computes order-INSENSITIVE per-column counts
-  (int-like/float-like/date-like/... match counts via regex + try_cast,
+  (int-like/float-like/date-like/... match counts via regex + cast,
   max length, int min/max, empties) and the lattice is folded from counts.
   This scales to any size but, being commutative, cannot reproduce the
   reference's order-dependent demotions (documented divergence: a column
   [1, 2.5] is text in sample mode — Q5 — but float in full mode).
 
-Type detection fidelity: is_int/is_float mirror Python int()/float()
-acceptance; is_date/is_time/is_datetime use the reference's dateutil
-"two different default dates" trick verbatim in semantics (core.py:575-630).
-is_date answers a valid ISO ``yyyy-MM-dd`` without dateutil (the answer
-dateutil gives too); every other string still goes through dateutil.
+Type detection: is_int/is_float mirror Python int()/float() on the
+strings the JVM casts also read (ASCII, no ``_``); Excel's typed cells keep
+Python's rules (Q11). Dates, times and timestamps are the shapes of one
+table, the JVM patterns `_cast` parses with (_DATE_FORMATS, _TIME_FORMATS,
+_TS_FORMATS): is_date/is_time/is_datetime fullmatch one regex per pattern
+and range-check its fields, and full mode counts with the same regexes, so
+a column infers a date/time type only when the cast can store its cells
+(SURVEY §8 Q12). A shape outside the table, even one the reference's
+parser read, falls to the next rung of the lattice.
 """
 
 from __future__ import annotations
@@ -47,8 +47,7 @@ import re
 from dataclasses import dataclass, field
 from datetime import datetime
 
-from dateutil.parser import parse as _duparse
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DataType,
@@ -78,18 +77,81 @@ _SPARK_FOR_SQL = {
     "DATE": DateType(),
 }
 
-_D1 = datetime(2000, 1, 1, 12, 34, 56, 123456)
-_D2 = datetime(2007, 10, 20, 14, 32, 12, 654321)
-_D1_DATE = datetime(2000, 1, 1, 12, 34, 56)
-_D2_DATE = datetime(2007, 10, 20, 14, 32, 12)
-_ISO_DATE = re.compile(r"([0-9]{4})-([0-9]{2})-([0-9]{2})")
+# The date and time shapes of the import: the JVM patterns `_cast` tries
+# in order (sources/files.py). The predicates accept exactly the values one
+# of them parses, so an inferred type is one the cast can store.
+_TS_FORMATS = (
+    "yyyy-MM-dd HH:mm:ss.SSSSSS",
+    "yyyy-MM-dd HH:mm:ss",
+    "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    "yyyy-MM-dd'T'HH:mm:ss",
+    "MM/dd/yyyy HH:mm:ss",
+    "MM/dd/yyyy HH:mm",
+    "yyyy-MM-dd HH:mm",
+)
+_DATE_FORMATS = ("yyyy-MM-dd", "MM/dd/yyyy", "M/d/yyyy", "yyyyMMdd")
+_TIME_FORMATS = ("HH:mm:ss", "H:mm:ss", "HH:mm", "H:mm", "hh:mm:ss a", "h:mm a")
+
+
+def _shape(fmt: str) -> tuple[re.Pattern, str]:
+    """The regex of what the JVM parser takes for pattern ``fmt`` before
+    its range checks, one group per field, and the fields' letters.
+
+    As the parser reads: ASCII digits only; a doubled letter takes exactly
+    that many, a single one 1-19 (``H:mm`` parses ``007:30``), ``SSSSSS``
+    1-6; ``a`` (AM/PM, no group) and quoted letters (``'T'``) in either
+    case. The regex is valid in Python and Java, so full mode's ``rlike``
+    uses it too."""
+    rx, letters = "", ""
+    for quoted, run, letter, lit in re.findall(r"'([^']*)'|(([A-Za-z])\3*)|(.)", fmt):
+        if quoted:
+            rx += "".join(f"[{c.upper()}{c.lower()}]" if c.isalpha() else re.escape(c)
+                          for c in quoted)
+        elif letter == "a":
+            rx += "(?:[AaPp][Mm])"
+            continue
+        elif letter == "S":
+            rx += f"([0-9]{{1,{len(run)}}})"
+        elif letter:
+            rx += f"([0-9]{{{len(run)}}})" if len(run) > 1 else "([0-9]{1,19})"
+        else:
+            rx += re.escape(lit)
+        letters += letter
+    return re.compile(rx), letters
+
+
+_SHAPES = {f: _shape(f) for f in _TS_FORMATS + _DATE_FORMATS + _TIME_FORMATS}
+
+
+def _fields(formats: tuple[str, ...], v) -> dict | None:
+    """The fields (letter -> int) of ``str(v)``, space-trimmed as ``F.trim``
+    does, by the first of ``formats`` whose regex it fullmatches and
+    whose fields form a real date and time; None when there is none."""
+    s = str(v).strip(" ")
+    for fmt in formats:
+        rx, letters = _SHAPES[fmt]
+        m = rx.fullmatch(s)
+        if m is None:
+            continue
+        f = dict(zip(letters, map(int, m.groups())))
+        try:
+            # the parser takes year 0000, a leap year as 2000 is
+            datetime(f.get("y") or 2000, f.get("M", 1), f.get("d", 1),
+                     f.get("H", 0), f.get("m", 0), f.get("s", 0))
+        except (ValueError, OverflowError):
+            continue
+        if 1 <= f.get("h", 1) <= 12:
+            return f
+    return None
 
 
 def is_int(v) -> bool:
-    """Python-int acceptance ('1.0' is NOT int; '+5'/' 5 ' are)."""
-    if isinstance(v, bool):
-        return True
-    if isinstance(v, int):
+    """Python-int acceptance ('1.0' is NOT int; '+5'/' 5 ' are). A string
+    must also hold what the cast reads: ASCII digits, no ``_`` separator."""
+    if isinstance(v, str):
+        if not v.isascii() or "_" in v:
+            return False
+    elif isinstance(v, int):  # bool too
         return True
     try:
         int(v)
@@ -99,86 +161,36 @@ def is_int(v) -> bool:
 
 
 def is_float(v) -> bool:
-    try:
-        float(str(v))
-        return True
-    except (TypeError, ValueError):
+    """Python-float acceptance in what the cast reads (as is_int). The
+    cast reads a NaN with a sign only as ``NaN``; any signed NaN is text."""
+    s = str(v)
+    if not s.isascii() or "_" in s:
         return False
+    try:
+        x = float(s)
+    except ValueError:
+        return False
+    return x == x or s.strip()[0] not in "+-"
 
 
 def is_time(v) -> bool:
-    """Time-only: parsing with two different default DATES yields both
-    defaults' Y/M/D back (the value supplied no date part)."""
-    try:
-        s = str(v)
-        v1 = _duparse(s, default=_D1)
-        v2 = _duparse(s, default=_D2)
-        return (
-            v1.timetuple()[:3] == _D1.timetuple()[:3]
-            and v2.timetuple()[:3] == _D2.timetuple()[:3]
-        )
-    except (ValueError, OverflowError, TypeError):
-        return False
+    """One of _TIME_FORMATS parses the value."""
+    return _fields(_TIME_FORMATS, v) is not None
 
 
 def is_date(v) -> bool:
-    """Date-only: parsing with two default TIMES yields both defaults'
-    H/M/S back; additionally (reference fallback, core.py:605-606) a value
-    whose own time part is exactly midnight counts as a date. A valid ISO
-    yyyy-MM-dd is answered without dateutil (tests pin the two paths
-    equal); anything else, such as 2001-02-30, goes through dateutil."""
-    s = str(v)
-    iso = _ISO_DATE.fullmatch(s)
-    if iso:
-        try:
-            datetime(*map(int, iso.groups()))
-            return True
-        except ValueError:
-            pass
-    return _dateutil_date(s)
-
-
-def _dateutil_date(s: str) -> bool:
-    try:
-        v1 = _duparse(s, default=_D1_DATE)
-        v2 = _duparse(s, default=_D2_DATE)
-        if (
-            v1.timetuple()[3:6] == _D1_DATE.timetuple()[3:6]
-            and v2.timetuple()[3:6] == _D2_DATE.timetuple()[3:6]
-        ):
-            return True
-        return _duparse(s).timetuple()[3:6] == (0, 0, 0)
-    except (ValueError, OverflowError, TypeError):
-        return False
+    """One of _DATE_FORMATS parses the value, or one of _TS_FORMATS does
+    and its time is midnight (the reference's fallback, core.py:605-606;
+    a fraction of a second is ignored)."""
+    if _fields(_DATE_FORMATS, v) is not None:
+        return True
+    f = _fields(_TS_FORMATS, v)
+    return f is not None and f["H"] == f["m"] == f.get("s", 0) == 0
 
 
 def is_datetime(v) -> bool:
-    try:
-        s = str(v)
-        return _duparse(s, default=_D1) != _D1 and _duparse(s, default=_D2) != _D2
-    except (ValueError, OverflowError, TypeError):
-        return False
-
-
-def _call(pred, value) -> bool:
-    return pred(value)
-
-
-def _memo_test():
-    """A ``test(pred, value)`` that runs each predicate once per distinct
-    value. The predicates are pure, so the answers are the same as
-    ``_call``'s; the values must be of one type (the sample's strings), as
-    ``1``, ``1.0`` and ``True`` are one key."""
-    seen: dict = {}
-
-    def test(pred, value) -> bool:
-        key = (pred, value)
-        hit = seen.get(key)
-        if hit is None:
-            hit = seen[key] = pred(value)
-        return hit
-
-    return test
+    """One of _TS_FORMATS parses the value."""
+    return _fields(_TS_FORMATS, v) is not None
 
 
 @dataclass
@@ -195,14 +207,10 @@ class ColumnSpec:
 
     # ---- sequential fold (sample mode) ------------------------------------
     def observe(self, value) -> None:
-        self._observe(value, _call)
-
-    def _observe(self, value, test) -> None:
-        """One fold step; ``test(pred, value)`` evaluates a predicate."""
         if value is None or value == "":
             self.nullable = True
             return
-        self._step_type(value, test)
+        self._step_type(value)
         if self.type == "text":
             n = len(str(value))
             if n > self.length:
@@ -214,13 +222,13 @@ class ColumnSpec:
             if iv > self.max_value:
                 self.max_value = iv
 
-    def _step_type(self, value, test) -> None:
+    def _step_type(self, value) -> None:
         # demotions: only date/float/int can demote, always straight to text
-        if self.type == "date" and not test(is_date, value):
+        if self.type == "date" and not is_date(value):
             self.type = "text"
-        if self.type == "float" and not test(is_float, value):
+        if self.type == "float" and not is_float(value):
             self.type = "text"
-        if self.type == "int" and not test(is_int, value):
+        if self.type == "int" and not is_int(value):
             self.type = "text"
         if self.type == "":
             for probe, tname in (
@@ -230,7 +238,7 @@ class ColumnSpec:
                 (is_time, "time"),
                 (is_datetime, "datetime"),
             ):
-                if test(probe, value):
+                if probe(value):
                     self.type = tname
                     return
             self.type = "text"
@@ -310,11 +318,9 @@ def infer_from_dataframe(
         return _infer_full_scan(df)
     specs = [ColumnSpec(name) for name in normalize_headers(list(df.columns))]
     pdf = df.limit(sample_size).toPandas()
-    test = _memo_test()
-    for i, col in enumerate(df.columns):
-        spec = specs[i]
+    for spec, col in zip(specs, df.columns):
         for v in pdf[col]:
-            spec._observe(None if v is None else str(v), test)
+            spec.observe(None if v is None else str(v))
     return specs
 
 
@@ -325,45 +331,42 @@ def infer_from_dataframe(
 _INT_RE = r"^\s*[+-]?[0-9]+\s*$"
 
 
+def _parsed(t: Column, formats: tuple[str, ...]) -> Column:
+    """The timestamp of trimmed cell ``t`` by the first of ``formats``
+    whose regex it matches and that parses it: the rule of _fields, so
+    only matching cells reach the parser."""
+    return F.coalesce(*[
+        F.when(t.rlike(f"^{_SHAPES[f][0].pattern}$"), F.try_to_timestamp(t, F.lit(f)))
+        for f in formats
+    ])
+
+
 def _infer_full_scan(df: DataFrame) -> list[ColumnSpec]:
     """Order-insensitive inference over the ENTIRE table in one aggregate.
 
     Per column, computed JVM-side (no Python in the row path):
-    empties, int-like / float-like counts (regex + try_cast), ISO date /
-    timestamp counts, max length, int min/max. The shuffle carries one row
+    empties, int-like / float-like counts (regex + try_cast), date / time /
+    timestamp counts by the predicates' rule (_parsed, with the midnight
+    rule for dates), max length, int min/max. The shuffle carries one row
     per partition (partial aggregation), so this holds at 100 TB.
-    Date/time detection uses Spark's casts (ISO + common forms), not
-    dateutil — full mode trades the reference's per-value dateutil
-    acceptance for a pure-JVM pass.
     """
     aggs = []
     names = list(df.columns)
     for c in names:
-        col = F.col(c)
+        col, t = F.col(c), F.trim(F.col(c))
         nonempty = col.isNotNull() & (col != "")
+        ts = _parsed(t, _TS_FORMATS)
+        midnight = (F.hour(ts) == 0) & (F.minute(ts) == 0) & (F.second(ts) == 0)
         aggs += [
             F.count(F.lit(1)).alias(f"{c}__n"),
-            F.sum(F.when(~nonempty, 1).otherwise(0)).alias(f"{c}__empty"),
-            F.sum(F.when(nonempty & col.rlike(_INT_RE), 1).otherwise(0)).alias(f"{c}__int"),
-            F.sum(
-                F.when(nonempty & col.try_cast("double").isNotNull(), 1).otherwise(0)
-            ).alias(f"{c}__float"),
-            F.sum(
-                F.when(
-                    nonempty
-                    & col.try_cast("date").isNotNull()
-                    & col.rlike(r"^\s*\d{4}-\d{2}-\d{2}\s*$"),
-                    1,
-                ).otherwise(0)
+            F.count_if(~nonempty).alias(f"{c}__empty"),
+            F.count_if(nonempty & col.rlike(_INT_RE)).alias(f"{c}__int"),
+            F.count_if(nonempty & col.try_cast("double").isNotNull()).alias(f"{c}__float"),
+            F.count_if(
+                nonempty & (_parsed(t, _DATE_FORMATS).isNotNull() | midnight)
             ).alias(f"{c}__date"),
-            F.sum(
-                F.when(nonempty & col.try_cast("timestamp").isNotNull(), 1).otherwise(0)
-            ).alias(f"{c}__ts"),
-            F.sum(
-                F.when(
-                    nonempty & col.rlike(r"^\s*\d{1,2}:\d{2}(:\d{2}(\.\d+)?)?\s*$"), 1
-                ).otherwise(0)
-            ).alias(f"{c}__time"),
+            F.count_if(nonempty & ts.isNotNull()).alias(f"{c}__ts"),
+            F.count_if(nonempty & _parsed(t, _TIME_FORMATS).isNotNull()).alias(f"{c}__time"),
             F.max(F.length(col)).alias(f"{c}__len"),
             F.min(col.try_cast("long")).alias(f"{c}__min"),
             F.max(col.try_cast("long")).alias(f"{c}__max"),
@@ -373,7 +376,7 @@ def _infer_full_scan(df: DataFrame) -> list[ColumnSpec]:
     specs = []
     for raw, name in zip(names, normalize_headers(names)):
         n = row[f"{raw}__n"]
-        empty = row[f"{raw}__empty"] or 0
+        empty = row[f"{raw}__empty"]
         vals = n - empty
         spec = ColumnSpec(name, nullable=empty > 0)
         if vals == 0:

@@ -45,6 +45,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from diepy_spark.session import scoped_conf
+
 __all__ = [
     "connected_components",
     "connected_components_two_phase",
@@ -91,26 +93,11 @@ def keyed_checkpoint(df: DataFrame, *keys: str) -> DataFrame:
     partitioning the frame already has (e.g. a groupBy's output) for
     free."""
     spark = df.sparkSession
-    old = None
-    try:
-        old = spark.conf.get("spark.sql.adaptive.enabled")
-    except Exception:
-        pass
-    try:
-        try:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        except Exception:
-            pass
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
         if keys:
             n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
             df = df.repartition(n, *[F.col(k) for k in keys])
         return df.localCheckpoint(eager=False)
-    finally:
-        if old is not None:
-            try:
-                spark.conf.set("spark.sql.adaptive.enabled", old)
-            except Exception:
-                pass
 
 
 def connected_components(
@@ -199,9 +186,7 @@ def connected_components_two_phase(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         sig = None
         for _ in range(max_iter):
             # LARGE-STAR over the undirected view: center n, neighbor m
@@ -256,8 +241,6 @@ def connected_components_two_phase(
         )
         nodes.unpersist()
         return result
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
 
 
 def _local_union_find(spark, rows, node_type) -> DataFrame:

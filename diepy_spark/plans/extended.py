@@ -7227,13 +7227,14 @@ def _minhash_cols(num_hashes: int) -> str:
     )
 
 
-def _bands_union(num_hashes: int, band_size: int) -> str:
+def _bands_union(src: str) -> str:
+    """The LSH band keys (d, band, sig) of the signature relation ``src``."""
     parts = []
-    for b in range(num_hashes // band_size):
+    for b in range(LSH_NUM_HASHES // LSH_BAND_SIZE):
         cols = " || '#' || ".join(
-            f"mh{b * band_size + j}" for j in range(band_size)
+            f"mh{b * LSH_BAND_SIZE + j}" for j in range(LSH_BAND_SIZE)
         )
-        parts.append(f"SELECT d, {b} AS band, {cols} AS sig FROM sig")
+        parts.append(f"SELECT d, {b} AS band, {cols} AS sig FROM {src}")
     return " UNION ALL ".join(parts)
 
 
@@ -7242,7 +7243,7 @@ def _bands_union(num_hashes: int, band_size: int) -> str:
 # p = candidates whose exact Jaccard (_JACCARD_CTES) reaches LSH_THRESHOLD.
 _SIG_CTE = f"sig AS (SELECT d, {_minhash_cols(LSH_NUM_HASHES)} FROM sh GROUP BY d)"
 _SIG_BANDS_CTES = f"""{_SIG_CTE},
-    bands AS ({_bands_union(LSH_NUM_HASHES, LSH_BAND_SIZE)})"""
+    bands AS ({_bands_union('sig')})"""
 _LSH_CAND_CTES = f"""{_JACCARD_CTES},
     {_SIG_BANDS_CTES},
     cand AS (
@@ -10297,22 +10298,13 @@ def _inc_minhash_oracle_sql() -> str:
     same id modulus, band joins per side, and the integer agree-count
     verify (>= MH_MIN_MATCH of LSH_NUM_HASHES)."""
 
-    def bands(src: str) -> str:
-        parts = []
-        for b in range(LSH_NUM_HASHES // LSH_BAND_SIZE):
-            cols = " || '#' || ".join(
-                f"mh{b * LSH_BAND_SIZE + j}" for j in range(LSH_BAND_SIZE)
-            )
-            parts.append(f"SELECT d, {b} AS band, {cols} AS sig FROM {src}")
-        return " UNION ALL ".join(parts)
-
     return f"""
     WITH {_SH_CTES},
     {_SIG_CTE},
     sigi AS (SELECT * FROM sig WHERE d % {INC_DEDUP_MOD} != 0),
     sigb AS (SELECT * FROM sig WHERE d % {INC_DEDUP_MOD} = 0),
-    bandsi AS ({bands('sigi')}),
-    bandsb AS ({bands('sigb')}),
+    bandsi AS ({_bands_union('sigi')}),
+    bandsb AS ({_bands_union('sigb')}),
     candi AS (
       SELECT DISTINCT b.d AS db, i.d AS di
       FROM bandsb b JOIN bandsi i ON i.band = b.band AND i.sig = b.sig

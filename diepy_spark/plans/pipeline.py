@@ -19,6 +19,7 @@ that rule with a scalar subquery on max(ts).
 
 from __future__ import annotations
 
+import atexit
 import functools
 import glob
 import itertools
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from diepy_spark.functions.inference import infer_from_dataframe
-from diepy_spark.session import session_cached
+from diepy_spark.session import scoped_conf, session_cached
 from diepy_spark.sources.files import apply_schema, read_untyped_csv
 from diepy_spark.sources.registry import load_table
 from diepy_spark.sources.writers import write_csv
@@ -58,6 +59,17 @@ def _mfpt() -> int:
 _counter = itertools.count()
 # (artifact, sf_dir) -> scratch path: files outlive sessions, so process-scoped
 _scratch_cache: dict[tuple[str, str], str] = {}
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    """Delete the temp directory of every scratch artifact at process
+    exit: each builder writes below its own ``diepy-*`` mkdtemp."""
+    tmp = tempfile.gettempdir()
+    for path in _scratch_cache.values():
+        top = os.path.relpath(path, tmp).split(os.sep)[0]
+        if top.startswith("diepy-"):
+            shutil.rmtree(os.path.join(tmp, top), ignore_errors=True)
 
 
 def _scratch_file(name: str):
@@ -125,12 +137,8 @@ def _run_stream(stream_df: DataFrame, output_mode: str) -> DataFrame:
     spark = stream_df.sparkSession
     name = f"x7_mem_{next(_counter)}"
     ck = tempfile.mkdtemp(prefix="diepy-ck-")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         ST.run_to_memory(stream_df, name, ck, output_mode=output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     spark.streams.resetTerminated()
@@ -444,18 +452,16 @@ def x7_stream_upsert(spark, sf_dir):
             merged = merge_upsert(state["df"], latest, ["user_id"], version_col="ts")
         state["df"] = merged.localCheckpoint(eager=True)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    ck = tempfile.mkdtemp(prefix="diepy-ck-")
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             src.writeStream.foreachBatch(fb)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="diepy-ck-"))
+            .option("checkpointLocation", ck)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    shutil.rmtree(ck, ignore_errors=True)
     out = state["df"]
     assert out is not None
     return out.select(
@@ -1230,14 +1236,8 @@ def _late_run(spark, sf_dir) -> dict:
     )
     name = f"x7_mem_{next(_counter)}"
     ck = tempfile.mkdtemp(prefix="diepy-ck-")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = ST.run_to_memory(
-            _late_agg(src), name, ck, output_mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
+        q = ST.run_to_memory(_late_agg(src), name, ck, output_mode="append")
     arrived = dropped = 0
     for p in q.recentProgress:
         d = _json.loads(p.json) if hasattr(p, "json") else p
@@ -1407,9 +1407,7 @@ def _resumed_sink(spark, sf_dir) -> str:
             )
             .select(F.col("w.start").alias("w"), "event_type", "c", "cents")
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
             q = (
                 agg.writeStream.format("parquet")
                 .option("path", outd)
@@ -1419,8 +1417,6 @@ def _resumed_sink(spark, sf_dir) -> str:
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     for i, p in enumerate(parts[:2]):
         _copy(i, p)

@@ -10,6 +10,7 @@ Defaults chosen for correctness + 100 TB-mindset:
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import glob
 import os
@@ -43,6 +44,18 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - conf may be static in some envs
             pass
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set runtime conf ``key`` to ``value`` while the block runs; its
+    previous value is back afterwards, also when the block raises."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 # session_cached entries, all of one application (the id in _memo_app)

@@ -17,12 +17,21 @@ from __future__ import annotations
 import contextlib
 import os
 import re
+import tempfile
+import zipfile
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType
 
-from diepy_spark.functions.inference import ColumnSpec, normalize_headers
+from diepy_spark.functions.inference import (
+    _DATE_FORMATS,
+    _TIME_FORMATS,
+    _TS_FORMATS,
+    ColumnSpec,
+    normalize_headers,
+)
+from diepy_spark.session import scoped_conf
 
 # Extension recognition, faithful to the reference's regexes (core.py:18-25).
 _EXCEL_RE = re.compile(r".*(\.xlsx|\.xls)(\.gz|\.zip)?(\$.*)?$", re.IGNORECASE)
@@ -44,9 +53,11 @@ def delimiter_for(path: str, default: str = ",") -> str:
     return default
 
 
-def extract_zip_members(path: str) -> list[str]:
-    """Extract the delimited members of a ``.zip`` archive to a scratch dir
-    and return their paths.
+@contextlib.contextmanager
+def unzipped(path: str):
+    """``path``, or for a ``.zip`` archive the paths of its delimited
+    members, extracted to a scratch directory that is removed when the
+    block ends, also when it raises.
 
     The reference's regex admits ``x.csv.zip`` (core.py:18-20) but its
     reader opens the raw bytes — zip import is effectively dead there; we
@@ -54,11 +65,10 @@ def extract_zip_members(path: str) -> list[str]:
     archive is expanded once driver-side (same single-stream bound as .gz);
     at 100 TB the answer is "don't ship zip", and the expansion makes the
     extracted members splittable plain text for the actual scan."""
-    import tempfile
-    import zipfile
-
-    out = tempfile.mkdtemp(prefix="diepy-zip-")
-    with zipfile.ZipFile(path) as zf:
+    if not path.lower().endswith(".zip"):
+        yield path
+        return
+    with tempfile.TemporaryDirectory(prefix="diepy-zip-") as out, zipfile.ZipFile(path) as zf:
         members = [
             m
             for m in zf.namelist()
@@ -71,7 +81,7 @@ def extract_zip_members(path: str) -> list[str]:
             )
         for m in members:
             zf.extract(m, out)
-    return [os.path.join(out, m) for m in members]
+        yield [os.path.join(out, m) for m in members]
 
 
 def _needs_multiline(spark: SparkSession, src: str | list[str]) -> bool:
@@ -85,8 +95,10 @@ def _needs_multiline(spark: SparkSession, src: str | list[str]) -> bool:
     return len(probe.take(1)) > 0
 
 
-def read_untyped_csv(spark: SparkSession, path: str, delimiter: str = ",") -> DataFrame:
-    """All-string scan of a delimited file with a header row.
+def read_untyped_csv(
+    spark: SparkSession, path: str | list[str], delimiter: str = ","
+) -> DataFrame:
+    """All-string scan of delimited files with a header row.
 
     multiLine parsing (needed for quoted embedded newlines — the
     reference's csv module accepts them, core.py:234-254) makes a file
@@ -95,17 +107,16 @@ def read_untyped_csv(spark: SparkSession, path: str, delimiter: str = ",") -> Da
     provably contains no quoted fields — on a 100 TB import that is the
     difference between a single-core parse and a full-cluster one. Gzip
     decompresses transparently by extension (a single stream per file
-    either way); .zip archives are expanded to scratch first
-    (extract_zip_members) since Hadoop input streams can't unzip."""
-    src = extract_zip_members(path) if path.lower().endswith(".zip") else path
+    either way); a .zip archive is scanned through its extracted members
+    (unzipped), since Hadoop input streams can't unzip."""
     df = (
         spark.read.option("header", True)
         .option("sep", delimiter)
-        .option("multiLine", _needs_multiline(spark, src))
+        .option("multiLine", _needs_multiline(spark, path))
         .option("quote", '"')
         .option("escape", '"')
         .option("mode", "PERMISSIVE")
-        .csv(src)
+        .csv(path)
     )
     fixed = normalize_headers(list(df.columns))
     return df.toDF(*fixed)
@@ -128,25 +139,9 @@ def read_untyped_jsonl(spark: SparkSession, path: str) -> DataFrame:
     return out.toDF(*fixed)
 
 
-# Formats accepted by the JVM cast for inferred datetime/date/time columns.
-# The reference accepts anything dateutil does; these cover ISO + the
-# overwhelmingly common variants.
-_TS_FORMATS = (
-    "yyyy-MM-dd HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "MM/dd/yyyy HH:mm:ss",
-    "MM/dd/yyyy HH:mm",
-    "yyyy-MM-dd HH:mm",
-)
-_DATE_FORMATS = ("yyyy-MM-dd", "MM/dd/yyyy", "M/d/yyyy", "yyyyMMdd")
-_TIME_FORMATS = ("HH:mm:ss", "H:mm:ss", "HH:mm", "H:mm", "hh:mm:ss a", "h:mm a")
-
-
-# Separators and the `T` of the patterns above (none is a pattern letter
-# in them): a value lacking one that its pattern holds cannot parse, and
-# skipping that format spares the parse exception.
+# Separators and the `T` of the date and time patterns (none is a pattern
+# letter in them): a value lacking one that its pattern holds cannot parse,
+# and skipping that format spares the parse exception.
 _LITERALS = ".:/- T"
 
 
@@ -270,9 +265,5 @@ def split_scan(df: DataFrame):
     if split >= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes():
         yield
         return
-    prev = spark.conf.get(_SPLIT_KEY)
-    spark.conf.set(_SPLIT_KEY, str(split))
-    try:
+    with scoped_conf(spark, _SPLIT_KEY, str(split)):
         yield
-    finally:
-        spark.conf.set(_SPLIT_KEY, prev)

@@ -16,6 +16,7 @@ from diepy_spark.functions.inference import (
     infer_from_dataframe,
     is_date,
     is_datetime,
+    is_float,
     is_int,
     is_time,
     normalize_headers,
@@ -45,6 +46,18 @@ def test_predicates():
     # reference fallback: midnight datetime counts as date (core.py:605-606)
     assert is_date("2013-10-11 00:00:00")
     assert is_datetime("2013-10-11 13:04:05")
+    # shapes the casts do not read (SURVEY §8 Q12)
+    assert not is_int("1_000") and not is_float("1_000")
+    assert not is_int("١٢٣") and not is_float("١٢٣")
+    assert not is_date("11 Oct 2013") and not is_date("2013-1-2")
+    assert not is_time("1pm")
+    assert not is_datetime("2013-10-11 01:02:03.123456789")
+    assert not is_date("2013-02-29") and is_date("2012-02-29")
+    assert not is_time("24:00") and not is_time("00:30 AM") and is_time("12:30 am")
+    # ... and shapes they do: any case of T and AM/PM, single-letter
+    # fields of any width, a fraction ignored by the midnight rule
+    assert is_datetime(" 2013-10-11t01:02:03 ") and is_time("007:30")
+    assert is_date("2013-10-11 00:00:00.5") and is_time("1:02 pM")
 
 
 # ---- lattice stress fixtures (FIXTURES.md §2) --------------------------------
@@ -129,7 +142,11 @@ def test_basic_csv_golden_schema(basic_specs):
 
 def test_full_scan_mode(spark, tmp_path):
     p = tmp_path / "full.csv"
-    p.write_text("a,b,c,d\n1,1.5,2020-01-01,x\n40000,2.5,2020-01-02,\n")
+    p.write_text(
+        "a,b,c,d,e,f,g,h\n"
+        "1,1.5,2020-01-01,x,2020-01-01 00:00:00.5,12:30 am,1pm,2013-10-11t01:02:03\n"
+        "40000,2.5,2020-01-02,,01/02/2020,007:30,2pm,10/11/2013 13:04\n"
+    )
     from diepy_spark.sources.files import read_untyped_csv
 
     specs = {s.name: s for s in infer_from_dataframe(read_untyped_csv(spark, str(p)), None)}
@@ -137,3 +154,6 @@ def test_full_scan_mode(spark, tmp_path):
     assert specs["b"].spark_type() == DoubleType()
     assert specs["c"].spark_type() == DateType()
     assert specs["d"].nullable
+    # the predicates' table: the midnight rule, the cast's time and
+    # timestamp shapes, and text for a shape outside the table
+    assert [specs[c].sql_type() for c in "efgh"] == ["DATE", "TIME", "VARCHAR(50)", "TIMESTAMP"]

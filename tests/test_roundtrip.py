@@ -89,20 +89,31 @@ def test_truncate_vs_append(ctx, basic_file):
     assert ctx.backend.read_table("basic").count() == 3
 
 
-def test_zip_import(ctx, basic_file, tmp_path):
+def test_zip_import(ctx, basic_file, tmp_path, monkeypatch):
     """S2: x.csv.zip imports like x.csv (extracted to scratch — Hadoop
     streams can't unzip). The reference admits the extension but reads raw
-    bytes (core.py:18-20 vs 237); this path actually works."""
+    bytes (core.py:18-20 vs 237); this path actually works. The scratch
+    copy is removed once the import returns or raises."""
+    import tempfile
     import zipfile
 
     src = tmp_path / "basic.csv.zip"
     with zipfile.ZipFile(src, "w") as zf:
         zf.write(basic_file, "basic.csv")
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
     n = ctx.import_file(str(src))
     assert n == 3
     df = ctx.backend.read_table("basic")
     assert dict(df.dtypes)["int"] == "smallint"
     assert df.count() == 3
+    bad = tmp_path / "bad.csv.zip"  # 40000 overflows the sample's SMALLINT
+    with zipfile.ZipFile(bad, "w") as zf:
+        zf.writestr("bad.csv", "n\n" + "".join(f"{i}\n" for i in range(1, 20001)) + "40000\n")
+    with pytest.raises(ValueError, match="not SMALLINT"):
+        ctx.import_file(str(bad), table="basic")
+    assert os.listdir(scratch) == []
 
 
 def test_zip_without_delimited_members_rejected(ctx, tmp_path):
@@ -260,14 +271,17 @@ def test_rejected_cells_lenient_counts_rows(ctx, overflow_file, caplog):
 
 
 def test_malformed_date_reported(ctx, tmp_path):
-    """dateutil accepts '11 Oct 2013' as a date, the JVM cast does not:
-    the cell is reported instead of stored as a silent NULL."""
+    """Shapes the casts do not read ('11 Oct 2013', '1pm', '1_000') are
+    not dates, times or ints to inference either: their columns import as
+    text, every row stored and no cell rejected (SURVEY §8 Q12)."""
     p = tmp_path / "dates.csv"
-    p.write_text("n,d\n1,2013-10-11\n2,11 Oct 2013\n3,\n")
-    with pytest.raises(ValueError, match=r"column d: 1 non-empty cells are not DATE.*'11 Oct 2013'"):
-        ctx.import_file(str(p))
-    ctx.lenient = True
-    assert ctx.import_file(str(p), table="dates2") == 3
+    p.write_text("n,d,t,q\n1,2013-10-11,1pm,1_000\n2,11 Oct 2013,12:30,2\n3,,,\n")
+    assert ctx.import_file(str(p)) == 3
+    df = ctx.backend.read_table("dates")
+    assert dict(df.dtypes) == {"n": "smallint", "d": "string", "t": "string", "q": "string"}
+    assert sorted(df.collect()) == [
+        (1, "2013-10-11", "1pm", "1_000"), (2, "11 Oct 2013", "12:30", "2"), (3, None, None, None),
+    ]
 
 
 def test_rejected_import_leaves_table_unchanged(ctx, tmp_path):
@@ -288,10 +302,12 @@ def test_rejected_import_leaves_table_unchanged(ctx, tmp_path):
         return sorted(ctx.backend.read_table("dates").collect()), files
 
     before = state()
-    bad = tmp_path / "bad.csv"
-    bad.write_text("n,d\n1,2013-10-11\n2,11 Oct 2013\n3,\n")
+    bad = tmp_path / "bad.csv"  # an impossible date past the 20,000-row sample
+    bad.write_text("n,d\n" + "".join(
+        f"{i},{'2001-02-30' if i == 20001 else '2013-10-11'}\n" for i in range(1, 20002)
+    ))
     for truncate in (False, True):
-        with pytest.raises(ValueError, match="11 Oct 2013"):
+        with pytest.raises(ValueError, match="2001-02-30"):
             ctx.import_file(str(bad), table="dates", truncate=truncate)
         assert state() == before
     # a passing import still appends, and truncate still replaces
@@ -306,7 +322,7 @@ def test_rejected_import_leaves_table_unchanged(ctx, tmp_path):
 def _datetime_cells(draw):
     """A cell in one of the shapes of `_TS_FORMATS`, `_DATE_FORMATS` or
     `_TIME_FORMATS` (numbers in or just out of range, zero-padded or not),
-    or a dateutil-only shape, padded with blanks."""
+    or a shape outside them, padded with blanks."""
     def num(lo, hi):  # mostly in range, sometimes one past either end
         return draw(st.one_of(st.integers(lo, hi), st.integers(lo - 1, hi + 1)))
 
@@ -340,8 +356,13 @@ def test_format_guard_keeps_datetime_casts(spark, values):
     gives the same datetime, date and time casts as trying every format."""
     from pyspark.sql import functions as F
 
-    from diepy_spark.functions.inference import ColumnSpec
-    from diepy_spark.sources.files import _DATE_FORMATS, _TIME_FORMATS, _TS_FORMATS, _cast
+    from diepy_spark.functions.inference import (
+        _DATE_FORMATS,
+        _TIME_FORMATS,
+        _TS_FORMATS,
+        ColumnSpec,
+    )
+    from diepy_spark.sources.files import _cast
 
     c = F.when(F.col("raw") == "", None).otherwise(F.trim(F.col("raw")))
 
@@ -359,6 +380,59 @@ def test_format_guard_keeps_datetime_casts(spark, values):
     same = [w.eqNullSafe(g) for w, g in zip(want, got)]
     df = spark.createDataFrame([(v,) for v in values], "raw string")
     assert [r.raw for r in df.where(~(same[0] & same[1] & same[2])).collect()] == []
+
+
+@given(st.lists(
+    st.one_of(
+        _datetime_cells(),
+        st.text(".:/- Tt0123456789apm", max_size=24),
+        st.text("0123456789+-.eE_ nainfINFA\u0663\t", max_size=12),
+        st.text(max_size=8),
+    ),
+    min_size=1, max_size=40,
+))
+@example(["11 Oct 2013", "1pm", "2013-1-2", "2013-10-11 01:02:03.123456789", "1_000", "\u0661\u0662",
+          "-nan", "+NaN", "nan", "-Infinity", "0000-02-29", "1900-02-29", "12:30 am", "00:30 AM",
+          "007:30", "2013-10-11 00:00:00.5", " 10/11/2013 00:00 ", "1e999", "\t5\n",
+          "-2013-10-11", " -2013-10-11 01:02:03"])
+@settings(max_examples=40, deadline=None)
+def test_predicates_match_casts(spark, values):
+    """Inference calls a value a timestamp, date or time exactly when the
+    cast of that type stores it (a date: one of `_DATE_FORMATS`, or a
+    `_TS_FORMATS` timestamp at midnight), and an int or float only when
+    the cast stores it. Ints beyond BIGINT are out of range, not of shape.
+    A signed year (`-2013-10-11`) parses, but no shape of the table has a
+    sign, so inference calls it text (SURVEY §8 Q12)."""
+    from pyspark.sql import functions as F
+
+    from diepy_spark.functions.inference import (
+        _DATE_FORMATS,
+        ColumnSpec,
+        is_date,
+        is_datetime,
+        is_float,
+        is_int,
+        is_time,
+    )
+    from diepy_spark.sources.files import _cast
+
+    def cast(t, **kw):
+        return _cast(ColumnSpec("raw", t, **kw), "raw")
+
+    c, ts = F.trim(F.col("raw")), cast("datetime")
+    midnight = ts.isNotNull() & (F.hour(ts) == 0) & (F.minute(ts) == 0) & (F.second(ts) == 0)
+    date = F.coalesce(*[F.try_to_timestamp(c, F.lit(f)) for f in _DATE_FORMATS])
+    df = spark.createDataFrame([(v,) for v in values], "raw string")
+    for v, dt, d, t, i, f in df.select(
+        "raw", ts.isNotNull(), date.isNotNull() | midnight, cast("time").isNotNull(),
+        cast("int", max_value=2**40).isNotNull(), cast("float").isNotNull(),
+    ).collect():
+        signed = v.strip(" ").startswith(("+", "-"))
+        assert (is_datetime(v), is_date(v), is_time(v)) == ((False,) * 3 if signed else (dt, d, t)), v
+        if is_int(v) and -(2**63) <= int(v) < 2**63:
+            assert i, v
+        if is_float(v):
+            assert f, v
 
 
 def test_table_schema_independent_of_part_names(ctx, tmp_path):

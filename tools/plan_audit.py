@@ -186,7 +186,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    from diepy_spark.session import get_spark
+    from diepy_spark.session import get_spark, scoped_conf
 
     import __spark_entry__ as entrymod
 
@@ -204,13 +204,8 @@ def main() -> int:
             buf = io.StringIO()
             # AQE plans exchange reuse only at execution; without it the
             # explained plan shows the static ReusedExchange nodes
-            aqe = spark.conf.get("spark.sql.adaptive.enabled")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                with redirect_stdout(buf):
-                    df.explain("formatted")
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"), redirect_stdout(buf):
+                df.explain("formatted")
             rows.append((name, audit(buf.getvalue())))
         except Exception as exc:  # noqa: BLE001 - audit must not abort
             print(f"  ERR {name}: {exc}")
